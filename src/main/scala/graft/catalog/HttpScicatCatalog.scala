@@ -25,8 +25,10 @@ final class ScicatOrigDatablockAPIError(msg: String) extends RuntimeException(ms
   * scicat_configuration.py:388-394).
   *
   * Serializable by construction: the `HttpClient` is a @transient lazy
-  * val, re-created on each executor after deserialization, so the
-  * catalog can ride inside UDF closures and `foreachPartition` sinks.
+  * val, so the catalog can ride inside UDF closures and
+  * `foreachPartition` sinks. Every deserialized copy in a JVM shares one
+  * client (and its connection pool); each request carries the
+  * catalog's own `timeoutMs`, which also bounds the connect.
   *
   * Failure semantics mirror the reference:
   *  - existence probes (F6/F7): 2xx = exists, 404 = not-exists, any
@@ -47,9 +49,7 @@ final case class HttpScicatCatalog(
 
   private def base = if (baseUrl.endsWith("/")) baseUrl else baseUrl + "/"
 
-  @transient private lazy val client: HttpClient = HttpClient.newBuilder()
-    .connectTimeout(Duration.ofMillis(timeoutMs))
-    .build()
+  @transient private[catalog] lazy val client: HttpClient = HttpScicatCatalog.client
 
   @transient private lazy val log =
     org.apache.log4j.Logger.getLogger(classOf[HttpScicatCatalog])
@@ -183,4 +183,8 @@ final case class HttpScicatCatalog(
   }
 
   private def jstr(s: String): String = graft.sources.NexusExtractor.jsonStr(s)
+}
+
+object HttpScicatCatalog {
+  private lazy val client: HttpClient = HttpClient.newHttpClient()
 }

@@ -22,9 +22,10 @@ import ValueOperators.OpSpec
   * Output: the same rows plus one `struct(value, unit)` column per
   * variable. Variables compile IN DEFINITION ORDER so later templates
   * reference earlier columns (topological evaluation — the reference's
-  * ordered dict); Catalyst's CollapseProject folds the whole chain into
-  * a single projection, and only the NXS-extraction and literal-parse
-  * UDFs sit outside codegen.
+  * ordered dict). All NXS variables come from one extraction per row
+  * into the hidden `__nxs` column. Its UDF is non-deterministic, so
+  * Catalyst never inlines the extraction into the projections or the
+  * pushed-down filters that read `__nxs` fields.
   *
   * Per-variable failures (bad path, unresolved template, cast error)
   * null out silently (F11, ref: scicat_dataset.py:421-427) — compile-time
@@ -70,6 +71,7 @@ object ImscCompiler {
       val nxsType = StructType(fields)
       val extractUdf = udf((nexusJson: String) =>
         if (nexusJson == null) "{}" else NexusExtractor.extractAllJson(nxsVars, nexusJson))
+        .asNondeterministic()
       hidden += ("__nxs" -> from_json(extractUdf(col("nexus_json")), nxsType))
     }
 

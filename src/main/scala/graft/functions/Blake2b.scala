@@ -25,33 +25,52 @@ object Blake2b {
     Array(6, 15, 14, 9, 11, 3, 0, 8, 12, 2, 13, 7, 1, 4, 10, 5),
     Array(10, 2, 8, 4, 7, 6, 1, 5, 15, 11, 9, 14, 3, 12, 13, 0))
 
-  def hash(data: Array[Byte], digestSize: Int = 64): Array[Byte] = {
+  /** Incremental BLAKE2b: feed the input in pieces with `update`, then
+    * call `digest` once. The last block seen is held back until more
+    * input arrives, because only the final block is compressed with
+    * the last-block flag. */
+  final class Hasher(digestSize: Int = 64) {
     require(digestSize >= 1 && digestSize <= 64)
-    val h = IV.clone()
+    private val h = IV.clone()
     h(0) ^= 0x01010000L ^ digestSize.toLong
+    private val block = new Array[Byte](128)
+    private var filled = 0
+    private var t = 0L
 
-    var tLow = 0L
-    val blocks = math.max(1, (data.length + 127) / 128)
-    val out = new Array[Byte](digestSize)
-
-    var i = 0
-    while (i < blocks) {
-      val isLast = i == blocks - 1
-      val offset = i * 128
-      val len = if (isLast) data.length - offset else 128
-      val block = new Array[Byte](128)
-      System.arraycopy(data, offset, block, 0, math.max(len, 0))
-      tLow += math.max(len, 0)
-      compress(h, block, tLow, isLast)
-      i += 1
+    def update(data: Array[Byte], off: Int, len: Int): Unit = {
+      var i = off
+      val end = off + len
+      while (i < end) {
+        if (filled == 128) {
+          t += 128
+          compress(h, block, t, last = false)
+          filled = 0
+        }
+        val n = math.min(128 - filled, end - i)
+        System.arraycopy(data, i, block, filled, n)
+        filled += n
+        i += n
+      }
     }
 
-    var j = 0
-    while (j < digestSize) {
-      out(j) = (h(j / 8) >>> (8 * (j % 8))).toByte
-      j += 1
+    def digest(): Array[Byte] = {
+      t += filled
+      java.util.Arrays.fill(block, filled, 128, 0.toByte)
+      compress(h, block, t, last = true)
+      val out = new Array[Byte](digestSize)
+      var j = 0
+      while (j < digestSize) {
+        out(j) = (h(j / 8) >>> (8 * (j % 8))).toByte
+        j += 1
+      }
+      out
     }
-    out
+  }
+
+  def hash(data: Array[Byte], digestSize: Int = 64): Array[Byte] = {
+    val hasher = new Hasher(digestSize)
+    hasher.update(data, 0, data.length)
+    hasher.digest()
   }
 
   def hex(data: Array[Byte]): String = data.map(b => f"$b%02x").mkString

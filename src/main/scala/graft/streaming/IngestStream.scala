@@ -16,6 +16,10 @@ import graft.schema.ImscSchema
   * decode → F2 error filter → foreachBatch { schema selection →
   * imsc pipeline → F6 dedup anti-join → sink }`.
   *
+  * Per-file work: a file is read and its NXS variables extracted once
+  * per row, after schema selection, and neither is ever inlined into
+  * the F6/F7 dedup filters (see [[processBatch]]).
+  *
   * Delivery: checkpointed micro-batches + the dedup anti-join give
   * effective exactly-once (the reference's per-message commit + catalog
   * dedup reproduce the same guarantee, ref §2.7). Per-instrument
@@ -117,28 +121,25 @@ object IngestStream {
       when(SelectorCompiler.compile(s.selector, col("file_name")), s.id).otherwise(rest)
     }
 
+    // The per-file UDFs do I/O, so they are non-deterministic: Catalyst
+    // then neither copies them into the F6/F7 filters it pushes down nor
+    // inlines them into the projections that read their results, and
+    // each runs once per row.
     val reader = cfg.fileReader
     val lister = cfg.fileLister
-    val readUdf = udf((p: String) => reader(p))
+    val readUdf = udf((p: String) => reader(p)).asNondeterministic()
     val listUdf = udf((p: String) => lister(p).map(f =>
       (f.path, f.size.map(Long.box).orNull, f.time, f.chk.orNull,
-        f.uid.orNull, f.gid.orNull, f.perm.orNull)))
-
-    var withInputs = batch
-      .withColumn("schema_id", cascade)
-      .withColumn("data_file_path", col("file_name"))
-      .withColumn("nexus_json", readUdf(col("file_name")))
-      .withColumn("files", listUdf(col("file_name"))
-        .cast(ArrayType(DatasetAssembly.FilesSchema)))
+        f.uid.orNull, f.gid.orNull, f.perm.orNull))).asNondeterministic()
 
     // P19 + J2: read (sample name, proposal id) from the fixed NeXus
     // paths and query the catalog for matching sampleIds — feeds the J4
     // sampleId merge in assembly (ref: maybe_sample_dataset_pid,
     // scicat_offline_ingestor.py:164-191)
-    if (cfg.sampleAttachment.querySampleName) {
+    val sampleUdf = Option.when(cfg.sampleAttachment.querySampleName) {
       val att = cfg.sampleAttachment
       val catalogForSamples = cfg.catalog
-      val sampleUdf = udf { (nexusJson: String) =>
+      udf { (nexusJson: String) =>
         val rootOpt =
           if (nexusJson == null) None
           else scala.util.Try(graft.sources.NexusTree.fromJson(nexusJson)).toOption
@@ -147,13 +148,22 @@ object IngestStream {
           name <- graft.sources.NexusTree.readString(root, att.sampleNamePath)
           proposal <- graft.sources.NexusTree.readString(root, att.proposalIdPath)
         } yield catalogForSamples.querySamples(name, proposal)).getOrElse(Seq.empty[String])
-      }
-      withInputs = withInputs.withColumn("sample_pids", sampleUdf(col("nexus_json")))
+      }.asNondeterministic()
     }
+
+    val selected = batch
+      .withColumn("schema_id", cascade)
+      .withColumn("data_file_path", col("file_name"))
 
     val allSchemas = ordered ++ cfg.fallback
     val perSchema = allSchemas.flatMap { s =>
-      val subset = withInputs.filter(col("schema_id") === s.id)
+      // a schema's rows get their file inputs only after the schema
+      // filter, so each file is opened in its own branch and no other
+      val rows = selected.filter(col("schema_id") === s.id)
+        .withColumn("nexus_json", readUdf(col("file_name")))
+        .withColumn("files", listUdf(col("file_name"))
+          .cast(ArrayType(DatasetAssembly.FilesSchema)))
+      val subset = sampleUdf.fold(rows)(f => rows.withColumn("sample_pids", f(col("nexus_json"))))
       try Some(DatasetAssembly.pipeline(
         s, ImscCompiler.Context(catalog = cfg.catalog), cfg.options)(subset))
       catch {

@@ -47,10 +47,14 @@ object OnlineIngestor {
       catalog: Option[graft.catalog.Catalog] = None,
       fileReader: Option[String => Option[String]] = None): IngestStream.Config = {
     val (schemas, fallback) = loadSchemas(cfg)
-    val retries = cfg.ingestion.fileHandling.dataFileOpenRetryDelay match {
-      case Seq() => Seq.fill(math.max(cfg.ingestion.fileHandling.dataFileOpenMaxTries - 1, 0))(3.0)
+    val fh = cfg.ingestion.fileHandling
+    val retries = fh.dataFileOpenRetryDelay match {
+      case Seq() => Seq.fill(math.max(fh.dataFileOpenMaxTries - 1, 0))(3.0)
       case ds => ds
     }
+    val (hash, hashAlgorithm) = (fh.computeFileHash, fh.fileHashAlgorithm)
+    // an unknown algorithm fails here, at daemon start, not in every task
+    if (hash && hashAlgorithm != "blake2b") FileIngest.digest(hashAlgorithm)
     IngestStream.Config(
       schemas = schemas,
       fallback = fallback,
@@ -58,6 +62,7 @@ object OnlineIngestor {
       options = cfg.toAssemblyOptions,
       fileReader = fileReader.getOrElse(
         graft.sources.Hdf5Reader.fileReaderWith(retries)),
+      fileLister = p => Seq(FileIngest.stat(p, hash, hashAlgorithm)),
       dedupByPid = cfg.ingestion.checkIfDatasetExistsByPid,
       dedupMetadataKey =
         if (cfg.ingestion.checkIfDatasetExistsByMetadata)

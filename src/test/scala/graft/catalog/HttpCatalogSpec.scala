@@ -123,6 +123,22 @@ class HttpCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("deserialized copies share one HttpClient per JVM") {
+    def roundTrip(c: HttpScicatCatalog): HttpScicatCatalog = {
+      val bytes = new java.io.ByteArrayOutputStream
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(c)
+      out.close()
+      new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes.toByteArray))
+        .readObject().asInstanceOf[HttpScicatCatalog]
+    }
+    val (a, b) = (roundTrip(catalog), roundTrip(catalog))
+    assert(a ne b)
+    assert(a.client eq b.client)
+    assert(a.datasetExists("existing-pid") && !b.datasetExists("unknown-pid"))
+    assert(roundTrip(catalog.copy(timeoutMs = 300)).client eq a.client)
+  }
+
   test("processBatch F6/F7 matrix over the HTTP catalog (per-row executor probes)") {
     val spark = TestSpark.spark
     import spark.implicits._

@@ -26,6 +26,16 @@ class Blake2bSpec extends AnyFunSuite {
     assert(Blake2b.hashHex(data) != Blake2b.hashHex(("x" * 301).getBytes(UTF_8)))
   }
 
+  test("incremental updates of any split equal the one-shot hash") {
+    val data = new Array[Byte](1000)
+    new scala.util.Random(7).nextBytes(data)
+    for (total <- Seq(0, 1, 127, 128, 129, 256, 1000); chunk <- Seq(1, 64, 128, 200, 1000)) {
+      val hasher = new Blake2b.Hasher()
+      data.take(total).grouped(chunk).foreach(c => hasher.update(c, 0, c.length))
+      assert(Blake2b.hex(hasher.digest()) == Blake2b.hashHex(data.take(total)), s"$total/$chunk")
+    }
+  }
+
   test("digest size 32 truncated variant") {
     assert(Blake2b.hashHex("abc".getBytes(UTF_8), 32) ==
       "bddd813c634239723171ef3fee98579b94964e3bb1cb3e427262c8c068d52319")

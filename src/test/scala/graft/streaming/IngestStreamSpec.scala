@@ -28,6 +28,44 @@ object IngestStreamFixture extends Serializable {
       "2024-01-01T00:00:00+00:00", None, None, None, None))
 }
 
+/** JVM-wide count of reader calls per path: task closures are
+  * deserialized copies, so a counter they captured would count in the
+  * copy. */
+object ReadOnceFixture extends Serializable {
+  val reads = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicInteger]()
+
+  /** /<dir>/<sub>/r<doc>-<temp>.nxs holds doc_id <doc>, temperature <temp> K. */
+  val reader: String => Option[String] = { p =>
+    reads.computeIfAbsent(p, _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet()
+    val Array(doc, temp) = p.split('/').last.stripPrefix("r").stripSuffix(".nxs").split('-')
+    Some(s"""{"entry": {"doc_id": {"__value": ["$doc"]}, "title": {"__value": ["t$doc"]},
+            |  "temperature": {"__value": [$temp.0], "__attrs": {"units": "K"}}}}""".stripMargin)
+  }
+
+  /** The dataset document of a kept file, as the pipeline emitted it
+    * before reads were confined to one per row. */
+  def document(doc: String, name: String, path: String, temp: String): String =
+    s"""{"pid":"$doc","size":100,"numberOfFiles":1,"isPublished":false,"datasetName":"$name",""" +
+      s""""principalInvestigator":"","creationLocation":"ESS:graft","scientificMetadata":""" +
+      s"""{"sample_temperature":{"value":"$temp","unit":"K","human_name":"Sample Temperature",""" +
+      s""""type":"string"}},"owner":"","ownerEmail":"","sourceFolder":"$path","contactEmail":"",""" +
+      s""""creationTime":"2024-01-01T00:00:00+00:00","type":"raw","techniques":[],""" +
+      s""""instrumentId":"","proposalId":"","ownerGroup":"","accessGroups":[],"runNumber":"$doc",""" +
+      s""""origDataBlock":{"datasetId":"$doc","size":100,"chkAlg":"blake2b","dataFileList":""" +
+      s"""[{"path":"$path","size":100,"time":"2024-01-01T00:00:00+00:00"}],""" +
+      s""""ownerGroup":"","accessGroups":[]}}"""
+}
+
+/** F6/F7 through per-row probes: the catalog does not enumerate. */
+final case class ProbeOnlyCatalog(inner: graft.catalog.Catalog) extends graft.catalog.Catalog {
+  def lookupJson(url: String, field: String): Option[String] = inner.lookupJson(url, field)
+  def querySamples(name: String, proposalId: String): Seq[String] = inner.querySamples(name, proposalId)
+  def datasetExists(pid: String): Boolean = inner.datasetExists(pid)
+  def metadataValueExists(key: String, value: String): Boolean = inner.metadataValueExists(key, value)
+  def createDataset(datasetJson: String): String = inner.createDataset(datasetJson)
+  def createOrigDatablock(datablockJson: String): String = inner.createOrigDatablock(datablockJson)
+}
+
 class IngestStreamSpec extends AnyFunSuite {
   import TestSpark.spark
   import spark.implicits._
@@ -103,6 +141,47 @@ class IngestStreamSpec extends AnyFunSuite {
     assert(outNew.count() == 1) // empty catalog → ingested
   }
 
+  test("each file is read once per row, only in its own schema's branch") {
+    val pidItem =
+      """schema:
+        |  pid_item:
+        |    field_type: high_level
+        |    machine_name: pid
+        |    value: <doc_key>
+        |    type: string
+        |""".stripMargin
+    val data = graft.schema.ImscSchema.fromYamlOrJson(
+      IngestDemo.schemaYaml.replace("schema:", pidItem))
+    val beam = graft.schema.ImscSchema.fromYamlOrJson(IngestDemo.schemaYaml
+      .replace("schema:", pidItem)
+      .replace("id: ingest-demo", "id: beam")
+      .replace("starts_with:/data/", "starts_with:/beam/")
+      .replace("value: ds_<title>", "value: beam_<title>"))
+    // pid 2 is a replay (F6); temperature 42.0 is already catalogued (F7)
+    val catalog = ProbeOnlyCatalog(graft.catalog.LocalCatalog(Map(
+      "datasets/2" -> "{}",
+      "datasets/old" ->
+        """{"scientificMetadata": {"sample_temperature": {"value": "42.0", "unit": "K"}}}""")))
+    val files = Seq("/data/a/r1-10.nxs", "/data/a/r2-20.nxs", "/beam/b/r3-30.nxs",
+      "/beam/b/r4-42.nxs", "/other/r5-50.nxs")
+    val batch = files.map(f => ("svc", s"job-$f", false, f, "{}", "ok"))
+      .toDF("service_id", "job_id", "error_encountered", "file_name", "metadata", "message")
+      .repartition(3)
+    ReadOnceFixture.reads.clear()
+    val out = IngestStream.processBatch(batch, cfg.copy(
+      schemas = Seq(data, beam), catalog = catalog, fileReader = ReadOnceFixture.reader,
+      dedupMetadataKey = Some("sample_temperature")))
+    val rows = out.select(org.apache.spark.sql.functions.to_json(
+      org.apache.spark.sql.functions.struct("*"))).as[String].collect().sorted.toSeq
+
+    import scala.jdk.CollectionConverters._
+    val reads = ReadOnceFixture.reads.asScala.map { case (p, n) => p -> n.get }.toMap
+    assert(reads == files.filterNot(_.startsWith("/other/")).map(_ -> 1).toMap)
+    assert(rows == Seq(
+      ReadOnceFixture.document("1", "ds_t1", "/data/a/r1-10.nxs", "10.0"),
+      ReadOnceFixture.document("3", "beam_t3", "/beam/b/r3-30.nxs", "30.0")))
+  }
+
   test("sample get-or-create anti-join (J5/§3.3)") {
     val pl72 = Seq(
       ("j1", "sampleA", "ymir"), ("j2", "sampleA", "ymir"), // dup in batch
@@ -142,6 +221,22 @@ class IngestStreamSpec extends AnyFunSuite {
     }
     assert(result.contains("ok") && calls == 2)
     assert(slept.toSeq == Seq(1000L)) // 0.001 clamped up to 1 s; second delay unused
+  }
+
+  test("S8: checksum streams a multi-block file to the one-shot digest") {
+    val bytes = new Array[Byte](3 * 128 * 1024 + 77)
+    new scala.util.Random(8).nextBytes(bytes)
+    val file = java.nio.file.Files.createTempFile("graft_chk", ".nxs")
+    java.nio.file.Files.write(file, bytes)
+    assert(FileIngest.checksum(file) == graft.functions.Blake2b.hashHex(bytes))
+    assert(FileIngest.checksum(file, "sha256") == graft.functions.Blake2b.hex(
+      java.security.MessageDigest.getInstance("SHA-256").digest(bytes)))
+  }
+
+  test("S8/F11: a read failure leaves chk null instead of throwing") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_chk") // opens, but read fails
+    val stats = FileIngest.stat(dir.toString, computeHash = true)
+    assert(stats.size.isDefined && stats.chk.isEmpty)
   }
 }
 

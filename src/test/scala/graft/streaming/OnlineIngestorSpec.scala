@@ -67,6 +67,43 @@ class OnlineIngestorSpec extends AnyFunSuite {
     assert(noDedup.dedupMetadataKey.isEmpty)
   }
 
+  test("compute_file_hash sets origDataBlock chk under file_hash_algorithm; off leaves it null") {
+    val spark = graft.TestSpark.spark
+    import spark.implicits._
+    val dir = schemasDir
+    val fallback = dir.resolve("fallback.yml") // matches every file path
+    Files.writeString(fallback, IngestDemo.schemaYaml.replace("id: ingest-demo", "id: fb"))
+    val data = Files.createTempFile("graft_hash", ".nxs")
+    val bytes = "not really hdf5".getBytes("UTF-8")
+    Files.write(data, bytes)
+    def chk(fileHandling: String, file: java.nio.file.Path = data): (String, String) = {
+      val batch = Seq(("svc", "j1", false, file.toString, "{}", "ok"))
+        .toDF("service_id", "job_id", "error_encountered", "file_name", "metadata", "message")
+      val sc = OnlineIngestor.buildStreamConfig(IngestorConfig.load(
+        s"""ingestion:
+           |  schemas_directory: "$dir"
+           |  fallback_schema_file_path: "$fallback"
+           |  file_handling:
+           |$fileHandling
+           |""".stripMargin),
+        catalog = Some(graft.catalog.LocalCatalog.empty),
+        fileReader = Some(IngestStreamFixture.reader))
+      val block = IngestStream.processBatch(batch, sc).select("origDataBlock").head().getStruct(0)
+      val files = block.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("dataFileList")
+      (block.getAs[String]("chkAlg"), files.head.getAs[String]("chk"))
+    }
+    assert(chk("    compute_file_hash: true") == ("blake2b", graft.functions.Blake2b.hashHex(bytes)))
+    val sha = java.security.MessageDigest.getInstance("SHA-256").digest(bytes)
+      .map(b => f"${b & 0xff}%02x").mkString
+    assert(chk("    file_hash_algorithm: sha256") == ("sha256", sha)) // hashing is on by default
+    assert(chk("    compute_file_hash: false") == ("blake2b", null))
+    // a file whose read fails still yields its dataset, with a null chk
+    assert(chk("    compute_file_hash: true", file = dir) == ("blake2b", null))
+    intercept[java.security.NoSuchAlgorithmException] {
+      chk("    file_hash_algorithm: no-such-digest")
+    }
+  }
+
   test("health endpoint: 200 when all probes pass, 503 otherwise, 404 elsewhere") {
     var kafkaUp = true
     val server = HealthCheck.start(
