@@ -185,35 +185,60 @@ object Bench {
   def run(spark: SparkSession, sfDir: String, name: String): Double =
     summarize(repeats(spark, sfDir, name))
 
-  /** Shuffle-partition count DERIVED FROM INPUT BYTES (guide §2.2,
-    * r17 verdict #2 "scale shuffle partitions to input bytes"), shared
-    * by Bench and Verify so the oracle gate proves every query's
-    * result is invariant under the bench's partitioning. The constant
-    * `cpus` default meant a 17 MB sf0.1 input ran every exchange 32
-    * wide — measured full chain 292.1 s at 32 partitions vs 269.0 s at
-    * 8 (83 queries >0.1 s faster, worst regression +0.6 s), and the
-    * 8-core leg ran the SAME widths, which is why 32 cores kept losing
-    * to 8. One partition per `SPARK_GRAFT_PARTITION_INPUT_BYTES`
-    * (default 2 MiB of raw parquet — the measured ~50× intermediate
-    * explosion lands each shuffle partition in the guide's
-    * ~100 MB-at-scale band), clamped to [1, 512] for the local mains;
-    * a cluster deployment sizes by the same bytes rule with its own
-    * cap. Compute-dense operators whose cost is fan-out rather than
-    * input bytes pin their own width (the lp wedge's
-    * `graft.lp.wedgeParts`). SPARK_GRAFT_SHUFFLE_PARTITIONS overrides
-    * outright (set it to the core count to reproduce earlier rounds). */
-  def shufflePartitions(sfDir: String): String =
-    sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", {
-      val perPart = sys.env.get("SPARK_GRAFT_PARTITION_INPUT_BYTES")
-        .map(_.toLong).getOrElse(2L << 20)
-      val bytes = try {
-        val s = java.nio.file.Files.walk(java.nio.file.Paths.get(sfDir))
-        try s.filter(p => java.nio.file.Files.isRegularFile(p))
-          .mapToLong(p => java.nio.file.Files.size(p)).sum
-        finally s.close()
-      } catch { case _: Throwable => 0L }
-      math.max(1L, math.min(512L, (bytes + perPart - 1) / perPart)).toString
-    })
+  /** Shuffle-partition count DERIVED FROM INPUT BYTES (guide §2.2),
+    * shared by every measurement main through [[session]] so the oracle
+    * gate proves every query's result is invariant under the bench's
+    * partitioning. A constant core-count width ran every exchange of a
+    * 17 MB sf0.1 input 32 wide (full chain 292.1 s at 32 partitions vs
+    * 269.0 s at 8) and gave 8 and 32 cores the same widths. One
+    * partition per `SPARK_GRAFT_PARTITION_INPUT_BYTES` (default 2 MiB
+    * of raw parquet — the ~50× intermediate explosion lands each
+    * shuffle partition in the guide's ~100 MB-at-scale band), clamped
+    * to [1, 512] for the local mains; a cluster deployment sizes by the
+    * same bytes rule with its own cap. Compute-dense operators whose
+    * cost is fan-out rather than input bytes pin their own width (the
+    * lp wedge's `graft.lp.wedgeParts`). */
+  def shufflePartitions(sfDir: String): String = {
+    val perPart = sys.env.get("SPARK_GRAFT_PARTITION_INPUT_BYTES")
+      .map(_.toLong).getOrElse(2L << 20)
+    val bytes = try {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(sfDir))
+      try s.filter(p => java.nio.file.Files.isRegularFile(p))
+        .mapToLong(p => java.nio.file.Files.size(p)).sum
+      finally s.close()
+    } catch { case _: Throwable => 0L }
+    math.max(1L, math.min(512L, (bytes + perPart - 1) / perPart)).toString
+  }
+
+  /** The session every measurement main runs in (Bench, Verify,
+    * ExplainDump, DiagProbe, AbBench), so their plans and stage numbers
+    * come from the plan the bench times: `SPARK_GRAFT_CPUS` cores
+    * (default: the host's), the [[shufflePartitions]] byte rule, AQE on,
+    * UTC, no UI. AQE coalesces with Spark's own defaults
+    * (parallelismFirst, 64 MB advisory size): byte-driven coalescing
+    * cannot see CPU per byte and measured slower on the CPU-dense
+    * small-byte stages (OPTIMIZATION_r18.md). `extraConf` ("k=v;k2=v2")
+    * adds ad-hoc settings on top, e.g. a `graft.*` knob for a plan
+    * dump. */
+  def session(sfDir: String, extraConf: Option[String] = None): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val base = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", shufflePartitions(sfDir))
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    val spark = extraConf.toSeq.flatMap(_.split(";")).map(_.trim)
+      .filter(_.contains("="))
+      .foldLeft(base) { (b, kv) =>
+        val Array(k, v) = kv.split("=", 2)
+        b.config(k, v)
+      }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** 1/5/15-minute load averages, so a contended driver machine is
     * self-evident in the bench line (VERDICT r3 "What's wrong" #1: a
@@ -291,33 +316,11 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    // FIRST thing, before the session (and its 32 threads) exists:
-    // the launch-window co-tenant load (r16 verdict #3).
+    // FIRST thing, before the session (and its threads) exists: the
+    // launch-window co-tenant load.
     val loadLaunch = loadAvg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions(sfDir))
-      .config("spark.sql.adaptive.enabled", "true")
-      // Byte-driven post-shuffle sizing (guide §2.2, r17 verdict #2):
-      // with parallelismFirst (Spark's default) AQE coalesces only down
-      // to the session core count, so every kilobyte-sized exchange of
-      // a 238-query chain still ran `cpus` near-empty reduce tasks and
-      // 32 cores lost to 8. parallelismFirst=false sizes reduce stages
-      // from their measured bytes (advisoryPartitionSizeInBytes), which
-      // is the scale-correct rule on a cluster too — at 100 TB every
-      // healthy exchange carries far more than advisory×cores, so this
-      // flips nothing there, while here it stops the task storms.
-      // Env-overridable for A/B comparability with earlier rounds.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "64m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(sfDir)
     if (sys.env.get("SPARK_GRAFT_BENCH_METRICS").contains("1"))
       installMetrics(spark)
 

@@ -1,9 +1,8 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-/** Ad-hoc diagnostic main (r18): prints the partition counts of the
+/** Ad-hoc diagnostic main: prints the partition counts of the
   * build-once memos and a per-stage task/time table for one query —
   * the stage-level visibility the disabled UI would give (guide §7.1).
   * Usage: runMain graft.DiagProbe <sfDir> <queryName> */
@@ -11,20 +10,9 @@ object DiagProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val query = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // the bench's own session, so the stage table is the bench's plan;
     // ad-hoc conf overrides: SPARK_GRAFT_DIAG_CONF="k=v;k2=v2"
-    val extra = sys.env.get("SPARK_GRAFT_DIAG_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = extra.foldLeft(b0) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(sfDir, sys.env.get("SPARK_GRAFT_DIAG_CONF"))
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
         val si = sc.stageInfo

@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `.explain("formatted")` for a comma-separated list of declared
   * queries (or ALL) to `<outDir>/<name>.txt` — the plan evidence the
-  * optimization rounds commit under plans/r{N}/. Mirrors [[Bench]]'s
-  * session config so the captured plan is the one the bench runs.
+  * optimization rounds commit under plans/. Runs in [[Bench.session]],
+  * so the captured plan is the one the bench runs.
   *
   * Usage: runMain graft.ExplainDump <sfDir> <outDir> <q1,q2,...|ALL>
   */
@@ -17,24 +15,12 @@ object ExplainDump {
       sys.exit(2)
     }
     val Array(sfDir, outDir, list) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // ad-hoc conf overrides (SPARK_GRAFT_EXPLAIN_CONF="k=v;k2=v2") —
-    // e.g. graft.zorder.pinPartitioning=false to dump the ranking
-    // subtree a localCheckpoint otherwise hides as Scan ExistingRDD
-    val extra = sys.env.get("SPARK_GRAFT_EXPLAIN_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // mirror the bench session's input-byte-derived partitioning so
-      // dumped plans show the exchanges the bench actually runs
-      .config("spark.sql.shuffle.partitions", Bench.shufflePartitions(sfDir))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = extra.foldLeft(b0) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the bench's own session, so dumped plans show the exchanges the
+    // bench actually runs; SPARK_GRAFT_EXPLAIN_CONF="k=v;k2=v2" adds
+    // ad-hoc settings — e.g. graft.zorder.pinPartitioning=false to dump
+    // the ranking subtree a localCheckpoint otherwise hides as
+    // Scan ExistingRDD
+    val spark = Bench.session(sfDir, sys.env.get("SPARK_GRAFT_EXPLAIN_CONF"))
     val names = if (list == "ALL") SparkEntry.queries.keys.toSeq.sorted
       else list.split(",").map(_.trim).filter(_.nonEmpty).toSeq
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
@@ -54,8 +40,8 @@ object ExplainDump {
       }
     }
     spark.stop()
-    // a scripted plan-dump step must not silently produce nothing
-    // (r17 ADVICE): any failed query exits nonzero
+    // a scripted plan-dump step must not silently produce nothing:
+    // any failed query exits nonzero
     if (failed > 0) sys.exit(1)
   }
 }

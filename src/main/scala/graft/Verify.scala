@@ -1,22 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.sources.NexusExtractor.jsonStr
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // same input-byte-derived partitioning as the bench session, so
-      // the oracle hash-compare proves every result is invariant under
-      // the partition count the bench actually runs with
-      .config("spark.sql.shuffle.partitions", Bench.shufflePartitions(sfDir))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the bench's own session (input-byte-derived partitioning), so the
+    // oracle hash-compare proves every result is invariant under the
+    // partition count the bench actually runs with
+    val spark = Bench.session(sfDir)
     new java.io.File(outDir).mkdirs()
     // Optional comma-separated subset for fast local iteration with
     // tools/check_oracle.py; the driver runs without it (all queries).
@@ -34,24 +27,12 @@ object Verify {
       // (quiescent point; BuildOnce memos are spared) — r12 verdict #3
       graft.operators.BuildOnce.releaseScoped(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // queries that are rows-only BY DESIGN, with the reason
     val rowsOnly = SparkEntry.rowsOnly
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/rows_only.json"), rowsOnly)
     spark.stop()
   }

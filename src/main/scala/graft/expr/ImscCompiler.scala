@@ -16,8 +16,9 @@ import ValueOperators.OpSpec
   * (ref: extract_variables_values, src/scicat_dataset.py:375-427).
   *
   * Input: a DataFrame with one row per file carrying
-  * `data_file_path: string` and `nexus_json: string` (the decoded
-  * NeXus tree; a real HDF5 DSv2 source would substitute here).
+  * `data_file_path: string` and `nexus_json: string`: the NeXus tree
+  * in the engine's JSON tree encoding, as the ingest stream's default
+  * `fileReader` ([[graft.sources.Hdf5Reader]]) renders each HDF5 file.
   *
   * Output: the same rows plus one `struct(value, unit)` column per
   * variable. Variables compile IN DEFINITION ORDER so later templates

@@ -1496,9 +1496,9 @@ object Dedup {
   def prefixJaccardPairs(spark: SparkSession, sfDir: String,
       tNum: Int = 9, tDen: Int = 10, batchMod: Int = 20): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // The whole screen runs on the HASHED-token domain (r16 verdict
-    // #5): tokens become portable 48-bit hashes IN-ROW (array_distinct
-    // before the explode keeps set semantics without a dedup shuffle),
+    // The whole screen runs on the HASHED-token domain: tokens become
+    // portable 48-bit hashes IN-ROW (array_distinct before the explode
+    // keeps set semantics without a dedup shuffle),
     // so the verify arrays carry longs instead of raw strings — ~8×
     // narrower packed rows at prose-length tokens. Set identity is all
     // the prefix theory and the intersect need, so every bound holds
@@ -1531,7 +1531,7 @@ object Dedup {
     // t·n1 ≤ n2 ≤ n1/t, an exact integer band that prunes candidates
     // before the (far costlier) verify join sees them
     //
-    // POSITIONAL filter (PPJoin proper, r16): the prefix ranks sort by
+    // POSITIONAL filter (PPJoin proper): the prefix ranks sort by
     // a GLOBAL (df, token) order, so any common token ordered before a
     // both-prefix match is itself a both-prefix match — at the pair's
     // FIRST observed match no common token precedes it, giving the
@@ -1549,9 +1549,9 @@ object Dedup {
     // plan stops flip-flopping between strategies on a degenerate
     // near-boundary corpus (the uniform 31-word sf1 fixture measured
     // bimodal 25–179 s under AQE's choice; broadcast pins it).
-    // SIZE-GATED (r17 verdict #2): the batch grows linearly with the
-    // corpus (doc_id % batchMod), so an unconditional hint would ship
-    // a hundreds-of-GB relation at 100 TB and OOM past AQE's checks.
+    // SIZE-GATED: the batch grows linearly with the corpus
+    // (doc_id % batchMod), so an unconditional hint would ship a
+    // hundreds-of-GB relation at 100 TB and OOM past AQE's checks.
     // Gate on the scan-stats estimate of the batch's share of the raw
     // corpus bytes — the prefix index is strictly narrower than the
     // text it came from (≤ ~1/t of the distinct tokens, hashed to
@@ -1579,20 +1579,11 @@ object Dedup {
     // as before, but packed in 2 rows of longs instead of exploded
     // string rows through two joins and a re-shuffle groupBy. The
     // packed build is SEMI-JOINED to the docs that actually survive the
-    // positional filter (r16 ADVICE: the unfiltered build collected an
-    // array for every doc in the corpus, bounding verify storage by
-    // whole-corpus token mass instead of surviving candidates).
-    // A/B knob for the sf1 instability hunt (r17): "1" (default) =
-    // candidate-scoped packed build; "0" = whole-corpus packed build
-    val semiJoinSets = spark.conf.getOption("graft.ppj.semijoinSets")
-      .orElse(sys.props.get("graft.ppj.semijoinSets"))
-      .forall(_.toBoolean)
-    val setsBase = if (semiJoinSets) {
-      val candIds = candidates.select(col("id1").as("doc_id"))
-        .unionByName(candidates.select(col("id2").as("doc_id"))).distinct()
-      tok.join(candIds, Seq("doc_id"), "left_semi")
-    } else tok
-    val sets = setsBase
+    // positional filter, so verify storage is bounded by the surviving
+    // candidates, not by whole-corpus token mass.
+    val candIds = candidates.select(col("id1").as("doc_id"))
+      .unionByName(candidates.select(col("id2").as("doc_id"))).distinct()
+    val sets = tok.join(candIds, Seq("doc_id"), "left_semi")
       .groupBy(col("doc_id")).agg(collect_list(col("w")).as("ws"))
       .localCheckpoint(eager = false) // both verify sides
     candidates

@@ -70,13 +70,10 @@ object GraphOps {
   /** Connected components by STAR CONTRACTION (Kiveris et al. 2014,
     * "Connected Components in MapReduce and Beyond": alternating
     * large-star / small-star rounds) — the O(log²) algorithm for
-    * 100 TB graphs. Since r15 this is THE engine CC:
-    * [[Dedup.connectedComponents]] delegates here after its min-label
-    * propagation formulation (O(diameter) rounds) was measured
-    * needing 21 rounds on the sparse 8-plane sf1 near-dup graph — the
-    * diameter-bound degeneration this docstring always warned about
-    * (long chains: citation graphs, web link graphs), arriving
-    * earlier than expected.
+    * 100 TB graphs. This is THE engine CC: [[Dedup.connectedComponents]]
+    * delegates here, because min-label propagation needs O(diameter)
+    * rounds (21 on the sparse 8-plane sf1 near-dup graph; long chains
+    * such as citation or web link graphs are worse).
     *
     * Per round, both stars are JOIN-SHAPED, never collect_list: the
     * per-node minimum reduces map-side, then one equi-join attaches
@@ -84,13 +81,14 @@ object GraphOps {
     * materializes, so a hot node (boilerplate hub) costs a skewed
     * join (AQE-splittable) instead of an OOM-sized aggregation
     * buffer. Edges stay canonical (u > v) by construction after every
-    * round; convergence is an EXACT change test — count match plus an
-    * empty `exceptAll` anti-join between consecutive (checkpointed)
-    * edge tables. A hashed fingerprint could collide across distinct
-    * edge sets and terminate early with wrong labels; the anti-join
-    * costs one extra join per round on already-truncated lineage and
-    * can never lie. Exhausting `maxIter` without a fixed point throws
-    * instead of silently emitting mid-contraction labels.
+    * round; convergence is an EXACT change test — count match plus
+    * full membership of the new edge table in the old one (a left
+    * join between consecutive checkpointed tables). A hashed
+    * fingerprint could collide across distinct edge sets and terminate
+    * early with wrong labels; the join costs one extra join per round
+    * on already-truncated lineage and can never lie. Each round's edge
+    * counts are logged at DEBUG. Exhausting `maxIter` without a fixed
+    * point throws instead of silently emitting mid-contraction labels.
     *
     * large-star(u): m = min(Γ(u) ∪ {u}); emit (v, m) for v ∈ Γ(u),
     * v > u. small-star(u over canonical edges): m = min(Γ₍small₎(u));
@@ -99,21 +97,7 @@ object GraphOps {
     * label read-off is one (node)-keyed min. */
   def connectedComponentsStar(nodes: DataFrame, edges: DataFrame,
       idCol: String, maxIter: Int = 20): DataFrame = {
-    // r17 A/B switch for the per-round plan shape (adopted winner is
-    // the default; the losers stay selectable so the measurement is
-    // reproducible): "base" = r16 shape (eager ls checkpoint,
-    // groupBy+join both stars), "lazyls" = ls checkpoint lazy (one
-    // fewer job per round; ss's checkpoint job materializes it),
-    // "window" = large-star min via a partition window (one exchange +
-    // sort instead of agg + join re-read).
-    val variant = nodes.sparkSession.conf
-      .getOption("graft.ccstar.variant").getOrElse("base")
-    // unknown strings otherwise silently select the lazyls branch,
-    // changing per-round job structure with no signal (r17 ADVICE)
-    require(Set("base", "lazyls", "window")(variant),
-      s"graft.ccstar.variant must be base|lazyls|window, got '$variant'")
-    val logRounds = nodes.sparkSession.conf
-      .getOption("graft.ccstar.log").exists(_.toBoolean)
+    val log = org.apache.log4j.Logger.getLogger(getClass)
     var e = edges.toDF("x", "y")
       .filter(col("x") =!= col("y"))
       .select(greatest(col("x"), col("y")).cast("long").as("u"),
@@ -123,25 +107,18 @@ object GraphOps {
     var stable = false
     var iter = 0
     while (!stable && iter < maxIter) {
-      // large-star over the bidirected view
+      // large-star over the bidirected view, materialized eagerly: a
+      // lazy checkpoint here (one job fewer per round) and a window
+      // min instead of agg + join both measured no faster
+      // (OPTIMIZATION_r17.md)
       val bidir = e.select(col("u").as("a"), col("v").as("b"))
         .unionByName(e.select(col("v").as("a"), col("u").as("b")))
-      val lsPlan = if (variant == "window") {
-        val w = org.apache.spark.sql.expressions.Window.partitionBy(col("a"))
-        bidir.withColumn("m", least(min(col("b")).over(w), col("a")))
-          .filter(col("b") > col("a") && col("b") =!= col("m"))
-          .select(col("b").as("u"), col("m").as("v"))
-          .distinct()
-      } else {
-        val mA = bidir.groupBy(col("a"))
-          .agg(least(min(col("b")), first(col("a"))).as("m"))
-        bidir.join(mA, "a")
-          .filter(col("b") > col("a") && col("b") =!= col("m"))
-          .select(col("b").as("u"), col("m").as("v"))
-          .distinct()
-      }
-      val ls = if (variant == "base") lsPlan.localCheckpoint()
-        else lsPlan.localCheckpoint(eager = false)
+      val mA = bidir.groupBy(col("a"))
+        .agg(least(min(col("b")), first(col("a"))).as("m"))
+      val ls = bidir.join(mA, "a")
+        .filter(col("b") > col("a") && col("b") =!= col("m"))
+        .select(col("b").as("u"), col("m").as("v"))
+        .distinct().localCheckpoint()
       // small-star over the (already canonical) large-star output
       val mS = ls.groupBy(col("u")).agg(min(col("v")).as("m"))
       val ss = ls.join(mS, "u")
@@ -152,18 +129,15 @@ object GraphOps {
         .distinct().localCheckpoint()
       // exact fixed-point test: same cardinality and no edge in the new
       // set absent from the old (both sides are distinct + checkpointed,
-      // so set equality; never collects the edges to the driver). ONE
-      // job per round (r18): the count and the membership check ride
-      // the same aggregate over a left join, replacing the former
-      // count() + exceptAll().isEmpty pair — the iterative rounds are
-      // job-count-bound at the margin, and the decision is unchanged.
+      // so set equality; never collects the edges to the driver). The
+      // count and the membership check ride ONE aggregate over a left
+      // join, so each round's test is a single job.
       val chk = ss.join(e.withColumn("__old", lit(1)), Seq("u", "v"), "left")
         .agg(count(lit(1)).as("n"), count(col("__old")).as("matched"))
         .head()
       val ssCount = chk.getLong(0)
       stable = ssCount == eCount && chk.getLong(1) == ssCount
-      if (logRounds)
-        System.err.println(s"[ccstar] iter=$iter edges=$eCount -> $ssCount stable=$stable")
+      log.debug(s"ccstar iter=$iter edges=$eCount -> $ssCount stable=$stable")
       e = ss
       eCount = ssCount
       iter += 1
@@ -274,22 +248,21 @@ object GraphOps {
     * ([[Dedup.fpRefresh]]), not a rebuild. */
   def linkPrediction(spark: SparkSession, sfDir: String, k: Int = 20,
       maxHubDeg: Int = 256): DataFrame =
-    // the candidate-graph build feeds FIVE subtrees (both wedge sides,
-    // the degree census, and the closing anti-join) AND re-ran per
-    // invocation — it is now the [[candidatePairsMaterialized]]
-    // build-once family (r11 verdict #4), so repeats pay only the
-    // wedge/anti-join marginal cost and the bench charges the build to
-    // its declared `graph_candidates_build` row
+    // the candidate graph feeds FIVE subtrees (both wedge sides, the
+    // degree census, and the closing anti-join); as the
+    // [[candidatePairsMaterialized]] build-once family it is built once
+    // per session, so repeats pay only the wedge/anti-join marginal
+    // cost and the bench charges the build to its declared
+    // `graph_candidates_build` row
     linkPredictionOf(candidatePairsMaterialized(spark, sfDir), k, maxHubDeg)
 
   /** Same, over a caller-supplied (id1, id2) candidate edge list — the
     * prefix-factoring discipline ([[graft.operators.Relational
-    * .trendingDecayOf]]): since r14 the default hub cap is the
-    * sf1-measured 256, which BITES at sf0.1 (max degree 311) and sf1 —
-    * the cap is therefore both spec-testable on synthetic graphs AND
-    * oracle-gated on the real corpus (the DuckDB replica mirrors the
-    * cap; `graph_dropped_hubs` is the alert channel for what it
-    * excludes). */
+    * .trendingDecayOf]]): the default hub cap 256 BITES at sf0.1 (max
+    * degree 311) and sf1, so the cap is both spec-testable on
+    * synthetic graphs AND oracle-gated on the real corpus (the DuckDB
+    * replica mirrors the cap; `graph_dropped_hubs` is the alert
+    * channel for what it excludes). */
   def linkPredictionOf(pairs: DataFrame, k: Int = 20,
       maxHubDeg: Int = 256): DataFrame = {
     val und = pairs.union(
@@ -305,106 +278,42 @@ object GraphOps {
       .select(col("w"), col("u"),
         expr(s"1000000000000 DIV (${
           graft.operators.TextAnalysis.plog2MicroSql("deg")})").as("aa_micro"))
-    // r17 re-audit of the r12 `lp_full_nockpt` adoption (recorded
-    // NEGATIVE, default unchanged): the initial plan prints the mids
-    // pipeline twice, which motivated a "symmetric" arm (aa_micro on
-    // both projections so the exchange subtrees canonicalize equal) —
-    // but column pruning strips the probe-side copy right back out, so
-    // symmetric optimizes to the IDENTICAL plan as nockpt, and the two
-    // wedge-side Exchanges already canonicalize equal below the
-    // asymmetric projections (AQE stage reuse covers them at runtime).
-    // A/B at sf0.1 (two orderings, 3 passes each): nockpt 18.2/13.0 s,
-    // symmetric 13.9/16.7 s, ckpt 16.1/14.3 s medians — a wash, the
-    // in-chain variance lives in the wedge-aggregate stage, not in
-    // plan-shape nondeterminism. Variants stay selectable for the
-    // record via graft.lp.wedge.
     // The wedge self-join EXPLODES ~30× (12 MB of mids → ~360 MB of
-    // partial-aggregate output at sf0.1): AQE sizes the join's reduce
-    // stage from its INPUT bytes and coalesced it to ~10 tasks, putting
-    // 40+ s of CPU and ~100 MB of aggregate spill on a third of the
-    // cores (r18 stage probe; the mechanism behind the 8-core chain
-    // matching the 32-core one). An EXPLICIT hash repartition on the
-    // join key is exempt from AQE coalescing, so the explode + partial
-    // aggregate runs at a width scaled to the session (4 waves per
-    // core by default, conf-able for cluster deployments); both wedge
-    // sides share the one exchange (same canonical subtree).
+    // partial-aggregate output at sf0.1), but AQE sizes a join's reduce
+    // stage from its INPUT bytes and would coalesce it to a few tasks.
+    // An EXPLICIT hash repartition on the join key is exempt from AQE
+    // coalescing, so the explode + partial aggregate runs at a width
+    // scaled to the session (4 waves per core by default, conf-able for
+    // cluster deployments). Each wedge side gets its own exchange at
+    // that width: column pruning drops aa_micro from the probe side
+    // BELOW its repartition, so the two exchanges differ and AQE does
+    // not reuse one for the other (the mids pipeline runs per side).
     val wedgeParts = pairs.sparkSession.conf
       .getOption("graft.lp.wedgeParts").map(_.toInt).getOrElse(
         4 * pairs.sparkSession.sparkContext.defaultParallelism)
-    val wedgeVariant = pairs.sparkSession.conf
-      .getOption("graft.lp.wedge").getOrElse("nockpt")
-    require(Set("nockpt", "symmetric", "ckpt", "grouped")(wedgeVariant),
-      s"graft.lp.wedge must be nockpt|symmetric|ckpt|grouped, got '$wedgeVariant'")
-    val wedge = wedgeVariant match {
-      case "grouped" =>
-        // Pair generation WITHOUT the self-join (r18 A/B arm): per
-        // middle, the sorted neighbor array generates each unordered
-        // pair exactly once via a codegen array expression — the join
-        // materialized d² rows per middle and filtered to d(d-1)/2,
-        // plus paid the SMJ sort of both sides. Same aggregate input
-        // (u < v pairs with the middle's constant aa_micro), so the
-        // result is identical; only the pair-stream construction
-        // changes. slice length is clamped by Spark, so size(us) is a
-        // safe upper bound for the tail slice.
-        val m = mids.repartition(wedgeParts, col("w"))
-        m.groupBy(col("w"), col("aa_micro"))
-          .agg(sort_array(collect_list(col("u"))).as("us"))
-          .select(col("aa_micro"), explode(expr(
-            "flatten(transform(us, (x, i) -> " +
-              "transform(slice(us, i + 2, size(us)), y -> struct(x, y))))"
-          )).as("p"))
-          .select(col("p.x").as("u"), col("p.y").as("v"), col("aa_micro"))
-      case "ckpt" =>
-        val m = mids.localCheckpoint(eager = false)
-        m.select(col("w"), col("u"), col("aa_micro"))
-          .join(m.select(col("w"), col("u").as("v")), Seq("w"))
-          .filter(col("u") < col("v"))
-      case "symmetric" =>
-        mids.select(col("w"), col("u"), col("aa_micro"))
-          .join(mids.select(col("w"), col("u").as("v"),
-            col("aa_micro").as("aa2")), Seq("w"))
-          .filter(col("u") < col("v"))
-          .select(col("w"), col("u"), col("aa_micro"), col("v"))
-      case _ => // "nockpt": the r12 shape, wedge exchange width pinned
-        val m = mids.repartition(wedgeParts, col("w"))
-        m.select(col("w"), col("u"), col("aa_micro"))
-          .join(m.select(col("w"), col("u").as("v")), Seq("w"))
-          .filter(col("u") < col("v"))
-    }
-    // The (u, v) aggregate is the measured cost center (r12: 56.4 M
-    // wedge rows → 10.7 M keys, ~10 s of the 13 s total; map-side
-    // combine removes only 11% because one pair's wedges spread across
-    // w-partitions — AbBench probe, r13). Packing the pair into ONE
-    // long key (u·2³² + v) ships 16 B/row through that irreducible
-    // exchange instead of 24 B and takes HashAggregate's single-long
-    // fast path — measured 7% off the stage (lp_wagg_packed 6.61 s vs
-    // 7.08 s; the salted two-level alternative measured 53% WORSE —
-    // the extra exchange buys nothing when multiplicity isn't
-    // reducer-concentrated). Precondition ids ∈ [0, 2³¹) is GUARDED
-    // on BOTH ends (r13 advice: a negative caller-supplied id would
-    // otherwise pack into an ambiguous key and unpack as the wrong
-    // pair): out-of-range ids raise instead of silently corrupting
-    // keys (a 100 TB corpus with synthetic wide ids disables packing,
-    // it doesn't inherit a wrong answer).
-    // The uv aggregate's width (r18): the session's byte-derived
-    // shuffle partitioning sizes this exchange from INPUT bytes, but
-    // the aggregate's cost is the 10.7 M-key hash build — CPU-bound,
-    // so its width should scale with cores like the wedge exchange.
-    // An explicit repartition on the packed key pins it (the groupBy
-    // reuses the exchange — same key, same count); the map-side
-    // partial aggregate moves above the exchange, which the r13 probe
-    // showed removes only 11% of rows anyway (pair multiplicity is not
-    // reducer-concentrated). 0 disables the pin (pre-r18 shape).
-    val aggParts = pairs.sparkSession.conf
-      .getOption("graft.lp.aggParts").map(_.toInt).getOrElse(wedgeParts)
-    val packed = wedge
+    val m = mids.repartition(wedgeParts, col("w"))
+    val wedge = m.select(col("w"), col("u"), col("aa_micro"))
+      .join(m.select(col("w"), col("u").as("v")), Seq("w"))
+      .filter(col("u") < col("v"))
+    // The (u, v) aggregate is the cost center (56.4 M wedge rows →
+    // 10.7 M keys at sf0.1); map-side combine removes only ~11% of the
+    // rows because one pair's wedges spread across w-partitions.
+    // Packing the pair into ONE long key (u·2³² + v) ships 16 B/row
+    // through that exchange instead of 24 B and takes HashAggregate's
+    // single-long fast path. Ids must lie in [0, 2³¹) and are checked
+    // on BOTH ends: an out-of-range id raises instead of packing into
+    // an ambiguous key that unpacks as the wrong pair.
+    // The aggregate's cost is a CPU-bound hash build, not input bytes,
+    // so its exchange is pinned at the wedge width too (the groupBy
+    // reuses it — same key, same count) rather than left to the
+    // session's byte-derived partitioning.
+    val scored = wedge
       .select(expr(
         """CASE WHEN u BETWEEN 0 AND 2147483647 AND v BETWEEN 0 AND 2147483647
           |THEN u * 4294967296 + v
           |ELSE raise_error('linkPrediction: doc id outside [0, 2^31); disable pair-key packing')
           |END""".stripMargin).as("uv"), col("aa_micro"))
-    val scored = (if (aggParts > 0) packed.repartition(aggParts, col("uv"))
-      else packed)
+      .repartition(wedgeParts, col("uv"))
       .groupBy(col("uv"))
       .agg(count(lit(1)).as("n_common"), sum(col("aa_micro")).as("score_micro"))
       .select(expr("uv DIV 4294967296").as("id1"),

@@ -84,6 +84,8 @@ object NexusExtractor {
         .mkString("{", ",", "}")
   }
 
+  /** JSON string literal: escapes quote, backslash and ALL control
+    * chars (< 0x20), so any text round-trips through a strict parser. */
   def jsonStr(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""

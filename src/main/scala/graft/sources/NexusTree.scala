@@ -8,13 +8,14 @@ import graft.schema.ConfigValue._
   * where datasets are typed nd-arrays with attributes (notably `units`)
   * (ref: src/scicat_dataset.py:285-324, src/scicat_nexus_helper.py:13-59).
   *
-  * No JVM HDF5 reader ships in this environment, so the decode step is
-  * pluggable: [[NexusTree.fromJson]] parses the engine's JSON tree
-  * encoding (used by fixtures and the streaming tests), and a real HDF5
-  * binding (e.g. jhdf) would produce the same [[NexusNode]] values. The
-  * extraction semantics — wildcard path expansion, scalar squeeze, unit
-  * attributes — are fully implemented and tested against the reference's
-  * fixture goldens.
+  * The pure-JVM [[Hdf5Reader]] decodes HDF5 files into these nodes; it
+  * is the ingest stream's default `fileReader`, which renders each tree
+  * in the engine's JSON tree encoding, and the `graft-hdf5` DSv2 source
+  * ([[Hdf5DataSource]]) scans the nodes directly. [[NexusTree.fromJson]]
+  * parses that encoding back for extraction; fixtures and the streaming
+  * tests write it by hand. The extraction semantics — wildcard path
+  * expansion, scalar squeeze, unit attributes — are tested against the
+  * reference's fixture goldens.
   */
 object NexusTree {
 

@@ -823,4 +823,49 @@ class PlanShapeSpec extends AnyFunSuite {
       p.contains("BroadcastNestedLoopJoin"),
       s"pair fan-out and exact twin must broadcast the small sides:\n$p")
   }
+
+  test("link prediction: both wedge sides read a pinned w repartition, uv aggregate pinned") {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM,
+      ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    object H extends AdaptiveSparkPlanHelper
+    def names(es: Seq[Expression]) = es.collect { case a: Attribute => a.name }
+    def repartition(key: String): PartialFunction[SparkPlan, ShuffleExchangeExec] = {
+      case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM &&
+          (e.outputPartitioning match {
+            case HashPartitioning(ks, _) => names(ks) == Seq(key)
+            case _ => false
+          }) => e
+      case ReusedExchangeExec(_, e: ShuffleExchangeExec)
+          if repartition(key).isDefinedAt(e) => e
+    }
+    // the final plan, after AQE has replanned joins and reused stages
+    val df = SparkEntry.queries("graph_link_prediction")(spark, sfDir)
+    df.collect()
+    val p = df.queryExecution.executedPlan
+    // each wedge side's explode width is an explicit repartition, exempt
+    // from AQE's byte-driven coalescing; both sides get the same width
+    val w = H.collect(p)(repartition("w"))
+    assert(w.nonEmpty && w.map(_.outputPartitioning.numPartitions).distinct.size == 1,
+      s"the wedge exchanges must be REPARTITION_BY_NUM on w at one width:\n$p")
+    def fed(side: SparkPlan) = H.collect(side)(repartition("w")).nonEmpty
+    val wedgeJoins = H.collect(p) {
+      case j: BaseJoinExec if names(j.leftKeys) == Seq("w") &&
+          fed(j.left) && fed(j.right) => j }
+    assert(wedgeJoins.size == 1, s"a w repartition must feed both wedge sides:\n$p")
+    val uv = H.collect(p)(repartition("uv"))
+    assert(uv.size == 1, s"exactly one REPARTITION_BY_NUM exchange keyed on uv:\n$p")
+    val uvAggs = H.collect(p) {
+      case a: BaseAggregateExec if names(a.groupingExpressions) == Seq("uv") &&
+          H.find(a)(_ eq uv.head).isDefined => a }
+    assert(uvAggs.nonEmpty, s"the uv exchange must sit below the uv aggregate:\n$p")
+    assert(H.collect(p) { case g: GenerateExec => g }.isEmpty &&
+      !p.toString.contains("collect_list"),
+      s"pairs come from the wedge self-join, never a per-middle array explode:\n$p")
+  }
 }
