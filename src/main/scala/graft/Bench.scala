@@ -1,8 +1,9 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicLongArray
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times the headline queries on SPARK_GRAFT_SF_DIR and
@@ -10,26 +11,30 @@ import org.apache.spark.sql.SparkSession
   * the noop sink so every column/expression is actually computed (count()
   * would let Catalyst prune the work).
   *
-  * Methodology (round-3 fixes, see VERDICT.md r2 "What's wrong" #1-3):
-  *   - per-query MEDIAN of 3 timed runs, so JIT/GC noise can't masquerade
-  *     as a regression (r2 saw 4.2x swings on unchanged code with 1-shot);
-  *   - repeats run as 3 round-robin PASSES over all queries (round-5
-  *     fix): a single machine-wide contention burst then hits at most
-  *     one repeat per query instead of all three of one query;
+  * Methodology:
+  *   - per-query MEDIAN of [[Repeats]] timed runs, so one JIT/GC outlier
+  *     cannot masquerade as a regression;
+  *   - the repeats run as round-robin PASSES over all queries, so a
+  *     machine-wide contention burst hits at most one repeat per query;
   *   - failures are reported as -1 AND listed under a "failed" key so a
   *     crashing query can never make the total look better;
   *   - the JSON line is printed as the FINAL stdout line after
   *     spark.stop(), and build.sbt uses `run / outputStrategy :=
   *     StdoutOutput` so it arrives bare (no sbt "[info] " prefix);
-  *   - the line is also written to SPARK_GRAFT_BENCH_OUT (default
-  *     bench_out.json) as a belt-and-braces channel.
+  *   - the three lines are also written to SPARK_GRAFT_BENCH_OUT
+  *     (default bench_out.json), and the per-query stage metrics of
+  *     every timed run to the [[sidecarPath]] beside it.
   */
 object Bench {
-  /** Timed passes per query (median-of-N). Env-overridable for the
-    * sf1 scaling leg, where 3 full passes of the measurable set would
-    * eat the round budget; official sf0.001–0.1 artifacts stay at 3. */
+  /** Timed passes per query (median-of-N); the sf1 scaling leg lowers
+    * it to keep a full pass of the set inside its time budget. */
   val Repeats: Int =
     sys.env.get("SPARK_GRAFT_BENCH_REPEATS").map(_.toInt).getOrElse(3)
+
+  /** Raw input bytes per shuffle partition in [[shufflePartitions]]:
+    * the ~50× intermediate explosion of the raw parquet lands each
+    * shuffle partition in the ~100 MB-at-scale band. */
+  val PartitionInputBytes: Long = 2L << 20
 
   def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
@@ -38,11 +43,10 @@ object Bench {
 
   /** Build-once families reset before timing their declared BUILD query,
     * so the build query reports the real build cost (cold memo) and the
-    * family's consumers report steady-state marginal cost — instead of
-    * the build landing on whichever consumer happens to run first
-    * (VERDICT r10 "What's wrong" #3). Repeats of the build query each
-    * pay a fresh build; consumers later in the same round-robin pass
-    * hit the rebuilt memo. */
+    * family's consumers report steady-state marginal cost, instead of
+    * the build landing on whichever consumer happens to run first.
+    * Repeats of the build query each pay a fresh build; consumers later
+    * in the same round-robin pass hit the rebuilt memo. */
   val coldStartFamilies: Map[String, Seq[String]] = Map(
     "graph_edges_build" -> Seq(graft.operators.Dedup.EdgesFamily),
     "dedup_lsh_verified_pairs" -> Seq(graft.operators.Similarity.LshPairsFamily),
@@ -52,11 +56,11 @@ object Bench {
     // in the chain, so it is the declared build row — each of its
     // repeats pays the full day-1 winnow + star-CC rebuild, and
     // dedup_cluster_refresh / corpus_split_churn report steady-state
-    // marginal cost (r17 verdict #4)
+    // marginal cost
     "corpus_daily_increment" -> Seq(graft.operators.Dedup.Day1ClusterFamily),
     // the day-2 admission table (the cascade's outcome) — its declared
     // build row is dedup_incremental itself; the five refresh
-    // consumers read the table like the nightly job they model (r18)
+    // consumers read the table like the nightly job they model
     "dedup_incremental" -> Seq(graft.operators.Dedup.AdmissionFamily),
     // the trained-quantizer family: the cell census is its declared
     // build row, so it reports the real train+assign cost (both memos
@@ -64,49 +68,92 @@ object Bench {
     "embed_cell_balance" -> Seq(graft.operators.Similarity.IvfCentroidsFamily,
       graft.operators.Similarity.IvfCellsFamily))
 
-  /** Aggregate stage-metric counters (diagnostic instrument, guide
-    * §7.1 "start with the UI" with the UI disabled): cumulative sums
-    * over all completed stages; [[once]] prints per-query deltas to
-    * STDERR when SPARK_GRAFT_BENCH_METRICS=1. Off by default — no
-    * change to the bench contract or the timed region. */
-  private final class MetricsListener extends SparkListener {
-    val runMs, cpuMs, gcMs, spillB, shufReadB, shufWriteB, tasks = new AtomicLong
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        runMs.addAndGet(m.executorRunTime)
-        cpuMs.addAndGet(m.executorCpuTime / 1000000L)
-        gcMs.addAndGet(m.jvmGCTime)
-        spillB.addAndGet(m.diskBytesSpilled)
-        shufReadB.addAndGet(m.shuffleReadMetrics.localBytesRead +
-          m.shuffleReadMetrics.remoteBytesRead)
-        shufWriteB.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        tasks.addAndGet(sc.stageInfo.numTasks.toLong)
-      }
+  /** Counter names of a [[MetricsRow]], in sidecar key order: jobs
+    * started, stages completed, their tasks, executor run/CPU/GC
+    * milliseconds, bytes spilled to disk, shuffle bytes read and
+    * written. */
+  val MetricKeys: Seq[String] = Seq("jobs", "stages", "tasks", "run_ms",
+    "cpu_ms", "gc_ms", "spill_bytes", "shuffle_read_bytes", "shuffle_write_bytes")
+
+  /** One timed run of one query: its wall seconds (-1 on failure) and
+    * the [[MetricKeys]] counters of every job it started. The counters
+    * fill in as the listener bus delivers the run's events, which can
+    * trail the action; after `spark.stop()` they are final. */
+  final class MetricsRow(private[Bench] val id: String, val query: String, val pass: Int) {
+    @volatile var wallS: Double = -1.0
+    private[Bench] val counts = new AtomicLongArray(MetricKeys.size)
+    def apply(key: String): Long = counts.get(MetricKeys.indexOf(key))
+
+    /** The sidecar line: `{"query", "pass", "wall_s", <MetricKeys>}`. */
+    def json: String =
+      (Seq(s""""query":${jsonEscape(query)}""", s""""pass":$pass""",
+        s""""wall_s":${num3(wallS)}""") ++
+        MetricKeys.indices.map(i => s""""${MetricKeys(i)}":${counts.get(i)}"""))
+        .mkString("{", ",", "}")
+  }
+
+  /** The bench's stage-metrics instrument, one structured report per
+    * timed run in the manner of Structured Streaming's per-trigger
+    * progress. [[once]] tags its thread's jobs with the run's row id (a
+    * Spark local property, inherited by broadcast and subquery
+    * threads); this listener charges each job, and every stage of it,
+    * to that row. Attribution goes by tag, not by the time an event
+    * arrives, so a late event never lands on the next query. */
+  final class QueryMetrics extends SparkListener {
+    private val byId = new ConcurrentHashMap[String, MetricsRow]()
+    private val stageRow = new ConcurrentHashMap[Int, MetricsRow]()
+    /** Rows in run order. */
+    val rows = new ConcurrentLinkedQueue[MetricsRow]()
+
+    private[Bench] def start(query: String, pass: Int): MetricsRow = {
+      val row = new MetricsRow(byId.size.toString, query, pass)
+      byId.put(row.id, row)
+      rows.add(row)
+      row
     }
-    def snap(): Array[Long] = Array(runMs.get, cpuMs.get, gcMs.get,
-      spillB.get, shufReadB.get, shufWriteB.get, tasks.get)
-  }
-  private var metrics: Option[MetricsListener] = None
 
-  /** Install the stage-metrics listener (idempotent per call site —
-    * Bench.main calls it once when SPARK_GRAFT_BENCH_METRICS=1). */
-  private def installMetrics(spark: SparkSession): Unit = {
-    val l = new MetricsListener
-    spark.sparkContext.addSparkListener(l)
-    metrics = Some(l)
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty(RowProperty)))
+        .flatMap(id => Option(byId.get(id))).foreach { row =>
+          row.counts.incrementAndGet(0)
+          e.stageIds.foreach(stageRow.put(_, row))
+        }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      Option(stageRow.get(e.stageInfo.stageId)).foreach { row =>
+        row.counts.incrementAndGet(1)
+        row.counts.addAndGet(2, e.stageInfo.numTasks.toLong)
+        val m = e.stageInfo.taskMetrics
+        if (m != null) {
+          row.counts.addAndGet(3, m.executorRunTime)
+          row.counts.addAndGet(4, m.executorCpuTime / 1000000L)
+          row.counts.addAndGet(5, m.jvmGCTime)
+          row.counts.addAndGet(6, m.diskBytesSpilled)
+          row.counts.addAndGet(7, m.shuffleReadMetrics.localBytesRead +
+            m.shuffleReadMetrics.remoteBytesRead)
+          row.counts.addAndGet(8, m.shuffleWriteMetrics.bytesWritten)
+        }
+      }
   }
 
-  /** One timed, fully-materialized run; -1.0 on failure. After the
-    * action completes (timing stopped), the per-invocation lazy
-    * checkpoint blocks are swept ([[graft.operators.BuildOnce
-    * .releaseScoped]], r12 verdict #3) so a long multi-query session
-    * holds steady-state block storage instead of accumulating one set
-    * per run — the measured mechanism behind ALL-mode inflation. */
-  def once(spark: SparkSession, sfDir: String, name: String): Double = {
+  private val RowProperty = "graft.bench.metricsRow"
+
+  /** The metrics sidecar beside the bench output file:
+    * `bench_out.json` → `bench_out.metrics.jsonl`. */
+  def sidecarPath(outPath: String): String =
+    outPath.stripSuffix(".json") + ".metrics.jsonl"
+
+  /** One timed, fully-materialized run; -1.0 on failure. With `metrics`
+    * the run is recorded as a row of pass `pass`. After the action
+    * completes (timing stopped), the per-invocation lazy checkpoint
+    * blocks are released and, after a heavy run, the garbage collected,
+    * so neither lands inside the next query's timed window. */
+  def once(spark: SparkSession, sfDir: String, name: String,
+      metrics: Option[QueryMetrics] = None, pass: Int = 0): Double = {
     coldStartFamilies.get(name)
       .foreach(_.foreach(graft.operators.BuildOnce.clearFamily))
-    val before = metrics.map(_.snap())
+    val row = metrics.map(_.start(name, pass))
+    row.foreach(r => spark.sparkContext.setLocalProperty(RowProperty, r.id))
     val t0 = System.nanoTime()
     val elapsed = try {
       SparkEntry.queries(name)(spark, sfDir)
@@ -116,45 +163,19 @@ object Bench {
       case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
         -1.0
-    }
-    for (l <- metrics; b <- before) {
-      val a = l.snap()
-      val d = a.zip(b).map { case (x, y) => x - y }
-      System.err.println(f"[metrics] $name wall=$elapsed%.2f " +
-        f"run=${d(0) / 1e3}%.1f cpu=${d(1) / 1e3}%.1f gc=${d(2) / 1e3}%.1f " +
-        f"spillMB=${d(3) / 1e6}%.0f shufRdMB=${d(4) / 1e6}%.0f " +
-        f"shufWrMB=${d(5) / 1e6}%.0f tasks=${d(6)}%d")
-    }
-    if (!sys.env.get("SPARK_GRAFT_BENCH_SWEEP").contains("0")) {
-      // r17 harness-boundary isolation — all OUTSIDE the timed region
-      // (timing stopped above). The r16 sweep was async
-      // (blocking=false): the previous query's checkpoint blocks were
-      // released concurrently WITH the next query's timed run, and the
-      // heavy r17 tail additions left enough garbage that neighbours
-      // paid their GC debt (broad chain inflation vs solo runs — the
-      // r16 ALL-mode mechanism, second act). Measurement hygiene, not
-      // result caching: every timed run still computes from parquet.
-      // SPARK_GRAFT_BENCH_GC: "0" = r16 async boundary, "block" =
-      // blocking sweep only, "gcall" = GC after every query, default
-      // "gc" = ADAPTIVE — GC + settle only after a heavy query
-      // (> 2 s), because the full-chain A/B showed the two regimes
-      // need different boundaries: per-query System.gc() paid off
-      // after the heavy tail (its garbage debt otherwise lands on the
-      // next timed query: events_monitor_ensemble 4.03→2.07,
-      // embed_mmr_select 3.58→2.13, embed_silhouette 2.54→1.31) but
-      // taxed the ~180 sub-second queries ~+0.3 s each (the post-GC
-      // ContextCleaner storm outweighs their tiny debt). The settle
-      // drains the cleaner's broadcast/RDD unpersist RPCs at the
-      // boundary instead of inside the next timed window.
-      val mode = sys.env.getOrElse("SPARK_GRAFT_BENCH_GC", "gc")
-      graft.operators.BuildOnce.releaseScoped(spark, blocking = mode != "0")
-      // a FAILED query reports elapsed = -1.0 but may have produced a
-      // heavy query's worth of garbage — treat it as heavy, or its GC
-      // debt lands on the next timed query (r17 ADVICE)
-      if (mode == "gcall" || (mode == "gc" && (elapsed > 2.0 || elapsed < 0))) {
-        System.gc()
-        Thread.sleep(300)
-      }
+    } finally spark.sparkContext.setLocalProperty(RowProperty, null)
+    row.foreach(_.wallS = elapsed)
+    // Measurement hygiene, not result caching: every timed run still
+    // computes from parquet. The sweep blocks, so released blocks are
+    // gone before the next query starts. A run over 2 s leaves enough
+    // garbage that its GC debt would land on the next timed query, so
+    // it is collected here and the ContextCleaner's unpersist RPCs get
+    // 300 ms to drain; a sub-second run's debt is smaller than that
+    // cost. A failed run (-1) may have produced a heavy run's garbage.
+    graft.operators.BuildOnce.releaseScoped(spark, blocking = true)
+    if (elapsed > 2.0 || elapsed < 0) {
+      System.gc()
+      Thread.sleep(300)
     }
     elapsed
   }
@@ -165,12 +186,11 @@ object Bench {
 
   /** N round-robin passes over ALL queries (pass 1: q1..qn, pass 2:
     * q1..qn, ...) instead of N consecutive repeats per query. A
-    * machine-wide contention burst (the BENCH_r04 recording: one query's
-    * repeats [1.4, 22.5, 13.9] while its idle-machine time is <1 s) then
-    * lands on at most ONE repeat of each query and the median rejects
-    * it; consecutive repeats let a single multi-second burst poison all
-    * N repeats of whichever query it straddles. Pure so the ordering is
-    * unit-testable: `runOne` is (passIndex, name) => seconds. */
+    * machine-wide contention burst then lands on at most ONE repeat of
+    * each query and the median rejects it; consecutive repeats let a
+    * single multi-second burst poison all N repeats of whichever query
+    * it straddles. Pure so the ordering is unit-testable: `runOne` is
+    * (passIndex, name) => seconds. */
   def interleaved(names: Seq[String], passes: Int,
       runOne: (Int, String) => Double): Seq[(String, Seq[Double])] = {
     val times = (0 until passes).map(p => names.map(n => runOne(p, n)))
@@ -189,40 +209,37 @@ object Bench {
     * shared by every measurement main through [[session]] so the oracle
     * gate proves every query's result is invariant under the bench's
     * partitioning. A constant core-count width ran every exchange of a
-    * 17 MB sf0.1 input 32 wide (full chain 292.1 s at 32 partitions vs
-    * 269.0 s at 8) and gave 8 and 32 cores the same widths. One
-    * partition per `SPARK_GRAFT_PARTITION_INPUT_BYTES` (default 2 MiB
-    * of raw parquet — the ~50× intermediate explosion lands each
-    * shuffle partition in the guide's ~100 MB-at-scale band), clamped
+    * 17 MB sf0.1 input 32 wide and gave 8 and 32 cores the same widths.
+    * One partition per [[PartitionInputBytes]] of raw parquet, clamped
     * to [1, 512] for the local mains; a cluster deployment sizes by the
     * same bytes rule with its own cap. Compute-dense operators whose
     * cost is fan-out rather than input bytes pin their own width (the
-    * lp wedge's `graft.lp.wedgeParts`). */
+    * lp wedge's 4 × cores). */
   def shufflePartitions(sfDir: String): String = {
-    val perPart = sys.env.get("SPARK_GRAFT_PARTITION_INPUT_BYTES")
-      .map(_.toLong).getOrElse(2L << 20)
     val bytes = try {
       val s = java.nio.file.Files.walk(java.nio.file.Paths.get(sfDir))
       try s.filter(p => java.nio.file.Files.isRegularFile(p))
         .mapToLong(p => java.nio.file.Files.size(p)).sum
       finally s.close()
     } catch { case _: Throwable => 0L }
-    math.max(1L, math.min(512L, (bytes + perPart - 1) / perPart)).toString
+    math.max(1L, math.min(512L,
+      (bytes + PartitionInputBytes - 1) / PartitionInputBytes)).toString
   }
 
+  /** Local cores of every main: `SPARK_GRAFT_CPUS`, else the host's. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
   /** The session every measurement main runs in (Bench, Verify,
-    * ExplainDump, DiagProbe, AbBench), so their plans and stage numbers
-    * come from the plan the bench times: `SPARK_GRAFT_CPUS` cores
-    * (default: the host's), the [[shufflePartitions]] byte rule, AQE on,
-    * UTC, no UI. AQE coalesces with Spark's own defaults
-    * (parallelismFirst, 64 MB advisory size): byte-driven coalescing
-    * cannot see CPU per byte and measured slower on the CPU-dense
-    * small-byte stages (OPTIMIZATION_r18.md). `extraConf` ("k=v;k2=v2")
-    * adds ad-hoc settings on top, e.g. a `graft.*` knob for a plan
-    * dump. */
+    * ExplainDump, AbBench), so their plans and stage numbers come from
+    * the plan the bench times: [[cpus]] cores, the [[shufflePartitions]]
+    * byte rule, AQE on, UTC, no UI. AQE coalesces with Spark's own
+    * defaults (parallelismFirst, 64 MB advisory size): byte-driven
+    * coalescing cannot see CPU per byte and measured slower on the
+    * CPU-dense small-byte stages (OPTIMIZATION_r18.md). `extraConf`
+    * ("k=v;k2=v2") adds ad-hoc settings on top, e.g. a `graft.*` knob
+    * for a plan dump. */
   def session(sfDir: String, extraConf: Option[String] = None): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
     val base = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shufflePartitions(sfDir))
@@ -241,9 +258,8 @@ object Bench {
   }
 
   /** 1/5/15-minute load averages, so a contended driver machine is
-    * self-evident in the bench line (VERDICT r3 "What's wrong" #1: a
-    * recorded 61.9 s total vs an idle-machine 10.9 s was
-    * indistinguishable from a real regression without this). */
+    * self-evident in the bench line instead of reading as a
+    * regression. */
   def loadAvg(): Seq[Double] =
     try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
       .split("\\s+").take(3).toSeq.map(_.toDouble)
@@ -255,20 +271,17 @@ object Bench {
   private def numArr(xs: Seq[Double]): String =
     xs.map(num3).mkString("[", ",", "]")
 
-  /** 3-decimal rounding for every number the bench emits. Full-precision
-    * doubles (`1.304823836`) tripled the line length at 91 queries and
-    * were pure noise: the median of 3 wall-clock runs has nowhere near
-    * microsecond significance (BENCH_r06 truncation post-mortem). */
+  /** 3-decimal rounding for every number the bench emits: the median of
+    * 3 wall-clock runs has nowhere near microsecond significance, and
+    * full-precision doubles triple the line length. */
   private def num3(x: Double): String =
     // Locale.ROOT: a comma-decimal default locale would render "1,305"
     // and the .toDouble trim would kill the bench before any output
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(x)).toDouble.toString
 
   /** COMPACT final line — bounded-size summary ONLY, no per-query map.
-    * BENCH_r05 and r06 both proved any per-query payload on the final
-    * line eventually overflows the driver's ~2 KB captured stdout tail
-    * as the query count grows (`parsed: null` two rounds running): at 91
-    * queries even the compact map was ~3.9 KB. The final line now
+    * A caller that keeps only a ~2 KB stdout tail loses any per-query
+    * payload once the query count grows. The final line
     * carries total/n_queries/failed/sf/loadavg (~200 B, grows only with
     * the failed list) and can never be the part that truncates away; the
     * per-query medians ride the line BEFORE it ([[buildMediansLine]])
@@ -283,12 +296,9 @@ object Bench {
     val failed = medians.collect { case (k, v) if v < 0 => jsonEscape(k) }
       .mkString("[", ",", "]")
     val total = medians.map(_._2).filter(_ >= 0).sum
-    // loadavg_launch is sampled FIRST thing in main, BEFORE the session
-    // build and the 32-thread warm-up query — it is the co-tenant load
-    // of the window. loadavg_start (kept for cross-round comparability)
-    // is sampled AFTER warm-up and therefore INCLUDES self-load; r15/r16
-    // artifacts were unreadable without a judge re-litigating this
-    // distinction (r16 verdict #3).
+    // loadavg_launch is sampled FIRST thing in main, before the session
+    // build and the warm-up query: the co-tenant load of the window.
+    // loadavg_start is sampled after warm-up and so includes self-load.
     s"""{"metric":"total","value":${num3(total)},"unit":"sec",""" +
       s""""n_queries":${medians.size},"failed":$failed,""" +
       s""""sf":${jsonEscape(sfDir)},""" +
@@ -307,13 +317,17 @@ object Bench {
     s"""{"metric":"medians","queries":$qs}"""
   }
 
-  /** Contention-audit detail (per-repeat arrays; VERDICT r3 #1) as its
-    * own JSON line, kept OUT of the final compact line. */
+  /** Contention-audit detail (per-repeat arrays) as its own JSON line,
+    * kept OUT of the final compact line. */
   def buildDetailLine(results: Seq[(String, Seq[Double])]): String = {
     val reps = results.map { case (k, ts) => jsonEscape(k) + ":" + numArr(ts) }
       .mkString("{", ",", "}")
     s"""{"metric":"repeats","repeats":$reps}"""
   }
+
+  private def writeOrWarn(path: String, text: String): Unit =
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(path), text)
+    catch { case e: Throwable => System.err.println(s"[bench] file write failed: ${e.getMessage}") }
 
   def main(args: Array[String]): Unit = {
     // FIRST thing, before the session (and its threads) exists: the
@@ -321,22 +335,14 @@ object Bench {
     val loadLaunch = loadAvg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = session(sfDir)
-    if (sys.env.get("SPARK_GRAFT_BENCH_METRICS").contains("1"))
-      installMetrics(spark)
+    val metrics = new QueryMetrics
+    spark.sparkContext.addSparkListener(metrics)
 
     // Optional override for ad-hoc sweeps: comma-separated names, or
-    // "ALL" for every declared query. Default stays the headline set so
-    // driver-recorded BENCH_r{N} numbers remain comparable across rounds.
-    // SPARK_GRAFT_BENCH_EXCLUDE drops names from whatever set was
-    // selected — an escape hatch for ad-hoc sweeps (since r14 the sf1
-    // scaling leg runs the FULL set: graph_link_prediction's default
-    // cap is the sf1-measured 256, so nothing is infeasible there).
-    val exclude = sys.env.get("SPARK_GRAFT_BENCH_EXCLUDE")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
+    // "ALL" for every declared query. The default is the headline set
+    // the recorded bench artifacts were measured on.
     // SPARK_GRAFT_BENCH_GROUP narrows the selected set to a comma list
-    // of name PREFIXES — the per-family JVM-bounce arm of the
-    // chain-context A/B (r14 verdict #7; tools/bench_bounce.sh). The
+    // of name PREFIXES, one JVM per family (tools/bench_bounce.sh). The
     // sentinel "REL" selects every query NOT matching the known family
     // prefixes, so a group partition covers the full set exactly.
     val familyPrefixes = Seq("dedup_", "embed_", "ann_", "graph_",
@@ -352,7 +358,7 @@ object Bench {
       case Some("ALL") => SparkEntry.queries.keys.toSeq.sorted
       case Some(list) => list.split(",").map(_.trim).filter(_.nonEmpty).toSeq
       case None => SparkEntry.benchQueries
-    }).filterNot(exclude).filter(inGroup)
+    }).filter(inGroup)
     require(queryNames.nonEmpty,
       s"no queries selected: group=${group.map(_.mkString(","))} matched nothing " +
         "(check SPARK_GRAFT_BENCH_GROUP / SPARK_GRAFT_BENCH_QUERIES)")
@@ -361,19 +367,20 @@ object Bench {
     once(spark, sfDir, queryNames.head)
 
     val loadStart = loadAvg()
-    val results = interleaved(queryNames, Repeats, (_, n) => once(spark, sfDir, n))
+    val results = interleaved(queryNames, Repeats,
+      (p, n) => once(spark, sfDir, n, Some(metrics), p + 1))
     val line = buildLine(results, sfDir, loadStart, loadAvg(), loadLaunch)
     val medians = buildMediansLine(results)
     val detail = buildDetailLine(results)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath),
-      detail + "\n" + medians + "\n" + line + "\n")
-    catch { case e: Throwable => System.err.println(s"[bench] file write failed: ${e.getMessage}") }
+    writeOrWarn(outPath, detail + "\n" + medians + "\n" + line + "\n")
+    // stop() drains the listener bus, so every row's counters are final
     spark.stop()
+    val rows = metrics.rows.toArray(Array.empty[MetricsRow])
+    writeOrWarn(sidecarPath(outPath), rows.map(_.json + "\n").mkString)
     // Detail, then medians, then the bounded compact line LAST: the
     // driver's stdout capture keeps the tail, so the machine-readable
-    // summary can never be the part that truncates away (the BENCH_r05
-    // and r06 regressions — two rounds of perf data lost to this).
+    // summary can never be the part that truncates away.
     println(detail)
     println(medians)
     println(line)

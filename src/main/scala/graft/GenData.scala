@@ -96,7 +96,7 @@ object GenData {
         "usage: GenData <sf> <outDir> [zipf]")
     }
     val sf = sfStr.toDouble
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Bench.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

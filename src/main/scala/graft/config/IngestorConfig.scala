@@ -20,6 +20,15 @@ import graft.schema.ConfigValue._
   * pool, graylog/syslog handlers) are dropped rather than carried as
   * dead weight; their keys still VALIDATE (strict mode knows the full
   * reference key set) so a reference config is not rejected.
+  *
+  * Some typed keys likewise validate and load but have no engine
+  * effect; nothing reads their fields:
+  *  - `compute_file_stats`, `save_file_hash`, `hash_file_extension`;
+  *  - `message_to_file`, `message_file_extension`;
+  *  - `dataset_pid_prefix`, `stream_flag`, `verify_flag`;
+  *  - `individual_message_commit`, `enable_auto_commit` (the Kafka
+  *    source commits through its checkpoint, see
+  *    [[graft.streaming.StreamSources.kafkaSourceOptions]]).
   */
 object IngestorConfig {
 

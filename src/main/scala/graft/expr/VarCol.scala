@@ -14,8 +14,6 @@ import graft.functions.DslCasts.DslType
   * whole-stage-codegen'd stage per file row.
   */
 final case class VarCol(value: Column, unit: Column, dtype: Option[DslType] = None) {
-  def withUnit(u: Column): VarCol = copy(unit = u)
-  def dropUnit: VarCol = copy(unit = lit(""))
   /** Render as the engine's `struct(value, unit)` column. */
   def toStruct: Column = struct(value.as("value"), unit.as("unit"))
 }

@@ -82,9 +82,4 @@ object PyUdfs {
     if (d == null) None else Some(epochToIso(d.doubleValue()))
   }
 
-  /** python str() of a full literal string (used by template splicing of
-    * parsed values). */
-  val pyStrOfLiteral: UserDefinedFunction = udf { (s: String) =>
-    if (s == null) None else Some(parse(s).fold(_ => s, pyStr))
-  }
 }

@@ -42,10 +42,13 @@ import org.apache.spark.sql.execution.LogicalRDD
   *    consumer happened to run first).
   */
 object BuildOnce {
-  /** Scale-adaptive partition sizing for memo materialization (r18,
-    * guide §2): `localCheckpoint` FREEZES whatever layout the build's
-    * tail stage happened to have, and both failure modes were measured
-    * this round —
+  /** Stored bytes per partition of a [[sized]] memo: AQE's own
+    * minPartitionSize. */
+  val MemoPartitionBytes: Long = 1L << 20
+
+  /** Scale-adaptive partition sizing for memo materialization (guide
+    * §2): `localCheckpoint` FREEZES whatever layout the build's tail
+    * stage happened to have, and both failure modes are measured —
     *   - too NARROW: AQE coalesced the 12 MB candidate memo to 3
     *     byte-sized partitions, putting graph_link_prediction's
     *     compute-dense wedge join on 10 tasks / 122 MB spill while 22
@@ -55,20 +58,16 @@ object BuildOnce {
     *     iterative consumer (BFS, k-core peel, LPA, star CC) launched
     *     32–64 near-empty tasks — task-launch overhead, not compute
     *     (graph_core_distance: 533 tasks, run 58 s vs cpu 21 s).
-    * Fix: materialize at the natural layout, read the ACTUAL stored
+    * So: materialize at the natural layout, read the ACTUAL stored
     * bytes from the block manager (no extra job), and re-lay-out only
     * when the measured size disagrees — one partition per
-    * `graft.memo.partitionBytes` (default 1 MiB, AQE's own
-    * minPartitionSize), capped at the session parallelism. This is the
-    * single-JVM stand-in for the bucketed table's file-count sizing the
-    * memo scaladocs describe as the 100 TB shape: block count grows
+    * [[MemoPartitionBytes]], capped at the session parallelism. This is
+    * the single-JVM stand-in for the bucketed table's file-count sizing
+    * the memo scaladocs describe as the 100 TB shape: block count grows
     * with the data, never with a constant. Returns the eager
     * checkpoint — callers must NOT checkpoint again. */
   def sized(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val sc = spark.sparkContext
-    val targetBytes = spark.conf.getOption("graft.memo.partitionBytes")
-      .map(_.toLong).getOrElse(1L << 20)
+    val sc = df.sparkSession.sparkContext
     val first = df.localCheckpoint()
     val rddIds = first.queryExecution.analyzed
       .collect { case lr: LogicalRDD => lr.rdd.id }.toSet
@@ -76,7 +75,7 @@ object BuildOnce {
       .map(i => i.memSize + i.diskSize).sum
     val natural = first.rdd.getNumPartitions
     val target = math.max(1L, math.min(sc.defaultParallelism.toLong,
-      (bytes + targetBytes - 1) / targetBytes)).toInt
+      (bytes + MemoPartitionBytes - 1) / MemoPartitionBytes)).toInt
     if (natural == target) first
     else {
       val fitted = first.repartition(target).localCheckpoint()

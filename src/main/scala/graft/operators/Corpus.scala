@@ -479,7 +479,7 @@ object Corpus {
     // 32 partitions here — so every one of the k learning rounds paid a
     // 32-task stage for kilobytes of work per task (measured run ≈ 3×
     // cpu, pure task launch). BuildOnce.sized lays it out by MEASURED
-    // bytes (1 partition per graft.memo.partitionBytes, capped at the
+    // bytes (1 partition per BuildOnce.MemoPartitionBytes, capped at the
     // session parallelism), so round cost scales with vocab size, not
     // core count; the every-`checkpointEvery` rewrite checkpoints
     // inherit that layout through the narrow withColumn.

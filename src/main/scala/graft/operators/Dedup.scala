@@ -264,28 +264,21 @@ object Dedup {
     * The capped rows are localCheckpoint'ed LAZILY (eager=false):
     * every caller feeds them to BOTH sides of a self-join (plus
     * per-doc size aggregates), and without materialization each lazy
-    * consumer re-runs the census aggregate + anti-join (r6 bench:
-    * +30-45% on the blocked-join queries). Lazy = the first ACTION
-    * materializes once and later consumers reuse, while merely
-    * building the DataFrame (plan guards, .explain, schema-only
-    * callers) stays free.
+    * consumer re-runs the census aggregate + anti-join (+30-45 % on
+    * the blocked-join queries). Lazy = the first ACTION materializes
+    * once and later consumers reuse, while merely building the
+    * DataFrame (plan guards, .explain, schema-only callers) stays free.
     *
-    * Trade-off knob: a localCheckpoint truncates lineage (executor
-    * loss makes downstream stages unrecoverable on a real cluster) and
-    * its blocks live until the session ends. Right for a bench/batch
-    * session that exits after the query; for a long-lived cluster
-    * session set `graft.dedup.checkpointCaps=false` to keep full
-    * lineage (and recomputation) instead. */
+    * Trade-off: a localCheckpoint truncates lineage (executor loss
+    * makes downstream stages unrecoverable on a real cluster) and its
+    * blocks live until released. Right for a bench/batch session that
+    * exits after the query. */
   def capHotKeys(rows: DataFrame, keys: Seq[String], cap: Int): DataFrame =
     if (cap == Int.MaxValue) rows
-    else {
-      val capped = rows.join(
-        broadcast(oversizedKeys(rows, keys, cap).select(keys.map(col): _*)),
+    else rows
+      .join(broadcast(oversizedKeys(rows, keys, cap).select(keys.map(col): _*)),
         keys, "left_anti")
-      val checkpoint = rows.sparkSession.conf
-        .getOption("graft.dedup.checkpointCaps").forall(_.toBoolean)
-      if (checkpoint) capped.localCheckpoint(eager = false) else capped
-    }
+      .localCheckpoint(eager = false)
 
   /** LSH candidate pairs verified by true 3-gram Jaccard ≥ threshold.
     * Same-bucket join → distinct pairs → verification join.
@@ -1460,6 +1453,10 @@ object Dedup {
       .agg(count(lit(1)).as("n_matches"), min(col("id2")).as("min_id2"))
   }
 
+  /** Largest estimated batch-side size (raw corpus bytes / batchMod)
+    * for which [[prefixJaccardPairs]] broadcasts its prefix index. */
+  private val PpjBroadcastMaxBytes: Long = 512L << 20
+
   /** EXACT set-similarity screen with PPJoin-style PREFIX FILTERING —
     * the deterministic sibling of the MinHash path: same Jaccard≥t
     * semantics, zero probabilistic recall loss, subquadratic by
@@ -1558,11 +1555,9 @@ object Dedup {
     // longs), so raw-bytes/batchMod bounds it from above; the estimate
     // reads parquet footer stats only (no extra job). Above the
     // threshold the hint is dropped and AQE picks the strategy.
-    val bcastMax = spark.conf.getOption("graft.ppj.broadcastMaxBytes")
-      .map(_.toLong).getOrElse(512L << 20)
     val batchBytesUb = Tables.documents(spark, sfDir)
       .queryExecution.optimizedPlan.stats.sizeInBytes / batchMod
-    val aSide = if (batchBytesUb <= bcastMax) broadcast(a) else a
+    val aSide = if (batchBytesUb <= PpjBroadcastMaxBytes) broadcast(a) else a
     val candidates = aSide.join(b, col("w") === col("w2") &&
         col("n2") * tDen >= col("n1") * tNum &&
         col("n1") * tDen >= col("n2") * tNum)

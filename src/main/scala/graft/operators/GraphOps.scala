@@ -283,14 +283,12 @@ object GraphOps {
     // stage from its INPUT bytes and would coalesce it to a few tasks.
     // An EXPLICIT hash repartition on the join key is exempt from AQE
     // coalescing, so the explode + partial aggregate runs at a width
-    // scaled to the session (4 waves per core by default, conf-able for
-    // cluster deployments). Each wedge side gets its own exchange at
-    // that width: column pruning drops aa_micro from the probe side
-    // BELOW its repartition, so the two exchanges differ and AQE does
-    // not reuse one for the other (the mids pipeline runs per side).
-    val wedgeParts = pairs.sparkSession.conf
-      .getOption("graft.lp.wedgeParts").map(_.toInt).getOrElse(
-        4 * pairs.sparkSession.sparkContext.defaultParallelism)
+    // scaled to the session: 4 waves per core. Each wedge side gets its
+    // own exchange at that width: column pruning drops aa_micro from the
+    // probe side BELOW its repartition, so the two exchanges differ and
+    // AQE does not reuse one for the other (the mids pipeline runs per
+    // side).
+    val wedgeParts = 4 * pairs.sparkSession.sparkContext.defaultParallelism
     val m = mids.repartition(wedgeParts, col("w"))
     val wedge = m.select(col("w"), col("u"), col("aa_micro"))
       .join(m.select(col("w"), col("u").as("v")), Seq("w"))

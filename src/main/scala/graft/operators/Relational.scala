@@ -1331,35 +1331,6 @@ object Relational {
       .drop("island")
   }
 
-  /** CDC changelog compaction — the MERGE/upsert classic every
-    * warehouse ingest needs: the event stream is a per-user changelog
-    * ordered by (ts, event_id); the LATEST row wins (upsert), and a
-    * latest row of type 'error' is a TOMBSTONE that deletes the key
-    * from the materialized state. Output is the surviving latest state
-    * plus lifetime aggregates (the insert-accumulate side of the
-    * merge). Money in exact BIGINT cents.
-    *
-    * Scale: the ranking window and both lifetime aggregates share ONE
-    * user-keyed shuffle; the changelog is never joined against itself
-    * and no driver state exists. At 100 TB the same plan rides a
-    * user-bucketed table layout with zero exchanges. */
-  def cdcLatestState(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = Tables.events(spark, sfDir)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"),
-        (dec(col("value")) * 100).cast("long").as("value_c"))
-    val wOrd = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").desc, col("event_id").desc)
-    val wAll = Window.partitionBy(col("user_id"))
-    ev.withColumn("rn", row_number().over(wOrd))
-      .withColumn("n_ops", count(lit(1)).over(wAll))
-      .withColumn("lifetime_value_c", sum(col("value_c")).over(wAll))
-      .filter(col("rn") === 1 && col("event_type") =!= "error")
-      .select(col("user_id"), col("event_type").as("last_type"),
-        col("value_c").as("last_value_c"),
-        unix_micros(col("ts")).as("last_ts_us"),
-        col("n_ops"), col("lifetime_value_c"))
-  }
-
   /** SNAPSHOT DIFF — the table-versioning primitive (Delta/Iceberg
     * `table_changes`, data-reconciliation audits): two snapshots of the
     * same keyed table compared by primary key + a portable row

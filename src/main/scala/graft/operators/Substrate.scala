@@ -334,45 +334,6 @@ object Substrate {
         col("ndv"), col("min_v"), col("max_v"))
   }
 
-  /** Data-quality constraint suite — the Deequ-style verification pass
-    * a pipeline runs before publishing a table: completeness (null
-    * keys), uniqueness (duplicate (orderkey, linenumber) lines, encoded
-    * as one portable integer since linenumber ≤ 7), value range,
-    * accepted domain, positivity, and referential integrity
-    * (lineitem→orders orphans). One row per check with its violation
-    * count and pass flag.
-    *
-    * Scale: the five scalar checks fold into ONE scan with map-side
-    * partial aggregation; the FK check is the only join — a keyed
-    * left-anti whose both sides shuffle on the key (AQE picks broadcast
-    * when the dimension fits). Nothing is ever collected. */
-  def qualityChecks(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = Tables.lineitem(spark, sfDir).select(
-      col("l_orderkey"), col("l_linenumber"),
-      col("l_quantity").cast("decimal(18,2)").as("qty"),
-      (col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long").as("price_c"),
-      col("l_returnflag"))
-    val one = li.agg(
-      (count(lit(1)) - count(col("l_orderkey"))).as("v_null_orderkey"),
-      (count(lit(1)) - countDistinct(col("l_orderkey") * 10 + col("l_linenumber")))
-        .as("v_dup_line"),
-      sum(when(col("qty").between(1, 50), 0L).otherwise(1L)).as("v_qty_range"),
-      sum(when(col("l_returnflag").isin("A", "N", "R"), 0L).otherwise(1L))
-        .as("v_flag_domain"),
-      sum(when(col("price_c") > 0, 0L).otherwise(1L)).as("v_price_positive"))
-    val scalarChecks = one.select(expr(
-      "stack(5, 'null_orderkey', v_null_orderkey, 'dup_order_line', v_dup_line, " +
-        "'qty_in_1_50', v_qty_range, 'returnflag_domain', v_flag_domain, " +
-        "'price_positive', v_price_positive) AS (check_name, violations)"))
-    val orphans = li.select(col("l_orderkey"))
-      .join(Tables.orders(spark, sfDir).select(col("o_orderkey")),
-        col("l_orderkey") === col("o_orderkey"), "left_anti")
-      .agg(count(lit(1)).as("violations"))
-      .select(lit("fk_orders_exists").as("check_name"), col("violations"))
-    scalarChecks.unionByName(orphans)
-      .withColumn("passed", when(col("violations") === 0, 1L).otherwise(0L))
-  }
-
   /** Equi-width HISTOGRAM over order totals (cents) — the distribution
     * profile behind optimizer statistics and data-drift monitors. The
     * classic two-pass shape: pass 1 is a tiny (min, max) aggregate that

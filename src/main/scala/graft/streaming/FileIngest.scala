@@ -92,16 +92,6 @@ object FileIngest {
       case a => a.toUpperCase
     })
 
-  /** K4: write `<name>.b2b` next to the ingestor dir and return its path
-    * (ref: _build_hash_path/_save_hash_file, scicat_dataset.py:592-612). */
-  def writeHashFile(original: Path, hashHex: String, dir: Path,
-      extension: String = "b2b"): Path = {
-    val hashPath = dir.resolve(original.getFileName.toString + "." + extension)
-    Files.createDirectories(dir)
-    Files.writeString(hashPath, hashHex)
-    hashPath
-  }
-
   /** S10: bounded retry with per-try delays clamped to [1, 120] s
     * (ref: open_h5file, src/scicat_nexus_helper.py:62-95) — files may
     * still be mid-write when the wrdn message arrives.

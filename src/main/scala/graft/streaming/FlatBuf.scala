@@ -59,11 +59,6 @@ object FlatBuf {
       case p => bb.get(p) != 0
     }
 
-    def i32(id: Int, default: Int): Int = fieldPos(id) match {
-      case 0 => default
-      case p => bb.getInt(p)
-    }
-
     def u64(id: Int, default: Long): Long = fieldPos(id) match {
       case 0 => default
       case p => bb.getLong(p)

@@ -28,16 +28,6 @@ import graft.schema.ImscSchema
   */
 object IngestStream {
 
-  val wrdnBodySchema: StructType = StructType(Seq(
-    StructField("service_id", StringType), StructField("job_id", StringType),
-    StructField("error_encountered", BooleanType),
-    StructField("file_name", StringType), StructField("metadata", StringType),
-    StructField("message", StringType)))
-
-  val pl72BodySchema: StructType = StructType(Seq(
-    StructField("job_id", StringType), StructField("filename", StringType),
-    StructField("instrument_name", StringType)))
-
   /** F1: the byte-slice type predicate stays a plain Column program so
     * it runs codegen'd BEFORE the decode UDF — only matching payloads
     * pay the per-row decode (ref: scicat_kafka.py:89-96 checks [4:8]
@@ -47,16 +37,6 @@ object IngestStream {
 
   private val wrdnUdf = udf(MessageCodec.decodeWrdn _)
   private val pl72Udf = udf(MessageCodec.decodePl72 _)
-
-  /** F1+decode: keep payloads whose bytes [4:8] match the schema id,
-    * parse the JSON body. Retained for schema-explicit JSON pipelines;
-    * the production streams below decode via [[MessageCodec]], which
-    * also accepts real FlatBuffers buffers. */
-  def typed(messages: DataFrame, schemaId: String, bodySchema: StructType): DataFrame =
-    typeFiltered(messages, schemaId)
-      .select(from_json(
-        substring(col("value"), 9, Int.MaxValue).cast("string"), bodySchema).as("m"))
-      .select(col("m.*"))
 
   /** wrdn stream — FlatBuffers or JSON framing — with the F2 error
     * filter (ref: scicat_kafka.py:99-110 drops error_encountered;

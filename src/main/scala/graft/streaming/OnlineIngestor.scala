@@ -105,8 +105,7 @@ object OnlineIngestor {
       argList.patch(i, Nil, 2))
     val spark = SparkSession.builder()
       .appName("graft-online-ingestor")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .config("spark.sql.shuffle.partitions", graft.Bench.cpus)
       .getOrCreate()
     val (query, health) = run(spark, cfg)
     try query.awaitTermination()

@@ -292,11 +292,12 @@ object StreamSources {
       }
   }
 
-  /** The TTL'd state-update for [[statefulDedupTtl]], visible so specs
-    * drive it directly through Spark's public `TestGroupState` (a live
-    * query with pending timeouts never quiesces under
-    * `processAllAvailable`, which is why the no-TTL variant exists for
-    * tests). Semantics: first occurrence passes and arms the TTL;
+  /** The TTL'd form of [[statefulDedup]]'s state update, for a
+    * `mapGroupsWithState` under `GroupStateTimeout.ProcessingTimeTimeout`:
+    * keyed store size is bounded by (arrival rate × TTL) instead of
+    * growing with every key ever seen. Specs drive it directly through
+    * Spark's public `TestGroupState` (a live query with pending
+    * timeouts never quiesces under `processAllAvailable`). Semantics: first occurrence passes and arms the TTL;
     * replays inside the TTL drop; when the key times out its state is
     * evicted, so a LATER replay is re-admitted — the bounded-memory
     * trade-off, backstopped by the F6/F7 catalog dedup which is not
@@ -317,7 +318,7 @@ object StreamSources {
   /** EVENT-TIME-bounded streaming dedup via the built-in
     * `dropDuplicatesWithinWatermark` — the third point on the repo's
     * dedup-state spectrum: [[statefulDedup]] (unbounded state, exact),
-    * [[statefulDedupTtl]] (processing-time TTL, bounded by arrival
+    * [[dedupTtlUpdate]] (processing-time TTL, bounded by arrival
     * rate × TTL), and this (EVENT-time bound, bounded by event-time
     * skew × rate — the right bound when replays cluster around the
     * original event, which is what Kafka redelivery and job retries
@@ -341,24 +342,8 @@ object StreamSources {
     df.withWatermark(eventTimeCol, delay)
       .dropDuplicatesWithinWatermark(keys)
 
-  /** [[statefulDedup]] with a processing-time TTL per key — the
-    * production form: keyed store size is bounded by (arrival rate ×
-    * TTL) instead of growing with every key ever seen. */
-  def statefulDedupTtl[T](
-      keyed: Dataset[(String, T)], ttlMs: Long)(
-      implicit te: org.apache.spark.sql.Encoder[T],
-      oe: org.apache.spark.sql.Encoder[Option[T]]): Dataset[Option[T]] = {
-    implicit val boolEnc: org.apache.spark.sql.Encoder[Boolean] =
-      org.apache.spark.sql.Encoders.scalaBoolean
-    keyed.groupByKey(_._1)(org.apache.spark.sql.Encoders.STRING)
-      .mapGroupsWithState[Boolean, Option[T]](GroupStateTimeout.ProcessingTimeTimeout) {
-        (_: String, rows: Iterator[(String, T)], state: GroupState[Boolean]) =>
-          dedupTtlUpdate(rows, state, ttlMs)
-      }
-  }
-
   /** First-occurrence dedup on the Spark 4 `transformWithState` API —
-    * the production twin of [[statefulDedupTtl]]: the TTL is DECLARED
+    * the production twin of [[dedupTtlUpdate]]: the TTL is DECLARED
     * (`TTLConfig`) instead of hand-armed timers, and the operator runs
     * on the RocksDB state store (`stateStore.providerClass` must point
     * at RocksDBStateStoreProvider — transformWithState requires it),
@@ -551,21 +536,6 @@ object StreamSources {
     }
     state.update(last)
     out.iterator
-  }
-
-  /** The streaming calendar-gap alert feed over closed
-    * (event_type, day, n) daily counts: 1 long of state per key,
-    * append mode — emits one (type, gap_start, gap_len) row per hole
-    * as the day after it closes. */
-  def gapMonitorStream(daily: Dataset[(String, Long, Long)])
-      : Dataset[(String, Long, Long)] = {
-    implicit val stateEnc: org.apache.spark.sql.Encoder[Long] =
-      org.apache.spark.sql.Encoders.scalaLong
-    implicit val outEnc: org.apache.spark.sql.Encoder[(String, Long, Long)] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(String, Long, Long)]()
-    daily.groupByKey(_._1)(org.apache.spark.sql.Encoders.STRING)
-      .flatMapGroupsWithState[Long, (String, Long, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(gapUpdate)
   }
 
   /** One closed Hampel window, computed EXACTLY the way the batch
@@ -1002,20 +972,6 @@ object StreamSources {
     }
     if (last != null) state.update(last)
     out.iterator
-  }
-
-  /** The streaming (user, from_type, to_type) bigram feed over raw
-    * events `(user_id, ts_micros, event_id, event_type)` — 3 values of
-    * state per user, append-mode output. */
-  def transitionStream(events: Dataset[(Long, Long, Long, String)])
-      : Dataset[(Long, String, String)] = {
-    implicit val stateEnc: org.apache.spark.sql.Encoder[(Long, Long, String)] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Long, Long, String)]()
-    implicit val outEnc: org.apache.spark.sql.Encoder[(Long, String, String)] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Long, String, String)]()
-    events.groupByKey(_._1)(org.apache.spark.sql.Encoders.scalaLong)
-      .flatMapGroupsWithState[(Long, Long, String), (Long, String, String)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(transitionUpdate)
   }
 
   /** State transition of the STREAMING CUSUM level-shift monitor —

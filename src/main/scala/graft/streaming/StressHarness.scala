@@ -515,8 +515,8 @@ object StressHarness {
     val rate = args.lift(1).map(_.toDouble).getOrElse(1.0)
     val spark = SparkSession.builder()
       .appName("graft-stress")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[${graft.Bench.cpus}]")
+      .config("spark.sql.shuffle.partitions", graft.Bench.cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

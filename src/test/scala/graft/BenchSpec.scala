@@ -117,4 +117,43 @@ class BenchSpec extends AnyFunSuite {
   test("run reports -1 when any repeat fails") {
     assert(Bench.run(spark, sfDir, "no_such_query") == -1.0)
   }
+
+  test("the stage-metrics listener records one row per timed run, and the sidecar line parses") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    val metrics = new Bench.QueryMetrics
+    spark.sparkContext.addSparkListener(metrics)
+    try {
+      val wall = Bench.once(spark, sfDir, "q3_shipping", Some(metrics), pass = 2)
+      assert(wall > 0.0)
+      assert(Bench.once(spark, sfDir, "no_such_query", Some(metrics), pass = 2) == -1.0)
+      val rows = metrics.rows.toArray(Array.empty[Bench.MetricsRow]).toSeq
+      assert(rows.map(r => (r.query, r.pass)) == Seq(("q3_shipping", 2), ("no_such_query", 2)))
+      val Seq(q3, missing) = rows
+      assert(q3.wallS == wall)
+      assert(missing.wallS == -1.0)
+      // the listener bus delivers stage events asynchronously
+      eventually(timeout(Span(30, Seconds))) {
+        assert(q3("jobs") >= 1 && q3("stages") >= 1 && q3("tasks") >= 1)
+        assert(q3("shuffle_write_bytes") > 0, "q3_shipping aggregates through a shuffle")
+      }
+      // a query that fails before planning starts no job of its own
+      assert(missing("jobs") == 0 && missing("stages") == 0)
+
+      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(q3.json)
+      import scala.jdk.CollectionConverters._
+      assert(node.fieldNames.asScala.toSeq == Seq("query", "pass", "wall_s") ++ Bench.MetricKeys)
+      assert(node.get("query").asText() == "q3_shipping")
+      assert(node.get("pass").asInt() == 2)
+      assert(node.get("stages").asLong() == q3("stages"))
+      assert(new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(missing.json).get("wall_s").asDouble() == -1.0)
+    } finally spark.sparkContext.removeSparkListener(metrics)
+  }
+
+  test("the metrics sidecar is named after the bench output file") {
+    assert(Bench.sidecarPath("bench_out.json") == "bench_out.metrics.jsonl")
+    assert(Bench.sidecarPath("/tmp/run/bench_all_sf0.1.json") == "/tmp/run/bench_all_sf0.1.metrics.jsonl")
+    assert(Bench.sidecarPath("out.txt") == "out.txt.metrics.jsonl")
+  }
 }
