@@ -280,8 +280,9 @@ object DatasetAssembly {
     assembled.apply(withHidden)
   }
 
-  /** F10: null-stripped JSON rendering for the REST sink
-    * (ref: scicat_dataset_to_dict, scicat_dataset.py:997-1010). */
+  /** F10: null-stripped JSON rendering of `fields`, the dataset
+    * document both sinks write (ref: scicat_dataset_to_dict,
+    * scicat_dataset.py:997-1010). */
   def toJsonColumn(fields: Seq[String]): Column =
     to_json(struct(fields.map(col): _*), Map("ignoreNullFields" -> "true"))
 }

@@ -64,23 +64,6 @@ object Dedup {
       .agg(count(lit(1)).as("n_copies"), sort_array(collect_list(col("doc_id"))).as("doc_ids"))
       .filter(col("n_copies") > 1)
 
-  /** Word n-grams (shingles) of a text column.
-    *
-    * NOTE: referencing `split(...)` inside the lambda would re-split the
-    * text once PER ELEMENT (O(n²) — measured 3× slower at sf0.1); use
-    * [[withShingles]] for DataFrame-level computation, which materializes
-    * the word array once per row.
-    */
-  def shingles(text: Column, n: Int): Column = {
-    val words = split(text, " ")
-    array_distinct(
-      filter(
-        zip_with(words, sequence(lit(0), size(words) - 1),
-          (_, i) => when(i <= size(words) - n,
-            array_join(slice(words, i + 1, lit(n)), " "))),
-        x => x.isNotNull))
-  }
-
   /** Adds a distinct word-3-gram column `sh`, materializing the word
     * array once (multi-referenced non-cheap expressions are not inlined
     * back into the lambda by CollapseProject). */

@@ -103,13 +103,6 @@ object Multimodal {
       .withColumn("audio_dup", col("audio_ham") <= 3)
   }
 
-  val MetadataSchema: StructType = StructType(Seq(
-    StructField("modality", StringType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("sample_rate", IntegerType),
-    StructField("n_frames", IntegerType)))
-
   /** Deterministic synthetic blobs from the documents table — the
     * stand-in for a real binary source (S7-style scan of media files).
     * Metadata derives arithmetically from doc fields so the DuckDB

@@ -334,29 +334,6 @@ object Substrate {
         col("ndv"), col("min_v"), col("max_v"))
   }
 
-  /** Equi-width HISTOGRAM over order totals (cents) — the distribution
-    * profile behind optimizer statistics and data-drift monitors. The
-    * classic two-pass shape: pass 1 is a tiny (min, max) aggregate that
-    * BROADCASTS back; pass 2 buckets every row with pure integer
-    * arithmetic (`(v-mn)*B DIV (mx-mn+1)` — no float boundary) and
-    * collapses map-side to ≤B rows. The cumulative count runs over the
-    * bounded B-row result, so the one unpartitioned window is O(B),
-    * never data-sized. */
-  def histogram(spark: SparkSession, sfDir: String, buckets: Int = 32): DataFrame = {
-    val o = Tables.orders(spark, sfDir)
-      .select((col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
-        .as("price_c"))
-    val bounds = o.agg(min(col("price_c")).as("mn"), max(col("price_c")).as("mx"))
-    val hist = o.crossJoin(broadcast(bounds))
-      .withColumn("bucket", expr(s"((price_c - mn) * $buckets) DIV (mx - mn + 1)"))
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n_orders"),
-        min(col("price_c")).as("lo_c"), max(col("price_c")).as("hi_c"))
-    val wc = Window.orderBy(col("bucket"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    hist.withColumn("cum_orders", sum(col("n_orders")).over(wc))
-  }
-
   /** Z-ORDER data layout — the multi-dimensional clustering pass a
     * 100 TB table needs when queries filter on TWO keys (Delta/Iceberg
     * OPTIMIZE ZORDER BY): rows order by the bit-interleaved

@@ -32,6 +32,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
         "inputSql" -> left.sql, "inputType" -> left.dataType.sql))
   }
   override def dataType: DataType = DoubleType
+  // a zero-norm input or a null element yields null even when both
+  // inputs are non-nullable, and doGenCode assigns `isNull` on that path
+  override def nullable: Boolean = true
   override def prettyName: String = "cosine_sim"
 
   override def nullSafeEval(a: Any, b: Any): Any = {

@@ -127,23 +127,6 @@ object ImscSchema {
     case _ => sys.error(s"schema item $name must be a mapping")
   }
 
-  /** S9: discover `*.imsc.{yml,yaml,json}` files in a directory (dot
-    * files excluded) and collect them in (order, capitalized-name) order
-    * keyed by id (ref: list_schema_file_names + collect_schemas,
-    * scicat_metadata.py:39-52,328-346). Engine-config load — driver
-    * side, not a data-plane operator. */
-  def collectSchemas(dir: java.nio.file.Path): Vector[(String, ImscSchema)] = {
-    import scala.jdk.CollectionConverters._
-    val valid = java.nio.file.Files.list(dir).iterator().asScala
-      .filter { p =>
-        val n = p.getFileName.toString
-        !n.startsWith(".") &&
-          (n.contains("imsc.json") || n.contains("imsc.yml") || n.contains("imsc.yaml"))
-      }.toVector
-    val schemas = valid.map(p => fromYamlOrJson(java.nio.file.Files.readString(p)))
-    sortSchemas(schemas).map(s => s.id -> s).toVector
-  }
-
   /** Schema collection ordering: (order, python-capitalized name)
     * (ref: collect_schemas, scicat_metadata.py:328-346). */
   def sortSchemas(schemas: Seq[ImscSchema]): Seq[ImscSchema] =

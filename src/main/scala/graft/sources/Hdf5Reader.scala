@@ -95,8 +95,10 @@ object Hdf5Reader {
   /** The IngestStream wiring (F11-safe): every failure class yields
     * None so the pipeline nulls the row's variables out instead of
     * failing the batch — but the classes are logged DISTINCTLY (a file
-    * that is merely too big must not read as corrupt, and transient IO
-    * failures retry first, delays clamped to [1, 120] s like S10). */
+    * that is merely too big must not read as corrupt). S10: transient
+    * IO failures retry first, each delay clamped to [1, 120] s (ref:
+    * open_h5file, src/scicat_nexus_helper.py:62-95) — a file may still
+    * be mid-write when its wrdn message arrives. */
   def fileReaderWith(
       retryDelaysSeconds: Seq[Double],
       sleeper: Long => Unit = Thread.sleep): String => Option[String] = { p =>

@@ -9,7 +9,8 @@ import java.time.format.DateTimeFormatter
 import graft.functions.Blake2b
 
 /** Per-file ingestion primitives: stat scan (S7), streamed file
-  * checksum (S8), hash-file side write (K4), bounded open-retry (S10).
+  * checksum (S8), hash-file side write (K4). The bounded open-retry
+  * (S10) is [[graft.sources.Hdf5Reader.fileReaderWith]]'s.
   * These run inside tasks (one file row each) — the Spark analogue of
   * the reference's per-file child process.
   */
@@ -91,23 +92,4 @@ object FileIngest {
       case a if a.matches("sha\\d+") => "SHA-" + a.drop(3)
       case a => a.toUpperCase
     })
-
-  /** S10: bounded retry with per-try delays clamped to [1, 120] s
-    * (ref: open_h5file, src/scicat_nexus_helper.py:62-95) — files may
-    * still be mid-write when the wrdn message arrives.
-    */
-  def withRetries[A](delaysSeconds: Seq[Double], sleeper: Long => Unit = Thread.sleep)
-      (attempt: () => Option[A]): Option[A] = {
-    val clamped = delaysSeconds.map(d => math.min(math.max(d, 1.0), 120.0))
-    attempt() match {
-      case some @ Some(_) => some
-      case None =>
-        clamped.foldLeft(Option.empty[A]) { (acc, delay) =>
-          acc.orElse {
-            sleeper((delay * 1000).toLong)
-            attempt()
-          }
-        }
-    }
-  }
 }

@@ -224,32 +224,4 @@ object IngestStream {
       }
     checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d)).start()
   }
-
-  /** §3.3 sample pipeline: pl72 stream partitioned by instrument, new
-    * (sample, proposal) pairs discovered via anti-join (get-or-create).
-    *
-    * CONTRACT: `existingSamples` must be batch-bounded — the catalog
-    * probed for THIS batch's (name, instrument) keys (or an enumerable
-    * local catalog), never an unboundedly-growing full-history table —
-    * because it broadcasts unconditionally below. The REST production
-    * path ([[SampleIngestor.processSampleBatch]]) probes per-key
-    * instead and never builds this frame. */
-  def samplePipeline(pl72Batch: DataFrame, existingSamples: DataFrame): DataFrame = {
-    // dedup BEFORE the instrument repartition — dropDuplicates shuffles
-    // by its own keys and would undo it (see SampleIngestor scaladoc)
-    val candidates = pl72Batch
-      .select(col("job_id"), col("filename"), col("instrument_name"))
-      .dropDuplicates("filename", "instrument_name")
-      .repartition(col("instrument_name")) // per-instrument ordering domain
-      .sortWithinPartitions(col("instrument_name"), col("filename"))
-    // existingSamples MUST broadcast: a shuffled anti-join would
-    // re-hash by its own (filename, instrument) keys and destroy the
-    // per-instrument single-partition + sort invariant just
-    // established. Broadcast keeps the anti-join map-side, partitioning
-    // and order intact (the known-samples set is micro-batch-bounded).
-    candidates.join(broadcast(existingSamples),
-      candidates("filename") === existingSamples("sample_name") &&
-        candidates("instrument_name") === existingSamples("instrument"),
-      "left_anti")
-  }
 }

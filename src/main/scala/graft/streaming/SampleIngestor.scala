@@ -19,10 +19,13 @@ import graft.config.{IngestLogging, IngestorConfig}
 object SampleIngestor {
 
   /** One micro-batch of pl72 records → the (sample, proposal) pairs
-    * that were actually created. Enumerable catalogs use the broadcast
-    * anti-join ([[IngestStream.samplePipeline]]); REST catalogs probe
-    * per distinct candidate (ref: check_sample, :76-94 — exists iff the
-    * query returns a non-empty list). */
+    * that were actually created. Every catalog is probed once per
+    * distinct candidate, after the in-batch dedup (ref: check_sample,
+    * :76-94 — exists iff the query returns a non-empty list).
+    *
+    * The returned frame is persisted; the caller unpersists it once
+    * done. If the POST job fails, it is unpersisted here before the
+    * exception propagates. */
   def processSampleBatch(
       pl72Batch: DataFrame,
       catalog: graft.catalog.Catalog): DataFrame = {
@@ -38,17 +41,21 @@ object SampleIngestor {
       .dropDuplicates("filename", "instrument_name")
       .repartition(col("instrument_name"))
       .sortWithinPartitions(col("instrument_name"), col("filename"))
+    // the probe does I/O, so it is non-deterministic: Catalyst then does
+    // not push its filter below the dedup, and each distinct candidate
+    // is probed once, in its instrument's partition
     val existsUdf = udf((name: String, proposalId: String) =>
-      catalog.querySamples(name, proposalId).nonEmpty)
+      catalog.querySamples(name, proposalId).nonEmpty).asNondeterministic()
     // persist BEFORE the POST action: without it, any later action on
     // the returned frame would re-run the exists probe — which now says
     // "exists" for everything just created — and re-POST or report 0
     val created = candidates.filter(
       !existsUdf(col("filename"), col("instrument_name"))).persist()
-    created.select(col("filename"), col("instrument_name"))
+    try created.select(col("filename"), col("instrument_name"))
       .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
         rows.foreach(r => catalog.createSample(r.getString(0), r.getString(1)))
       }
+    catch { case e: Throwable => created.unpersist(); throw e }
     created
   }
 
@@ -68,7 +75,8 @@ object SampleIngestor {
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         val created = processSampleBatch(batch.toDF(), catalog)
-        logger.info(s"sample batch $id: created ${created.count()} samples")
+        try logger.info(s"sample batch $id: created ${created.count()} samples")
+        finally created.unpersist()
       }
       .option("checkpointLocation",
         java.nio.file.Paths.get(

@@ -24,6 +24,13 @@ import graft.assemble.DatasetAssembly
   */
 object Sinks {
 
+  /** F10: each row's dataset document and its datablock, as the
+    * null-stripped JSON that K1/K2 POST. */
+  private def documents(batch: DataFrame): DataFrame = batch.select(
+    DatasetAssembly.toJsonColumn(
+      DatasetAssembly.OutputColumns.filterNot(_ == "origDataBlock")).as("dataset"),
+    to_json(col("origDataBlock"), Map("ignoreNullFields" -> "true")).as("datablock"))
+
   /** K1/K2 + F10: write each dataset row (and its datablock struct) as
     * null-stripped JSON lines under
     * `outDir/datasets_<batch>/part-*` (one directory of line files per
@@ -32,11 +39,8 @@ object Sinks {
   def jsonDatasetSink(outDir: String, dryRun: Boolean = false)(
       batch: DataFrame, batchId: Long): Unit = {
     if (dryRun) return
-    val datasetJson = batch.select(
-      to_json(struct(DatasetAssembly.OutputColumns.filterNot(_ == "origDataBlock").map(col): _*),
-        Map("ignoreNullFields" -> "true")).as("dataset"),
-      to_json(col("origDataBlock"), Map("ignoreNullFields" -> "true")).as("datablock"))
-      .persist() // two sinks, one computation of the assembly pipeline
+    // two sinks, one computation of the assembly pipeline
+    val datasetJson = documents(batch).persist()
     try {
       datasetJson.select(col("dataset")).write.mode("overwrite")
         .text(f"$outDir/datasets_$batchId%05d")
@@ -54,16 +58,12 @@ object Sinks {
   def restDatasetSink(catalog: graft.catalog.Catalog, dryRun: Boolean = false)(
       batch: DataFrame, batchId: Long): Unit = {
     if (dryRun) return
-    batch.select(
-      to_json(struct(DatasetAssembly.OutputColumns.filterNot(_ == "origDataBlock").map(col): _*),
-        Map("ignoreNullFields" -> "true")).as("dataset"),
-      to_json(col("origDataBlock"), Map("ignoreNullFields" -> "true")).as("datablock"))
-      .foreachPartition { rows: Iterator[Row] =>
-        rows.foreach { r =>
-          catalog.createDataset(r.getAs[String]("dataset"))
-          catalog.createOrigDatablock(r.getAs[String]("datablock"))
-        }
+    documents(batch).foreachPartition { rows: Iterator[Row] =>
+      rows.foreach { r =>
+        catalog.createDataset(r.getAs[String]("dataset"))
+        catalog.createOrigDatablock(r.getAs[String]("datablock"))
       }
+    }
   }
 
   /** Read back every line written by [[jsonDatasetSink]] for one batch —

@@ -439,7 +439,10 @@ object StressHarness {
           }
           val before = catalog.sampleCreateCount
           var threw = true
-          try { SampleIngestor.processSampleBatch(batch.toDF(), crashingCatalog); threw = false }
+          try {
+            SampleIngestor.processSampleBatch(batch.toDF(), crashingCatalog).unpersist()
+            threw = false
+          }
           finally {
             // QUIESCE before recording a FAILED batch's segment: on job
             // failure Spark does not interrupt sibling partition tasks

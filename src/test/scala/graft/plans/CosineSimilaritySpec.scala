@@ -38,6 +38,31 @@ class CosineSimilaritySpec extends AnyFunSuite {
     assert(got(0) == 1.0 && got(1) == 0.0 && got(2) == null)
   }
 
+  test("non-nullable inputs: a zero vector compiles to null, the field is nullable") {
+    CosineSimilarity.register(spark)
+    val conf = Seq(
+      // literals stay in the projection instead of folding on the driver
+      "spark.sql.optimizer.excludedRules" ->
+        "org.apache.spark.sql.catalyst.optimizer.ConstantFolding",
+      // a generated class Janino rejects fails the query instead of
+      // falling back to the interpreted projection
+      "spark.sql.codegen.fallback" -> "false")
+    val saved = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val df = spark.range(1).select(call_function("cosine_sim",
+        typedLit(Array(0.0, 0.0)), typedLit(Array(1.0, 1.0))).as("c"))
+      // the projection runs inside a whole-stage-codegen stage
+      assert(df.queryExecution.executedPlan.toString.linesIterator
+        .exists(l => l.contains("*(") && l.contains("cosine_sim")))
+      assert(df.collect().map(_.isNullAt(0)).toSeq == Seq(true))
+      assert(df.schema("c").nullable)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("interpreted eval path matches codegen (eval via filter on literal)") {
     CosineSimilarity.register(spark)
     import spark.implicits._

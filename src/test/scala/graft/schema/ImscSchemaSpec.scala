@@ -80,8 +80,12 @@ class SchemaDiscoverySpec extends AnyFunSuite {
     write("c.imsc.yaml", schema("c-schema", "Zulu", 1))
     write(".hidden.imsc.yml", schema("hidden", "H", 0))
     write("notes.txt", "not a schema")
-    val got = graft.schema.ImscSchema.collectSchemas(dir)
-    assert(got.map(_._1) == Vector("c-schema", "a-schema", "b-schema"))
-    assert(got.head._2.name == "Zulu")
+    val cfg = graft.config.IngestorConfig.load(
+      s"""ingestion:
+         |  schemas_directory: "$dir"
+         |""".stripMargin)
+    val (got, fallback) = graft.streaming.OnlineIngestor.loadSchemas(cfg)
+    assert(got.map(_.id) == Seq("c-schema", "a-schema", "b-schema"))
+    assert(got.head.name == "Zulu" && fallback.isEmpty)
   }
 }

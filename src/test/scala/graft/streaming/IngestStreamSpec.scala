@@ -187,39 +187,44 @@ class IngestStreamSpec extends AnyFunSuite {
       ("j1", "sampleA", "ymir"), ("j2", "sampleA", "ymir"), // dup in batch
       ("j3", "sampleB", "ymir"), ("j4", "sampleA", "coda"))
       .toDF("job_id", "filename", "instrument_name")
-    val existing = Seq(("sampleB", "ymir")).toDF("sample_name", "instrument")
-    val created = IngestStream.samplePipeline(pl72, existing)
-      .select("filename", "instrument_name").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
-    assert(created == Set(("sampleA", "ymir"), ("sampleA", "coda")))
+    // sampleB/ymir exists: the catalog probe drops it, as an anti-join would
+    val catalog = graft.catalog.LocalCatalog(Map("samples/sampleB/ymir" -> """["s1"]"""))
+    val created = SampleIngestor.processSampleBatch(pl72, catalog)
+    try {
+      val got = created.select("filename", "instrument_name").collect()
+        .map(r => (r.getString(0), r.getString(1))).toSet
+      assert(got == Set(("sampleA", "ymir"), ("sampleA", "coda")))
 
-    // PLAN GUARD: the anti-join must BROADCAST the existing-samples
-    // side — a shuffled anti-join would re-hash by its own
-    // (filename, instrument) keys and destroy the per-instrument
-    // single-partition + sort invariant the repartition establishes
-    // (the ADR-003 ordering contract SampleIngestor relies on). With
-    // the broadcast, Catalyst even pushes the anti-join BELOW the
-    // dedup aggregate, so the OUTERMOST exchange is the instrument
-    // repartition (with its sort on top) and nothing re-hashes after.
-    val plan = IngestStream.samplePipeline(pl72, existing)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
-      s"anti-join must be broadcast:\n$plan")
-    val outermost = plan.linesIterator
-      .find(_.contains("Exchange hashpartitioning")).getOrElse("")
-    assert(outermost.contains("instrument_name") && !outermost.contains("filename"),
-      s"outermost exchange must be the instrument repartition:\n$plan")
+      // PLAN GUARD on the plan that ran the POSTs: nothing re-hashes
+      // after the instrument repartition, so each instrument's creates
+      // stay in one partition in sorted order (the ADR-003 per-instrument
+      // ordering). The OUTERMOST exchange is the instrument repartition
+      // and the per-instrument sort sits above it.
+      val plan = spark.sharedState.cacheManager
+        .lookupCachedData(created.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+        .map(_.cachedRepresentation.cacheBuilder.cachedPlan.toString).getOrElse("")
+      val lines = plan.linesIterator.toVector
+      val outermost = lines.indexWhere(_.contains("Exchange hashpartitioning"))
+      assert(outermost >= 0 && lines(outermost).contains("instrument_name") &&
+        !lines(outermost).contains("filename"),
+        s"outermost exchange must be the instrument repartition:\n$plan")
+      assert(lines.take(outermost).exists(l =>
+        l.contains("Sort [instrument_name") && l.contains("filename")),
+        s"the per-instrument sort must sit above the repartition:\n$plan")
+    } finally created.unpersist()
   }
 
   test("S10: open-retry clamps delays and stops at success") {
-    var calls = 0
+    // the file appears during the first sleep, as bytes that are not
+    // HDF5: the open succeeds, so retrying stops and the parse failure
+    // yields None (F11)
+    val late = java.nio.file.Files.createTempDirectory("graft_retry").resolve("late.nxs")
     val slept = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val result = FileIngest.withRetries[String](
-      Seq(0.001, 5.0), sleeper = slept.append(_)) { () =>
-      calls += 1
-      if (calls == 2) Some("ok") else None
-    }
-    assert(result.contains("ok") && calls == 2)
+    val reader = graft.sources.Hdf5Reader.fileReaderWith(Seq(0.001, 5.0), sleeper = { ms =>
+      slept += ms
+      java.nio.file.Files.write(late, "not hdf5".getBytes("UTF-8"))
+    })
+    assert(reader(late.toString).isEmpty)
     assert(slept.toSeq == Seq(1000L)) // 0.001 clamped up to 1 s; second delay unused
   }
 

@@ -18,17 +18,21 @@ object OfflineIngestorSpec {
   // recording catalog for the sample path (companion-object state works
   // in local mode: the closure deserializes but the queue is static)
   val createdSamples = new ConcurrentLinkedQueue[(String, String)]()
-  final case class RecordingCatalog(existing: Set[(String, String)])
+  val sampleProbes = new java.util.concurrent.atomic.AtomicInteger()
+  final case class RecordingCatalog(existing: Set[(String, String)], failPosts: Boolean = false)
       extends graft.catalog.Catalog {
     def lookupJson(url: String, field: String): Option[String] = None
-    def querySamples(name: String, proposalId: String): Seq[String] =
+    def querySamples(name: String, proposalId: String): Seq[String] = {
+      sampleProbes.incrementAndGet()
       if (existing((name, proposalId))) Seq("s1") else Seq.empty
+    }
     def datasetExists(pid: String): Boolean = false
     def metadataValueExists(key: String, value: String): Boolean = false
     def createDataset(json: String): String = json
     def createOrigDatablock(json: String): String = json
     override def createSample(name: String, proposalId: String): Unit =
-      createdSamples.add((name, proposalId))
+      if (failPosts) throw new RuntimeException("injected sample POST failure")
+      else createdSamples.add((name, proposalId))
   }
 }
 
@@ -158,6 +162,7 @@ class OfflineIngestorSpec extends AnyFunSuite {
   test("sample get-or-create: dedups in batch, probes catalog, POSTs the rest") {
     import spark.implicits._
     createdSamples.clear()
+    sampleProbes.set(0)
     val pl72 = Seq(
       ("j1", "sampleA", "ymir"), ("j2", "sampleA", "ymir"), // in-batch dup
       ("j3", "sampleB", "ymir"), // already in catalog
@@ -166,9 +171,36 @@ class OfflineIngestorSpec extends AnyFunSuite {
     val created = SampleIngestor.processSampleBatch(
       pl72, OfflineIngestorSpec.RecordingCatalog(existing = Set(("sampleB", "ymir"))))
     assert(created.count() == 2) // persisted: count does NOT re-probe/re-post
+    assert(sampleProbes.get == 3) // one probe per distinct candidate, after the dedup
     val posted = createdSamples.toArray(Array.empty[(String, String)]).toSet
     assert(posted == Set(("sampleA", "ymir"), ("sampleA", "coda")))
     assert(created.count() == 2) // stable on repeated actions
     assert(createdSamples.size == 2) // and no duplicate POSTs happened
+    created.unpersist()
+  }
+
+  test("sample batches leave no cached frame behind, after success and after a failed POST") {
+    import spark.implicits._
+    val cache = spark.sharedState.cacheManager
+    // CacheManager.numCachedEntries is package-private in Scala, public in bytecode
+    def entries = cache.getClass.getMethod("numCachedEntries").invoke(cache).asInstanceOf[Int]
+    val before = entries
+    val pl72 = Seq(("j1", "sampleC", "ymir"), ("j2", "sampleD", "coda"))
+      .toDF("job_id", "filename", "instrument_name")
+
+    // success: the returned frame is the one cache entry, until the
+    // caller is done with it (both callers unpersist after counting)
+    val created = SampleIngestor.processSampleBatch(pl72, RecordingCatalog(existing = Set.empty))
+    assert(entries == before + 1)
+    assert(created.count() == 2)
+    created.unpersist()
+    assert(cache.lookupCachedData(
+      created.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isEmpty && entries == before)
+
+    // a POST that throws fails the batch and leaves no entry behind
+    intercept[Exception] {
+      SampleIngestor.processSampleBatch(pl72, RecordingCatalog(Set.empty, failPosts = true))
+    }
+    assert(entries == before)
   }
 }

@@ -12,12 +12,19 @@
     a deleted knob. r18/ holds run records and is not scanned. A dotted
     `graft.<pkg>...` name whose first segment is a source package or file
     (`graft.streaming.OnlineIngestor`) is code, not a key;
-plus the two counts. Only call sites count: a key named in a comment or a
+  - test_only: sorted `Object.member` names of the member-level
+    `def`/`val`/`class`/`object` definitions in src/main objects that no
+    code under src/main mentions outside the definition's own body, but
+    code under src/test does: a capability only specs reach. Names are
+    matched as words with comments stripped, and a use in another file
+    counts only if that file also names the object (a qualified call or
+    an import);
+plus the three counts. Only call sites count: a key named in a comment or a
 logger name is not a knob.
 
 Usage: knob_count.py [srcRoot]   (default: src/main next to this tool;
 the stale check always reads the repo's own src/main and src/test)"""
-import json, os, re, sys
+import bisect, itertools, json, os, re, sys
 
 repo = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
 root = sys.argv[1] if len(sys.argv) > 1 else os.path.join(repo, "src", "main")
@@ -53,6 +60,87 @@ def reads(top):
     return keys, envs, lines
 
 
+LITERAL = re.compile(r'"""(?:.|\n)*?"""+|"(?:\\.|[^"\\\n])*"|\'(?:\\.|[^\\\'\n])\'')
+COMMENT = re.compile(r'//[^\n]*|/\*(?:.|\n)*?\*/')
+
+
+def strip_comments(text):
+    """`text` with every comment blanked to spaces (newlines kept, so line
+    numbers still hold); string and char literals are kept as they are."""
+    out, i = [], 0
+    while True:
+        lit, com = LITERAL.search(text, i), COMMENT.search(text, i)
+        first = min((m for m in (lit, com) if m), key=lambda m: m.start(), default=None)
+        if first is None:
+            return "".join(out) + text[i:]
+        out.append(text[i:first.start()])
+        out.append(first.group() if first is lit else re.sub(r"[^\n]", " ", first.group()))
+        i = first.end()
+
+
+TOP_OBJECT = re.compile(r'(?:(?:private\[\w+\]|final|case)\s+)*object\s+(\w+)')
+MEMBER = re.compile(
+    r'  (?:(?:private\[\w+\]|protected|final|implicit|lazy|case|sealed|abstract)\s+)*'
+    r'(?:def|val|var|class|object|trait)\s+([A-Za-z_]\w*)')
+
+
+def member_defs(lines):
+    """(object, name, first line, end line) of each member definition of
+    a top-level object; the span runs to the next line at the member's
+    own indent, a closing brace or paren there included."""
+    obj = None
+    for i, line in enumerate(lines):
+        if line[:1] not in ("", " ", "\t", "}"):
+            m = TOP_OBJECT.match(line)
+            obj = m.group(1) if m else None
+        m = MEMBER.match(line)
+        if obj is None or not m:
+            continue
+        j = i + 1
+        while j < len(lines) and (not lines[j].strip() or
+                                  len(lines[j]) - len(lines[j].lstrip()) > 2):
+            j += 1
+        if j < len(lines) and lines[j].startswith(("  }", "  )")):
+            j += 1
+        yield obj, m.group(1), i, j
+
+
+def code_files(side):
+    """path → comment-stripped lines of every source file under src/<side>."""
+    files = {}
+    for d, _, names in os.walk(os.path.join(repo, "src", side)):
+        for f in names:
+            if f.endswith((".scala", ".java")):
+                with open(os.path.join(d, f), encoding="utf-8") as fh:
+                    files[os.path.join(d, f)] = strip_comments(fh.read()).split("\n")
+    return files
+
+
+def test_only():
+    """Members of src/main objects that only src/test code uses."""
+    main, test = code_files("main"), code_files("test")
+    texts = {p: "\n".join(ls) for p, ls in list(main.items()) + list(test.items())}
+    naming = {}  # object → (main files, test files) that name it
+    found = set()
+    for path, lines in main.items():
+        text = texts[path]
+        starts = list(itertools.accumulate((len(l) + 1 for l in lines), initial=0))
+        for obj, name, lo, hi in member_defs(lines):
+            if obj not in naming:
+                owner = re.compile(r'\b%s\b' % obj)
+                naming[obj] = tuple([p for p in side if owner.search(texts[p])]
+                                    for side in (main, test))
+            in_main, in_test = naming[obj]
+            word = re.compile(r'\b%s\b' % name)
+            # in the defining file, a use inside the member's own body does not count
+            own = any(not lo <= bisect.bisect_right(starts, m.start()) - 1 < hi
+                      for m in word.finditer(text))
+            if not own and not any(word.search(texts[p]) for p in in_main if p != path) and \
+                    any(word.search(texts[p]) for p in in_test):
+                found.add(f"{obj}.{name}")
+    return sorted(found)
+
+
 def is_code_path(name):
     seg = os.path.join(repo, "src", "main", "scala", "graft", name.split(".")[1])
     return os.path.isdir(seg) or os.path.isfile(seg + ".scala")
@@ -71,9 +159,11 @@ named = {n for t in docs for n in DOC_ENV.findall(t) + DOC_KEY.findall(t)}
 stale = sorted(n for n in named
                if n not in read_names and not (n.startswith("graft.") and is_code_path(n)))
 
+only = test_only()
 print(json.dumps({
     "main_lines": lines,
     "graft_keys": sorted(keys), "n_graft_keys": len(keys),
     "env_vars": sorted(envs), "n_env_vars": len(envs),
     "stale": stale,
+    "test_only": only, "n_test_only": len(only),
 }))
