@@ -21,14 +21,13 @@ import graft.schema.ConfigValue._
   * dead weight; their keys still VALIDATE (strict mode knows the full
   * reference key set) so a reference config is not rejected.
   *
-  * Some typed keys likewise validate and load but have no engine
-  * effect; nothing reads their fields:
-  *  - `compute_file_stats`, `save_file_hash`, `hash_file_extension`;
-  *  - `message_to_file`, `message_file_extension`;
-  *  - `dataset_pid_prefix`, `stream_flag`, `verify_flag`;
-  *  - `individual_message_commit`, `enable_auto_commit` (the Kafka
-  *    source commits through its checkpoint, see
-  *    [[graft.streaming.StreamSources.kafkaSourceOptions]]).
+  * Reference keys with no engine effect keep their type check at load
+  * (a wrong-typed value still raises [[ConfigError]]) but get no field:
+  * `compute_file_stats`, `save_file_hash`, `hash_file_extension`,
+  * `message_to_file`, `message_file_extension`, `dataset_pid_prefix`,
+  * `scicat.stream`, `scicat.verify`, `individual_message_commit` and
+  * `enable_auto_commit` (the Kafka source commits through its
+  * checkpoint, see [[graft.streaming.StreamSources.kafkaSourceOptions]]).
   */
 object IngestorConfig {
 
@@ -42,8 +41,6 @@ object IngestorConfig {
       saslUsername: String = "USERNAME",
       saslPassword: String = "",
       sslCaLocation: String = "FULL_PATH_TO_CERTIFICATE_FILE",
-      individualMessageCommit: Boolean = true,
-      enableAutoCommit: Boolean = true,
       autoOffsetReset: String = "earliest") {
 
     /** Spark Kafka-source security options for
@@ -66,14 +63,9 @@ object IngestorConfig {
 
   /** ref: FileHandlingOptions (scicat_configuration.py:283-316). */
   final case class FileHandlingConfig(
-      computeFileStats: Boolean = true,
       computeFileHash: Boolean = true,
       fileHashAlgorithm: String = "blake2b",
-      saveFileHash: Boolean = true,
-      hashFileExtension: String = "b2b",
       ingestorFilesDirectory: String = "../ingestor",
-      messageToFile: Boolean = true,
-      messageFileExtension: String = "message.json",
       filePathType: String = "relative",
       dataDirectory: String = "",
       dataFileOpenMaxTries: Int = 3,
@@ -93,7 +85,6 @@ object IngestorConfig {
   final case class DatasetConfig(
       allowDatasetPid: Boolean = true,
       generateDatasetPid: Boolean = false,
-      datasetPidPrefix: String = "20.500.12269",
       defaultInstrumentId: String = "ID_OF_FALLBACK_INSTRUMENT",
       defaultProposalId: String = "DEFAULT_PROPOSAL_ID",
       defaultOwnerGroup: String = "DEFAULT_OWNER_GROUP",
@@ -103,9 +94,7 @@ object IngestorConfig {
   final case class SciCatConfig(
       host: String = "https://scicat.host/api/v3",
       token: String = "",
-      timeout: Int = 0,
-      streamFlag: Boolean = true,
-      verifyFlag: Boolean = false) {
+      timeout: Int = 0) {
 
     def toCatalog: graft.catalog.HttpScicatCatalog =
       graft.catalog.HttpScicatCatalog(
@@ -277,28 +266,28 @@ object IngestorConfig {
     val dataset = DatasetConfig(
       allowDatasetPid = ds.bool("allow_dataset_pid", true),
       generateDatasetPid = ds.bool("generate_dataset_pid", false),
-      datasetPidPrefix = ds.str("dataset_pid_prefix", "20.500.12269"),
       defaultInstrumentId = ds.str("default_instrument_id", "ID_OF_FALLBACK_INSTRUMENT"),
       defaultProposalId = ds.str("default_proposal_id", "DEFAULT_PROPOSAL_ID"),
       defaultOwnerGroup = ds.str("default_owner_group", "DEFAULT_OWNER_GROUP"),
       defaultAccessGroups = ds.strSeq("default_access_groups", Seq("ACCESS_GROUP_1")))
+    // no field: read only for the type check
+    ds.str("dataset_pid_prefix", "")
     errors ++= ds.finish()
 
     val ing = new Section(t.sub("ingestion"), "ingestion", toleratedIngestion)
     val fh = new Section(ing.sub("file_handling"), "ingestion.file_handling", Set.empty)
     val fileHandling = FileHandlingConfig(
-      computeFileStats = fh.bool("compute_file_stats", true),
       computeFileHash = fh.bool("compute_file_hash", true),
       fileHashAlgorithm = fh.str("file_hash_algorithm", "blake2b"),
-      saveFileHash = fh.bool("save_file_hash", true),
-      hashFileExtension = fh.str("hash_file_extension", "b2b"),
       ingestorFilesDirectory = fh.str("ingestor_files_directory", "../ingestor"),
-      messageToFile = fh.bool("message_to_file", true),
-      messageFileExtension = fh.str("message_file_extension", "message.json"),
       filePathType = fh.str("file_path_type", "relative"),
       dataDirectory = fh.str("data_directory", ""),
       dataFileOpenMaxTries = fh.int("data_file_open_max_tries", 3),
       dataFileOpenRetryDelay = fh.doubleSeq("data_file_open_retry_delay", Seq.empty))
+    // no field: read only for the type check
+    fh.bool("compute_file_stats", true); fh.bool("save_file_hash", true)
+    fh.str("hash_file_extension", ""); fh.bool("message_to_file", true)
+    fh.str("message_file_extension", "")
     errors ++= fh.finish()
     val ingestion = IngestionConfig(
       dryRun = ing.bool("dry_run", false),
@@ -343,18 +332,18 @@ object IngestorConfig {
       saslUsername = kf.str("sasl_username", "USERNAME"),
       saslPassword = kf.str("sasl_password", ""),
       sslCaLocation = kf.str("ssl_ca_location", "FULL_PATH_TO_CERTIFICATE_FILE"),
-      individualMessageCommit = kf.bool("individual_message_commit", true),
-      enableAutoCommit = kf.bool("enable_auto_commit", true),
       autoOffsetReset = kf.str("auto_offset_reset", "earliest"))
+    // no field: read only for the type check
+    kf.bool("individual_message_commit", true); kf.bool("enable_auto_commit", true)
     errors ++= kf.finish()
 
     val sc = new Section(t.sub("scicat"), "scicat", toleratedScicat)
     val scicat = SciCatConfig(
       host = sc.str("host", "https://scicat.host/api/v3"),
       token = sc.str("token", ""),
-      timeout = sc.int("timeout", 0),
-      streamFlag = sc.bool("stream", true),
-      verifyFlag = sc.bool("verify", false))
+      timeout = sc.int("timeout", 0))
+    // no field: read only for the type check
+    sc.bool("stream", true); sc.bool("verify", false)
     errors ++= sc.finish()
 
     val cfg = Config(

@@ -133,13 +133,6 @@ object Dedup {
   private val RowsPerBand = MinhashPerm / Bands
   private val P = 2147483647L // 2^31-1
 
-  /** MinHash signatures banded for LSH. Deterministic AND
-    * engine-portable: the base hash is [[graft.functions.PortableHash]]
-    * (md5-derived 48-bit) + fixed (a,b) permutation params, so the
-    * DuckDB oracle replicates every signature bit-for-bit. Output: one
-    * row per (doc, band) with the band's bucket key — the join key that
-    * replaces the O(n²) comparison at scale.
-    */
   /** Per-doc 32-permutation minhash signature — the m0..m31 columns the
     * banding and the estimation evaluator both consume. Relational
     * formulation: explode shingles, hash once, take the k permutation
@@ -164,12 +157,19 @@ object Dedup {
     exploded.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
   }
 
+  /** MinHash signatures banded for LSH. Deterministic AND
+    * engine-portable: the base hash is [[graft.functions.PortableHash]]
+    * (md5-derived 48-bit) + fixed (a,b) permutation params, so the
+    * DuckDB oracle replicates every signature bit-for-bit. Output: one
+    * row per (doc, band) with the band's bucket key — the join key that
+    * replaces the O(n²) comparison at scale.
+    */
   def minhashLshBuckets(spark: SparkSession, sfDir: String): DataFrame =
     bandSignature(minhashSignatures(spark, sfDir))
 
   /** Bands the m0..m31 signature columns into (doc_id, band, bucket)
-    * rows — shared by the grouped (batch) and per-row (streaming)
-    * formulations so both produce identical bucket keys. */
+    * rows — shared by the full-corpus and incremental paths so both
+    * produce identical bucket keys. */
   private def bandSignature(sig: DataFrame): DataFrame =
     sig.select(col("doc_id"), posexplode(
       array((0 until Bands).map(bnd =>
@@ -178,27 +178,6 @@ object Dedup {
             col(s"m${bnd * RowsPerBand + k}").cast("string")): _*)).as("bucket"))
       ): _*)))
       .select(col("doc_id"), col("col.band").as("band"), col("col.bucket").as("bucket"))
-
-  /** STREAMING-SAFE minhash banding: identical signatures and buckets
-    * to [[minhashLshBuckets]], computed per row (array HOFs over the
-    * shingle array — no explode/groupBy, so no streaming-aggregation
-    * state or watermark needed). The batch path keeps the
-    * explode+partial-agg formulation: HOF lambdas are interpreted,
-    * which is fine per arriving row but slower over a whole corpus.
-    * Docs with no 3-grams (<3 words) produce no buckets, matching the
-    * grouped path. Input: any frame (static or streaming) with
-    * `doc_id` and `textCol`. */
-  def minhashBucketsPerRow(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val hashed = withShingles(docs, textCol)
-      .filter(size(col("sh")) > 0)
-      .withColumn("__hs", transform(col("sh"),
-        s => graft.functions.PortableHash.md5Hash48(s)))
-    val mins = (0 until MinhashPerm).map { i =>
-      array_min(transform(col("__hs"), h =>
-        pmod(h * (2L * i + 1) + 104729L * (i + 1), lit(P)))).as(s"m$i")
-    }
-    bandSignature(hashed.select((col("doc_id") +: mins): _*))
-  }
 
   /** Near-dup KEEP-FIRST at the minhash level: a document survives
     * unless one of its band buckets collides with a SMALLER doc_id —
@@ -263,18 +242,9 @@ object Dedup {
         keys, "left_anti")
       .localCheckpoint(eager = false)
 
-  /** LSH candidate pairs verified by true 3-gram Jaccard ≥ threshold.
-    * Same-bucket join → distinct pairs → verification join.
-    *
-    * `maxBucketSize` drops buckets over the cap from candidate
-    * generation (see [[oversizedBuckets]]); the default is far above
-    * any test-SF bucket, so the declared query and its oracle are
-    * unaffected — a real deployment tunes it to its cluster-size
-    * distribution.
-    */
   /** Shingle sets restricted to the docs that actually appear in the
-    * candidate pair list `cand` (r17 verdict #5, guide §2.3 "don't
-    * compute what you throw away"): the minhash verify stages join
+    * candidate pair list `cand` (nothing is computed only to be
+    * thrown away): the minhash verify stages join
     * per-doc shingle ARRAYS onto candidate pairs, so the projection
     * semi-joins the corpus to the candidate ids BELOW the shingle
     * transform — |candidates| shingling work at 100 TB instead of
@@ -291,6 +261,15 @@ object Dedup {
       .select(col("doc_id"), col("sh"))
   }
 
+  /** LSH candidate pairs verified by true 3-gram Jaccard ≥ threshold.
+    * Same-bucket join → distinct pairs → verification join.
+    *
+    * `maxBucketSize` drops buckets over the cap from candidate
+    * generation (see [[oversizedBuckets]]); the default is far above
+    * any test-SF bucket, so the declared query and its oracle are
+    * unaffected — a real deployment tunes it to its cluster-size
+    * distribution.
+    */
   def minhashNearDupPairs(spark: SparkSession, sfDir: String, threshold: Double = 0.7,
       maxBucketSize: Int = 1024): DataFrame = {
     // checkpoint BEFORE the cap: the census aggregate and the anti-join
@@ -428,18 +407,19 @@ object Dedup {
         coalesce(col("exact_of"), col("near_of")).as("dup_of"))
   }
 
-  /** BUILD-ONCE day-2 admission table (r18) — the cascade's outcome
+  /** BUILD-ONCE day-2 admission table — the cascade's outcome
     * table `(doc_id, outcome, dup_of)` that a production nightly job
     * writes ONCE and every downstream refresh reads. Five declared
     * queries (`dedup_bucket_refresh`, `dedup_fp_refresh`,
     * `dedup_cluster_refresh`, `corpus_split_churn`,
-    * `corpus_daily_increment`) each re-ran the full cascade — a
-    * corpus-wide minhash pass plus the shingle verify — to recover the
-    * same admitted set. Same lifecycle and charging discipline as
-    * [[Day1ClusterFamily]]: `dedup_incremental` is the declared build
-    * row (Bench cold-resets the family before each of its repeats), so
-    * it reports the true cascade cost and the consumers report the
-    * steady-state marginal cost of their own refresh work. The DuckDB
+    * `corpus_daily_increment`) share it, so the full cascade — a
+    * corpus-wide minhash pass plus the shingle verify — runs once per
+    * (application, sfDir), not once per consumer. Same lifecycle and
+    * charging discipline as [[Day1ClusterFamily]]: `dedup_incremental`
+    * is the declared build row (Bench cold-resets the family before
+    * each of its repeats), so it reports the true cascade cost and the
+    * consumers report the steady-state marginal cost of their own
+    * refresh work. The DuckDB
     * oracle replicas recompute the cascade from scratch inside every
     * consumer's SQL, so hash equality keeps proving the shared table ≡
     * the inline recomputation. */
@@ -454,7 +434,7 @@ object Dedup {
     incrementalDedupMaterialized(spark, sfDir)
       .filter(col("outcome") === "kept").select(col("doc_id"))
 
-  /** IVM REFRESH of the LSH bucket index (round-9 verdict item #7) —
+  /** IVM REFRESH of the LSH bucket index —
     * the proof behind [[incrementalDedup]]'s 100 TB story that "the
     * bucket table is a maintained index": apply one day's ADMITTED
     * documents to the stored index and show refresh == full rebuild.
@@ -492,14 +472,13 @@ object Dedup {
     existing.unionByName(delta)
   }
 
-  /** IVM REFRESH of the winnow FINGERPRINT table (round-10 verdict
-    * item #4) — completes the maintained-index trio: the LSH bucket
-    * index ([[bucketRefresh]]) and the hyperplane signature index
-    * ([[Similarity.indexRefresh]]) both had oracle-proven refresh ≡
-    * rebuild paths; this adds the same proof for the fingerprint table
-    * that feeds [[winnowEdgesMaterialized]] and the whole graph family,
-    * so the build-once edge list's "refreshed with the admitted-doc
-    * delta" claim is proven rather than asserted.
+  /** IVM REFRESH of the winnow FINGERPRINT table — the third of the
+    * maintained indexes: like the LSH bucket index ([[bucketRefresh]])
+    * and the hyperplane signature index ([[Similarity.indexRefresh]]),
+    * it has an oracle-proven refresh ≡ rebuild path, here for the
+    * fingerprint table that feeds [[winnowEdgesMaterialized]] and the
+    * whole graph family, so the build-once edge list's "refreshed with
+    * the admitted-doc delta" claim is proven rather than asserted.
     *
     * Refresh path: `existing` — fingerprints of the current corpus
     * (at scale a stored table bucketed on fp_hash; recomputed here for
@@ -551,12 +530,11 @@ object Dedup {
       .filter(col("n_shared") >= 3)
   }
 
-  /** CLUSTER-LABEL IVM (r16 verdict item #1) — completes the
-    * maintained-index family at its CONSUMER end: [[bucketRefresh]],
-    * [[fpRefresh]] and the vector-index refreshes maintain the
-    * candidate structures, but the component labels that
-    * [[graft.operators.Corpus.clusteredSplit]] and
-    * [[keepBestRepresentative]] consume still implied a full
+  /** CLUSTER-LABEL IVM — the maintained-index family at its CONSUMER
+    * end: [[bucketRefresh]], [[fpRefresh]] and the vector-index
+    * refreshes maintain the candidate structures, and this maintains
+    * the component labels that [[graft.operators.Corpus.clusteredSplit]]
+    * and [[keepBestRepresentative]] consume, without a full
     * star-contraction rebuild on every daily increment. This is the
     * incremental form. Components only ever UNION when documents are
     * added, so the day's delta edges collapse into a LABEL-level merge
@@ -588,10 +566,9 @@ object Dedup {
     // PERSISTED day-1 state a nightly refresh reads, not work the
     // refresh performs — they come from the build-once memo
     // ([[day1FingerprintsMaterialized]] / [[storedClusterLabelsMaterialized]]),
-    // whose build cost the bench charges to `corpus_daily_increment`
-    // (r17 verdict #4: the three day-2 queries each paid a full day-1
-    // winnow + star-CC rebuild; the repo-sanctioned BuildOnce pattern
-    // shares it exactly like the edge/candidate memos).
+    // whose build cost the bench charges to `corpus_daily_increment`;
+    // the three day-2 queries share one day-1 winnow + star-CC build,
+    // exactly like the edge/candidate memos.
     val oldFpRaw = day1FingerprintsMaterialized(spark, sfDir)
     val refreshedFp = oldFpRaw.unionByName(TextAnalysis
         .winnowDocFps(docs.join(admitted, Seq("doc_id"), "left_semi"), 4))
@@ -602,23 +579,12 @@ object Dedup {
       storedLabels = Some(storedClusterLabelsMaterialized(spark, sfDir)))
   }
 
-  /** [[clusterRefresh]] with the admission cascade's output and the
-    * edge delta supplied by the caller — [[dailyIncrement]] pays each
-    * exactly once across all its stages (the r15-ADVICE single-cascade
-    * pattern, as in [[Similarity.cellRefresh]]); `oldFpRaw` optionally
-    * shares the day-1 fingerprint scan the same way. */
-  /** The DAY-1 stored label table: star CC over the day-1 corpus with
-    * day-1-capped winnow edges — what a production deployment persists
-    * and [[clusterRefreshOf]] merges into. Recomputed here for
-    * self-contained declared queries; `oldFpRaw` shares the day-1
-    * fingerprint scan when the caller already holds it. */
-  /** BUILD-ONCE day-1 cluster state (r17 verdict #4) — the two tables a
+  /** BUILD-ONCE day-1 cluster state — the two tables a
     * production deployment PERSISTS between days and every day-2 query
     * reads: the day-1 winnow fingerprint table and the day-1 component
     * labels. `dedup_cluster_refresh`, `corpus_split_churn` and
-    * `corpus_daily_increment` each consumed them via a full in-query
-    * rebuild (day-1 winnow scan + capped fp self-join + star CC ≈ a
-    * third of each query); now the rebuild runs EXACTLY ONCE per
+    * `corpus_daily_increment` share them: the build (day-1 winnow
+    * scan + capped fp self-join + star CC) runs EXACTLY ONCE per
     * (application, sfDir) and is `localCheckpoint`ed, the same
     * lifecycle as [[winnowEdgesMaterialized]]. The bench charges the
     * build to `corpus_daily_increment` (first of the family in the
@@ -643,6 +609,11 @@ object Dedup {
       BuildOnce.sized(storedClusterLabels(spark, sfDir,
           Some(day1FingerprintsMaterialized(spark, sfDir)))))
 
+  /** The DAY-1 stored label table: star CC over the day-1 corpus with
+    * day-1-capped winnow edges — what a production deployment persists
+    * and [[clusterRefreshOf]] merges into. Recomputed here for
+    * self-contained declared queries; `oldFpRaw` shares the day-1
+    * fingerprint scan when the caller already holds it. */
   def storedClusterLabels(spark: SparkSession, sfDir: String,
       oldFpRaw: Option[DataFrame] = None): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
@@ -661,6 +632,11 @@ object Dedup {
       docs.filter(!isNew).select(col("doc_id")), oldEdges, "doc_id")
   }
 
+  /** [[clusterRefresh]] with the admission cascade's output and the
+    * edge delta supplied by the caller — [[dailyIncrement]] pays each
+    * exactly once across all its stages (one cascade per run, as in
+    * [[Similarity.cellRefresh]]); `oldFpRaw` optionally
+    * shares the day-1 fingerprint scan the same way. */
   def clusterRefreshOf(spark: SparkSession, sfDir: String,
       admitted: DataFrame, deltaEdges: DataFrame,
       oldFpRaw: Option[DataFrame] = None,
@@ -693,7 +669,7 @@ object Dedup {
         coalesce(col("merged"), labels("cluster")).as("cluster"))
   }
 
-  /** DAY-2 INCREMENTAL INTEGRATION (round-10 verdict item #5) — the
+  /** DAY-2 INCREMENTAL INTEGRATION — the
     * daily-ingest twin of `corpus_release_funnel`, proving the IVM
     * family COMPOSES: one declared query runs the admission cascade
     * plus all three index refreshes plus the near-dup edge delta and
@@ -761,8 +737,8 @@ object Dedup {
       .localCheckpoint(eager = false) // stage count + the label merge
     // ONE vector-admission cascade (the LSH candidate join + cosine
     // gate inside indexRefresh) feeds BOTH maintained vector indexes —
-    // the signature count and the cell delta (r15 ADVICE: cellRefresh's
-    // default path re-ran the cascade internally, doubling it per run)
+    // the signature count and the cell delta (cellRefresh's default
+    // path would run its own cascade, a second one per run)
     val sigRefresh = Similarity.indexRefresh(spark, sfDir)
       .localCheckpoint(eager = false)
     stage("docs_admitted", admitted)
@@ -791,12 +767,10 @@ object Dedup {
     *
     * Scale shape: ONE signature pass (localCheckpoint'ed — banding and
     * both pair sides reuse it), the CAPPED bucket equi self-join for
-    * candidates (r12 advice: the docstring claimed the cap but the
-    * join ran uncapped — a viral bucket of mass-identical docs made
-    * the CALIBRATOR quadratic in that bucket while the production
-    * paths it calibrates were capped; now it routes through
-    * [[capHotKeys]] with the same default and the cap is mirrored in
-    * the oracle), then doc-keyed joins; est/exact/err are
+    * candidates (through [[capHotKeys]] with the production paths'
+    * default, mirrored in the oracle, so a viral bucket of
+    * mass-identical docs cannot make the calibrator quadratic in that
+    * bucket), then doc-keyed joins; est/exact/err are
     * exact-integer or identical-IEEE arithmetic, so the evaluator
     * itself is oracle-checkable. */
   def minhashEstimationError(spark: SparkSession, sfDir: String,
@@ -851,9 +825,8 @@ object Dedup {
     *
     * Scale shape: identical to [[minhashEstimationError]] — one
     * checkpointed signature pass, the capped bucket equi self-join
-    * for candidates (routed through [[capHotKeys]] since r13; the r12
-    * code joined uncapped while claiming the cap — same fix and same
-    * oracle mirror as the est-err calibrator), doc-keyed joins; every
+    * for candidates (through [[capHotKeys]], the cap mirrored in the
+    * oracle as for the est-err calibrator), doc-keyed joins; every
     * emitted number is an exact integer, so aggregation order is
     * irrelevant. */
   def minhashBbitError(spark: SparkSession, sfDir: String,
@@ -986,21 +959,17 @@ object Dedup {
     * CLUSTER, the standard final step of a near-dup pipeline
     * (candidate PAIRS are not enough).
     *
-    * Implementation history (the r15 scale lesson): this was
-    * min-label PROPAGATION (each round every node takes the min label
-    * over its neighborhood), whose round count is the graph DIAMETER —
-    * fine while the 4-plane LSH graph was dense, but the r15
-    * scale-aware 8-plane sf1 graph (8,559 edges / 20,000 nodes, one
-    * 1,087-node sparse component) needs 21 rounds and the 20-round
-    * bound returned un-converged labels SILENTLY (caught by the new
-    * sf1 oracle gate). A pointer-jump step
-    * (`cluster ← labels[cluster]`) does NOT fix the asymptotics: the
-    * probe measured the same long tail, because the component minimum
-    * still has to travel the graph one EDGE per round — jump targets
-    * are nodes that haven't heard the true min yet, so the front
-    * advances linearly no matter how labels are compressed.
+    * Min-label PROPAGATION (each round every node takes the min label
+    * over its neighborhood) needs as many rounds as the graph DIAMETER:
+    * the 8-plane sf1 LSH graph (8,559 edges / 20,000 nodes, one
+    * 1,087-node sparse component) needs 21, past a 20-round bound. A
+    * pointer-jump step (`cluster ← labels[cluster]`) does NOT fix the
+    * asymptotics: the component minimum still has to travel the graph
+    * one EDGE per round — jump targets are nodes that haven't heard
+    * the true min yet, so the front advances linearly no matter how
+    * labels are compressed.
     *
-    * The fix is the formulation whose round count is provably
+    * This uses the formulation whose round count is provably
     * O(log n) INDEPENDENT of diameter — alternating large-star/
     * small-star contraction (Kiveris et al., "Connected Components in
     * MapReduce and Beyond"), which rewires EDGES each round so the
@@ -1156,27 +1125,6 @@ object Dedup {
       .select(col("doc_id"), col("n_chunks"), col("n_kept"), col("clean_text"))
   }
 
-  /** Fuzzy duplicate neighbors (edit distance ≤ 1) via FastSS
-    * deletion-neighborhood blocking (Bocek et al. 2007): every string
-    * emits itself plus each single-character deletion; two strings
-    * within edit distance 1 necessarily SHARE a variant (substitution →
-    * both drop the differing position; insert/delete → the longer drops
-    * the extra char and meets the shorter's identity variant), so the
-    * candidate join is a (variant) EQUI self-join — never the O(n²)
-    * all-pairs Levenshtein. Shared variants can still join strings at
-    * distance 2 (different deletions landing on the same string), so
-    * candidates are verified with the real `levenshtein` — the same
-    * two-stage candidates→verify shape as [[Similarity.lshVerifiedPairs]].
-    *
-    * Scale notes: the variant key space is Σ|s| per row (bounded by
-    * string length); per-row duplicate variants (runs of equal chars)
-    * collapse with array_distinct before the explode; the verify runs
-    * BEFORE the candidate DISTINCT — the check is the O(n) codegen'd
-    * [[graft.plans.EditWithin1]] two-pointer scan (not the O(n²)
-    * `levenshtein` DP), so rejecting a duplicated candidate is cheaper
-    * than shuffling it into the distinct. Run here over customer
-    * names, whose numbered structure is dense in distance-1 pairs;
-    * output aggregates to one row per left id. */
   /** Near-dup candidate pairs by SHARED WINNOWING FINGERPRINTS: the
     * overlap join MOSS runs downstream of
     * [[TextAnalysis.winnowFingerprints]]. Because winnowing keeps only
@@ -1228,7 +1176,7 @@ object Dedup {
   /** BUILD-ONCE near-dup edge list — the materialized table the whole
     * graph-analytics family ([[graft.operators.GraphOps]]) and the
     * downstream dedup verifiers consume, instead of each query
-    * re-deriving the winnow shingle census (round-9 verdict item #1).
+    * re-deriving the winnow shingle census.
     *
     * Per (application, sfDir) the default-parameter
     * [[winnowSharedPairsAll]] runs EXACTLY ONCE: the result is eagerly
@@ -1413,6 +1361,27 @@ object Dedup {
       .select(col("id1"), col("id2"))
   }
 
+  /** Fuzzy duplicate neighbors (edit distance ≤ 1) via FastSS
+    * deletion-neighborhood blocking (Bocek et al. 2007): every string
+    * emits itself plus each single-character deletion; two strings
+    * within edit distance 1 necessarily SHARE a variant (substitution →
+    * both drop the differing position; insert/delete → the longer drops
+    * the extra char and meets the shorter's identity variant), so the
+    * candidate join is a (variant) EQUI self-join — never the O(n²)
+    * all-pairs Levenshtein. Shared variants can still join strings at
+    * distance 2 (different deletions landing on the same string), so
+    * candidates are verified with the real `levenshtein` — the same
+    * two-stage candidates→verify shape as [[Similarity.lshVerifiedPairs]].
+    *
+    * Scale notes: the variant key space is Σ|s| per row (bounded by
+    * string length); per-row duplicate variants (runs of equal chars)
+    * collapse with array_distinct before the explode; the verify runs
+    * BEFORE the candidate DISTINCT — the check is the O(n) codegen'd
+    * [[graft.plans.EditWithin1]] two-pointer scan (not the O(n²)
+    * `levenshtein` DP), so rejecting a duplicated candidate is cheaper
+    * than shuffling it into the distinct. Run here over customer
+    * names, whose numbered structure is dense in distance-1 pairs;
+    * output aggregates to one row per left id. */
   def fuzzyNeighbors(spark: SparkSession, sfDir: String): DataFrame = {
     graft.plans.EditWithin1.register(spark)
     val cust = Tables.customer(spark, sfDir).select(col("c_custkey"), col("c_name"))

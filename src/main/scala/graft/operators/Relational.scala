@@ -383,11 +383,8 @@ object Relational {
     * explicit horizon clamp, not by the shift alone: Java/Spark
     * `shiftright` masks the shift amount to 6 bits, so an un-clamped
     * day ≥ 64 half-lives older than the anchor would WRAP back to full
-    * weight (r11 advice) — the clamp keeps the batch monitor
-    * bit-identical to its streaming twin
-    * ([[graft.streaming.StreamSources.trendingUpdate]], which prunes
-    * the same 20-half-life horizon out of state) on histories of any
-    * span.
+    * weight — the clamp keeps every score exact on histories of any
+    * span, and the oracle SQL states the same clamp.
     *
     * Scale shape: ONE corpus-sized pass — the map-side-combined
     * (type, item, day) count; the max-day anchor is a 1-row broadcast;

@@ -58,11 +58,6 @@ object TextAnalysis {
         PortableRound.pround(col("n").cast("double") / col("t"), 4).as("frac"))
   }
 
-  /** The combined Gopher/C4-style quality score as a reusable Column
-    * over any frame with a `text` column — shared by the batch
-    * [[qualityScore]] query and the streaming admission gate
-    * ([[graft.streaming.CorpusAdmission]]), so both paths score
-    * identically by construction. */
   /** The raw (unrounded) combined quality score — shared by the
     * per-doc rounded column and the exact micro-unit aggregate form. */
   private def qualityRawCol: Column = {
@@ -79,6 +74,10 @@ object TextAnalysis {
       least(distinctRatio, lit(0.3))
   }
 
+  /** The combined Gopher/C4-style quality score as a reusable Column
+    * over any frame with a `text` column — shared by the
+    * [[qualityScore]] query and the corpus quality-decile split, so
+    * both score identically by construction. */
   def qualityScoreCol: Column =
     PortableRound.pround(qualityRawCol, 4)
 

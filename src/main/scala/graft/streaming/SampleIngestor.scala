@@ -29,13 +29,14 @@ object SampleIngestor {
   def processSampleBatch(
       pl72Batch: DataFrame,
       catalog: graft.catalog.Catalog): DataFrame = {
-    // Dedup FIRST, then repartition: dropDuplicates shuffles by its own
-    // keys, so a repartition placed before it is silently undone and one
-    // instrument's creates would fan out across partitions/threads —
-    // breaking the per-instrument mutex the reference holds (ADR-003).
-    // After the instrument repartition, each instrument lives in exactly
-    // one partition (one sequential task), and sortWithinPartitions
-    // fixes a deterministic per-instrument creation order.
+    // After the instrument repartition each instrument lives in exactly
+    // one partition (one sequential task: the per-instrument mutex the
+    // reference holds, ADR-003), and sortWithinPartitions fixes a
+    // deterministic per-instrument creation order. No exchange follows
+    // the repartition in either order of the two calls: on Spark 4.1
+    // hashpartitioning(instrument_name) already satisfies the dedup
+    // aggregate's clustering on (filename, instrument_name). The sample
+    // plan guard in IngestStreamSpec pins this shape.
     val candidates = pl72Batch
       .select(col("job_id"), col("filename"), col("instrument_name"))
       .dropDuplicates("filename", "instrument_name")

@@ -406,11 +406,6 @@ object StreamSources {
       graft.plans.KmvBuffer.estimate(k, minima))
   }
 
-  /** Cross-batch distinct-count sketch per key: the STREAMING twin of
-    * the batch `kmv_sketch` aggregate ([[graft.plans.KmvSketch]]) —
-    * e.g. "distinct users per event type so far" refreshed every
-    * micro-batch in update mode, without keeping the distinct set
-    * itself in the state store. Input: (key, portable-hash) pairs. */
   /** Geometric EWMA weights shared bit-for-bit with the batch twin
     * ([[graft.operators.Relational.eventsEwmaAnomaly]]): α = 1/4 over
     * a 7-entry horizon as the exact integers 3^(j−1)·4^(7−j). */
@@ -564,7 +559,7 @@ object StreamSources {
   }
 
   /** State transition of the STREAMING windowed seasonal-Hampel
-    * monitor (round-9 verdict item #6) — the bounded-state twin of
+    * monitor — the bounded-state twin of
     * [[graft.operators.Relational.eventsHampelWindowed]]. Exact global
     * Hampel medians need unbounded history, so the streamable contract
     * is the WINDOWED one: per event-type key the state is the current
@@ -579,8 +574,8 @@ object StreamSources {
     * `onLateDrop` fires for every contract-violating row (a day whose
     * window already closed): the batch==stream invariant silently
     * diverges if the upstream ordering contract breaks, so violations
-    * must be COUNTABLE — the stream wires a LongAccumulator here
-    * (ADVICE r10: silent drops made contract violations undetectable). */
+    * must be COUNTABLE — the stream wires a LongAccumulator here, so a
+    * contract violation is detectable rather than a silent drop. */
   def hampelUpdate(windowDays: Int,
       onLateDrop: (String, Long) => Unit = (_, _) => ())(key: String,
       rows: Iterator[(String, Long, Long)],
@@ -653,7 +648,7 @@ object StreamSources {
     * join emits exactly those); `acf_milli` is None when den = 0 (a
     * constant prefix), mirroring the batch NULL. Exact-integer
     * throughout: num and den ASSEMBLE in BigInt from the Long
-    * sufficient statistics (r12 advice — Long intermediates like
+    * sufficient statistics (Long intermediates like
     * t·t·p(k−1) overflow at tighter thresholds than the batch path's
     * sum(dev·dev), silently breaking the bit-identity contract on
     * long/high-count series; the state stays 5+3L longs, only the
@@ -664,12 +659,12 @@ object StreamSources {
     * days (day < anchor) count via `onLateDrop`, never silently
     * swallowed ([[hampelUpdate]] discipline). Days further than
     * `maxGapDays` PAST the anchor also route to `onLateDrop` instead
-    * of advancing it (r12 advice): the zero-fill loop is O(gap), so
+    * of advancing it: the zero-fill loop is O(gap), so
     * one corrupt far-future timestamp would otherwise spin millions
     * of pushes AND poison the monitor permanently (every later real
     * day lands behind the bogus anchor) — cap-and-alert, matching the
     * capped-join discipline everywhere else. The FIRST row of a fresh
-    * key is held to the same standard (r13 advice): a day outside
+    * key is held to the same standard: a day outside
     * [0, `epochHorizonDays`] is dropped-and-counted instead of adopted
     * as the anchor, closing the poison path where one corrupt
     * far-future timestamp arriving FIRST misanchors the key forever
@@ -731,7 +726,7 @@ object StreamSources {
       if (anchor == Long.MinValue) {
         // first row for a fresh key: plausibility-gate the candidate
         // anchor too — a corrupt day outside the epoch horizon must
-        // not become the permanent reference point (r13 advice)
+        // not become the permanent reference point
         if (day < 0L || day > epochHorizonDays) onLateDrop(et, day)
         else { anchor = day; pending = n }
       }
@@ -777,175 +772,6 @@ object StreamSources {
         OutputMode.Append, GroupStateTimeout.NoTimeout)(
         acfUpdate(maxLag, (_, _) => late.add(1L), maxGapDays,
           epochHorizonDays))
-  }
-
-  /** Side-store contract bounding [[trendingUpdate]]'s per-item state
-    * (r11 verdict #5): `save` receives a dormant item's all-time total
-    * as it leaves streaming state; `load` must return the latest saved
-    * total when the item reappears (None for never-seen items). The
-    * implementation must be Serializable (it ships inside the state
-    * function's closure) and, on a real cluster, must be an EXTERNAL
-    * shared store (KV / lakehouse table keyed by (type, item)) — a
-    * per-executor map would lose totals across partition reassignment.
-    * Local-mode specs use a driver-side map. */
-  trait TrendingStore extends Serializable {
-    def save(eventType: String, item: Long, total: Long): Unit
-    def load(eventType: String, item: Long): Option[Long]
-  }
-
-  /** State transition of the STREAMING decayed-trending monitor — the
-    * live twin of [[graft.operators.Relational.eventsTrendingDecay]]
-    * (the last monitor-family member without one, round-10 verdict
-    * item #6). Key = event_type (top-K ranking needs all of a type's
-    * items together — the same per-type shape as any ranked monitor;
-    * sharding would go by (type, item-salt) with a downstream top-K
-    * merge). Input = the closed (event_type, item, day, n) daily
-    * census.
-    *
-    * The integer half-life weight `1e6 >> ((anchor−day) DIV hl)`
-    * RE-ANCHORS as days advance, and a shifted SUM cannot be rescaled
-    * exactly (n·(w>>1) ≠ (n·w)>>1 for odd w, and a non-multiple-of-7
-    * anchor move shifts different days by different amounts), so the
-    * exact bounded state is the per-(item, day) count inside the decay
-    * HORIZON: the weight is exactly 0 once (anchor−day) DIV hl ≥ 20
-    * (1e6 < 2^20), so days older than 20·hl are dropped — zero
-    * approximation, ≤ 20·hl (day, n) pairs per live item, plus one
-    * all-time total per item (`n_events` in the batch output counts
-    * ALL days). State layout:
-    * [anchor, (item, total, m, (day, n)×m)×items].
-    *
-    * Emission contract (the [[hampelUpdate]] window-close shape): when
-    * a day LATER than the current anchor arrives, the top-K table AS OF
-    * the old anchor is final — emit it, advance the anchor, prune the
-    * horizon. Each emitted (anchor) block equals the batch query over
-    * the prefix day ≤ anchor bit-for-bit (spec-pinned across
-    * micro-batch boundaries). Late days (day < anchor) are counted via
-    * `onLateDrop`, never silently swallowed.
-    *
-    * STATE BOUND (r11 verdict #5): without `store`, DORMANT items —
-    * all in-horizon days expired — keep their all-time total in state
-    * forever, because the batch output's `n_events` counts all days;
-    * state then grows with distinct (type, item). Passing a
-    * [[TrendingStore]] bounds it: on each anchor advance, items left
-    * with zero in-horizon days are EVICTED to the store
-    * (`save(type, item, total)`) and REHYDRATED from it on
-    * reappearance (`load` seeds the total before the new day's count),
-    * so state holds only LIVE items — ≤ (3 + 2·20·hl) longs each —
-    * and the emitted rows stay bit-identical to batch whenever each
-    * type keeps ≥ topK live items (a dormant item's score is exactly 0,
-    * so it can only enter the batch top-K when fewer than topK live
-    * items exist — the spec pins eviction + rehydration == batch). In
-    * production the store is an external KV/lakehouse table keyed by
-    * (type, item); here a driver-side map suffices for local mode. */
-  def trendingUpdate(halfLifeDays: Int = 7, topK: Int = 10,
-      onLateDrop: (String, Long) => Unit = (_, _) => (),
-      store: Option[TrendingStore] = None)(key: String,
-      rows: Iterator[(String, Long, Long, Long)],
-      state: GroupState[Array[Long]])
-      : Iterator[(String, Long, Long, Long, Long, Long)] = {
-    val horizon = 20L * halfLifeDays
-    var anchor = Long.MinValue
-    // item -> (all-time total, day -> n inside horizon); insertion
-    // order is irrelevant — emission sorts, state encoding is stable
-    val items = scala.collection.mutable.LinkedHashMap
-      .empty[Long, (Long, scala.collection.mutable.TreeMap[Long, Long])]
-    state.getOption.foreach { a =>
-      anchor = a(0)
-      var i = 1
-      while (i < a.length) {
-        val m = a(i + 2).toInt
-        val days = scala.collection.mutable.TreeMap.empty[Long, Long]
-        var j = 0
-        while (j < m) { days(a(i + 3 + 2 * j)) = a(i + 4 + 2 * j); j += 1 }
-        items(a(i)) = (a(i + 1), days)
-        i += 3 + 2 * m
-      }
-    }
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Long, Long, Long, Long, Long)]
-    def emitTopK(a: Long): Unit = {
-      val ranked = items.toSeq.map { case (item, (total, days)) =>
-        // every retained day has (a−d) DIV hl < 20 by the horizon
-        // prune, so the shift is a true decay (no 64-bit wrap)
-        val score = days.iterator
-          .map { case (d, n) => n * (1000000L >> ((a - d) / halfLifeDays).toInt) }
-          .sum
-        (item, score, total)
-      }.sortBy { case (item, score, _) => (-score, item) }.take(topK)
-      ranked.zipWithIndex.foreach { case ((item, score, total), i) =>
-        out += ((key, a, (i + 1).toLong, item, score, total))
-      }
-    }
-    rows.toSeq.sortBy(r => (r._3, r._2)).foreach { case (et, item, day, n) =>
-      if (anchor == Long.MinValue) anchor = day
-      if (day < anchor) onLateDrop(et, day)
-      else {
-        if (day > anchor) {
-          emitTopK(anchor)
-          anchor = day
-          items.foreachEntry { case (_, (_, days)) =>
-            days.filterInPlace((d, _) => anchor - d < horizon)
-          }
-          // bounded-state mode: dormant items (zero in-horizon days)
-          // leave state for the store; their all-time total comes back
-          // via rehydration if the item ever reappears
-          store.foreach { s =>
-            val dormant = items.collect {
-              case (it, (tot, ds)) if ds.isEmpty => (it, tot)
-            }.toSeq
-            dormant.foreach { case (it, tot) =>
-              s.save(key, it, tot); items.remove(it)
-            }
-          }
-        }
-        val (total, days) = items.get(item) match {
-          case Some(v) => v
-          case None =>
-            // first sight this horizon: seed the all-time total from
-            // the store (0 for a genuinely new item)
-            (store.fold(0L)(_.load(key, item).getOrElse(0L)),
-              scala.collection.mutable.TreeMap.empty[Long, Long])
-        }
-        days(day) = days.getOrElse(day, 0L) + n
-        items(item) = (total + n, days)
-      }
-    }
-    state.update(Array(anchor) ++ items.toArray.flatMap {
-      case (item, (total, days)) =>
-        Array(item, total, days.size.toLong) ++
-          days.toArray.flatMap(p => Array(p._1, p._2))
-    })
-    out.iterator
-  }
-
-  /** The streaming decayed-trending top-K feed over the closed
-    * (event_type, item, day, n) daily census: bounded state
-    * (per item one all-time total + ≤ 20·halfLife in-horizon day
-    * counts), append mode — emits a type's final top-K table as its
-    * anchor day closes, bit-identical to the batch monitor over the
-    * same prefix. Ordering-contract violations count into the
-    * `trending_late_dropped` accumulator (the [[hampelMonitorStream]]
-    * discipline). Pass a [[TrendingStore]] to evict dormant items and
-    * cap state at the live-item census (see [[trendingUpdate]]'s
-    * state-bound contract); the default keeps them, matching the batch
-    * output on types with fewer than topK live items too. */
-  def trendingTopkStream(daily: Dataset[(String, Long, Long, Long)],
-      halfLifeDays: Int = 7, topK: Int = 10,
-      store: Option[TrendingStore] = None)
-      : Dataset[(String, Long, Long, Long, Long, Long)] = {
-    implicit val stateEnc: org.apache.spark.sql.Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    implicit val outEnc: org.apache.spark.sql.Encoder[
-        (String, Long, Long, Long, Long, Long)] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[
-        (String, Long, Long, Long, Long, Long)]()
-    val late = daily.sparkSession.sparkContext
-      .longAccumulator("trending_late_dropped")
-    daily.groupByKey(_._1)(org.apache.spark.sql.Encoders.STRING)
-      .flatMapGroupsWithState[Array[Long],
-        (String, Long, Long, Long, Long, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        trendingUpdate(halfLifeDays, topK, (_, _) => late.add(1L), store))
   }
 
   /** State transition of the STREAMING transition-bigram feed — the
@@ -1122,6 +948,11 @@ object StreamSources {
         OutputMode.Append, GroupStateTimeout.NoTimeout)(funnelUpdate(windowUs))
   }
 
+  /** Cross-batch distinct-count sketch per key: the STREAMING twin of
+    * the batch `kmv_sketch` aggregate ([[graft.plans.KmvSketch]]) —
+    * e.g. "distinct users per event type so far" refreshed every
+    * micro-batch in update mode, without keeping the distinct set
+    * itself in the state store. Input: (key, portable-hash) pairs. */
   def streamingKmv(keyed: Dataset[(String, Long)], k: Int = 64): Dataset[(String, Int, Long, Double)] = {
     implicit val stateEnc: org.apache.spark.sql.Encoder[Array[Long]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()

@@ -496,7 +496,7 @@ object StressHarness {
       samples = log.map(e => (e.name, e.proposal)).toSet,
       batchesSecondRun = batchesSecondRun,
       // ADR-003 mutex analogue: within a batch, ONE worker thread per
-      // instrument (dedup-then-repartition keeps an instrument in
+      // instrument (the instrument repartition keeps an instrument in
       // exactly one partition = one sequential task)
       perInstrumentSingleThreaded =
         perBatchByInstrument.forall(_.map(_.thread).distinct.size == 1),

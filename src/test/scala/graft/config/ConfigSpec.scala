@@ -82,6 +82,11 @@ class ConfigSpec extends AnyFunSuite {
       IngestorConfig.load("ingestion:\n  file_handling:\n    data_file_open_max_tries: [3]\n")
     }
     assert(e.getMessage.contains("ingestion.file_handling.data_file_open_max_tries"))
+    // a key with no config field keeps its type check
+    val noField = intercept[ConfigError] {
+      IngestorConfig.load("scicat:\n  stream: maybe\n")
+    }
+    assert(noField.getMessage.contains("scicat.stream"))
     intercept[ConfigError] {
       IngestorConfig.load("dataset:\n  allow_dataset_pid: \"maybe\"\n")
     }

@@ -593,37 +593,6 @@ class StreamSubstrateSpec extends AnyFunSuite {
     assert(rows.count(_._2 == 500L) == 1)
   }
 
-  test("streaming trending-decay end-to-end: top-K emits as each anchor closes") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(String, Long, Long, Long)]
-    val q = StreamSources.trendingTopkStream(input.toDS(), halfLifeDays = 7, topK = 2)
-      .toDF("event_type", "anchor_day", "rank", "item", "score_micro", "n_events")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("trending_out").start()
-    // day 0: items 1 (n=5) and 2 (n=3) — nothing emits while day 0 is open
-    input.addData(("a", 1L, 0L, 5L), ("a", 2L, 0L, 3L))
-    q.processAllAvailable()
-    assert(spark.sql("select * from trending_out").count() == 0,
-      "an open anchor must not emit")
-    // day 8 closes day 0 → top-2 as of day 0: item1 5e6, item2 3e6
-    input.addData(("a", 2L, 8L, 10L))
-    q.processAllAvailable()
-    val d0 = spark.sql("select * from trending_out").collect()
-      .map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
-      .sortBy(_._2)
-    assert(d0.toSeq == Seq((0L, 1L, 1L, 5000000L, 5L), (0L, 2L, 2L, 3000000L, 3L)))
-    // day 9 closes day 8: age(day0)=8 → one half-life → weight 500000;
-    // item2 = 10*1e6 + 3*500000 = 11.5e6 overtakes item1 = 5*500000
-    input.addData(("a", 1L, 9L, 1L))
-    q.processAllAvailable()
-    val d8 = spark.sql("select * from trending_out").collect()
-      .map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
-      .filter(_._1 == 8L).sortBy(_._2)
-    q.stop()
-    assert(d8.toSeq == Seq((8L, 1L, 2L, 11500000L, 13L), (8L, 2L, 1L, 2500000L, 5L)),
-      s"re-anchored weights must decay the stale item: ${d8.toSeq}")
-  }
-
   test("streaming gap monitor: emitted holes recompose the batch gap census") {
     import org.apache.spark.sql.streaming.TestGroupState
     val sfDir = graft.TestSpark.sfDir
@@ -836,197 +805,6 @@ class StreamSubstrateSpec extends AnyFunSuite {
     }
     assert(emitted.toSet == expected,
       "closed streaming windows must reproduce the batch windowed Hampel rows exactly")
-  }
-
-  test("streaming trending-decay: every closed anchor equals the batch monitor on its prefix") {
-    import org.apache.spark.sql.streaming.TestGroupState
-    val dayExpr = expr("unix_micros(ts) DIV 86400000000")
-    val census = graft.Tables.events(spark, graft.TestSpark.sfDir)
-      .select(col("event_type"),
-        get_json_object(col("props"), "$.k").cast("long").as("item"),
-        dayExpr.as("day"))
-      .groupBy(col("event_type"), col("item"), col("day"))
-      .agg(count(lit(1)).as("n"))
-      .as[(String, Long, Long, Long)].collect().toSeq
-    val types = census.map(_._1).distinct.sorted
-    assert(types.nonEmpty)
-    val emitted = scala.collection.mutable.Map
-      .empty[(String, Long), Seq[(String, Long, Long, Long, Long, Long)]]
-    types.foreach { et =>
-      val rows = census.filter(_._1 == et).sortBy(r => (r._3, r._2))
-      val maxDay = rows.map(_._3).max
-      val nItems = rows.map(_._2).distinct.size
-      // n=0 sentinel one day past the end closes the final anchor
-      val withFlush = rows :+ ((et, -1L, maxDay + 1L, 0L))
-      var stateValue: Option[Array[Long]] = None
-      val got = scala.collection.mutable.ArrayBuffer
-        .empty[(String, Long, Long, Long, Long, Long)]
-      // replay in 4 chunks: micro-batch boundaries land mid-anchor
-      withFlush.grouped(math.max(1, withFlush.length / 4 + 1)).foreach { chunk =>
-        val st = TestGroupState.create[Array[Long]](
-          optionalState = stateValue.map(org.apache.spark.api.java.Optional.of[Array[Long]])
-            .getOrElse(org.apache.spark.api.java.Optional.empty[Array[Long]]()),
-          timeoutConf = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout,
-          batchProcessingTimeMs = 1000L,
-          eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](),
-          hasTimedOut = false)
-        got ++= StreamSources.trendingUpdate()(et, chunk.iterator, st)
-        stateValue = Some(st.get)
-        assert(st.get.length <= 1 + (nItems + 1) * (3 + 2 * 140),
-          "state must stay bounded: per item one total + in-horizon day counts")
-      }
-      got.groupBy(r => (r._1, r._2)).foreach { case (k, v) => emitted(k) = v.toSeq }
-    }
-    types.foreach { et =>
-      val anchors = emitted.keys.collect { case (t, a) if t == et => a }.toSeq.sorted
-      assert(anchors.nonEmpty, s"type $et must close at least one anchor")
-      Seq(anchors.head, anchors(anchors.size / 2), anchors.last).distinct.foreach { a =>
-        val batch = graft.operators.Relational.trendingDecayOf(
-            graft.Tables.events(spark, graft.TestSpark.sfDir)
-              .filter(col("event_type") === et && dayExpr <= a))
-          .collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-            r.getLong(3), r.getLong(4))).toSet
-        val stream = emitted((et, a))
-          .map(t => (t._1, t._3, t._4, t._5, t._6)).toSet
-        assert(stream == batch,
-          s"closed anchor must equal the batch prefix: type=$et anchor=$a")
-      }
-    }
-  }
-
-  test("trending store: eviction + rehydration keeps state at the live census and reproduces batch rows") {
-    import org.apache.spark.sql.streaming.TestGroupState
-    val et = "evict_t"
-    // (type, item, day, n): item 3 is the dormancy probe — a 100-event
-    // burst at day 0, silence past the 140-day horizon, reappearance at
-    // day 300. Items 1 and 2 keep >= topK live items at every anchor,
-    // so the batch top-K never reaches a dormant (score-0) row and the
-    // bounded-state stream must match it bit-for-bit.
-    val census: Seq[(String, Long, Long, Long)] = Seq(
-      (et, 1L, 0L, 5L), (et, 2L, 0L, 3L), (et, 3L, 0L, 100L),
-      (et, 2L, 10L, 3L),
-      (et, 1L, 150L, 5L), (et, 2L, 150L, 3L),
-      (et, 2L, 160L, 3L),
-      (et, 1L, 300L, 5L), (et, 2L, 300L, 3L), (et, 3L, 300L, 50L))
-    val backing = scala.collection.mutable.Map.empty[(String, Long), Long]
-    val store = new StreamSources.TrendingStore {
-      def save(t: String, item: Long, total: Long): Unit = backing((t, item)) = total
-      def load(t: String, item: Long): Option[Long] = backing.get((t, item))
-    }
-    // state layout decoder: [anchor, (item, total, m, (day, n) x m) x items]
-    def stateItems(a: Array[Long]): Set[Long] = {
-      var i = 1
-      val s = scala.collection.mutable.Set.empty[Long]
-      while (i < a.length) { s += a(i); i += 3 + 2 * a(i + 2).toInt }
-      s.toSet
-    }
-    val withFlush = census :+ ((et, -1L, 301L, 0L)) // sentinel closes anchor 300
-    var stateValue: Option[Array[Long]] = None
-    var lastItems: Set[Long] = Set.empty
-    val got = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Long, Long, Long, Long, Long)]
-    withFlush.grouped(3).foreach { chunk =>
-      val st = TestGroupState.create[Array[Long]](
-        optionalState = stateValue.map(org.apache.spark.api.java.Optional.of[Array[Long]])
-          .getOrElse(org.apache.spark.api.java.Optional.empty[Array[Long]]()),
-        timeoutConf = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout,
-        batchProcessingTimeMs = 1000L,
-        eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](),
-        hasTimedOut = false)
-      got ++= StreamSources.trendingUpdate(halfLifeDays = 7, topK = 2,
-        store = Some(store))(et, chunk.iterator, st)
-      stateValue = Some(st.get)
-      lastItems = stateItems(st.get)
-      // bounded-state contract: only LIVE items (>= 1 in-horizon day)
-      // ever sit in state, each <= 3 + 2*20*7 longs
-      assert(lastItems.size <= 4, s"state must hold only live items: $lastItems")
-    }
-    // the dormancy probe was evicted with its pre-silence total intact...
-    assert(backing((et, 3L)) == 100L,
-      "eviction must hand the store the item's all-time total")
-    // ...and after reappearing its state total is the rehydrated sum
-    assert(lastItems.contains(3L), "reappeared item must be live again")
-    // every closed anchor equals the batch monitor over the same prefix
-    // (the un-evicted twin's invariant, now under eviction+rehydration)
-    val evRows = census.flatMap { case (t, item, day, n) =>
-      Seq.fill(n.toInt)((t, s"""{"k":$item}""", day)) }
-    val events = evRows.toDF("event_type", "props", "day")
-      .withColumn("ts", expr("timestamp_micros(day * 86400000000)"))
-    val anchors = got.map(_._2).distinct.sorted
-    assert(anchors == Seq(0L, 10L, 150L, 160L, 300L))
-    anchors.foreach { a =>
-      val batch = graft.operators.Relational.trendingDecayOf(
-          events.filter(col("day") <= a), halfLifeDays = 7, topK = 2)
-        .collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getLong(4))).toSet
-      val stream = got.filter(_._2 == a)
-        .map(t => (t._1, t._3, t._4, t._5, t._6)).toSet
-      assert(stream == batch,
-        s"closed anchor must equal the batch prefix under eviction: anchor=$a")
-    }
-    // the money row: the reappeared item ranks first at anchor 300 with
-    // n_events = 150 — the rehydrated 100 plus the new 50
-    assert(got.exists(r => r._2 == 300L && r._3 == 1L && r._4 == 3L && r._6 == 150L),
-      s"rehydrated total must reach the emitted row: ${got.filter(_._2 == 300L)}")
-  }
-
-  test("trending store: below topK live items the stream omits the dormant zero-score rows batch includes") {
-    import org.apache.spark.sql.streaming.TestGroupState
-    // The scaladoc'd >= topK precondition from the OTHER side (r12
-    // advice): when a type drops BELOW topK live items, the batch
-    // monitor back-fills its top-K with dormant score-0 rows while the
-    // bounded-state stream has evicted them — this pins that intended
-    // divergence shape so a refactor can't change it unnoticed.
-    val et = "below_k"
-    // item 2 goes dormant past the 140-day horizon and never returns,
-    // so at anchor 150 only item 1 is live — below topK = 2
-    val census: Seq[(String, Long, Long, Long)] = Seq(
-      (et, 1L, 0L, 5L), (et, 2L, 0L, 3L),
-      (et, 1L, 150L, 5L))
-    val backing = scala.collection.mutable.Map.empty[(String, Long), Long]
-    val store = new StreamSources.TrendingStore {
-      def save(t: String, item: Long, total: Long): Unit = backing((t, item)) = total
-      def load(t: String, item: Long): Option[Long] = backing.get((t, item))
-    }
-    val withFlush = census :+ ((et, -1L, 151L, 0L)) // sentinel closes anchor 150
-    var stateValue: Option[Array[Long]] = None
-    val got = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Long, Long, Long, Long, Long)]
-    withFlush.grouped(2).foreach { chunk =>
-      val st = TestGroupState.create[Array[Long]](
-        optionalState = stateValue.map(org.apache.spark.api.java.Optional.of[Array[Long]])
-          .getOrElse(org.apache.spark.api.java.Optional.empty[Array[Long]]()),
-        timeoutConf = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout,
-        batchProcessingTimeMs = 1000L,
-        eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](),
-        hasTimedOut = false)
-      got ++= StreamSources.trendingUpdate(halfLifeDays = 7, topK = 2,
-        store = Some(store))(et, chunk.iterator, st)
-      stateValue = Some(st.get)
-    }
-    assert(backing((et, 2L)) == 3L, "the dormant item must be evicted to the store")
-    val evRows = census.flatMap { case (t, item, day, n) =>
-      Seq.fill(n.toInt)((t, s"""{"k":$item}""", day)) }
-    val events = evRows.toDF("event_type", "props", "day")
-      .withColumn("ts", expr("timestamp_micros(day * 86400000000)"))
-    def batchAt(a: Long) = graft.operators.Relational.trendingDecayOf(
-        events.filter(col("day") <= a), halfLifeDays = 7, topK = 2)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-    // anchor 0: both items live (>= topK) — stream == batch, the precondition side
-    assert(got.filter(_._2 == 0L).map(t => (t._1, t._3, t._4, t._5, t._6)).toSet
-      == batchAt(0L).toSet, "at >= topK live items the stream matches batch")
-    // anchor 150: batch back-fills rank 2 with the dormant score-0 item;
-    // the stream emits ONLY the live item's row — and that row still
-    // matches the batch rank-1 row bit-for-bit
-    val batch150 = batchAt(150L)
-    assert(batch150.exists(r => r._3 == 2L && r._4 == 0L),
-      s"batch must include the dormant zero-score row: ${batch150.toSeq}")
-    val stream150 = got.filter(_._2 == 150L).map(t => (t._1, t._3, t._4, t._5, t._6))
-    assert(stream150.toSet == batch150.filter(_._4 > 0L).toSet,
-      s"stream must emit exactly the live rows: stream=${stream150.toSeq} batch=${batch150.toSeq}")
   }
 
   test("streaming ACF end-to-end: the lag table emits as each anchor closes") {

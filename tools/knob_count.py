@@ -13,12 +13,15 @@
     `graft.<pkg>...` name whose first segment is a source package or file
     (`graft.streaming.OnlineIngestor`) is code, not a key;
   - test_only: sorted `Object.member` names of the member-level
-    `def`/`val`/`class`/`object` definitions in src/main objects that no
-    code under src/main mentions outside the definition's own body, but
-    code under src/test does: a capability only specs reach. Names are
-    matched as words with comments stripped, and a use in another file
-    counts only if that file also names the object (a qualified call or
-    an import);
+    `def`/`val`/`class`/`object` definitions in src/main objects that
+    only specs reach: code under src/test uses the member, or a
+    test-only member does, and every use under src/main outside the
+    definition's own body sits inside members that are themselves
+    test-only (the rule applied until nothing changes). A use under
+    perfbench/src is a caller like any src/main use outside a member.
+    Names are matched as words with comments stripped, and a use in
+    another file counts only if that file also names the object (a
+    qualified call or an import);
 plus the three counts. Only call sites count: a key named in a comment or a
 logger name is not a knob.
 
@@ -105,10 +108,10 @@ def member_defs(lines):
         yield obj, m.group(1), i, j
 
 
-def code_files(side):
-    """path → comment-stripped lines of every source file under src/<side>."""
+def code_files(*parts):
+    """path → comment-stripped lines of every source file under repo/parts."""
     files = {}
-    for d, _, names in os.walk(os.path.join(repo, "src", side)):
+    for d, _, names in os.walk(os.path.join(repo, *parts)):
         for f in names:
             if f.endswith((".scala", ".java")):
                 with open(os.path.join(d, f), encoding="utf-8") as fh:
@@ -117,28 +120,49 @@ def code_files(side):
 
 
 def test_only():
-    """Members of src/main objects that only src/test code uses."""
-    main, test = code_files("main"), code_files("test")
-    texts = {p: "\n".join(ls) for p, ls in list(main.items()) + list(test.items())}
-    naming = {}  # object → (main files, test files) that name it
-    found = set()
-    for path, lines in main.items():
-        text = texts[path]
-        starts = list(itertools.accumulate((len(l) + 1 for l in lines), initial=0))
-        for obj, name, lo, hi in member_defs(lines):
+    """Members of src/main objects that only src/test code reaches."""
+    main, test = code_files("src", "main"), code_files("src", "test")
+    bench = code_files("perfbench", "src")
+    texts = {p: "\n".join(ls) for p, ls in itertools.chain(
+        main.items(), test.items(), bench.items())}
+    defs = {p: list(member_defs(ls)) for p, ls in main.items()}
+    starts = {p: list(itertools.accumulate((len(l) + 1 for l in ls), initial=0))
+              for p, ls in main.items()}
+
+    def enclosing(path, line):
+        """The member whose span holds `line`, or None outside any."""
+        return next((f"{o}.{n}" for o, n, lo, hi in defs[path] if lo <= line < hi), None)
+
+    naming = {}  # object → (main, test, perfbench files) that name it
+    callers, in_test = {}, set()  # member → enclosing members of its src/main uses
+    for path, members in defs.items():
+        for obj, name, lo, hi in members:
             if obj not in naming:
                 owner = re.compile(r'\b%s\b' % obj)
                 naming[obj] = tuple([p for p in side if owner.search(texts[p])]
-                                    for side in (main, test))
-            in_main, in_test = naming[obj]
+                                    for side in (main, test, bench))
+            in_main, tests, benches = naming[obj]
             word = re.compile(r'\b%s\b' % name)
-            # in the defining file, a use inside the member's own body does not count
-            own = any(not lo <= bisect.bisect_right(starts, m.start()) - 1 < hi
-                      for m in word.finditer(text))
-            if not own and not any(word.search(texts[p]) for p in in_main if p != path) and \
-                    any(word.search(texts[p]) for p in in_test):
-                found.add(f"{obj}.{name}")
-    return sorted(found)
+            key = f"{obj}.{name}"
+            uses = set()
+            for p in set(in_main) | {path}:
+                for m in word.finditer(texts[p]):
+                    line = bisect.bisect_right(starts[p], m.start()) - 1
+                    # a use inside the member's own body does not count
+                    if not (p == path and lo <= line < hi):
+                        uses.add(enclosing(p, line))
+            if any(word.search(texts[p]) for p in benches):
+                uses.add(None)
+            callers[key] = uses
+            if any(word.search(texts[p]) for p in tests):
+                in_test.add(key)
+    found = set()
+    while True:
+        more = {k for k, uses in callers.items() if k not in found and
+                None not in uses and uses <= found and (k in in_test or uses)}
+        if not more:
+            return sorted(found)
+        found |= more
 
 
 def is_code_path(name):
