@@ -205,4 +205,50 @@ class ImscCompilerSpec extends AnyFunSuite {
     val row = compiled(df).collect()(0)
     assert(vu(row, "proposal_title") == (("Test Proposal", "")))
   }
+
+  test("NXS extraction: every value_type keeps its typed value") {
+    val tree =
+      """{"entry": {
+        |  "count": {"__value": [42]},
+        |  "positions": {"__value": [1.5, 2.0, -3.25], "__attrs": {"units": "mm"}},
+        |  "start_epoch": {"__value": [1700000000.5]},
+        |  "start_iso": {"__value": ["2024-03-01T12:30:00Z"]},
+        |  "params": {"__value": ["{'inner': {'a': 1, 'b': 'x'}, 'f': 1.5, 'n': None}"]},
+        |  "tags": {"__value": ["[1, [2, 'two \"2\"', 'é\b'], 'three']"]},
+        |  "contact": {"__value": ["pi@example.org"]},
+        |  "home": {"__value": ["https://example.org/run"]},
+        |  "nothing": {"__value": [null]},
+        |  "bad_temp": {"__value": ["nan"], "__attrs": {"units": "K"}}
+        |}}""".stripMargin
+    val vars = Seq(
+      "count" -> "integer", "positions" -> "float[]", "start_epoch" -> "date",
+      "start_iso" -> "date", "params" -> "dict", "tags" -> "list",
+      "contact" -> "email", "home" -> "link", "nothing" -> "none",
+      "bad_temp" -> "float")
+    val typed = ImscSchema.fromYamlOrJson(
+      """order: 1
+        |id: typed
+        |name: Typed
+        |instrument: graft-test
+        |selector: '*'
+        |variables:
+        |""".stripMargin + vars.map { case (n, t) =>
+        s"  $n:\n    source: NXS\n    path: /entry/$n\n    value_type: $t\n"
+      }.mkString + "schema: {}\n")
+    val row = run(tree, typed)
+    def seq(name: String) = vu(row, name)._1.asInstanceOf[scala.collection.Seq[Any]].toSeq
+    assert(vu(row, "count") == ((42L, "")))
+    assert(seq("positions") == Seq(1.5, 2.0, -3.25) && vu(row, "positions")._2 == "mm")
+    assert(vu(row, "start_epoch") == (("2023-11-14T22:13:20.500000+00:00", "")))
+    assert(vu(row, "start_iso") == (("2024-03-01T12:30:00+00:00", "")))
+    // a dict/list element that is not a string keeps its compact JSON text
+    assert(vu(row, "params")._1.asInstanceOf[scala.collection.Map[String, String]].toMap ==
+      Map("inner" -> """{"a":1,"b":"x"}""", "f" -> "1.5", "n" -> null))
+    assert(seq("tags") == Seq("1", """[2,"two \"2\"","é\b"]""", "three"))
+    assert(vu(row, "contact") == (("pi@example.org", "")))
+    assert(vu(row, "home") == (("https://example.org/run", "")))
+    assert(vu(row, "nothing") == ((null, "")))
+    // NaN is no JSON number: the value nulls out, the unit stays
+    assert(vu(row, "bad_temp") == ((null, "K")))
+  }
 }
