@@ -32,15 +32,16 @@ object SampleIngestor {
     // After the instrument repartition each instrument lives in exactly
     // one partition (one sequential task: the per-instrument mutex the
     // reference holds, ADR-003), and sortWithinPartitions fixes a
-    // deterministic per-instrument creation order. No exchange follows
-    // the repartition in either order of the two calls: on Spark 4.1
-    // hashpartitioning(instrument_name) already satisfies the dedup
-    // aggregate's clustering on (filename, instrument_name). The sample
-    // plan guard in IngestStreamSpec pins this shape.
+    // deterministic per-instrument creation order. One exchange is
+    // enough: equal (filename, instrument_name) keys share an instrument,
+    // so hashpartitioning(instrument_name) already clusters them for the
+    // dedup above it, which then runs partition-locally. Deduplicating
+    // first would shuffle on (filename, instrument_name) as well. The
+    // sample plan guard in IngestStreamSpec pins the single exchange.
     val candidates = pl72Batch
       .select(col("job_id"), col("filename"), col("instrument_name"))
-      .dropDuplicates("filename", "instrument_name")
       .repartition(col("instrument_name"))
+      .dropDuplicates("filename", "instrument_name")
       .sortWithinPartitions(col("instrument_name"), col("filename"))
     // the probe does I/O, so it is non-deterministic: Catalyst then does
     // not push its filter below the dedup, and each distinct candidate

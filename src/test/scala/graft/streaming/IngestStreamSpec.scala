@@ -211,6 +211,10 @@ class IngestStreamSpec extends AnyFunSuite {
       assert(lines.take(outermost).exists(l =>
         l.contains("Sort [instrument_name") && l.contains("filename")),
         s"the per-instrument sort must sit above the repartition:\n$plan")
+      // the dedup reuses the instrument clustering: one shuffle in the
+      // plan that ran (an adaptive plan also prints its initial plan)
+      val ran = lines.takeWhile(!_.contains("== Initial Plan =="))
+      assert(ran.count(_.contains("Exchange")) == 1, s"one exchange expected:\n$plan")
     } finally created.unpersist()
   }
 
