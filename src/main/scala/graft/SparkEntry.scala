@@ -590,10 +590,6 @@ object SparkEntry {
 
   // --- generated DuckDB replicas of the portable-hash queries ----------
 
-  /** Arithmetic replica of the REAL decoded aHash (the PNGs are the
-    * deterministic gradient `(doc_id+x+y)%256`, failed-decode docs
-    * excluded) — shared by `mm_image_ahash` and `dedup_image_hamming`.
-    * Ends defining `ah(doc_id, ahash_hi, ahash_lo)`. */
   /** Gradient-pixel 8×8 block sums — the shared prefix of the aHash
     * and DCT-pHash replicas (ends defining `b(doc_id, w, h, br, bc,
     * bsum, bn)`). */
@@ -610,6 +606,10 @@ object SparkEntry {
       |    CAST(sum(g) AS BIGINT) AS bsum, count(*) AS bn
       |  FROM px GROUP BY 1, 2, 3, 4, 5)""".stripMargin
 
+  /** Arithmetic replica of the REAL decoded aHash (the PNGs are the
+    * deterministic gradient `(doc_id+x+y)%256`, failed-decode docs
+    * excluded) — shared by `mm_image_ahash` and `dedup_image_hamming`.
+    * Ends defining `ah(doc_id, ahash_hi, ahash_lo)`. */
   private def imageAHashCte: String =
     s"""$imageBlocksCte,
       |t AS (SELECT doc_id, CAST(w AS BIGINT) * h AS n_px,
@@ -668,9 +668,9 @@ object SparkEntry {
 
   /** Winnowing CTE prefix shared by the fingerprint query and the
     * shared-pair join: positional 3-grams, packed (hash, pos) keys,
-    * w=4 window minima over full windows. */
-  /** `where` restricts the corpus (e.g. the calibration slice of the
-    * sliced recall eval); empty = full corpus. */
+    * w=4 window minima over full windows. `where` restricts the corpus
+    * (e.g. the calibration slice of the sliced recall eval); empty =
+    * full corpus. */
   private def winnowCte(where: String = ""): String =
     s"""WITH ws AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents$where),
        |g AS (SELECT doc_id, unnest(generate_series(1, len(w) - 2)) AS i, w FROM ws),
@@ -933,11 +933,6 @@ object SparkEntry {
        |FROM r$iters LEFT JOIN dg ON r$iters.doc_id = dg.src""".stripMargin
   }
 
-  /** Label-propagation replica: the same winnow-pair edge list as
-    * [[pagerankOracle]], then [[graft.operators.GraphOps.labelPropagation]]'s
-    * synchronous lowest-label-wins rounds unrolled as materialized
-    * CTEs (each round: vote count → per-node max → min-label pick →
-    * left-join carry for isolated docs). */
   /** Shared CTE block: winnow edges `p`/`e` + `rounds` LPA label
     * rounds ending at `l$rounds` (used by the LPA and modularity
     * replicas). */
@@ -964,6 +959,11 @@ object SparkEntry {
        |$iterCtes""".stripMargin
   }
 
+  /** Label-propagation replica: the same winnow-pair edge list as
+    * [[pagerankOracle]], then [[graft.operators.GraphOps.labelPropagation]]'s
+    * synchronous lowest-label-wins rounds unrolled as materialized
+    * CTEs (each round: vote count → per-node max → min-label pick →
+    * left-join carry for isolated docs). */
   private def labelPropOracle(rounds: Int = 4): String =
     s"""${lpaCtes(rounds)},
        |sz AS (SELECT lbl, count(*) AS comm_size FROM l$rounds GROUP BY 1)
@@ -999,10 +999,6 @@ object SparkEntry {
        |FROM degc LEFT JOIN ein ON degc.community = ein.community
        |CROSS JOIN mm""".stripMargin
 
-  /** K-core replica: the same winnow-pair edge list, then
-    * [[graft.operators.GraphOps.kcoreMembership]]'s fixed-count peel
-    * rounds unrolled as materialized CTEs (peeling is idempotent at
-    * the fixed point, so both engines land on the same core). */
   /** Shared CTE block: winnow shingles → near-dup edge list `e0` →
     * `rounds` k-core peel rounds ending at `e$rounds` (used by both
     * the k-core and the BFS-depth replicas). */
@@ -1025,6 +1021,10 @@ object SparkEntry {
        |$iterCtes""".stripMargin
   }
 
+  /** K-core replica: the same winnow-pair edge list, then
+    * [[graft.operators.GraphOps.kcoreMembership]]'s fixed-count peel
+    * rounds unrolled as materialized CTEs (peeling is idempotent at
+    * the fixed point, so both engines land on the same core). */
   private def kcoreOracle(k: Int = 3, rounds: Int = 6): String = {
     s"""${kcorePeelCtes(k, rounds)},
        |degf AS (SELECT doc_id, count(*) AS deg_full FROM (
@@ -1119,8 +1119,6 @@ object SparkEntry {
        |FROM nodes n LEFT JOIN d$bfsRounds f ON n.doc_id = f.doc_id""".stripMargin
   }
 
-  /** Stationary-flow replica: the transition-matrix CTEs, then
-    * `rounds` unrolled π·P steps with the identical per-term floor. */
   /** Shared CTE block: transition census `m` + π₀ + `rounds` unrolled
     * π·P steps ending at `p$rounds` (used by the stationary and
     * entropy-rate replicas). */
@@ -1148,6 +1146,8 @@ object SparkEntry {
        |$iter""".stripMargin
   }
 
+  /** Stationary-flow replica: the transition-matrix CTEs, then
+    * `rounds` unrolled π·P steps with the identical per-term floor. */
   private def markovStationaryOracle(rounds: Int = 8): String = {
     s"""${markovCtes(rounds)}
        |SELECT p0.event_type, p0.pi AS pi0_micro,
@@ -1384,8 +1384,6 @@ object SparkEntry {
        |  ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id < y.doc_id""".stripMargin
   }
 
-  /** Shared WITH-prefix for the hyperplane-LSH replicas: same
-    * integer-mix plane components, same sign-bit bucket. */
   /** The p-plane signature SUM expression over a column `emb` — shared
     * by the fixed-width CTE, the scale-aware CTE, and the cell-refresh
     * admission replica. */
@@ -1395,6 +1393,8 @@ object SparkEntry {
       s"CASE WHEN list_dot_product(emb, list_transform(range(0, len(emb)), i -> $comp)) >= 0 THEN ${1L << p} ELSE 0 END"
     }.mkString(" + ")
 
+  /** Shared WITH-prefix for the hyperplane-LSH replicas: same
+    * integer-mix plane components, same sign-bit bucket. */
   private def lshSigCtes: String =
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
        |sig AS (SELECT vec_id, emb, ${lshSigBitsSql(graft.operators.Similarity.Planes)} AS lsh_bucket FROM e)""".stripMargin
@@ -1820,8 +1820,6 @@ object SparkEntry {
        |FROM b""".stripMargin
   }
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
   /** ANN replicas shared verbatim by the recall-evaluation oracle. */
   private def annBruteOracle: String =
     """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
@@ -1848,6 +1846,8 @@ object SparkEntry {
       java.nio.file.Paths.get(sys.props.getOrElse("user.dir", "."),
         "fixtures", "blake2b_expected.csv").toString)
 
+  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
+    * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = Map(
     "dedup_minhash_buckets" -> minhashOracle,
     "dedup_minhash_est_err" -> minhashEstErrOracle,

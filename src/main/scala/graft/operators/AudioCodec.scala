@@ -111,10 +111,6 @@ object AudioCodec {
       }(enc)
   }
 
-  /** Decoded audio statistics through the REAL codec — all exact
-    * integers (`sum_abs`, `sum_sq`, peak), so the arithmetic oracle
-    * hash-matches bit-for-bit; truncated payloads surface as
-    * `ok=false` + nulls. */
   /** 64-bit ENERGY-ENVELOPE fingerprint of decoded PCM — the audio
     * twin of [[ImageCodec.ahashOf]], completing census-style near-dup
     * across all three modalities: window `i` covers samples with
@@ -224,6 +220,10 @@ object AudioCodec {
     }(enc)
   }
 
+  /** Decoded audio statistics through the REAL codec — all exact
+    * integers (`sum_abs`, `sum_sq`, peak), so the arithmetic oracle
+    * hash-matches bit-for-bit; truncated payloads surface as
+    * `ok=false` + nulls. */
   def decodeAudioStats(spark: SparkSession, sfDir: String): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("doc_id", LongType),

@@ -427,6 +427,17 @@ object Corpus {
       .groupBy(col("pair")).agg(sum(col("freq")).as("n"))
   }
 
+  /** Learned-rule memo: a compiled tokenizer is CONFIGURATION — real
+    * release pipelines train once per (corpus, k) and ship the rule
+    * table to every consumer, so the three tokenizer queries (merges /
+    * encode / vocab / fertility) sharing one JVM must not re-run the k
+    * learning rounds each. The learner is fully deterministic (argmax
+    * with total-order tie-break over exact integer counts), so caching
+    * cannot change any result — and the DuckDB oracle re-derives the
+    * rules from scratch every time, which keeps the memo honest. */
+  private val bpeRulesMemo =
+    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int), Seq[(String, Long)]]()
+
   /** TRUE sequential BPE learning (Sennrich et al. 2016, reference:
     * the tokenizer-training half of a corpus release): `k` merge
     * rounds over the distinct-word table, each round re-counting
@@ -454,17 +465,6 @@ object Corpus {
     * treatment (same as PageRank's per-pass checkpoint). Returns
     * (pair, n) in learned rank order; stops early iff the vocabulary
     * is fully merged. */
-  /** Learned-rule memo: a compiled tokenizer is CONFIGURATION — real
-    * release pipelines train once per (corpus, k) and ship the rule
-    * table to every consumer, so the three tokenizer queries (merges /
-    * encode / vocab / fertility) sharing one JVM must not re-run the k
-    * learning rounds each. The learner is fully deterministic (argmax
-    * with total-order tie-break over exact integer counts), so caching
-    * cannot change any result — and the DuckDB oracle re-derives the
-    * rules from scratch every time, which keeps the memo honest. */
-  private val bpeRulesMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int), Seq[(String, Long)]]()
-
   def learnBpeRules(spark: SparkSession, sfDir: String, k: Int,
       checkpointEvery: Int = 8): Seq[(String, Long)] = {
     val key = (new java.io.File(sfDir).getAbsolutePath, k, checkpointEvery)
@@ -1026,18 +1026,6 @@ object Corpus {
       .orderBy(col("pmi_score").desc, col("w1"), col("w2")).limit(k)
   }
 
-  /** Context-window chunking: split each document's token stream into
-    * overlapping windows of `window` tokens advancing by `stride`
-    * (stride < window ⇒ the standard pretraining overlap so no span is
-    * seen only at a window edge). Emits the window MANIFEST
-    * (doc, window_id, start, length) rather than materialized token
-    * slices — the downstream reader slices lazily, so the 100 TB text
-    * is never duplicated ~1.33× through a shuffle. All integer
-    * arithmetic; the ceil-division is spelled `(x + stride − 1) ∕
-    * stride` on exact small integers in both engines.
-    *
-    * Scale: one narrow scan + a bounded explode (≤ n/stride rows per
-    * doc), zero shuffle. */
   /** T5-style SPAN-CORRUPTION manifest: deterministic non-overlapping
     * mask spans per document (~15% noise density, span length 2-4 ≈
     * mean 3), emitted as (doc, span, start, len, sentinel) rows — the
@@ -1067,6 +1055,18 @@ object Corpus {
         concat(lit("<extra_id_"), col("span_id").cast("string"), lit(">")).as("sentinel"))
   }
 
+  /** Context-window chunking: split each document's token stream into
+    * overlapping windows of `window` tokens advancing by `stride`
+    * (stride < window ⇒ the standard pretraining overlap so no span is
+    * seen only at a window edge). Emits the window MANIFEST
+    * (doc, window_id, start, length) rather than materialized token
+    * slices — the downstream reader slices lazily, so the 100 TB text
+    * is never duplicated ~1.33× through a shuffle. All integer
+    * arithmetic; the ceil-division is spelled `(x + stride − 1) ∕
+    * stride` on exact small integers in both engines.
+    *
+    * Scale: one narrow scan + a bounded explode (≤ n/stride rows per
+    * doc), zero shuffle. */
   def contextWindows(spark: SparkSession, sfDir: String, window: Int = 64,
       stride: Int = 48): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
@@ -1181,20 +1181,6 @@ object Corpus {
         PortableRound.pround(col("q"), 4).as("quality"))
   }
 
-  /** Domain-mixing EPOCH MANIFEST: scarce languages repeat across
-    * training epochs instead of being discarded or materialized —
-    * `epochs_l` = smallest e in [1, cap] with `e · n_l >= n_max`,
-    * i.e. `min(cap, ceil(n_max / n_l))` in exact integer arithmetic
-    * (the static-weights analogue of DoReMi-style mixture tuning; the
-    * downsampling twins are [[langBalance]]/[[temperatureSample]]).
-    * Emits one (doc, epoch) row plus a portable order hash the reader
-    * sorts on — the 100 TB corpus is never physically duplicated, the
-    * manifest is the repetition (same design as the context-window
-    * manifest).
-    *
-    * Scale shape: tiny per-lang count agg broadcast back, then a
-    * narrow bounded explode (≤ cap rows per doc); zero corpus shuffle.
-    */
   /** DSIR-style importance weights (arXiv:2302.03169 shape): score each
     * document by how much its hashed-bigram profile looks like a TARGET
     * domain (here: the `en` slice) relative to the raw corpus — the
@@ -1235,6 +1221,20 @@ object Corpus {
           .as("avg_weight"))
   }
 
+  /** Domain-mixing EPOCH MANIFEST: scarce languages repeat across
+    * training epochs instead of being discarded or materialized —
+    * `epochs_l` = smallest e in [1, cap] with `e · n_l >= n_max`,
+    * i.e. `min(cap, ceil(n_max / n_l))` in exact integer arithmetic
+    * (the static-weights analogue of DoReMi-style mixture tuning; the
+    * downsampling twins are [[langBalance]]/[[temperatureSample]]).
+    * Emits one (doc, epoch) row plus a portable order hash the reader
+    * sorts on — the 100 TB corpus is never physically duplicated, the
+    * manifest is the repetition (same design as the context-window
+    * manifest).
+    *
+    * Scale shape: tiny per-lang count agg broadcast back, then a
+    * narrow bounded explode (≤ cap rows per doc); zero corpus shuffle.
+    */
   def mixEpochs(spark: SparkSession, sfDir: String, cap: Int = 4): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
     val counts = docs.groupBy(col("lang")).agg(count(lit(1)).as("n_lang"))

@@ -537,26 +537,6 @@ object GraphOps {
     e
   }
 
-  /** LABEL-PROPAGATION COMMUNITIES (Raghavan et al. 2007) over the
-    * winnow near-dup graph — the mesoscale view between
-    * [[connectedComponentsStar]]'s components (too coarse: one bridge
-    * edge merges two template families) and [[triangleCounts]]'s
-    * local census (too fine): each node adopts the MOST COMMON label
-    * among its neighbors, so sparse bridges lose the vote that a
-    * connected-components union would honor. Kept fully deterministic
-    * — the classic LPA's random tie-break and random update order are
-    * replaced by (a) lowest-label-wins ties and (b) SYNCHRONOUS
-    * rounds with a FIXED count, so the result is a pure function of
-    * the edge set and both engines replay it bit-for-bit (the oracle
-    * unrolls the same rounds as materialized CTEs).
-    *
-    * Scale: per round one (src)-keyed join edges⋈labels, one
-    * map-side-combined (dst, lbl) vote count, one (dst)-keyed max +
-    * min — all equi-keyed on node ids, state bounded by edges (the
-    * vote table is ≤ |E| rows). Isolated docs never enter the join
-    * and keep their own id as label via the final left join —
-    * edge-side cost scales with EDGES, not corpus size. Lineage
-    * truncated per round ([[Dedup]] loop discipline). */
   /** MODULARITY AUDIT (Newman & Girvan 2004) of the LPA partition —
     * the score that closes the community loop: [[labelPropagation]]
     * PRODUCES a partition, modularity says whether it is BETTER THAN
@@ -602,6 +582,26 @@ object GraphOps {
       .drop("m")
   }
 
+  /** LABEL-PROPAGATION COMMUNITIES (Raghavan et al. 2007) over the
+    * winnow near-dup graph — the mesoscale view between
+    * [[connectedComponentsStar]]'s components (too coarse: one bridge
+    * edge merges two template families) and [[triangleCounts]]'s
+    * local census (too fine): each node adopts the MOST COMMON label
+    * among its neighbors, so sparse bridges lose the vote that a
+    * connected-components union would honor. Kept fully deterministic
+    * — the classic LPA's random tie-break and random update order are
+    * replaced by (a) lowest-label-wins ties and (b) SYNCHRONOUS
+    * rounds with a FIXED count, so the result is a pure function of
+    * the edge set and both engines replay it bit-for-bit (the oracle
+    * unrolls the same rounds as materialized CTEs).
+    *
+    * Scale: per round one (src)-keyed join edges⋈labels, one
+    * map-side-combined (dst, lbl) vote count, one (dst)-keyed max +
+    * min — all equi-keyed on node ids, state bounded by edges (the
+    * vote table is ≤ |E| rows). Isolated docs never enter the join
+    * and keep their own id as label via the final left join —
+    * edge-side cost scales with EDGES, not corpus size. Lineage
+    * truncated per round ([[Dedup]] loop discipline). */
   def labelPropagation(spark: SparkSession, sfDir: String,
       rounds: Int = 4): DataFrame =
     labelPropagationFrom(spark, sfDir,

@@ -164,14 +164,6 @@ object ImageCodec {
     }(enc)
   }
 
-  /** Real perceptual average-hash over DECODED pixels: block (r,c) of
-    * the 8×8 grid covers pixels with `x·8 div w = c`, `y·8 div h = r`;
-    * its bit is set when the block's mean exceeds the global mean —
-    * tested as the exact integer cross-multiplication
-    * `block_sum · n_px > total_sum · block_n`. The 64 bits ship as two
-    * 32-bit halves (`ahash_hi`, `ahash_lo`) so neither side needs a
-    * signed 2⁶³ wrap the oracle can't express. Failed decodes are
-    * dropped (they have no pixels to hash). */
   /** HISTOGRAM ENTROPY of the decoded image (the classic flat-image /
     * synthetic-screenshot detector a multimodal curation pipeline
     * gates on: near-zero entropy = blank or banded, high = textured):
@@ -402,6 +394,14 @@ object ImageCodec {
     }(enc)
   }
 
+  /** Real perceptual average-hash over DECODED pixels: block (r,c) of
+    * the 8×8 grid covers pixels with `x·8 div w = c`, `y·8 div h = r`;
+    * its bit is set when the block's mean exceeds the global mean —
+    * tested as the exact integer cross-multiplication
+    * `block_sum · n_px > total_sum · block_n`. The 64 bits ship as two
+    * 32-bit halves (`ahash_hi`, `ahash_lo`) so neither side needs a
+    * signed 2⁶³ wrap the oracle can't express. Failed decodes are
+    * dropped (they have no pixels to hash). */
   def imageAHash(spark: SparkSession, sfDir: String): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("doc_id", LongType),

@@ -1328,6 +1328,22 @@ object Relational {
       .drop("island")
   }
 
+  /** The simulated snapshot pair shared by [[snapshotDiff]] and
+    * [[incrementalAgg]]: version A lags ingest (keys ≡0 mod 93
+    * absent); version B has purged keys ≡0 mod 97 and repriced keys
+    * ≡0 mod 89 by +5% (integer cents, floor). */
+  private def snapshotVersions(spark: SparkSession, sfDir: String)
+      : (DataFrame, DataFrame) = {
+    val base = Tables.orders(spark, sfDir)
+      .select(col("o_orderkey"), col("o_custkey"),
+        (dec(col("o_totalprice")) * 100).cast("long").as("price_c"))
+    val a = base.filter(col("o_orderkey") % 93 =!= 0)
+    val b = base.filter(col("o_orderkey") % 97 =!= 0)
+      .withColumn("price_c", when(col("o_orderkey") % 89 === 0,
+        expr("price_c * 105 DIV 100")).otherwise(col("price_c")))
+    (a, b)
+  }
+
   /** SNAPSHOT DIFF — the table-versioning primitive (Delta/Iceberg
     * `table_changes`, data-reconciliation audits): two snapshots of the
     * same keyed table compared by primary key + a portable row
@@ -1350,22 +1366,6 @@ object Relational {
     * is churn-sized. The unchanged majority is dropped before any
     * further processing, so downstream stages never see table-sized
     * data. */
-  /** The simulated snapshot pair shared by [[snapshotDiff]] and
-    * [[incrementalAgg]]: version A lags ingest (keys ≡0 mod 93
-    * absent); version B has purged keys ≡0 mod 97 and repriced keys
-    * ≡0 mod 89 by +5% (integer cents, floor). */
-  private def snapshotVersions(spark: SparkSession, sfDir: String)
-      : (DataFrame, DataFrame) = {
-    val base = Tables.orders(spark, sfDir)
-      .select(col("o_orderkey"), col("o_custkey"),
-        (dec(col("o_totalprice")) * 100).cast("long").as("price_c"))
-    val a = base.filter(col("o_orderkey") % 93 =!= 0)
-    val b = base.filter(col("o_orderkey") % 97 =!= 0)
-      .withColumn("price_c", when(col("o_orderkey") % 89 === 0,
-        expr("price_c * 105 DIV 100")).otherwise(col("price_c")))
-    (a, b)
-  }
-
   def snapshotDiff(spark: SparkSession, sfDir: String): DataFrame = {
     val base = Tables.orders(spark, sfDir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),

@@ -383,12 +383,6 @@ object Similarity {
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos_sim"))
   }
 
-  /** Near-dup pair discovery AT SCALE: the two-stage LSH shape —
-    * candidate generation is a (bucket) EQUI self-join, verification is
-    * the exact cosine over candidates only. Replaces the O(n²)
-    * [[cosineThresholdPairs]] cross product: the corpus shuffles once on
-    * its bucket key and only same-bucket rows ever meet (plan-shape-
-    * tested: no nested-loop join anywhere in this query). */
   /** BUILD-ONCE verified LSH pair list — the embedding-side twin of
     * [[graft.operators.Dedup.winnowEdgesMaterialized]] (round-10
     * extension of the same architecture): the default-threshold
@@ -511,6 +505,12 @@ object Similarity {
       assign(e.filter(isNew).join(admitted, Seq("vec_id"), "left_semi")))
   }
 
+  /** Near-dup pair discovery AT SCALE: the two-stage LSH shape —
+    * candidate generation is a (bucket) EQUI self-join, verification is
+    * the exact cosine over candidates only. Replaces the O(n²)
+    * [[cosineThresholdPairs]] cross product: the corpus shuffles once on
+    * its bucket key and only same-bucket rows ever meet (plan-shape-
+    * tested: no nested-loop join anywhere in this query). */
   def lshVerifiedPairs(spark: SparkSession, sfDir: String, threshold: Double = 0.4): DataFrame = {
     graft.plans.CosineSimilarity.register(spark)
     // SCALE-AWARE width (r14 verdict #1): planes from the corpus count

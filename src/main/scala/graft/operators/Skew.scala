@@ -87,24 +87,6 @@ object Skew {
       .agg(interp("50").as("p50_exact"), interp("95").as("p95_exact"))
   }
 
-  /** Bounded-state approximate aggregates, ORACLE-CHECKABLE: the
-    * portable KMV distinct-count estimate (the same bit-replicable
-    * sketch proven in sketch_kmv_distinct — md5-48 hash space, k=64
-    * minima, (k−1)·2^48/h_k estimator) plus an exact discrete median
-    * twin. Spark's own `approx_count_distinct`/`percentile_approx`
-    * (HLL / quantile-digest) have engine-specific estimates no other
-    * engine can replay; the KMV estimate is a pure function of the
-    * k-th smallest portable hash, so the ESTIMATE itself goes through
-    * the DuckDB gate.
-    *
-    * The median twin is the count-histogram order statistic: collapse
-    * to (flag, price) counts first (map-side combined; the histogram
-    * is value-cardinality-sized, ≪ rows), then a cumulative-sum window
-    * over the per-flag histogram picks the value whose cumulative
-    * count spans ceil(n/2) — contrast with [[percentiles]], whose
-    * row-level window sorts the full table per flag and is the
-    * interpolating variant. No arithmetic touches the returned price,
-    * so the double is bit-exact across engines. */
   /** SKEW ADVISOR — the measurement half of the salting pattern
     * ([[saltedAgg]]/[[saltedJoin]] are the treatment): census the key
     * histogram of a planned shuffle key, flag keys whose row count
@@ -133,6 +115,24 @@ object Skew {
         (col("n_rows") > targetRows).as("is_hot"))
   }
 
+  /** Bounded-state approximate aggregates, ORACLE-CHECKABLE: the
+    * portable KMV distinct-count estimate (the same bit-replicable
+    * sketch proven in sketch_kmv_distinct — md5-48 hash space, k=64
+    * minima, (k−1)·2^48/h_k estimator) plus an exact discrete median
+    * twin. Spark's own `approx_count_distinct`/`percentile_approx`
+    * (HLL / quantile-digest) have engine-specific estimates no other
+    * engine can replay; the KMV estimate is a pure function of the
+    * k-th smallest portable hash, so the ESTIMATE itself goes through
+    * the DuckDB gate.
+    *
+    * The median twin is the count-histogram order statistic: collapse
+    * to (flag, price) counts first (map-side combined; the histogram
+    * is value-cardinality-sized, ≪ rows), then a cumulative-sum window
+    * over the per-flag histogram picks the value whose cumulative
+    * count spans ceil(n/2) — contrast with [[percentiles]], whose
+    * row-level window sorts the full table per flag and is the
+    * interpolating variant. No arithmetic touches the returned price,
+    * so the double is bit-exact across engines. */
   def approxAggs(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     graft.plans.BoundedAggregates.register(spark)

@@ -203,20 +203,6 @@ object Substrate {
         date_format(col("l_shipdate"), "yyyy-MM-dd").as("l_shipdate"),
         col("l_returnflag"))
 
-  /** Column profiler — the ANALYZE-TABLE statistics sweep every engine
-    * ships (per-column row/null/distinct counts + min/max): ONE pass
-    * over lineitem, unpivoted to a row per column. NDV is the portable
-    * KMV sketch estimate ([[graft.plans.BoundedAggregates.KmvSketch]],
-    * deterministic and bit-replicable in the DuckDB oracle — the
-    * `sketch_kmv_distinct` row proves the estimator): exact below k=64
-    * distinct hashes, (k−1)·2⁴⁸/kth-min above. This is the right
-    * ANALYZE default — exact multi-column NDV planned as an Expand ×
-    * (columns+1), 8× the row traffic of the insight (VERDICT r6 #2);
-    * the sketch keeps O(k) state per column in the SAME single scan.
-    * The exact variant survives as [[profileColumnsExact]].
-    *
-    * Scale: one scan, map-side partial aggregation, 7×64 longs of
-    * sketch state per partition — constant in rows. */
   /** BLOOM-FILTER SIZING ADVISOR — the tuning-curve companion to
     * [[graft.plans.BloomFns]] and the runtime-filter family: for each
     * join-key column, its KMV NDV estimate (the same O(64)-state
@@ -259,6 +245,20 @@ object Substrate {
         expr("(ndv_est * 9585060 + 999999) DIV 1000000"))
   }
 
+  /** Column profiler — the ANALYZE-TABLE statistics sweep every engine
+    * ships (per-column row/null/distinct counts + min/max): ONE pass
+    * over lineitem, unpivoted to a row per column. NDV is the portable
+    * KMV sketch estimate ([[graft.plans.BoundedAggregates.KmvSketch]],
+    * deterministic and bit-replicable in the DuckDB oracle — the
+    * `sketch_kmv_distinct` row proves the estimator): exact below k=64
+    * distinct hashes, (k−1)·2⁴⁸/kth-min above. This is the right
+    * ANALYZE default — exact multi-column NDV planned as an Expand ×
+    * (columns+1), 8× the row traffic of the insight (VERDICT r6 #2);
+    * the sketch keeps O(k) state per column in the SAME single scan.
+    * The exact variant survives as [[profileColumnsExact]].
+    *
+    * Scale: one scan, map-side partial aggregation, 7×64 longs of
+    * sketch state per partition — constant in rows. */
   def profileColumns(spark: SparkSession, sfDir: String): DataFrame = {
     graft.plans.BoundedAggregates.register(spark)
     val k = Sketches.KmvK
@@ -334,23 +334,6 @@ object Substrate {
         col("ndv"), col("min_v"), col("max_v"))
   }
 
-  /** Z-ORDER data layout — the multi-dimensional clustering pass a
-    * 100 TB table needs when queries filter on TWO keys (Delta/Iceberg
-    * OPTIMIZE ZORDER BY): rows order by the bit-interleaved
-    * (l_partkey, l_suppkey) Morton value and pack into fixed-size
-    * blocks ("files"), whose per-block min/max ZONE MAPS are what a
-    * scan prunes with. The report compares, for one rectangle
-    * predicate, how many blocks a z-ordered layout touches vs the
-    * natural (orderkey-ordered) layout — the number that justifies the
-    * layout job. Everything is exact integer bit arithmetic.
-    *
-    * Scale: a layout job IS a global range-partitioned sort — and the
-    * global position that assigns block ids is computed the DISTRIBUTED
-    * way (range-repartition → per-partition rank → broadcast of the
-    * P-row partition-offset table), never a single-partition window.
-    * The zone-map census is one map-side collapsed aggregate per
-    * layout; the report touches only the per-block min/max table,
-    * never the data again. */
   /** 16-bit × 16-bit Morton interleave as a codegen'd integer
     * expression: bit i of each key lands at positions 2i / 2i+1 — the
     * z-order curve value [[zorderLayout]] sorts by, public so the
@@ -361,17 +344,6 @@ object Substrate {
         (shiftright(y, i).bitwiseAND(1L) * (1L << (2 * i + 1)))
     }.reduce(_ + _)
 
-  /** HILBERT curve index (xy2d, order 16) as a codegen'd integer
-    * expression — the clustering curve that beats Z-order on rectangle
-    * predicates because consecutive curve positions are always
-    * grid-adjacent (no Z-shaped jumps across the key domain), which is
-    * why modern lakehouse clustering uses it. Unrolled 16 rounds of
-    * the classic bit-interleave-with-rotation: per round, quadrant
-    * digit `(3·rx) xor ry` scales by s², then the (x, y) frame
-    * reflects/swaps. The full-width complement `(2¹⁶−1)−x` is used for
-    * the reflection — subsequent rounds only read bits below s, where
-    * it agrees with the in-quadrant complement, and the SAME unrolled
-    * form replays in DuckDB so the oracle is bit-identical. */
   /** Production path: the native [[graft.plans.HilbertIndex]]
     * expression — one codegen'd call per row instead of the 16-round
     * projection chain below (measured ~5× on the layout family at
@@ -386,7 +358,19 @@ object Substrate {
       call_function("hilbert16", xc.cast("long"), yc.cast("long")))
   }
 
-  /** NOT a single Column on purpose: each round reads the previous
+  /** HILBERT curve index (xy2d, order 16) as a codegen'd integer
+    * expression — the clustering curve that beats Z-order on rectangle
+    * predicates because consecutive curve positions are always
+    * grid-adjacent (no Z-shaped jumps across the key domain), which is
+    * why modern lakehouse clustering uses it. Unrolled 16 rounds of
+    * the classic bit-interleave-with-rotation: per round, quadrant
+    * digit `(3·rx) xor ry` scales by s², then the (x, y) frame
+    * reflects/swaps. The full-width complement `(2¹⁶−1)−x` is used for
+    * the reflection — subsequent rounds only read bits below s, where
+    * it agrees with the in-quadrant complement, and the SAME unrolled
+    * form replays in DuckDB so the oracle is bit-identical.
+    *
+    * NOT a single Column on purpose: each round reads the previous
     * round's (x, y) several times, so one nested expression would grow
     * 4^order nodes (observed: OOM in Column normalization at order
     * 16). Per-round NAMED projections keep every Project small, and
@@ -458,6 +442,23 @@ object Substrate {
         col("l_partkey"), col("l_suppkey"))
       .withColumn("zval", morton(col("l_partkey"), col("l_suppkey")))
 
+  /** Z-ORDER data layout — the multi-dimensional clustering pass a
+    * 100 TB table needs when queries filter on TWO keys (Delta/Iceberg
+    * OPTIMIZE ZORDER BY): rows order by the bit-interleaved
+    * (l_partkey, l_suppkey) Morton value and pack into fixed-size
+    * blocks ("files"), whose per-block min/max ZONE MAPS are what a
+    * scan prunes with. The report compares, for one rectangle
+    * predicate, how many blocks a z-ordered layout touches vs the
+    * natural (orderkey-ordered) layout — the number that justifies the
+    * layout job. Everything is exact integer bit arithmetic.
+    *
+    * Scale: a layout job IS a global range-partitioned sort — and the
+    * global position that assigns block ids is computed the DISTRIBUTED
+    * way (range-repartition → per-partition rank → broadcast of the
+    * P-row partition-offset table), never a single-partition window.
+    * The zone-map census is one map-side collapsed aggregate per
+    * layout; the report touches only the per-block min/max table,
+    * never the data again. */
   def zorderLayout(spark: SparkSession, sfDir: String,
       blockRows: Int = 4096): DataFrame = {
     val keys = layoutKeys(spark, sfDir)

@@ -9,6 +9,25 @@ import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Dist
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 
+/** Match direction of the as-of join (pandas `merge_asof` vocabulary):
+  * `Backward` = latest right at-or-before, `Forward` = earliest right
+  * at-or-after, `Nearest` = whichever of the two is closer (ties go
+  * backward). `Forward`/`Nearest` and any tolerance need a numerically
+  * differenceable ts type (long/int/timestamp/date). */
+sealed trait AsofDirection
+object AsofDirection {
+  case object Backward extends AsofDirection
+  case object Forward extends AsofDirection
+  case object Nearest extends AsofDirection
+  def parse(s: String): AsofDirection = s.toLowerCase match {
+    case "backward" => Backward
+    case "forward" => Forward
+    case "nearest" => Nearest
+    case other => throw new IllegalArgumentException(
+      s"asof direction must be backward|forward|nearest, got $other")
+  }
+}
+
 /** AS-OF join as a FIRST-CLASS operator — the full custom-operator
   * ladder (SURVEY §4.3/§2.8 rung (c)): a resolved logical node
   * ([[AsofJoinPlan]]), a planner strategy ([[AsofJoinStrategy]],
@@ -40,25 +59,6 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   * side is already bucketed/sorted by (keys, ts) — the layout the
   * window form can never exploit across the union.
   */
-/** Match direction of the as-of join (pandas `merge_asof` vocabulary):
-  * `Backward` = latest right at-or-before, `Forward` = earliest right
-  * at-or-after, `Nearest` = whichever of the two is closer (ties go
-  * backward). `Forward`/`Nearest` and any tolerance need a numerically
-  * differenceable ts type (long/int/timestamp/date). */
-sealed trait AsofDirection
-object AsofDirection {
-  case object Backward extends AsofDirection
-  case object Forward extends AsofDirection
-  case object Nearest extends AsofDirection
-  def parse(s: String): AsofDirection = s.toLowerCase match {
-    case "backward" => Backward
-    case "forward" => Forward
-    case "nearest" => Nearest
-    case other => throw new IllegalArgumentException(
-      s"asof direction must be backward|forward|nearest, got $other")
-  }
-}
-
 case class AsofJoinPlan(
     left: LogicalPlan, right: LogicalPlan,
     leftKeys: Seq[Attribute], rightKeys: Seq[Attribute],

@@ -22,6 +22,9 @@
     Names are matched as words with comments stripped, and a use in
     another file counts only if that file also names the object (a
     qualified call or an import);
+  - stacked_docs: the number of scaladoc blocks under the source root
+    that end on the line directly above another `/**` block, so they
+    document no definition;
 plus the three counts. Only call sites count: a key named in a comment or a
 logger name is not a knob.
 
@@ -54,13 +57,17 @@ def texts(top, exts):
 
 
 def reads(top):
-    """(graft keys, env vars) read at call sites under `top`, and its lines."""
-    keys, envs, lines = set(), set(), 0
+    """(graft keys, env vars) read at call sites under `top`, its lines,
+    and its stacked scaladoc blocks."""
+    keys, envs, lines, stacked = set(), set(), 0, 0
     for text in texts(top, (".scala", ".java")):
         lines += text.count("\n")
         keys.update(CONF.findall(text))
         envs.update(ENV.findall(text))
-    return keys, envs, lines
+        rows = [r.strip() for r in text.split("\n")]
+        stacked += sum(a.endswith("*/") and b.startswith("/**")
+                       for a, b in zip(rows, rows[1:]))
+    return keys, envs, lines, stacked
 
 
 LITERAL = re.compile(r'"""(?:.|\n)*?"""+|"(?:\\.|[^"\\\n])*"|\'(?:\\.|[^\\\'\n])\'')
@@ -170,10 +177,10 @@ def is_code_path(name):
     return os.path.isdir(seg) or os.path.isfile(seg + ".scala")
 
 
-keys, envs, lines = reads(root)
+keys, envs, lines, stacked = reads(root)
 read_names = set()
 for s in ("main", "test"):
-    k, e, _ = reads(os.path.join(repo, "src", s))
+    k, e, _, _ = reads(os.path.join(repo, "src", s))
     read_names |= k | e
 with open(os.path.join(repo, "README.md"), encoding="utf-8") as fh:
     docs = [fh.read()]
@@ -190,4 +197,5 @@ print(json.dumps({
     "env_vars": sorted(envs), "n_env_vars": len(envs),
     "stale": stale,
     "test_only": only, "n_test_only": len(only),
+    "stacked_docs": stacked,
 }))
