@@ -268,7 +268,8 @@ object DatasetAssembly {
   /** Full pipeline: variable compilation + assembly in ONE plan — the
     * engine's analogue of the offline ingestor's per-file program
     * (ref: scicat_offline_ingestor.py:194-348). Input columns:
-    * `data_file_path`, `nexus_json`, `files` (+ optional `sample_pids`).
+    * `data_file_path`, `nexus_json`, `files`. The J4 merge reads
+    * `sample_pids`, which the compile adds when `ctx.samplePaths` is set.
     */
   def pipeline(
       schema: ImscSchema,

@@ -1,5 +1,7 @@
 package graft.catalog
 
+import scala.util.Try
+
 import graft.schema.ConfigValue
 import graft.schema.ConfigValue._
 
@@ -63,17 +65,21 @@ trait Catalog extends Serializable {
 }
 
 object Catalog {
-  /** Render a parsed [[ConfigValue]] back to JSON text (shared by the
-    * field-projection paths of both catalog implementations). */
-  def renderJson(c: ConfigValue): String = c match {
-    case CStr(s) => graft.sources.NexusExtractor.jsonStr(s)
-    case CLong(v) => v.toString
-    case CDouble(v) => v.toString
-    case CBool(b) => b.toString
-    case CNull => "null"
-    case CSeq(items) => items.map(renderJson).mkString("[", ",", "]")
-    case m: CMap => m.items.map { case (k, v) =>
-      graft.sources.NexusExtractor.jsonStr(k) + ":" + renderJson(v)
-    }.mkString("{", ",", "}")
-  }
+  /** The GET-response projection of every catalog (J1): the document,
+    * or the JSON text of its top-level `field`. None when the document
+    * does not parse or lacks the field: the variable nulls out (F11). */
+  def projectField(doc: String, field: String): Option[String] =
+    if (field == null || field.isEmpty) Some(doc)
+    else Try(ConfigValue.fromJson(doc)).toOption.collect { case m: CMap => m }
+      .flatMap(_.get(field)).map(renderJson)
+
+  /** The sampleIds of an in-memory `samples/<name>/<proposalId>` entry,
+    * a JSON array of strings; a malformed one holds none. */
+  def sampleIds(doc: String): Seq[String] =
+    Try(ConfigValue.fromJson(doc)).toOption.toSeq
+      .flatMap { case CSeq(items) => items.collect { case CStr(s) => s }; case _ => Nil }
+
+  /** Render a parsed [[ConfigValue]] back to JSON text. */
+  def renderJson(c: ConfigValue): String =
+    graft.sources.NexusExtractor.toJson(graft.sources.NexusTree.toPy(c))
 }

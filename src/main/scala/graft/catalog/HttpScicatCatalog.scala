@@ -86,12 +86,7 @@ final case class HttpScicatCatalog(
 
   override def lookupJson(url: String, field: String): Option[String] =
     get(renderUrl(url)) match {
-      case Success((status, body)) if ok(status) =>
-        if (field == null || field.isEmpty) Some(body)
-        else Try(ConfigValue.fromJson(body)).toOption.flatMap {
-          case m: CMap => m.get(field).map(Catalog.renderJson)
-          case _ => None
-        }
+      case Success((status, body)) if ok(status) => Catalog.projectField(body, field)
       case Success((status, _)) =>
         log.warn(s"lookup $url failed with status $status"); None
       case Failure(e) =>

@@ -19,13 +19,7 @@ final case class LocalCatalog(entries: Map[String, String]) extends Catalog {
     * (ref: retrieve_value_from_scicat, scicat_communication.py:14-24).
     * Returns the result as JSON text. */
   def lookupJson(url: String, field: String): Option[String] =
-    entries.get(url).flatMap { doc =>
-      if (field == null || field.isEmpty) Some(doc)
-      else ConfigValue.fromJson(doc) match {
-        case m: CMap => m.get(field).map(Catalog.renderJson)
-        case _ => None
-      }
-    }
+    entries.get(url).flatMap(Catalog.projectField(_, field))
 
   override def datasetExists(pid: String): Boolean = datasetPids.contains(pid)
 
@@ -56,22 +50,15 @@ final case class LocalCatalog(entries: Map[String, String]) extends Catalog {
     * (ref: check_dataset_by_metadata, scicat_communication.py:196-236,
     * Mongo filter {"where": {"scientificMetadata.<key>.value": v}}). */
   def metadataValues(key: String): Set[String] =
-    entries.iterator.collect {
-      case (k, doc) if k.startsWith("datasets/") =>
-        ConfigValue.fromJson(doc) match {
-          case m: CMap => m.get("scientificMetadata") match {
-            case Some(sm: CMap) => sm.get(key) match {
-              case Some(item: CMap) => item.get("value").map {
-                case CStr(s) => s
-                case CLong(v) => v.toString
-                case CDouble(v) => v.toString
-                case other => other.toString
-              }
-              case _ => None
-            }
-            case _ => None
-          }
-          case _ => None
+    entries.iterator.collect { case (k, doc) if k.startsWith("datasets/") =>
+      Some(ConfigValue.fromJson(doc)).collect { case m: CMap => m }
+        .flatMap(_.get("scientificMetadata")).collect { case sm: CMap => sm }
+        .flatMap(_.get(key)).collect { case item: CMap => item }
+        .flatMap(_.get("value")).map {
+          case CStr(s) => s
+          case CLong(v) => v.toString
+          case CDouble(v) => v.toString
+          case other => other.toString
         }
     }.flatten.toSet
 
@@ -79,12 +66,7 @@ final case class LocalCatalog(entries: Map[String, String]) extends Catalog {
     * (ref: query_sample, scicat_communication.py:134-158). Entries keyed
     * `samples/<name>/<proposalId>` hold a JSON array of sampleIds. */
   def querySamples(name: String, proposalId: String): Seq[String] =
-    entries.get(s"samples/$name/$proposalId").toSeq.flatMap { doc =>
-      ConfigValue.fromJson(doc) match {
-        case CSeq(items) => items.collect { case CStr(s) => s }
-        case _ => Seq.empty
-      }
-    }
+    entries.get(s"samples/$name/$proposalId").toSeq.flatMap(Catalog.sampleIds)
 }
 
 object LocalCatalog {

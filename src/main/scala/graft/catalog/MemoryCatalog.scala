@@ -24,22 +24,10 @@ final class MemoryCatalog private (val id: Long) extends Catalog {
   private def store = MemoryCatalog.stores.get(id)
 
   def lookupJson(url: String, field: String): Option[String] =
-    Option(store.docs.get(url)).flatMap { doc =>
-      if (field == null || field.isEmpty) Some(doc)
-      else graft.schema.ConfigValue.fromJson(doc) match {
-        case m: graft.schema.ConfigValue.CMap => m.get(field).map(Catalog.renderJson)
-        case _ => None
-      }
-    }
+    Option(store.docs.get(url)).flatMap(Catalog.projectField(_, field))
 
   def querySamples(name: String, proposalId: String): Seq[String] =
-    Option(store.docs.get(s"samples/$name/$proposalId")).toSeq.flatMap { doc =>
-      graft.schema.ConfigValue.fromJson(doc) match {
-        case graft.schema.ConfigValue.CSeq(items) =>
-          items.collect { case graft.schema.ConfigValue.CStr(s) => s }
-        case _ => Seq.empty
-      }
-    }
+    Option(store.docs.get(s"samples/$name/$proposalId")).toSeq.flatMap(Catalog.sampleIds)
 
   override def datasetExists(pid: String): Boolean = store.pids.containsKey(pid)
 

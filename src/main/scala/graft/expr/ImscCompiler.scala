@@ -1,6 +1,9 @@
 package graft.expr
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.util.Try
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -8,7 +11,7 @@ import graft.catalog.LocalCatalog
 import graft.functions.DslCasts._
 import graft.schema.ImscSchema
 import graft.schema.ImscSchema._
-import graft.sources.NexusExtractor
+import graft.sources.{NexusExtractor, NexusTree}
 import TemplateCompiler.Registry
 import ValueOperators.OpSpec
 
@@ -23,9 +26,11 @@ import ValueOperators.OpSpec
   * Output: the same rows plus one `struct(value, unit)` column per
   * variable. Variables compile IN DEFINITION ORDER so later templates
   * reference earlier columns (topological evaluation — the reference's
-  * ordered dict). All NXS variables come from one extraction per row
-  * into the hidden `__nxs` column. Its UDF is non-deterministic, so
-  * Catalyst never inlines the extraction into the projections or the
+  * ordered dict). All NXS variables, and with sample attachment on the
+  * P19 sample name and proposal id, come from one parse of each row's
+  * tree into the hidden `__nxs` struct, each value already of its
+  * variable's [[CastCompiler.sparkType]]. Its UDF is non-deterministic,
+  * so Catalyst never inlines the extraction into the projections or the
   * pushed-down filters that read `__nxs` fields.
   *
   * Per-variable failures (bad path, unresolved template, cast error)
@@ -34,10 +39,13 @@ import ValueOperators.OpSpec
   */
 object ImscCompiler {
 
+  /** `samplePaths`: with sample attachment on, the NeXus paths of the
+    * sample name and proposal id (P19) whose J2 query fills `sample_pids`. */
   final case class Context(
       catalog: graft.catalog.Catalog = LocalCatalog.empty,
       ingestorFilesDirectory: String = "",
-      runIdColumn: Option[Column] = None)
+      runIdColumn: Option[Column] = None,
+      samplePaths: Option[(String, String)] = None)
 
   final case class Compiled(
       registry: Registry,
@@ -61,27 +69,43 @@ object ImscCompiler {
     val errors = Vector.newBuilder[(String, String)]
     val hidden = Vector.newBuilder[(String, Column)]
 
-    // --- NXS variables: one extraction UDF for the whole schema --------
-    val nxsVars = schema.variables.collect { case (n, v: NxsVar) => (n, v) }
-    if (nxsVars.nonEmpty) {
-      val fields = nxsVars.map { case (n, v) =>
-        StructField(n, StructType(Seq(
-          StructField("value", CastCompiler.sparkType(v.valueType)),
-          StructField("unit", StringType))))
+    // --- NXS variables and the P19 sample fields: one extraction -------
+    // `__nxs.vars` holds one `(value, unit)` struct per NXS variable and
+    // `__nxs.sample` the sample name and proposal id (null with sample
+    // attachment off), all read from one parse of the file's tree.
+    val nxsVars = schema.variables.collect { case (n, v: NxsVar) =>
+      (n, v, CastCompiler.sparkType(v.valueType)) }
+    val paths = ctx.samplePaths
+    if (nxsVars.nonEmpty || paths.nonEmpty) {
+      val nxsType = new StructType()
+        .add("vars", StructType(nxsVars.map { case (n, _, t) =>
+          StructField(n, new StructType().add("value", t).add("unit", StringType)) }))
+        .add("sample", new StructType().add("name", StringType).add("proposal", StringType))
+      val extract: UDF1[String, Row] = { nexusJson =>
+        val root = Option(nexusJson).flatMap(j => Try(NexusTree.fromJson(j)).toOption)
+        def read(path: String) = root.flatMap(NexusTree.readString(_, path)).orNull
+        Row(Row.fromSeq(nxsVars.map { case (_, v, t) =>
+            root.flatMap(NexusExtractor.extract(v, t, _)).orNull }),
+          paths.map { case (name, proposal) => Row(read(name), read(proposal)) }.orNull)
       }
-      val nxsType = StructType(fields)
-      val extractUdf = udf((nexusJson: String) =>
-        if (nexusJson == null) "{}" else NexusExtractor.extractAllJson(nxsVars, nexusJson))
-        .asNondeterministic()
-      hidden += ("__nxs" -> from_json(extractUdf(col("nexus_json")), nxsType))
+      hidden += ("__nxs" -> udf(extract, nxsType).asNondeterministic()(col("nexus_json")))
+    }
+    // J2: the catalog's sample query on the extracted pair
+    paths.foreach { _ =>
+      val catalog = ctx.catalog
+      val query = udf((name: String, proposal: String) =>
+        if (name == null || proposal == null) Seq.empty[String]
+        else catalog.querySamples(name, proposal)).asNondeterministic()
+      hidden += ("sample_pids" -> query(col("__nxs.sample.name"), col("__nxs.sample.proposal")))
     }
 
     // --- sequential variable compilation (definition order) ------------
     for ((name, spec) <- schema.variables) spec match {
       case v: NxsVar =>
+        val extracted = col("__nxs").getField("vars").getField(name)
         reg = reg + (name -> VarCol(
-          col(s"__nxs.$name.value"),
-          coalesce(col(s"__nxs.$name.unit"), lit("")),
+          extracted.getField("value"),
+          coalesce(extracted.getField("unit"), lit("")),
           Some(v.valueType)))
 
       case v: ScVar =>

@@ -1,5 +1,10 @@
 package graft.sources
 
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types._
+
 import graft.functions.DslCasts
 import graft.functions.DslCasts._
 import graft.functions.PyLiteral._
@@ -50,23 +55,27 @@ object NexusExtractor {
     }
   }
 
-  /** Retrieve + convert-to-type for every NXS variable of a schema,
-    * rendered as one JSON object `{name: {"value": ..., "unit": ...}}` —
-    * the UDF payload the compiler feeds to `from_json`. Failed variables
-    * are omitted (null fields downstream — the F11 error channel).
-    */
-  def extractAllJson(vars: Seq[(String, NxsVar)], nexusJson: String): String = {
-    val root =
-      try NexusTree.fromJson(nexusJson)
-      catch { case _: Exception => return "{}" }
-    val fields = vars.flatMap { case (name, recipe) =>
-      retrieve(recipe, root).flatMap { case (v, unit) =>
-        DslCasts.convert(v, recipe.valueType).map(conv => (name, conv, unit))
-      }.toOption
-    }
-    fields.map { case (name, v, unit) =>
-      jsonStr(name) + ":{\"value\":" + toJson(v) + ",\"unit\":" + jsonStr(unit) + "}"
-    }.mkString("{", ",", "}")
+  /** Retrieve + convert-to-type of one NXS variable as its `(value, unit)`
+    * row, the value of Spark type `t`. None = the variable failed (F11). */
+  def extract(recipe: NxsVar, t: DataType, root: NexusGroup): Option[Row] =
+    retrieve(recipe, root).flatMap { case (v, unit) =>
+      DslCasts.convert(v, recipe.valueType).map(c => Row(sparkValue(c, t), unit))
+    }.toOption
+
+  /** A converted [[PyValue]] as the Spark value of `t`, the value Spark's
+    * JSON reader gives for its [[toJson]] text: a NaN or infinite float is
+    * null, and a string field holding a non-string holds its JSON text. */
+  def sparkValue(v: PyValue, t: DataType): Any = (v, t) match {
+    case (PyNone, _) => null
+    case (PyFloat(d), _) if d.isNaN || d.isInfinite => null
+    case (PyStr(s), StringType) => s
+    case (other, StringType) => toJson(other)
+    case (PyInt(i), LongType) => i
+    case (PyFloat(d), DoubleType) => d
+    case (PyList(items), ArrayType(et, _)) => items.map(sparkValue(_, et))
+    case (PyDict(items), MapType(_, vt, _)) =>
+      ListMap.from(items.map { case (k, x) => pyStr(k) -> sparkValue(x, vt) })
+    case _ => null
   }
 
   /** JSON rendering of a [[PyValue]] (dict keys and `list` elements are
@@ -74,8 +83,7 @@ object NexusExtractor {
   def toJson(v: PyValue): String = v match {
     case PyStr(s) => jsonStr(s)
     case PyInt(i) => i.toString
-    case PyFloat(d) =>
-      if (d.isNaN || d.isInfinite) "null" else d.toString
+    case PyFloat(d) => if (d.isNaN || d.isInfinite) "null" else d.toString
     case PyBool(b) => b.toString
     case PyNone => "null"
     case PyList(items) => items.map(toJson).mkString("[", ",", "]")
@@ -85,15 +93,19 @@ object NexusExtractor {
   }
 
   /** JSON string literal: escapes quote, backslash and ALL control
-    * chars (< 0x20), so any text round-trips through a strict parser. */
+    * chars (< 0x20), so any text round-trips through a strict parser.
+    * The escapes are Jackson's, the writer behind Spark's JSON functions,
+    * so a nested value renders as Spark re-renders it. */
   def jsonStr(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"
+      case '\b' => "\\b"
+      case '\f' => "\\f"
       case '\n' => "\\n"
       case '\r' => "\\r"
       case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c if c < ' ' => f"\\u${c.toInt}%04X"
       case c => c.toString
     } + "\""
 }

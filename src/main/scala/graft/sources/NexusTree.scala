@@ -12,8 +12,8 @@ import graft.schema.ConfigValue._
   * is the ingest stream's default `fileReader`, which renders each tree
   * in the engine's JSON tree encoding, and the `graft-hdf5` DSv2 source
   * ([[Hdf5DataSource]]) scans the nodes directly. [[NexusTree.fromJson]]
-  * parses that encoding back for extraction; fixtures and the streaming
-  * tests write it by hand. The extraction semantics — wildcard path
+  * parses that encoding back once per file for the typed extraction;
+  * fixtures and the streaming tests write it by hand. The extraction semantics — wildcard path
   * expansion, scalar squeeze, unit attributes — are tested against the
   * reference's fixture goldens.
   */
@@ -43,7 +43,7 @@ object NexusTree {
     case other => NexusDataset(toPy(other), Map.empty)
   }
 
-  private def toPy(c: ConfigValue): PyValue = c match {
+  def toPy(c: ConfigValue): PyValue = c match {
     case CStr(s) => PyStr(s)
     case CLong(v) => PyInt(v)
     case CDouble(v) => PyFloat(v)

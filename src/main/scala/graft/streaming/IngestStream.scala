@@ -16,9 +16,10 @@ import graft.schema.ImscSchema
   * decode → F2 error filter → foreachBatch { schema selection →
   * imsc pipeline → F6 dedup anti-join → sink }`.
   *
-  * Per-file work: a file is read and its NXS variables extracted once
-  * per row, after schema selection, and neither is ever inlined into
-  * the F6/F7 dedup filters (see [[processBatch]]).
+  * Per-file work: a file is read, and its NXS variables and P19 sample
+  * fields extracted from one parse of its tree, once per row, after
+  * schema selection; neither is ever inlined into the F6/F7 dedup
+  * filters (see [[processBatch]]).
   *
   * Delivery: checkpointed micro-batches + the dedup anti-join give
   * effective exactly-once (the reference's per-message commit + catalog
@@ -112,24 +113,13 @@ object IngestStream {
       (f.path, f.size.map(Long.box).orNull, f.time, f.chk.orNull,
         f.uid.orNull, f.gid.orNull, f.perm.orNull))).asNondeterministic()
 
-    // P19 + J2: read (sample name, proposal id) from the fixed NeXus
-    // paths and query the catalog for matching sampleIds — feeds the J4
-    // sampleId merge in assembly (ref: maybe_sample_dataset_pid,
+    // P19 + J2: the extraction also reads (sample name, proposal id)
+    // from the fixed NeXus paths, and the catalog's sample query on them
+    // feeds the J4 sampleId merge in assembly (ref: maybe_sample_dataset_pid,
     // scicat_offline_ingestor.py:164-191)
-    val sampleUdf = Option.when(cfg.sampleAttachment.querySampleName) {
-      val att = cfg.sampleAttachment
-      val catalogForSamples = cfg.catalog
-      udf { (nexusJson: String) =>
-        val rootOpt =
-          if (nexusJson == null) None
-          else scala.util.Try(graft.sources.NexusTree.fromJson(nexusJson)).toOption
-        (for {
-          root <- rootOpt
-          name <- graft.sources.NexusTree.readString(root, att.sampleNamePath)
-          proposal <- graft.sources.NexusTree.readString(root, att.proposalIdPath)
-        } yield catalogForSamples.querySamples(name, proposal)).getOrElse(Seq.empty[String])
-      }.asNondeterministic()
-    }
+    val att = cfg.sampleAttachment
+    val ctx = ImscCompiler.Context(catalog = cfg.catalog,
+      samplePaths = Option.when(att.querySampleName)((att.sampleNamePath, att.proposalIdPath)))
 
     val selected = batch
       .withColumn("schema_id", cascade)
@@ -143,9 +133,7 @@ object IngestStream {
         .withColumn("nexus_json", readUdf(col("file_name")))
         .withColumn("files", listUdf(col("file_name"))
           .cast(ArrayType(DatasetAssembly.FilesSchema)))
-      val subset = sampleUdf.fold(rows)(f => rows.withColumn("sample_pids", f(col("nexus_json"))))
-      try Some(DatasetAssembly.pipeline(
-        s, ImscCompiler.Context(catalog = cfg.catalog), cfg.options)(subset))
+      try Some(DatasetAssembly.pipeline(s, ctx, cfg.options)(rows))
       catch {
         // schema-level failure isolation: one bad schema drops only its
         // rows (F11 contract), but the failure must be visible, not silent
