@@ -460,57 +460,6 @@ object StreamSources {
         OutputMode.Append, GroupStateTimeout.NoTimeout)(ewmaUpdate)
   }
 
-  /** State transition of the STREAMING seasonal-naive skill monitor —
-    * the live twin of
-    * [[graft.operators.Relational.forecastSnaiveEval]] (the pairing
-    * discipline of [[ewmaUpdate]]/[[cusumUpdate]]): per event-type
-    * key the state is the running (n_days, Σ|e_naive|, Σ|e_snaive|)
-    * plus the last 7 calendar days' closed counts (≤ 3 + 14 longs).
-    * A day scores iff BOTH its lag-1 and lag-7 counts are in the
-    * ring — exactly the batch query's join condition — and each
-    * scored day emits the CUMULATIVE skill row, so the last emission
-    * per key equals the batch aggregate bit-for-bit. Days inside a
-    * batch are processed in day order; cross-batch order is the
-    * upstream watermarked window's closure order. */
-  def snaiveUpdate(key: String, rows: Iterator[(String, Long, Long)],
-      state: GroupState[Array[Long]])
-      : Iterator[(String, Long, Long, Long, Long, Long)] = {
-    val st = state.getOption.getOrElse(Array(0L, 0L, 0L))
-    var nd = st(0); var s1 = st(1); var s7 = st(2)
-    val hist = scala.collection.mutable.Map.empty[Long, Long]
-    st.drop(3).grouped(2).foreach { p => hist(p(0)) = p(1) }
-    val out = rows.toSeq.sortBy(_._2).flatMap { case (et, day, n) =>
-      val scored = (hist.get(day - 1), hist.get(day - 7)) match {
-        case (Some(p1), Some(p7)) =>
-          nd += 1; s1 += math.abs(n - p1); s7 += math.abs(n - p7)
-          Some((et, day, nd, s1, s7, s7 * 1000 / math.max(s1, 1L)))
-        case _ => None
-      }
-      hist(day) = n
-      // next processed day Y ≥ day+1 needs Y−7 ≥ day−6: drop older
-      hist.filterInPlace { case (d, _) => d >= day - 6 }
-      scored
-    }
-    state.update(Array(nd, s1, s7) ++
-      hist.toSeq.sortBy(_._1).flatMap(p => Seq(p._1, p._2)))
-    out.iterator
-  }
-
-  /** The streaming seasonal-naive skill monitor over closed
-    * (event_type, day, n) daily counts: O(17) longs of state per key,
-    * append mode — the continuous form of the MASE audit whose batch
-    * twin is the backfill. */
-  def snaiveSkillStream(daily: Dataset[(String, Long, Long)])
-      : Dataset[(String, Long, Long, Long, Long, Long)] = {
-    implicit val stateEnc: org.apache.spark.sql.Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    implicit val outEnc: org.apache.spark.sql.Encoder[(String, Long, Long, Long, Long, Long)] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(String, Long, Long, Long, Long, Long)]()
-    daily.groupByKey(_._1)(org.apache.spark.sql.Encoders.STRING)
-      .flatMapGroupsWithState[Array[Long], (String, Long, Long, Long, Long, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(snaiveUpdate)
-  }
-
   /** State transition of the STREAMING gap monitor — the live twin of
     * [[graft.operators.Relational.eventsGapCensus]]: per event-type
     * key the state is ONE long (the last closed day); a day arriving

@@ -496,72 +496,6 @@ class StreamSubstrateSpec extends AnyFunSuite {
       s"finalized streaming bars must equal the batch bars (${got.size} vs ${batch.size})")
   }
 
-  test("streaming snaive skill monitor: last emission per key equals the batch MASE row") {
-    import org.apache.spark.sql.streaming.TestGroupState
-    val sfDir = graft.TestSpark.sfDir
-    val daily = graft.Tables.events(spark, sfDir)
-      .groupBy(col("event_type"), expr("unix_micros(ts) DIV 86400000000").as("day"))
-      .agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    val expected = graft.operators.Relational.forecastSnaiveEval(spark, sfDir)
-      .collect().map { r =>
-        r.getString(0) -> ((r.getAs[Long]("n_days"),
-          r.getAs[Long]("sum_abs_err_naive"),
-          r.getAs[Long]("sum_abs_err_snaive"), r.getAs[Long]("mase_milli")))
-      }.toMap
-    // replay each key's days through the state transition in 3 chunks
-    val lastPerKey = scala.collection.mutable.Map[String, (Long, Long, Long, Long)]()
-    daily.groupBy(_._1).foreach { case (key, rows) =>
-      val ordered = rows.sortBy(_._2)
-      var stateValue: Option[Array[Long]] = None
-      ordered.grouped(math.max(1, ordered.length / 3 + 1)).foreach { chunk =>
-        val st = TestGroupState.create[Array[Long]](
-          optionalState = stateValue.map(org.apache.spark.api.java.Optional.of[Array[Long]])
-            .getOrElse(org.apache.spark.api.java.Optional.empty[Array[Long]]()),
-          timeoutConf = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout,
-          batchProcessingTimeMs = 1000L,
-          eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](),
-          hasTimedOut = false)
-        StreamSources.snaiveUpdate(key, chunk.iterator, st).foreach {
-          case (et, _, nd, s1, s7, mase) => lastPerKey(et) = (nd, s1, s7, mase)
-        }
-        stateValue = Some(st.get)
-        assert(st.get.length <= 3 + 2 * 7,
-          "state must stay bounded: 3 running longs + a 7-day ring")
-      }
-    }
-    assert(lastPerKey.toMap == expected,
-      "cumulative streaming skill must land exactly on the batch aggregate")
-  }
-
-  test("streaming snaive end-to-end: scores only fully-lagged days across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(String, Long, Long)]
-    val q = StreamSources.snaiveSkillStream(input.toDS())
-      .toDF("event_type", "day", "n_days", "s1", "s7", "mase_milli")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("snaive_out").start()
-    // days 1..7: nothing can score (no day has both lag-1 and lag-7)
-    input.addData((1L to 7L).map(d => ("a", d, 100L)): _*)
-    q.processAllAvailable()
-    assert(spark.sql("select * from snaive_out").count() == 0,
-      "no day scores before a full week of history")
-    // day 8: lag-1 = day 7, lag-7 = day 1 → first score; stable series
-    // ⇒ e1 = e7 = 0, mase = 0/max(0,1)
-    input.addData(("a", 8L, 100L))
-    q.processAllAvailable()
-    // day 9 arrives after a weekly spike pattern breaks: n jumps
-    input.addData(("a", 9L, 170L))
-    q.processAllAvailable()
-    val rows = spark.sql("select * from snaive_out").collect()
-      .map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).sortBy(_._1)
-    q.stop()
-    assert(rows.map(_._1).toSeq == Seq(8L, 9L))
-    assert(rows.head == ((8L, 1L, 0L, 0L)), s"stable day: $rows")
-    // day 9: e1 = |170-100| = 70 = e7 → cumulative (2, 70, 70)
-    assert(rows(1) == ((9L, 2L, 70L, 70L)))
-  }
-
   test("streaming windowed-Hampel end-to-end: window emits only when the next block opens") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, Long, Long)]
