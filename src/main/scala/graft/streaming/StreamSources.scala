@@ -577,152 +577,6 @@ object StreamSources {
         hampelUpdate(windowDays, (_, _) => late.add(1L)))
   }
 
-  /** State transition of the STREAMING ACF monitor — the live twin of
-    * [[graft.operators.Relational.eventsAcf]], keeping the monitor
-    * class's twin coverage complete as the batch family grows. The
-    * whole-history statistic folds into O(maxLag) SUFFICIENT
-    * STATISTICS, so the state never grows with the series: with
-    * dev_t = T·x_t − S, algebra gives
-    *   num_k = T²·P_k − T·S·(2S − tail_k − head_k) + (T−k)·S²
-    *   den   = T²·Q − T·S²
-    * where P_k = Σ x_t·x_{t+k}, Q = Σ x², and head_k/tail_k are the
-    * first/last k daily values — so the state is exactly
-    * [anchor, pending, T, S, Q, first×L, last×L, P×L] (5 + 3L longs),
-    * bit-identical to the batch query over the prefix at every closed
-    * anchor. The calendar spine is reproduced by ZERO-FILLING skipped
-    * days on anchor advance (missing days are real zeros in the batch
-    * spine too); same-day census rows accumulate into `pending` until
-    * the anchor closes. Emission: a later day finalizes the table AS
-    * OF the old anchor (lags 1..min(L, T−1) — the batch inner lag
-    * join emits exactly those); `acf_milli` is None when den = 0 (a
-    * constant prefix), mirroring the batch NULL. Exact-integer
-    * throughout: num and den ASSEMBLE in BigInt from the Long
-    * sufficient statistics (Long intermediates like
-    * t·t·p(k−1) overflow at tighter thresholds than the batch path's
-    * sum(dev·dev), silently breaking the bit-identity contract on
-    * long/high-count series; the state stays 5+3L longs, only the
-    * emit-time arithmetic widens), and BigInt's truncate-toward-zero
-    * division IS the batch sign-safe DIV. The emitted num/den columns
-    * narrow back to Long — exact whenever the batch Long sums
-    * themselves fit, i.e. the same documented headroom bound. Late
-    * days (day < anchor) count via `onLateDrop`, never silently
-    * swallowed ([[hampelUpdate]] discipline). Days further than
-    * `maxGapDays` PAST the anchor also route to `onLateDrop` instead
-    * of advancing it: the zero-fill loop is O(gap), so
-    * one corrupt far-future timestamp would otherwise spin millions
-    * of pushes AND poison the monitor permanently (every later real
-    * day lands behind the bogus anchor) — cap-and-alert, matching the
-    * capped-join discipline everywhere else. The FIRST row of a fresh
-    * key is held to the same standard: a day outside
-    * [0, `epochHorizonDays`] is dropped-and-counted instead of adopted
-    * as the anchor, closing the poison path where one corrupt
-    * far-future timestamp arriving FIRST misanchors the key forever
-    * (every later real day would route to `onLateDrop`). The horizon
-    * is a fixed config, not processing time, so replays stay
-    * deterministic and the batch twin needs no clock. */
-  def acfUpdate(maxLag: Int = 7,
-      onLateDrop: (String, Long) => Unit = (_, _) => (),
-      maxGapDays: Long = 3650L,
-      epochHorizonDays: Long = 100000L)(key: String,
-      rows: Iterator[(String, Long, Long)],
-      state: GroupState[Array[Long]])
-      : Iterator[(String, Long, Long, Long, Long, Option[Long])] = {
-    val L = maxLag
-    var anchor = Long.MinValue
-    var pending = 0L
-    var t = 0L; var s = 0L; var q = 0L
-    val first = Array.ofDim[Long](L)
-    val last = Array.ofDim[Long](L)
-    val p = Array.ofDim[Long](L)
-    state.getOption.foreach { a =>
-      anchor = a(0); pending = a(1); t = a(2); s = a(3); q = a(4)
-      Array.copy(a, 5, first, 0, L)
-      Array.copy(a, 5 + L, last, 0, L)
-      Array.copy(a, 5 + 2 * L, p, 0, L)
-    }
-    // append one spine day: update the lag products against the ring
-    // of the last L values BEFORE rotating the new value in
-    def push(x: Long): Unit = {
-      var k = 1
-      while (k <= L) {
-        if (t >= k) p(k - 1) += last(L - k) * x
-        k += 1
-      }
-      var i = 0
-      while (i < L - 1) { last(i) = last(i + 1); i += 1 }
-      last(L - 1) = x
-      if (t < L) first(t.toInt) = x
-      t += 1; s += x; q += x * x
-    }
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Long, Long, Long, Long, Option[Long])]
-    def emit(a: Long): Unit = {
-      val tB = BigInt(t); val sB = BigInt(s)
-      val den = tB * tB * q - tB * sB * sB
-      var k = 1
-      while (k <= math.min(L.toLong, t - 1)) {
-        val head = first.take(k).sum
-        val tail = last.slice(L - k, L).sum
-        val num = tB * tB * p(k - 1) -
-          tB * sB * (2 * sB - BigInt(tail) - BigInt(head)) +
-          BigInt(t - k) * sB * sB
-        val acf = if (den == 0) None else Some((num * 1000 / den).toLong)
-        out += ((key, a, k.toLong, num.toLong, den.toLong, acf))
-        k += 1
-      }
-    }
-    rows.toSeq.sortBy(_._2).foreach { case (et, day, n) =>
-      if (anchor == Long.MinValue) {
-        // first row for a fresh key: plausibility-gate the candidate
-        // anchor too — a corrupt day outside the epoch horizon must
-        // not become the permanent reference point
-        if (day < 0L || day > epochHorizonDays) onLateDrop(et, day)
-        else { anchor = day; pending = n }
-      }
-      else if (day == anchor) pending += n
-      // out-of-contract days — late, OR implausibly far future (a
-      // corrupt timestamp would otherwise spin the O(gap) zero-fill
-      // and permanently misanchor the monitor) — are counted, never
-      // silently swallowed and never allowed to move the anchor
-      else if (day < anchor || day - anchor > maxGapDays) onLateDrop(et, day)
-      else {
-        push(pending)
-        emit(anchor)
-        var g = anchor + 1 // zero-fill the calendar gap, no emission
-        while (g < day) { push(0L); g += 1 }
-        anchor = day; pending = n
-      }
-    }
-    state.update(Array(anchor, pending, t, s, q) ++ first ++ last ++ p)
-    out.iterator
-  }
-
-  /** The streaming ACF feed over the closed (event_type, day, n) daily
-    * census: constant 5 + 3·maxLag longs of state per type, append
-    * mode — emits a type's full lag-1..maxLag ACF table as each anchor
-    * day closes, bit-identical to the batch monitor over the same
-    * prefix. Late days AND days beyond the `maxGapDays` sanity horizon
-    * count into the `acf_late_dropped` accumulator. */
-  def acfMonitorStream(daily: Dataset[(String, Long, Long)],
-      maxLag: Int = 7, maxGapDays: Long = 3650L,
-      epochHorizonDays: Long = 100000L)
-      : Dataset[(String, Long, Long, Long, Long, Option[Long])] = {
-    implicit val stateEnc: org.apache.spark.sql.Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    implicit val outEnc: org.apache.spark.sql.Encoder[
-        (String, Long, Long, Long, Long, Option[Long])] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[
-        (String, Long, Long, Long, Long, Option[Long])]()
-    val late = daily.sparkSession.sparkContext
-      .longAccumulator("acf_late_dropped")
-    daily.groupByKey(_._1)(org.apache.spark.sql.Encoders.STRING)
-      .flatMapGroupsWithState[Array[Long],
-        (String, Long, Long, Long, Long, Option[Long])](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        acfUpdate(maxLag, (_, _) => late.add(1L), maxGapDays,
-          epochHorizonDays))
-  }
-
   /** State transition of the STREAMING transition-bigram feed — the
     * live twin of [[graft.operators.Relational.eventsTransitionMatrix]]:
     * per user, every event after the first emits its

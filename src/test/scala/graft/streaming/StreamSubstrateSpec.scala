@@ -741,178 +741,6 @@ class StreamSubstrateSpec extends AnyFunSuite {
       "closed streaming windows must reproduce the batch windowed Hampel rows exactly")
   }
 
-  test("streaming ACF end-to-end: the lag table emits as each anchor closes") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(String, Long, Long)]
-    val q = StreamSources.acfMonitorStream(input.toDS(), maxLag = 7)
-      .toDF("event_type", "anchor_day", "lag", "num", "den", "acf_milli")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("acf_out").start()
-    input.addData(("a", 0L, 2L), ("a", 1L, 4L))
-    q.processAllAvailable()
-    // anchor 0 closed with T = 1: no lag has a pair yet — no rows
-    assert(spark.sql("select * from acf_out").count() == 0)
-    input.addData(("a", 3L, 6L)) // closes anchor 1 (T = 2, x = [2, 4])
-    q.processAllAvailable()
-    val rows = spark.sql("select * from acf_out").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), if (r.isNullAt(5)) None else Some(r.getLong(5))))
-    // hand check: S=6, Q=20, P1=8 → den=8, num1=−4 → acf −500 milli
-    assert(rows.toSeq == Seq(("a", 1L, 1L, -4L, 8L, Some(-500L))), rows.toSeq.toString)
-    q.stop()
-  }
-
-  test("streaming ACF: every closed anchor equals the batch monitor on its prefix, with constant state") {
-    import org.apache.spark.sql.streaming.TestGroupState
-    val census = graft.Tables.events(spark, graft.TestSpark.sfDir)
-      .select(col("event_type"), expr("unix_micros(ts) DIV 86400000000").as("day"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(count(lit(1)).as("n"))
-      .as[(String, Long, Long)].collect().toSeq
-    val types = census.map(_._1).distinct.sorted
-    assert(types.nonEmpty)
-    types.foreach { et =>
-      val rows = census.filter(_._1 == et).sortBy(_._2)
-      val maxDay = rows.map(_._2).max
-      val withFlush = rows :+ ((et, maxDay + 1L, 0L)) // closes the final anchor
-      var stateValue: Option[Array[Long]] = None
-      val got = scala.collection.mutable.ArrayBuffer
-        .empty[(String, Long, Long, Long, Long, Option[Long])]
-      withFlush.grouped(math.max(1, withFlush.length / 4 + 1)).foreach { chunk =>
-        val st = TestGroupState.create[Array[Long]](
-          optionalState = stateValue.map(org.apache.spark.api.java.Optional.of[Array[Long]])
-            .getOrElse(org.apache.spark.api.java.Optional.empty[Array[Long]]()),
-          timeoutConf = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout,
-          batchProcessingTimeMs = 1000L,
-          eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](),
-          hasTimedOut = false)
-        got ++= StreamSources.acfUpdate()(et, chunk.iterator, st)
-        stateValue = Some(st.get)
-        assert(st.get.length == 5 + 3 * 7,
-          "ACF state is CONSTANT-size sufficient statistics, never the series")
-      }
-      val anchors = got.map(_._2).distinct.sorted
-      assert(anchors.nonEmpty, s"type $et must close at least one anchor")
-      Seq(anchors.head, anchors(anchors.size / 2), anchors.last).distinct.foreach { a =>
-        val prefix = rows.filter(_._2 <= a)
-          .toDF("event_type", "day", "n")
-        val batch = graft.operators.Relational.acfOf(prefix).collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
-            if (r.isNullAt(4)) None else Some(r.getLong(4)))).toSet
-        val stream = got.filter(_._2 == a)
-          .map(x => (x._1, x._3, x._4, x._5, x._6)).toSet
-        assert(stream == batch,
-          s"closed ACF anchor must equal the batch prefix: type=$et anchor=$a\n" +
-            s"stream=$stream\nbatch=$batch")
-      }
-    }
-  }
-
-  test("acfUpdate: a corrupt far-future day is counted and dropped, never advances the anchor") {
-    import org.apache.spark.sql.streaming.TestGroupState
-    def freshState(v: Option[Array[Long]]) = TestGroupState.create[Array[Long]](
-      optionalState = v.map(org.apache.spark.api.java.Optional.of[Array[Long]])
-        .getOrElse(org.apache.spark.api.java.Optional.empty[Array[Long]]()),
-      timeoutConf = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout,
-      batchProcessingTimeMs = 1000L,
-      eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](),
-      hasTimedOut = false)
-    val dropped = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    val count = (et: String, d: Long) => { dropped += (et -> d); () }
-    // the r12-advice poison scenario: one corrupt timestamp ~2700 years
-    // out would spin O(gap) zero-fills AND permanently misanchor the
-    // monitor (every later real day becomes a "late" drop forever)
-    val s1 = freshState(None)
-    StreamSources.acfUpdate(7, count)("a",
-      Iterator(("a", 0L, 2L), ("a", 1L, 4L), ("a", 999999L, 5L)), s1)
-    assert(dropped.toSeq == Seq("a" -> 999999L),
-      "the far-future day must route to the drop channel")
-    assert(s1.get(0) == 1L, "the anchor must not advance past the sanity horizon")
-    // the monitor keeps working: the next REAL day closes anchor 1
-    // exactly as if the corrupt row never arrived
-    val s2 = freshState(Some(s1.get))
-    val out = StreamSources.acfUpdate(7, count)("a",
-      Iterator(("a", 3L, 6L)), s2).toSeq
-    assert(out == Seq(("a", 1L, 1L, -4L, 8L, Some(-500L))), out.toString)
-    // a gap INSIDE the horizon still zero-fills normally (day 3 above
-    // skipped day 2 — T counts the spine, not the rows)
-    assert(s2.get(2) == 3L, "in-horizon gaps must still zero-fill the spine")
-  }
-
-  test("acfUpdate: a corrupt FIRST day never becomes the anchor (r13 advice)") {
-    import org.apache.spark.sql.streaming.TestGroupState
-    def freshState(v: Option[Array[Long]]) = TestGroupState.create[Array[Long]](
-      optionalState = v.map(org.apache.spark.api.java.Optional.of[Array[Long]])
-        .getOrElse(org.apache.spark.api.java.Optional.empty[Array[Long]]()),
-      timeoutConf = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout,
-      batchProcessingTimeMs = 1000L,
-      eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](),
-      hasTimedOut = false)
-    val dropped = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    val count = (et: String, d: Long) => { dropped += (et -> d); () }
-    // the r13-advice poison path: the FIRST row for a fresh key is a
-    // corrupt far-future (or negative) timestamp — without the
-    // epoch-horizon gate it would be adopted as the anchor forever,
-    // turning every later REAL day into a permanent late-drop
-    val s1 = freshState(None)
-    StreamSources.acfUpdate(7, count)("a",
-      Iterator(("a", 999999L, 9L), ("a", -5L, 1L)), s1)
-    assert(dropped.toSeq.toSet == Set("a" -> 999999L, "a" -> -5L),
-      "both implausible first days must route to the drop channel")
-    assert(s1.get(0) == Long.MinValue,
-      "no anchor may be adopted from an out-of-horizon first day")
-    // recovery: the first PLAUSIBLE day anchors normally and the
-    // monitor proceeds as if the corrupt rows never arrived
-    val s2 = freshState(Some(s1.get))
-    StreamSources.acfUpdate(7, count)("a",
-      Iterator(("a", 10L, 3L), ("a", 11L, 5L)), s2)
-    assert(s2.get(0) == 11L, "a plausible day must anchor and advance normally")
-    assert(s2.get(1) == 5L)
-  }
-
-  test("acfUpdate: emit-time BigInt assembly matches batch where Long intermediates would wrap") {
-    import org.apache.spark.sql.streaming.TestGroupState
-    // A 100-day series of ~5e6 daily counts: the emitted num/den are
-    // small (alternating ±1e3 noise), and the batch Long sums are fine
-    // (den = Σ dev² = 1e12), but the stream's OLD Long intermediates
-    // t·t·q ≈ 2.5e19 and t·t·p(k) ≈ 2.5e19 wrap 2⁶³ (r12 advice) — so
-    // this series distinguishes BigInt assembly from Long assembly.
-    val et = "bigcount"
-    val c = 5000000L; val d = 1000L
-    val rows: Seq[(String, Long, Long)] =
-      (0L until 100L).map(day => (et, day, c + (if (day % 2 == 0) d else -d)))
-    val withFlush = rows :+ ((et, 100L, 0L)) // closes anchor 99
-    var stateValue: Option[Array[Long]] = None
-    val got = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Long, Long, Long, Long, Option[Long])]
-    withFlush.grouped(25).foreach { chunk =>
-      val st = TestGroupState.create[Array[Long]](
-        optionalState = stateValue.map(org.apache.spark.api.java.Optional.of[Array[Long]])
-          .getOrElse(org.apache.spark.api.java.Optional.empty[Array[Long]]()),
-        timeoutConf = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout,
-        batchProcessingTimeMs = 1000L,
-        eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](),
-        hasTimedOut = false)
-      got ++= StreamSources.acfUpdate()(et, chunk.iterator, st)
-      stateValue = Some(st.get)
-    }
-    // hand check at the closed anchor 99 (T = 100, dev_t = ±T·d):
-    // den = Σ dev² = 100·(100·1000)² = 1e12; lag-1 pairs are all
-    // anti-aligned → num₁ = −99·1e10, acf₁ = −990 milli; lag-2 pairs
-    // all aligned → num₂ = +98·1e10, acf₂ = +980 milli
-    val at99 = got.filter(_._2 == 99L).map(r => (r._3, r._4, r._5, r._6)).sortBy(_._1)
-    assert(at99.take(2) == Seq(
-      (1L, -990000000000L, 1000000000000L, Some(-990L)),
-      (2L, 980000000000L, 1000000000000L, Some(980L))), at99.toString)
-    // and the full table equals the batch monitor on the same prefix
-    val batch = graft.operators.Relational.acfOf(
-        rows.toDF("event_type", "day", "n")).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        if (r.isNullAt(4)) None else Some(r.getLong(4)))).toSet
-    assert(got.filter(_._2 == 99L).map(x => (x._1, x._3, x._4, x._5, x._6)).toSet
-      == batch, "closed anchor must equal batch on the wide-count series")
-  }
-
   test("hampelUpdate counts contract-violating late days instead of silent drops") {
     import org.apache.spark.sql.streaming.TestGroupState
     def freshState(v: Option[Array[Long]]) = TestGroupState.create[Array[Long]](
