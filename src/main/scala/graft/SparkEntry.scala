@@ -4490,8 +4490,8 @@ object SparkEntry {
         |SELECT dv.event_type, day, dow, n, dow_med, resid, med_r, mad_r,
         |  adev > 3 * mad_r AS is_anom
         |FROM dv JOIN md USING (event_type)""".stripMargin,
-    // The windowed (streamable) Hampel: identical math per
-    // win = day // 28 block — the batch twin of hampelMonitorStream.
+    // The windowed Hampel: identical math per win = day // 28 block,
+    // so each median reads at most 28 daily counts per key.
     "events_hampel_windowed" ->
       """WITH d AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day,
         |    count(*) AS n FROM events GROUP BY 1, 2),

@@ -1516,16 +1516,11 @@ object Relational {
   /** WINDOWED seasonal-Hampel — [[eventsSeasonalHampel]] scoped to
     * fixed `windowDays` calendar blocks (`win = day DIV windowDays`):
     * every median partitions by (event_type, win[, dow]) instead of
-    * the whole history. This is the STREAMABLE form of the monitor
-    * (round-9 verdict item #6): exact global medians need unbounded
-    * state, but per-window medians need at most `windowDays` daily
-    * counts per key — so the streaming twin
-    * ([[graft.streaming.StreamSources.hampelMonitorStream]]) holds
-    * ≤ windowDays (day, n) pairs per event type and emits EXACTLY
-    * these rows when a window closes (spec-pinned stream==batch
-    * across micro-batch boundaries; no approximation, the error
-    * bound is zero by construction — the honest alternative to a P²
-    * estimate).
+    * the whole history. Exact global medians need the whole series
+    * per key; each windowed median needs at most `windowDays` daily
+    * counts per key, so a window's rows are final once its block
+    * ends and later days never change them. No approximation: the
+    * error bound is zero by construction.
     *
     * Scale: identical plan shape to the global monitor — one
     * calendar-bounded daily census, three flag-partitioned lower-

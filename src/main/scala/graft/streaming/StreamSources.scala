@@ -482,101 +482,6 @@ object StreamSources {
     out.iterator
   }
 
-  /** One closed Hampel window, computed EXACTLY the way the batch
-    * twin [[graft.operators.Relational.eventsHampelWindowed]] does:
-    * per-dow lower median of the daily counts, lower median of the
-    * residuals, MAD of the residuals, 3×MAD flag — every median the
-    * DISCRETE lower median at rank (cnt+1)/2 in (value, day) order.
-    * Pure function of the window's (day, n) pairs so the spec can pin
-    * stream == batch row-for-row. */
-  def hampelWindow(et: String, win: Long, days: Seq[(Long, Long)])
-      : Seq[(String, Long, Long, Long, Long, Long, Long, Long, Long, Boolean)] = {
-    def lowerMedian(valueDay: Seq[(Long, Long)]): Long = {
-      val s = valueDay.sorted
-      s((s.size + 1) / 2 - 1)._1
-    }
-    val dowMed: Map[Long, Long] = days.groupBy(_._1 % 7).map {
-      case (dow, ds) => dow -> lowerMedian(ds.map { case (d, n) => (n, d) })
-    }
-    val resid = days.map { case (d, n) => (d, n, n - dowMed(d % 7)) }
-    val medR = lowerMedian(resid.map(r => (r._3, r._1)))
-    val madR = lowerMedian(resid.map { case (d, _, r) => (math.abs(r - medR), d) })
-    resid.sortBy(_._1).map { case (d, n, r) =>
-      (et, win, d, d % 7, n, dowMed(d % 7), r, medR, madR,
-        math.abs(r - medR) > 3 * madR)
-    }
-  }
-
-  /** State transition of the STREAMING windowed seasonal-Hampel
-    * monitor — the bounded-state twin of
-    * [[graft.operators.Relational.eventsHampelWindowed]]. Exact global
-    * Hampel medians need unbounded history, so the streamable contract
-    * is the WINDOWED one: per event-type key the state is the current
-    * `windowDays`-block's buffered (day, n) pairs — ≤ windowDays
-    * pairs by construction, zero approximation error — and a window's
-    * rows emit the moment a day from a LATER block arrives (the
-    * window-finalized re-read shape of [[windowedPsi]]). Days inside a
-    * batch are processed in day order; cross-batch order is the
-    * upstream watermarked daily census's closure order (the
-    * [[gapUpdate]] contract). State layout: [win, d1, n1, d2, n2, …].
-    *
-    * `onLateDrop` fires for every contract-violating row (a day whose
-    * window already closed): the batch==stream invariant silently
-    * diverges if the upstream ordering contract breaks, so violations
-    * must be COUNTABLE — the stream wires a LongAccumulator here, so a
-    * contract violation is detectable rather than a silent drop. */
-  def hampelUpdate(windowDays: Int,
-      onLateDrop: (String, Long) => Unit = (_, _) => ())(key: String,
-      rows: Iterator[(String, Long, Long)],
-      state: GroupState[Array[Long]])
-      : Iterator[(String, Long, Long, Long, Long, Long, Long, Long, Long, Boolean)] = {
-    var (win, buf) = state.getOption match {
-      case Some(a) => (a(0), a.drop(1).grouped(2).map(p => (p(0), p(1))).toVector)
-      case None => (Long.MinValue, Vector.empty[(Long, Long)])
-    }
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Long, Long, Long, Long, Long, Long, Long, Long, Boolean)]
-    rows.toSeq.sortBy(_._2).foreach { case (et, day, n) =>
-      val w = Math.floorDiv(day, windowDays.toLong)
-      if (win == Long.MinValue) { win = w; buf = Vector((day, n)) }
-      else if (w == win) buf :+= ((day, n))
-      else if (w > win) {
-        out ++= hampelWindow(et, win, buf)
-        win = w; buf = Vector((day, n))
-      } else onLateDrop(et, day) // w < win: late day after its window
-        // closed — the upstream watermark already finalized it;
-        // contract-dropped like gapUpdate, but COUNTED via onLateDrop
-    }
-    state.update(Array(win) ++ buf.flatMap(p => Array(p._1, p._2)))
-    out.iterator
-  }
-
-  /** The streaming windowed-Hampel alert feed over closed
-    * (event_type, day, n) daily counts: ≤ 2·windowDays+1 longs of
-    * state per key, append mode — emits a closed window's full Hampel
-    * table (bit-identical to the batch windowed monitor) as its first
-    * out-of-window day arrives. */
-  def hampelMonitorStream(daily: Dataset[(String, Long, Long)],
-      windowDays: Int = 28)
-      : Dataset[(String, Long, Long, Long, Long, Long, Long, Long, Long, Boolean)] = {
-    implicit val stateEnc: org.apache.spark.sql.Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    implicit val outEnc: org.apache.spark.sql.Encoder[
-        (String, Long, Long, Long, Long, Long, Long, Long, Long, Boolean)] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[
-        (String, Long, Long, Long, Long, Long, Long, Long, Long, Boolean)]()
-    // Ordering-contract violations (late days for closed windows) are
-    // counted in a named accumulator, visible in the Spark UI/metrics
-    // and assertable in specs — never silently swallowed.
-    val late = daily.sparkSession.sparkContext
-      .longAccumulator("hampel_late_dropped")
-    daily.groupByKey(_._1)(org.apache.spark.sql.Encoders.STRING)
-      .flatMapGroupsWithState[Array[Long],
-        (String, Long, Long, Long, Long, Long, Long, Long, Long, Boolean)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        hampelUpdate(windowDays, (_, _) => late.add(1L)))
-  }
-
   /** State transition of the STREAMING transition-bigram feed — the
     * live twin of [[graft.operators.Relational.eventsTransitionMatrix]]:
     * per user, every event after the first emits its

@@ -496,37 +496,6 @@ class StreamSubstrateSpec extends AnyFunSuite {
       s"finalized streaming bars must equal the batch bars (${got.size} vs ${batch.size})")
   }
 
-  test("streaming windowed-Hampel end-to-end: window emits only when the next block opens") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(String, Long, Long)]
-    val q = StreamSources.hampelMonitorStream(input.toDS(), windowDays = 7)
-      .toDF("event_type", "win", "day", "dow", "n", "dow_med", "resid",
-        "med_r", "mad_r", "is_anom")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("hampel_out").start()
-    // days 0..6 fill window 0 — nothing emits while it is open
-    input.addData((0L to 3L).map(d => ("a", d, 100L)): _*)
-    q.processAllAvailable()
-    input.addData((4L to 6L).map(d => ("a", d, if (d == 5L) 500L else 100L)): _*)
-    q.processAllAvailable()
-    assert(spark.sql("select * from hampel_out").count() == 0,
-      "an open window must not emit")
-    // day 7 opens window 1 → window 0's 7 rows emit, spike day flagged
-    input.addData(("a", 7L, 100L))
-    q.processAllAvailable()
-    val rows = spark.sql("select * from hampel_out").collect()
-      .map(r => (r.getLong(2), r.getLong(4), r.getBoolean(9))).sortBy(_._1)
-    q.stop()
-    assert(rows.map(_._1).toSeq == (0L to 6L), s"window 0 must emit whole: ${rows.toSeq}")
-    // with 7 distinct dows each dow-median = its own n → resid 0 → only
-    // the spike day can flag... and with MAD 0 any nonzero adev flags;
-    // here every resid is 0 so nothing is anomalous EXCEPT nothing:
-    // per-dow medians absorb the spike (1 sample per dow). The honest
-    // single-sample-per-dow behavior: no flags.
-    assert(rows.forall(!_._3), s"one-sample dows self-absorb: ${rows.toSeq}")
-    assert(rows.count(_._2 == 500L) == 1)
-  }
-
   test("streaming gap monitor: emitted holes recompose the batch gap census") {
     import org.apache.spark.sql.streaming.TestGroupState
     val sfDir = graft.TestSpark.sfDir
@@ -694,80 +663,6 @@ class StreamSubstrateSpec extends AnyFunSuite {
     val rate = 300 / secs
     info(f"ingested 300 msgs in $secs%.1f s → $rate%.0f msg/s")
     assert(rate > 1.0, f"below the reference envelope: $rate%.2f msg/s")
-  }
-
-  test("streaming windowed-Hampel: closed windows equal the batch windowed monitor") {
-    import org.apache.spark.sql.streaming.TestGroupState
-    val sfDir = graft.TestSpark.sfDir
-    val daily = graft.Tables.events(spark, sfDir)
-      .groupBy(col("event_type"), expr("unix_micros(ts) DIV 86400000000").as("day"))
-      .agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    // batch twin, restricted to windows the stream will have CLOSED
-    // (every win except each key's last)
-    val lastWin = daily.groupBy(_._1).map { case (k, rs) =>
-      k -> rs.map(r => Math.floorDiv(r._2, 28L)).max
-    }
-    val expected = graft.operators.Relational.eventsHampelWindowed(spark, sfDir)
-      .collect().map { r =>
-        (r.getString(0), r.getAs[Long]("win"), r.getAs[Long]("day"),
-          r.getAs[Long]("dow"), r.getAs[Long]("n"), r.getAs[Long]("dow_med"),
-          r.getAs[Long]("resid"), r.getAs[Long]("med_r"),
-          r.getAs[Long]("mad_r"), r.getAs[Boolean]("is_anom"))
-      }.filter(t => t._2 < lastWin(t._1)).toSet
-    assert(expected.nonEmpty, "need at least one closed window at this SF")
-    // replay each key's days through the state transition in 4 chunks
-    // (micro-batch boundaries land mid-window on purpose)
-    val emitted = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Long, Long, Long, Long, Long, Long, Long, Long, Boolean)]
-    daily.groupBy(_._1).foreach { case (key, rows) =>
-      val ordered = rows.map(r => (key, r._2, r._3)).sortBy(_._2)
-      var stateValue: Option[Array[Long]] = None
-      ordered.grouped(math.max(1, ordered.length / 4 + 1)).foreach { chunk =>
-        val st = TestGroupState.create[Array[Long]](
-          optionalState = stateValue.map(org.apache.spark.api.java.Optional.of[Array[Long]])
-            .getOrElse(org.apache.spark.api.java.Optional.empty[Array[Long]]()),
-          timeoutConf = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout,
-          batchProcessingTimeMs = 1000L,
-          eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](),
-          hasTimedOut = false)
-        emitted ++= StreamSources.hampelUpdate(28)(key, chunk.iterator, st)
-        stateValue = Some(st.get)
-        assert(st.get.length <= 1 + 2 * 28,
-          "state must stay bounded: the win id + one (day, n) pair per window day")
-      }
-    }
-    assert(emitted.toSet == expected,
-      "closed streaming windows must reproduce the batch windowed Hampel rows exactly")
-  }
-
-  test("hampelUpdate counts contract-violating late days instead of silent drops") {
-    import org.apache.spark.sql.streaming.TestGroupState
-    def freshState(v: Option[Array[Long]]) = TestGroupState.create[Array[Long]](
-      optionalState = v.map(org.apache.spark.api.java.Optional.of[Array[Long]])
-        .getOrElse(org.apache.spark.api.java.Optional.empty[Array[Long]]()),
-      timeoutConf = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout,
-      batchProcessingTimeMs = 1000L,
-      eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](),
-      hasTimedOut = false)
-    val dropped = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    val count = (et: String, d: Long) => { dropped += (et -> d); () }
-    // windowDays=7: days 0,1 open window 0; day 7 closes it
-    val s1 = freshState(None)
-    val out1 = StreamSources.hampelUpdate(7, count)(
-      "a", Iterator(("a", 0L, 5L), ("a", 1L, 6L), ("a", 7L, 4L)), s1).toSeq
-    assert(out1.size == 2 && dropped.isEmpty)
-    // day 2 arrives AFTER window 0 closed: counted, no emission, and the
-    // open-window state is untouched (batch==stream invariant preserved
-    // for everything the stream still owns)
-    val s2 = freshState(Some(s1.get))
-    val out2 = StreamSources.hampelUpdate(7, count)(
-      "a", Iterator(("a", 2L, 9L)), s2).toSeq
-    assert(out2.isEmpty)
-    assert(dropped.toList == List("a" -> 2L),
-      "the late day must surface through the drop channel")
-    assert(s2.get.sameElements(s1.get),
-      "a late day must not corrupt the open window's buffered state")
   }
 }
 
