@@ -460,28 +460,6 @@ object StreamSources {
         OutputMode.Append, GroupStateTimeout.NoTimeout)(ewmaUpdate)
   }
 
-  /** State transition of the STREAMING gap monitor — the live twin of
-    * [[graft.operators.Relational.eventsGapCensus]]: per event-type
-    * key the state is ONE long (the last closed day); a day arriving
-    * more than one past it emits the hole it closes over
-    * (gap_start, gap_len) — the alert feed whose batch twin is the
-    * backfill census. Days inside a batch are processed in day order;
-    * cross-batch order is the upstream watermarked window's closure
-    * order. */
-  def gapUpdate(key: String, rows: Iterator[(String, Long, Long)],
-      state: GroupState[Long])
-      : Iterator[(String, Long, Long)] = {
-    var last = state.getOption.getOrElse(Long.MinValue)
-    val out = rows.toSeq.sortBy(_._2).flatMap { case (et, day, _) =>
-      val gap = if (last != Long.MinValue && day > last + 1)
-        Some((et, last + 1, day - last - 1)) else None
-      if (day > last) last = day
-      gap
-    }
-    state.update(last)
-    out.iterator
-  }
-
   /** State transition of the STREAMING transition-bigram feed — the
     * live twin of [[graft.operators.Relational.eventsTransitionMatrix]]:
     * per user, every event after the first emits its

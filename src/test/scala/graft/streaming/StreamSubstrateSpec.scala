@@ -496,48 +496,6 @@ class StreamSubstrateSpec extends AnyFunSuite {
       s"finalized streaming bars must equal the batch bars (${got.size} vs ${batch.size})")
   }
 
-  test("streaming gap monitor: emitted holes recompose the batch gap census") {
-    import org.apache.spark.sql.streaming.TestGroupState
-    val sfDir = graft.TestSpark.sfDir
-    val daily = graft.Tables.events(spark, sfDir)
-      .groupBy(col("event_type"), expr("unix_micros(ts) DIV 86400000000").as("day"))
-      .agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    val expected = graft.operators.Relational.eventsGapCensus(spark, sfDir)
-      .collect().map { r =>
-        r.getString(0) -> ((r.getAs[Long]("n_gaps"), r.getAs[Long]("longest_gap")))
-      }.toMap
-    val gaps = scala.collection.mutable.ArrayBuffer[(String, Long, Long)]()
-    daily.groupBy(_._1).foreach { case (key, rows) =>
-      val ordered = rows.sortBy(_._2)
-      var stateValue: Option[Long] = None
-      ordered.grouped(math.max(1, ordered.length / 3 + 1)).foreach { chunk =>
-        val st = TestGroupState.create[Long](
-          optionalState = stateValue.map(org.apache.spark.api.java.Optional.of[Long])
-            .getOrElse(org.apache.spark.api.java.Optional.empty[Long]()),
-          timeoutConf = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout,
-          batchProcessingTimeMs = 1000L,
-          eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](),
-          hasTimedOut = false)
-        gaps ++= StreamSources.gapUpdate(key, chunk.iterator, st)
-        stateValue = Some(st.get)
-      }
-    }
-    val byType = gaps.groupBy(_._1)
-    expected.foreach { case (t, (nGaps, longest)) =>
-      val g = byType.getOrElse(t, Seq.empty)
-      assert(g.size.toLong == nGaps, s"gap count mismatch at $t")
-      assert((if (g.isEmpty) 0L else g.map(_._3).max) == longest,
-        s"longest gap mismatch at $t")
-    }
-    // gap intervals never overlap a present day
-    val present = daily.map(d => (d._1, d._2)).toSet
-    gaps.foreach { case (t, start, len) =>
-      (start until start + len).foreach(d =>
-        assert(!present((t, d)), s"emitted gap covers a present day: $t $d"))
-    }
-  }
-
   test("streaming transition feed reproduces the batch Markov matrix across chunked batches") {
     import org.apache.spark.sql.streaming.TestGroupState
     val sfDir = graft.TestSpark.sfDir
