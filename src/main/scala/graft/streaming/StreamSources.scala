@@ -460,32 +460,6 @@ object StreamSources {
         OutputMode.Append, GroupStateTimeout.NoTimeout)(ewmaUpdate)
   }
 
-  /** State transition of the STREAMING transition-bigram feed — the
-    * live twin of [[graft.operators.Relational.eventsTransitionMatrix]]:
-    * per user, every event after the first emits its
-    * (from_type, to_type) bigram; the matrix itself is then a plain
-    * downstream count (batch over the emitted feed, or a second
-    * watermarked agg for a live matrix). Per-user state is THREE
-    * values — the last event's (ts_micros, event_id, event_type) — so
-    * the feed runs at any user cardinality. Events inside one batch
-    * are processed in (ts, event_id) order, matching the batch lag
-    * window's frame exactly; cross-batch order is delivery order
-    * (the [[ewmaUpdate]] contract — upstream ensures watermarked
-    * time-ordered delivery, and the spec replays chunked batches). */
-  def transitionUpdate(key: Long,
-      rows: Iterator[(Long, Long, Long, String)],
-      state: GroupState[(Long, Long, String)])
-      : Iterator[(Long, String, String)] = {
-    var last = state.getOption.orNull
-    val out = scala.collection.mutable.ArrayBuffer[(Long, String, String)]()
-    rows.toSeq.sortBy(r => (r._2, r._3)).foreach { case (_, ts, eid, et) =>
-      if (last != null) out += ((key, last._3, et))
-      last = (ts, eid, et)
-    }
-    if (last != null) state.update(last)
-    out.iterator
-  }
-
   /** State transition of the STREAMING CUSUM level-shift monitor —
     * the bounded-state streaming twin of
     * [[graft.operators.Relational.eventsCusumShift]], completing the

@@ -496,40 +496,6 @@ class StreamSubstrateSpec extends AnyFunSuite {
       s"finalized streaming bars must equal the batch bars (${got.size} vs ${batch.size})")
   }
 
-  test("streaming transition feed reproduces the batch Markov matrix across chunked batches") {
-    import org.apache.spark.sql.streaming.TestGroupState
-    val sfDir = graft.TestSpark.sfDir
-    val ev = graft.Tables.events(spark, sfDir)
-      .select(col("user_id"), expr("unix_micros(ts)").as("tsu"),
-        col("event_id"), col("event_type"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
-    val expected = graft.operators.Relational.eventsTransitionMatrix(spark, sfDir)
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getAs[Long]("n")).toMap
-    // replay each user's events in 3 chunks through the state transition
-    val bigrams = scala.collection.mutable.Map[(String, String), Long]()
-    ev.groupBy(_._1).foreach { case (user, rows) =>
-      val ordered = rows.sortBy(r => (r._2, r._3))
-      var st: Option[(Long, Long, String)] = None
-      ordered.grouped(math.max(1, ordered.length / 3 + 1)).foreach { chunk =>
-        val gs = TestGroupState.create[(Long, Long, String)](
-          optionalState = st.map(org.apache.spark.api.java.Optional.of[(Long, Long, String)])
-            .getOrElse(org.apache.spark.api.java.Optional.empty[(Long, Long, String)]()),
-          timeoutConf = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout,
-          batchProcessingTimeMs = 1000L,
-          eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](),
-          hasTimedOut = false)
-        StreamSources.transitionUpdate(user, chunk.iterator, gs).foreach {
-          case (_, f, t) => bigrams((f, t)) = bigrams.getOrElse((f, t), 0L) + 1L
-        }
-        st = Some(gs.get)
-      }
-    }
-    assert(bigrams.toMap == expected,
-      "the streamed bigram feed must count to exactly the batch matrix")
-  }
-
   test("streaming CUSUM end-to-end: level shift accumulates across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, Long, Long)]
