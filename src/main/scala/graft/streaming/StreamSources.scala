@@ -460,84 +460,6 @@ object StreamSources {
         OutputMode.Append, GroupStateTimeout.NoTimeout)(ewmaUpdate)
   }
 
-  /** State transition of the STREAMING CUSUM level-shift monitor —
-    * the bounded-state streaming twin of
-    * [[graft.operators.Relational.eventsCusumShift]], completing the
-    * monitor family (PSI, CMS, EWMA already have twins). The batch
-    * detector's reset-at-zero recursion S_t = max(0, S_{t−1} + x_t)
-    * equals P_t − min(0, min_{j≤t} P_j) over the running deviation sum
-    * P, so the per-key streaming state is just TWO longs — (P, Pmin) —
-    * plus the ≤`calDays` buffered calibration days: the batch twin
-    * scores days 1..calDays retroactively with the calibration mean,
-    * so the stream buffers them (bounded by construction) and emits
-    * the backlog the moment the calibration window closes, after
-    * which state is O(1) forever. Tracking Pmin from 0 (not +∞) bakes
-    * in the batch side's `least(pmin, 0)` clamp exactly.
-    *
-    * Arithmetic is bit-identical to the batch query: mean_milli =
-    * (Σn·1000) DIV calDays, dev = n·1000 − mean − mean DIV 20 (all
-    * nonneg divisions, so Scala `/` == SQL `DIV`), shift at
-    * cusum > 3·mean. Days inside one batch are processed in day
-    * order; cross-batch order is the upstream watermarked window's
-    * closure order, same contract as [[ewmaUpdate]]. */
-  def cusumUpdate(calDays: Int)(key: String,
-      rows: Iterator[(String, Long, Long)],
-      state: GroupState[Array[Long]])
-      : Iterator[(String, Long, Long, Long, Long, Boolean)] = {
-    // state layout: [mean_milli | -1 while calibrating, p, pmin,
-    //                nBuffered, day_1, n_1, ..., day_k, n_k]
-    val st = state.getOption.getOrElse(Array(-1L, 0L, 0L, 0L))
-    var mean = st(0); var p = st(1); var pmin = st(2)
-    val buf = scala.collection.mutable.ArrayBuffer.tabulate(st(3).toInt)(i =>
-      (st(4 + 2 * i), st(5 + 2 * i)))
-    val out =
-      scala.collection.mutable.ArrayBuffer[(String, Long, Long, Long, Long, Boolean)]()
-    def score(day: Long, n: Long): Unit = {
-      p += n * 1000 - mean - mean / 20
-      pmin = math.min(pmin, p)
-      val cusum = p - pmin // pmin ≤ 0 always: it starts at 0
-      out += ((key, day, n, mean, cusum, cusum > 3 * mean))
-    }
-    rows.toSeq.sortBy(_._2).foreach { case (_, day, n) =>
-      if (mean >= 0) score(day, n)
-      else {
-        buf += ((day, n))
-        if (buf.size == calDays) {
-          mean = buf.map(_._2).sum * 1000 / calDays
-          buf.foreach { case (d, c) => score(d, c) }
-          buf.clear()
-        }
-      }
-    }
-    state.update(
-      Array(mean, p, pmin, buf.size.toLong) ++
-        buf.flatMap { case (d, n) => Seq(d, n) })
-    out.iterator
-  }
-
-  /** The streaming CUSUM level-shift monitor over closed (event_type,
-    * day, n) daily counts: O(1) longs of state per key after the
-    * bounded calibration buffer drains — the monitor a 100 TB ingest
-    * runs continuously where [[graft.operators.Relational
-    * .eventsCusumShift]] is the backfill/audit form. Emits exactly the
-    * batch twin's rows for any key whose series reaches `calDays`
-    * days (StreamSubstrateSpec pins stream == batch across
-    * micro-batch boundaries); a shorter series stays buffered — a
-    * stream cannot know the series ended, where the batch query
-    * calibrates on whatever prefix exists. */
-  def cusumShiftStream(daily: Dataset[(String, Long, Long)],
-      calDays: Int = 14)
-      : Dataset[(String, Long, Long, Long, Long, Boolean)] = {
-    implicit val stateEnc: org.apache.spark.sql.Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    implicit val outEnc
-        : org.apache.spark.sql.Encoder[(String, Long, Long, Long, Long, Boolean)] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(String, Long, Long, Long, Long, Boolean)]()
-    daily.groupByKey(_._1)(org.apache.spark.sql.Encoders.STRING)
-      .flatMapGroupsWithState[Array[Long], (String, Long, Long, Long, Long, Boolean)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(cusumUpdate(calDays))
-  }
-
   /** State transition of the STREAMING conversion funnel — the live
     * twin of [[graft.operators.Relational.eventsFunnel]], completing
     * the events family's batch↔stream pairing (transition matrix,

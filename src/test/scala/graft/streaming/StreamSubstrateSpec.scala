@@ -403,59 +403,6 @@ class StreamSubstrateSpec extends AnyFunSuite {
     assert(got == expected, "streaming state transition must replay the batch query exactly")
   }
 
-  test("streaming CUSUM monitor equals the batch twin on replayed daily counts") {
-    import org.apache.spark.sql.streaming.TestGroupState
-    val sfDir = graft.TestSpark.sfDir
-    val calDays = 14
-    val daily = graft.Tables.events(spark, sfDir)
-      .groupBy(col("event_type"), expr("unix_micros(ts) DIV 86400000000").as("day"))
-      .agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    // the batch twin scores every key, calibrating on whatever prefix
-    // exists; the stream only emits keys whose series reached calDays
-    val longKeys = daily.groupBy(_._1).filter(_._2.length >= calDays).keySet
-    assert(longKeys.nonEmpty, "fixture too small: no key reaches calDays")
-    val expected = graft.operators.Relational.eventsCusumShift(spark, sfDir, calDays)
-      .collect().map { r =>
-        (r.getString(0), r.getAs[Long]("day"), r.getAs[Long]("n"),
-          r.getAs[Long]("mean_milli"), r.getAs[Long]("cusum_milli"),
-          r.getAs[Boolean]("is_shift"))
-      }.filter(t => longKeys.contains(t._1)).toSet
-    // replay each key's days through the state transition in 4 chunks
-    // (cross-batch state carry), exactly as micro-batches would deliver
-    val got = daily.groupBy(_._1).flatMap { case (key, rows) =>
-      val ordered = rows.sortBy(_._2)
-      var stateValue: Option[Array[Long]] = None
-      ordered.grouped(math.max(1, ordered.length / 4 + 1)).flatMap { chunk =>
-        val st = TestGroupState.create[Array[Long]](
-          optionalState = stateValue.map(org.apache.spark.api.java.Optional.of[Array[Long]])
-            .getOrElse(org.apache.spark.api.java.Optional.empty[Array[Long]]()),
-          timeoutConf = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout,
-          batchProcessingTimeMs = 1000L,
-          eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](),
-          hasTimedOut = false)
-        val out = StreamSources.cusumUpdate(calDays)(key, chunk.iterator, st).toVector
-        stateValue = Some(st.get)
-        assert(st.get.length <= 4 + 2 * calDays,
-          "state must stay bounded: 4 longs + the calibration buffer")
-        out
-      }
-    }.toSet
-    assert(got == expected,
-      "streaming CUSUM must replay the batch query exactly for calibrated keys")
-    // and a key that never reaches calDays emits nothing, state bounded
-    val shortKey = daily.groupBy(_._1).find(_._2.length < calDays)
-    for ((k, rows) <- shortKey) {
-      val st = TestGroupState.create[Array[Long]](
-        optionalState = org.apache.spark.api.java.Optional.empty[Array[Long]](),
-        timeoutConf = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout,
-        batchProcessingTimeMs = 1000L,
-        eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](),
-        hasTimedOut = false)
-      assert(StreamSources.cusumUpdate(calDays)(k, rows.sortBy(_._2).iterator, st).isEmpty)
-    }
-  }
-
   test("streaming OHLC bars equal the batch bars once windows finalize") {
     implicit val sqlCtx = spark.sqlContext
     val sfDir = graft.TestSpark.sfDir
@@ -494,37 +441,6 @@ class StreamSubstrateSpec extends AnyFunSuite {
       }.toMap
     assert(got == batch,
       s"finalized streaming bars must equal the batch bars (${got.size} vs ${batch.size})")
-  }
-
-  test("streaming CUSUM end-to-end: level shift accumulates across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(String, Long, Long)]
-    val q = StreamSources.cusumShiftStream(input.toDS(), calDays = 3)
-      .toDF("event_type", "day", "n", "mean_milli", "cusum_milli", "is_shift")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("cusum_out").start()
-    // calibration: mean = 100 → slack = mean/20 = 5% → dev(110) = +5000
-    input.addData(("a", 1L, 100L), ("a", 2L, 100L))
-    q.processAllAvailable()
-    assert(spark.sql("select * from cusum_out").count() == 0,
-      "nothing emits until the calibration window closes")
-    input.addData(("a", 3L, 100L)) // closes calibration → backlog emits
-    q.processAllAvailable()
-    // sustained +10%: no single day is a shift, the accumulation is
-    input.addData(("a", 4L, 110L), ("a", 5L, 110L), ("a", 6L, 110L))
-    q.processAllAvailable()
-    input.addData(("a", 7L, 110L), ("a", 8L, 110L))
-    q.processAllAvailable()
-    val rows = spark.sql("select * from cusum_out").collect()
-      .map(r => (r.getLong(1), r.getLong(4), r.getBoolean(5))).sortBy(_._1)
-    q.stop()
-    assert(rows.map(_._1).toSeq == (1L to 8L), s"got ${rows.toSeq}")
-    assert(rows.take(3).forall(r => r._2 == 0L && !r._3),
-      "calibration days have zero deviation here")
-    // dev(110) = 110000 − 100000 − 5000 = +5000/day → cusum ramps
-    assert(rows.drop(3).map(_._2).toSeq == Seq(5000L, 10000L, 15000L, 20000L, 25000L))
-    // threshold 3·mean = 300000 milli = 300k: not yet tripped at day 8
-    assert(rows.forall(!_._3), "a slow +10% drift needs ~60 days to trip 3·mean")
   }
 
   test("streaming EWMA end-to-end: bursts fire across micro-batches") {
