@@ -460,76 +460,6 @@ object StreamSources {
         OutputMode.Append, GroupStateTimeout.NoTimeout)(ewmaUpdate)
   }
 
-  /** State transition of the STREAMING conversion funnel — the live
-    * twin of [[graft.operators.Relational.eventsFunnel]], completing
-    * the events family's batch↔stream pairing (transition matrix,
-    * CUSUM, EWMA, PSI, CMS already have twins). Per-user state is
-    * THREE longs — the locked-in (view_us, click_us, purchase_us),
-    * −1 while unset — and a row emits ONLY when the user's funnel
-    * advances, so the output feed is at most 3 rows per user ever,
-    * and the LAST row per user equals the batch query's row.
-    *
-    * With time-ordered delivery (the [[ewmaUpdate]] contract:
-    * upstream watermarked ordering; in-batch rows are sorted by
-    * (ts, event_id) here) the batch semantics reduce to first-match
-    * locking: the first view fixes view_us = min(view), the first
-    * click inside (view_us, view_us + window] fixes click_us — later,
-    * smaller qualifying clicks cannot exist in event-time order —
-    * and likewise for purchase. */
-  def funnelUpdate(windowUs: Long)(key: Long,
-      rows: Iterator[(Long, Long, Long, String)],
-      state: GroupState[Array[Long]])
-      : Iterator[(Long, Long, Option[Long], Option[Long], Long)] = {
-    val st = state.getOption.getOrElse(Array(-1L, -1L, -1L))
-    var view = st(0); var click = st(1); var purchase = st(2)
-    val out = scala.collection.mutable
-      .ArrayBuffer[(Long, Long, Option[Long], Option[Long], Long)]()
-    // at IDENTICAL timestamps the batch query's >= bounds let a click
-    // (purchase) qualify against a same-instant view (click) no matter
-    // the event-id order — replay that by ranking types at equal ts
-    def typeRank(et: String): Int = et match {
-      case "view" => 0; case "click" => 1; case "purchase" => 2; case _ => 3
-    }
-    rows.toSeq.sortBy(r => (r._2, typeRank(r._4), r._3)).foreach { case (_, us, _, et) =>
-      val changed = et match {
-        case "view" if view < 0 =>
-          view = us; true
-        case "click" if view >= 0 && click < 0 &&
-            us >= view && us <= view + windowUs =>
-          click = us; true
-        case "purchase" if click >= 0 && purchase < 0 &&
-            us >= click && us <= click + windowUs =>
-          purchase = us; true
-        case _ => false
-      }
-      if (changed) {
-        val stage = 1L + (if (click >= 0) 1L else 0L) +
-          (if (purchase >= 0) 1L else 0L)
-        out += ((key, view,
-          if (click >= 0) Some(click) else None,
-          if (purchase >= 0) Some(purchase) else None, stage))
-      }
-    }
-    state.update(Array(view, click, purchase))
-    out.iterator
-  }
-
-  /** The streaming conversion funnel over raw events
-    * `(user_id, ts_micros, event_id, event_type)`: 3 longs of state
-    * per user, append-mode output of funnel ADVANCES only. */
-  def funnelStream(events: Dataset[(Long, Long, Long, String)],
-      windowUs: Long = 3600L * 1000000L)
-      : Dataset[(Long, Long, Option[Long], Option[Long], Long)] = {
-    implicit val stateEnc: org.apache.spark.sql.Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    implicit val outEnc
-        : org.apache.spark.sql.Encoder[(Long, Long, Option[Long], Option[Long], Long)] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Long, Long, Option[Long], Option[Long], Long)]()
-    events.groupByKey(_._1)(org.apache.spark.sql.Encoders.scalaLong)
-      .flatMapGroupsWithState[Array[Long], (Long, Long, Option[Long], Option[Long], Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(funnelUpdate(windowUs))
-  }
-
   /** Cross-batch distinct-count sketch per key: the STREAMING twin of
     * the batch `kmv_sketch` aggregate ([[graft.plans.KmvSketch]]) —
     * e.g. "distinct users per event type so far" refreshed every

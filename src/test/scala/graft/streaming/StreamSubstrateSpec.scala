@@ -538,71 +538,4 @@ class CheckpointRecoverySpec extends AnyFunSuite {
     q2.stop()
     assert(results.size == 5, s"expected no reprocessing, got ${results.size}")
   }
-
-  test("streaming funnel replays the batch funnel exactly across chunked batches") {
-    import org.apache.spark.sql.streaming.TestGroupState
-    val sfDir = graft.TestSpark.sfDir
-    val ev = graft.Tables.events(spark, sfDir)
-      .select(col("user_id"), expr("unix_micros(ts)").as("tsu"),
-        col("event_id"), col("event_type"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
-    val expected = graft.operators.Relational.eventsFunnel(spark, sfDir)
-      .collect()
-      .map(r => r.getAs[Long]("user_id") ->
-        ((r.getAs[Long]("view_us"),
-          Option(r.getAs[java.lang.Long]("click_us")).map(_.longValue),
-          Option(r.getAs[java.lang.Long]("purchase_us")).map(_.longValue),
-          r.getAs[Int]("stage").toLong))).toMap
-    val windowUs = 3600L * 1000000L
-    // replay each user's events in 3 time-ordered chunks; the LAST
-    // emitted row per user must equal the batch row
-    val got = scala.collection.mutable.Map[Long, (Long, Option[Long], Option[Long], Long)]()
-    ev.groupBy(_._1).foreach { case (user, rows) =>
-      val ordered = rows.sortBy(r => (r._2, r._3))
-      var st: Option[Array[Long]] = None
-      ordered.grouped(math.max(1, ordered.length / 3 + 1)).foreach { chunk =>
-        val gs = TestGroupState.create[Array[Long]](
-          optionalState = st.map(org.apache.spark.api.java.Optional.of[Array[Long]])
-            .getOrElse(org.apache.spark.api.java.Optional.empty[Array[Long]]()),
-          timeoutConf = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout,
-          batchProcessingTimeMs = 1000L,
-          eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](),
-          hasTimedOut = false)
-        StreamSources.funnelUpdate(windowUs)(user, chunk.iterator, gs).foreach {
-          case (u, v, c, p, s) => got(u) = (v, c, p, s)
-        }
-        st = Some(gs.get)
-        assert(gs.get.length == 3, "funnel state is exactly 3 longs")
-      }
-    }
-    assert(got.toMap == expected,
-      "last streamed funnel row per user must equal the batch funnel")
-  }
-
-  test("streaming funnel end-to-end: advances emit across micro-batches, no regressions") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, Long, Long, String)]
-    val q = StreamSources.funnelStream(input.toDS(), windowUs = 1000L)
-      .toDF("user_id", "view_us", "click_us", "purchase_us", "stage")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("funnel_out").start()
-    input.addData((7L, 100L, 1L, "click")) // pre-view click: ignored
-    q.processAllAvailable()
-    assert(spark.sql("select * from funnel_out").count() == 0)
-    input.addData((7L, 200L, 2L, "view"), (7L, 300L, 3L, "click"))
-    q.processAllAvailable()
-    input.addData((7L, 5000L, 4L, "purchase")) // outside click+1000: no advance
-    q.processAllAvailable()
-    input.addData((7L, 1200L, 5L, "purchase")) // late data: within window
-    q.processAllAvailable()
-    val rows = spark.sql("select * from funnel_out").collect()
-      .map(r => (r.getLong(4), r.getLong(1),
-        if (r.isNullAt(2)) -1L else r.getLong(2),
-        if (r.isNullAt(3)) -1L else r.getLong(3))).sortBy(_._1)
-    q.stop()
-    assert(rows.map(_._1).toSeq == Seq(1L, 2L, 3L), s"got ${rows.toSeq}")
-    assert(rows.last == (3L, 200L, 300L, 1200L),
-      "the stage-3 row carries the locked view/click/purchase instants")
-  }
 }
