@@ -406,60 +406,6 @@ object StreamSources {
       graft.plans.KmvBuffer.estimate(k, minima))
   }
 
-  /** Geometric EWMA weights shared bit-for-bit with the batch twin
-    * ([[graft.operators.Relational.eventsEwmaAnomaly]]): α = 1/4 over
-    * a 7-entry horizon as the exact integers 3^(j−1)·4^(7−j). */
-  val EwmaWeights: Array[Long] =
-    Array.tabulate(7)(j => math.pow(3, j).toLong * math.pow(4, 6 - j).toLong)
-
-  /** State transition of the STREAMING EWMA burst monitor — the
-    * bounded-state streaming twin of
-    * [[graft.operators.Relational.eventsEwmaAnomaly]] (same pairing
-    * discipline as windowedCms ↔ sketch_cms_heavy): per event-type
-    * key the state is the ≤7 most recent closed daily counts
-    * (most-recent-first ring), each arriving day is scored against
-    * the weighted history with the SAME integer arithmetic as the
-    * batch query (exact weights, milli EWMA by integer division,
-    * burst = n·W > 2·S), then pushed into the ring. Days inside one
-    * batch are processed in day order; cross-batch order is the
-    * upstream windowed count's closure order (watermark-monotone).
-    * Exposed for direct `TestGroupState` specs like
-    * [[dedupTtlUpdate]]/[[kmvUpdate]]. */
-  def ewmaUpdate(key: String, rows: Iterator[(String, Long, Long)],
-      state: GroupState[Array[Long]])
-      : Iterator[(String, Long, Long, Option[Long], Boolean)] = {
-    val hist = scala.collection.mutable.ArrayBuffer(
-      state.getOption.getOrElse(Array.empty[Long]).toSeq: _*)
-    val out = rows.toSeq.sortBy(_._2).map { case (et, day, n) =>
-      val recent = hist.take(7)
-      val w = recent.indices.map(EwmaWeights).sum
-      val s = recent.zipWithIndex.map { case (c, i) => c * EwmaWeights(i) }.sum
-      val ewma = if (w > 0) Some(s * 1000 / w) else None
-      val burst = w > 0 && n * w > 2 * s
-      hist.insert(0, n)
-      if (hist.size > 7) hist.remove(7, hist.size - 7)
-      (et, day, n, ewma, burst)
-    }
-    state.update(hist.toArray)
-    out.iterator
-  }
-
-  /** The streaming EWMA burst monitor over a stream of closed
-    * (event_type, day, n) daily counts (the output of a watermarked
-    * daily window upstream): O(7) longs of state per key — the
-    * monitor a 100 TB ingest runs continuously where the batch twin
-    * is the backfill/audit form. */
-  def ewmaBurstStream(daily: Dataset[(String, Long, Long)])
-      : Dataset[(String, Long, Long, Option[Long], Boolean)] = {
-    implicit val stateEnc: org.apache.spark.sql.Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    implicit val outEnc: org.apache.spark.sql.Encoder[(String, Long, Long, Option[Long], Boolean)] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(String, Long, Long, Option[Long], Boolean)]()
-    daily.groupByKey(_._1)(org.apache.spark.sql.Encoders.STRING)
-      .flatMapGroupsWithState[Array[Long], (String, Long, Long, Option[Long], Boolean)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(ewmaUpdate)
-  }
-
   /** Cross-batch distinct-count sketch per key: the STREAMING twin of
     * the batch `kmv_sketch` aggregate ([[graft.plans.KmvSketch]]) —
     * e.g. "distinct users per event type so far" refreshed every

@@ -366,43 +366,6 @@ class StreamSubstrateSpec extends AnyFunSuite {
     assert(rows("shift")._3 > 10 * math.max(1L, math.abs(rows("stable")._3)))
   }
 
-  test("streaming EWMA burst monitor equals the batch twin on replayed daily counts") {
-    import org.apache.spark.sql.streaming.TestGroupState
-    val sfDir = graft.TestSpark.sfDir
-    // the batch twin's own input: per-(type, day) counts
-    val daily = graft.Tables.events(spark, sfDir)
-      .groupBy(col("event_type"), expr("unix_micros(ts) DIV 86400000000").as("day"))
-      .agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    val expected = graft.operators.Relational.eventsEwmaAnomaly(spark, sfDir)
-      .collect().map { r =>
-        (r.getString(0), r.getAs[Long]("day"), r.getAs[Long]("n"),
-          if (r.isNullAt(r.fieldIndex("ewma_milli"))) None
-          else Some(r.getAs[Long]("ewma_milli")),
-          r.getAs[Boolean]("is_burst"))
-      }.toSet
-    // replay each key's days through the state transition in 3 chunks
-    // (cross-batch state carry), exactly as micro-batches would deliver
-    val got = daily.groupBy(_._1).flatMap { case (_, rows) =>
-      val ordered = rows.sortBy(_._2)
-      var stateValue: Option[Array[Long]] = None
-      ordered.grouped(math.max(1, ordered.length / 3 + 1)).flatMap { chunk =>
-        val st = TestGroupState.create[Array[Long]](
-          optionalState = stateValue.map(org.apache.spark.api.java.Optional.of[Array[Long]])
-            .getOrElse(org.apache.spark.api.java.Optional.empty[Array[Long]]()),
-          timeoutConf = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout,
-          batchProcessingTimeMs = 1000L,
-          eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](),
-          hasTimedOut = false)
-        val out = StreamSources.ewmaUpdate("k", chunk.iterator, st).toVector
-        stateValue = Some(st.get)
-        assert(st.get.length <= 7, "ring must stay bounded at the horizon")
-        out
-      }
-    }.toSet
-    assert(got == expected, "streaming state transition must replay the batch query exactly")
-  }
-
   test("streaming OHLC bars equal the batch bars once windows finalize") {
     implicit val sqlCtx = spark.sqlContext
     val sfDir = graft.TestSpark.sfDir
@@ -441,26 +404,6 @@ class StreamSubstrateSpec extends AnyFunSuite {
       }.toMap
     assert(got == batch,
       s"finalized streaming bars must equal the batch bars (${got.size} vs ${batch.size})")
-  }
-
-  test("streaming EWMA end-to-end: bursts fire across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(String, Long, Long)]
-    val q = StreamSources.ewmaBurstStream(input.toDS())
-      .toDF("event_type", "day", "n", "ewma_milli", "is_burst")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("ewma_out").start()
-    input.addData(("a", 1L, 100L), ("a", 2L, 100L), ("a", 3L, 100L))
-    q.processAllAvailable()
-    input.addData(("a", 4L, 500L)) // 5x the EWMA -> burst
-    q.processAllAvailable()
-    val rows = spark.sql("select * from ewma_out").collect()
-      .map(r => (r.getLong(1), r.isNullAt(3), r.getBoolean(4))).sortBy(_._1)
-    q.stop()
-    assert(rows.map(_._1).toSeq == Seq(1L, 2L, 3L, 4L))
-    assert(rows.head._2, "first day has no history")
-    assert(!rows(1)._3 && !rows(2)._3, "steady days are not bursts")
-    assert(rows(3)._3, "the 5x day must trip the burst flag")
   }
 
   test("mapGroupsWithState dedups keys across micro-batches") {
