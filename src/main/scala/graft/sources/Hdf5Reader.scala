@@ -25,11 +25,16 @@ import graft.sources.NexusTree.{NexusDataset, NexusGroup, NexusNode}
   * Out of scope (not present in the fixtures): chunked/filtered data,
   * compound/enum/reference types, shared messages, dense attributes.
   * Unreadable datasets become absent nodes rather than failures — the
-  * engine's F11 failure tolerance applies at extraction time.
+  * engine's F11 failure tolerance applies at extraction time. A dataset
+  * whose dims claim more than its stored bytes hold fails the whole
+  * file as `parse:` before any decode, so hostile counts cost neither
+  * time nor heap.
   */
 object Hdf5Reader {
 
-  final case class Hdf5Error(msg: String) extends Exception(msg)
+  /** `corrupt`: the file contradicts itself (a dataset claims more than
+    * it stores), so the whole file fails rather than only that node. */
+  final case class Hdf5Error(msg: String, corrupt: Boolean = false) extends Exception(msg)
 
   def read(path: String): NexusGroup = {
     val p = Paths.get(path)
@@ -61,7 +66,8 @@ object Hdf5Reader {
     *    (ref: _open_h5file retries OSError/BlockingIOError,
     *    src/scicat_nexus_helper.py:14-59);
     *  - `too_large:` over the in-memory reader's 2 GiB guard — NOT the
-    *    same as corrupt, and logged distinctly (VERDICT r3 #4);
+    *    same as corrupt, and logged distinctly, so a file this reader
+    *    cannot hold is never taken for a damaged one;
     *  - `not_hdf5:` magic-byte probe failed — any extension is
     *    attempted (the reference opens any path via h5py), garbage is
     *    rejected after an 8-byte read;
@@ -289,7 +295,11 @@ object Hdf5Reader {
       val children = links.result().sortBy(_._1).flatMap { case (name, hdr) =>
         // F11 degrade: a child whose header uses unsupported features
         // becomes an absent node; its siblings still resolve
-        scala.util.Try(readNodeAt(hdr, seen)).toOption.flatten.map(name -> _)
+        try readNodeAt(hdr, seen).map(name -> _)
+        catch {
+          case e: Hdf5Error if e.corrupt => throw e
+          case scala.util.control.NonFatal(_) => None
+        }
       }
       NexusGroup(children)
     }
@@ -548,14 +558,36 @@ object Hdf5Reader {
       for {
         t <- dt
         d <- dims
-        (off, _) <- dataAt
+        (off, len) <- dataAt
       } yield {
+        checkExtent(t, d, off, len)
         val value = d match {
           case None => decodeElement(t, off)
           case Some(ds) => decodeArray(t, off, ds)
         }
         NexusDataset(value, attrs.result())
       }
+    }
+
+    /** Fails closed before a decode whose output the stored bytes do
+      * not back: the element size must be positive, the extent
+      * [off, off + len) must lie in the file, dims × element size must
+      * fit in `len`, and the nested lists above the elements (which a
+      * zero-length dim leaves empty) may not outnumber the file's
+      * bytes. So a dataset decodes to at most one value per stored
+      * byte, whatever its header claims. */
+    private def checkExtent(t: Dt, dims: Option[Vector[Long]], off: Int, len: Long): Unit = {
+      def bad(why: String): Nothing = throw Hdf5Error(s"dataset @ $off: $why", corrupt = true)
+      val ds = dims.getOrElse(Vector.empty)
+      if (t.size <= 0) bad(s"element size ${t.size}")
+      if (len < 0 || off < 0 || off.toLong + len > buf.limit()) bad(s"extent $len outside the file")
+      if (ds.exists(_ < 0)) bad(s"negative dim in $ds")
+      val (bytes, lists) =
+        try (Math.multiplyExact(ds.foldLeft(1L)(Math.multiplyExact), t.size.toLong),
+          ds.dropRight(1).scanLeft(1L)(Math.multiplyExact).foldLeft(0L)(Math.addExact))
+        catch { case _: ArithmeticException => bad(s"dims $ds overflow") }
+      if (bytes > len) bad(s"dims $ds need $bytes bytes, $len stored")
+      if (lists > buf.limit()) bad(s"dims $ds nest more lists than the file has bytes")
     }
 
     private def decodeArray(t: Dt, off: Int, dims: Vector[Long]): PyValue = {

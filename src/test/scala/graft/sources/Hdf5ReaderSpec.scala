@@ -1,9 +1,13 @@
 package graft.sources
 
+import java.nio.{ByteBuffer, ByteOrder}
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.PyLiteral._
 import graft.sources.NexusTree.{NexusDataset, NexusGroup}
+import perfbench.Hdf5Writer
+import perfbench.Hdf5Writer.{Data, Group}
 
 /** Tests for the pure-JVM HDF5 reader.
   *
@@ -30,6 +34,23 @@ class Hdf5ReaderSpec extends AnyFunSuite {
 
   private def str(root: NexusGroup, path: String): String =
     NexusTree.readString(root, path).getOrElse(fail(s"missing $path"))
+
+  /** A one-dataset int64 file holding `value`, patched so its datatype
+    * claims `elemSize`-byte elements and its first dim claims `firstDim`;
+    * the stored data stays what the writer wrote. */
+  private def claiming(value: PyValue, rank: Int, elemSize: Int, firstDim: Long): Array[Byte] = {
+    val b = Hdf5Writer.write(Group(Vector("x" -> Data(value))))
+    def at(pattern: Int*): Int = {
+      val p = pattern.map(_.toByte)
+      val i = b.indexOfSlice(p)
+      assert(i >= 0 && b.lastIndexOfSlice(p) == i, s"pattern $pattern not unique")
+      i
+    }
+    val bb = ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN)
+    bb.putInt(at(0x10, 0x08, 0, 0, 8, 0, 0, 0) + 4, elemSize)
+    bb.putLong(at(1, rank, 0, 0, 0, 0, 0, 0, 1, 0, 0, 0, 0, 0, 0, 0) + 8, firstDim)
+    b
+  }
 
   test("small-ymir: scalar datasets at the imsc schema's NXS paths") {
     assume(Hdf5Fixtures.present(ymir), s"$ymir not present")
@@ -126,6 +147,60 @@ class Hdf5ReaderSpec extends AnyFunSuite {
     assert(Hdf5Reader.readClassified(big.toString).swap.exists(_.startsWith("too_large:")),
       "a merely-too-big file must NOT read as corrupt")
     assert(Hdf5Reader.readClassified(anyYmir).isRight)
+
+    // dims that claim more than the stored bytes hold fail closed, fast:
+    // a zero-size element type, a dim past the 8 stored bytes, and a
+    // zero-length inner dim under a huge outer one (empty lists only)
+    val one = PyList(Vector(PyInt(7L)))
+    val hollow = PyList(Vector(PyList(Vector.empty)))
+    val claims = Seq(
+      "zero-size x 1000" -> claiming(one, 1, 0, 1000L),
+      "zero-size x 400M" -> claiming(one, 1, 0, 400000000L),
+      "8-byte x 1000" -> claiming(one, 1, 8, 1000L),
+      "400M x 0" -> claiming(hollow, 2, 8, 400000000L))
+    for ((name, bytes) <- claims) {
+      val f = dir.resolve(s"claim-${name.replaceAll("\\W", "_")}.hdf")
+      java.nio.file.Files.write(f, bytes)
+      val t0 = System.nanoTime()
+      val got = Hdf5Reader.readClassified(f.toString)
+      val ms = (System.nanoTime() - t0) / 1000000
+      assert(got.swap.exists(_.startsWith("parse:")), s"$name: $got")
+      assert(ms < 1000, s"$name took $ms ms")
+    }
+  }
+
+  test("writer -> reader round trip: seeded random trees read back as written") {
+    // ranks 0-3 with zero-length dims, int64/float64/fixed/vlen strings,
+    // compact and contiguous layouts: every file the writer produces
+    // passes the reader's extent check and decodes to its input
+    val rnd = new scala.util.Random(20261019L)
+    def text(): String =
+      Seq("", "Søren", "a \"q\" C:\\d\n", rnd.alphanumeric.take(rnd.nextInt(20)).mkString)(rnd.nextInt(4))
+    def scalar(kind: Int): PyValue = kind match {
+      case 0 => PyInt(rnd.nextLong())
+      case 1 => PyFloat(rnd.nextGaussian() * math.pow(10, rnd.nextInt(40) - 20))
+      case _ => PyStr(text())
+    }
+    def array(dims: List[Int], kind: Int): PyValue = dims match {
+      case Nil => scalar(kind)
+      case n :: rest => PyList(Vector.fill(n)(array(rest, kind)))
+    }
+    def data(): Data = {
+      val kind = rnd.nextInt(4) // int64, float64, fixed string, vlen string
+      val dims = List.fill(rnd.nextInt(4))(rnd.nextInt(4))
+      val attrs = if (rnd.nextBoolean()) Map("units" -> text()) else Map.empty[String, String]
+      Data(array(dims, kind), attrs, vlen = kind == 3, compact = rnd.nextBoolean())
+    }
+    def group(depth: Int): Group = Group(Vector.tabulate(rnd.nextInt(5)) { i =>
+      s"n$i" -> (if (depth < 2 && rnd.nextInt(3) == 0) group(depth + 1) else data())
+    })
+    val dir = java.nio.file.Files.createTempDirectory("graft_hdf5rt")
+    for (i <- 0 until 200) {
+      val tree = group(0)
+      val f = dir.resolve(s"t$i.hdf")
+      java.nio.file.Files.write(f, Hdf5Writer.write(tree))
+      assert(Hdf5Reader.read(f.toString) == Hdf5Writer.toNexusRoot(tree), s"tree $i: $tree")
+    }
   }
 
   test("any extension is attempted: magic bytes decide, not the file name") {
