@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 
 import graft.catalog.LocalCatalog
 import graft.functions.DslCasts._
-import graft.schema.ImscSchema
+import graft.schema.{ConfigValue, ImscSchema}
 import graft.schema.ImscSchema._
 import graft.sources.{NexusExtractor, NexusTree}
 import TemplateCompiler.Registry
@@ -113,12 +113,16 @@ object ImscCompiler {
           case Left(err) => errors += (name -> err)
           case Right(urlCol) =>
             val catalog = ctx.catalog
+            // a JSON string field arrives as its text, any other value as
+            // its compact JSON; the cast layer types it from there
             val lookupUdf = udf((url: String, field: String) =>
-              if (url == null) None else catalog.lookupJson(url, field))
-            val rawJson = lookupUdf(urlCol.value.cast("string"), lit(v.field))
-            // response JSON → typed value via the cast layer (string in)
-            val asString = when(rawJson.rlike("^\"(.*)\"$"),
-              regexp_extract(rawJson, "^\"([\\s\\S]*)\"$", 1)).otherwise(rawJson)
+              if (url == null) None
+              else catalog.lookupJson(url, field).map { json =>
+                if (!json.startsWith("\"")) json
+                else Try(ConfigValue.fromJson(json)).toOption
+                  .collect { case ConfigValue.CStr(text) => text }.getOrElse(json)
+              })
+            val asString = lookupUdf(urlCol.value.cast("string"), lit(v.field))
             val converted = CastCompiler.cast(
               VarCol(asString, lit(""), Some(DString)), v.valueType)
             reg = reg + (name -> converted)

@@ -179,31 +179,37 @@ class ImscCompilerSpec extends AnyFunSuite {
   }
 
   test("SC variable: catalog lookup with field projection (J1)") {
-    val catalog = LocalCatalog(Map(
-      "proposals/123456" -> """{"title": "Test Proposal", "pi": "Dr. X"}"""))
-    val scSchema = ImscSchema.fromYamlOrJson(
-      """order: 1
-        |id: sc-test
-        |name: SC Test
-        |instrument: graft-test
-        |selector: '*'
-        |variables:
-        |  proposal_id:
-        |    source: NXS
-        |    path: /entry/experiment_identifier
-        |    value_type: string
-        |  proposal_title:
-        |    source: SC
-        |    url: proposals/<proposal_id>
-        |    field: title
-        |    value_type: string
-        |schema: {}
-        |""".stripMargin)
-    import spark.implicits._
-    val df = Seq(("/f.nxs", nexusJson)).toDF("data_file_path", "nexus_json")
-    val compiled = ImscCompiler.compile(scSchema, ImscCompiler.Context(catalog = catalog))
-    val row = compiled(df).collect()(0)
-    assert(vu(row, "proposal_title") == (("Test Proposal", "")))
+    // a plain title, and one whose quote, backslash and newline must
+    // arrive as the catalog's text, not as its JSON escapes
+    val escaped = "a \"quoted\" C:\\dir\nsecond line"
+    for ((doc, title) <- Seq(
+        """{"title": "Test Proposal", "pi": "Dr. X"}""" -> "Test Proposal",
+        """{"title": "a \"quoted\" C:\\dir\nsecond line"}""" -> escaped)) {
+      val catalog = LocalCatalog(Map("proposals/123456" -> doc))
+      val scSchema = ImscSchema.fromYamlOrJson(
+        """order: 1
+          |id: sc-test
+          |name: SC Test
+          |instrument: graft-test
+          |selector: '*'
+          |variables:
+          |  proposal_id:
+          |    source: NXS
+          |    path: /entry/experiment_identifier
+          |    value_type: string
+          |  proposal_title:
+          |    source: SC
+          |    url: proposals/<proposal_id>
+          |    field: title
+          |    value_type: string
+          |schema: {}
+          |""".stripMargin)
+      import spark.implicits._
+      val df = Seq(("/f.nxs", nexusJson)).toDF("data_file_path", "nexus_json")
+      val compiled = ImscCompiler.compile(scSchema, ImscCompiler.Context(catalog = catalog))
+      val row = compiled(df).collect()(0)
+      assert(vu(row, "proposal_title") == ((title, "")))
+    }
   }
 
   test("NXS extraction: every value_type keeps its typed value") {
