@@ -25,6 +25,11 @@
   - stacked_docs: the number of scaladoc blocks under the source root
     that end on the line directly above another `/**` block, so they
     document no definition;
+  - narrating_comments: the number of comment lines under the source
+    root that name a review round or a change rather than explain the
+    code (`\br[0-9]{1,2}\b`, `round [0-9]`, `PR [0-9]`, `VERDICT`,
+    `ADVICE`); string literals, such as SQL aliases `r0`/`r1`, do not
+    count;
 plus the three counts. Only call sites count: a key named in a comment or a
 logger name is not a knob.
 
@@ -58,8 +63,8 @@ def texts(top, exts):
 
 def reads(top):
     """(graft keys, env vars) read at call sites under `top`, its lines,
-    and its stacked scaladoc blocks."""
-    keys, envs, lines, stacked = set(), set(), 0, 0
+    its stacked scaladoc blocks and its narrating comment lines."""
+    keys, envs, lines, stacked, narrating = set(), set(), 0, 0, 0
     for text in texts(top, (".scala", ".java")):
         lines += text.count("\n")
         keys.update(CONF.findall(text))
@@ -67,25 +72,38 @@ def reads(top):
         rows = [r.strip() for r in text.split("\n")]
         stacked += sum(a.endswith("*/") and b.startswith("/**")
                        for a, b in zip(rows, rows[1:]))
-    return keys, envs, lines, stacked
+        narrating += sum(bool(NARRATING.search(row)) for m, is_comment in tokens(text)
+                         if is_comment for row in m.group().split("\n"))
+    return keys, envs, lines, stacked, narrating
 
 
 LITERAL = re.compile(r'"""(?:.|\n)*?"""+|"(?:\\.|[^"\\\n])*"|\'(?:\\.|[^\\\'\n])\'')
 COMMENT = re.compile(r'//[^\n]*|/\*(?:.|\n)*?\*/')
+NARRATING = re.compile(r'\br[0-9]{1,2}\b|round [0-9]|PR [0-9]|VERDICT|ADVICE')
+
+
+def tokens(text):
+    """The string/char literals and comments of `text` in order, each as
+    (match, is_comment): a comment opener inside a literal is literal."""
+    i = 0
+    while True:
+        lit, com = LITERAL.search(text, i), COMMENT.search(text, i)
+        first = min((m for m in (lit, com) if m), key=lambda m: m.start(), default=None)
+        if first is None:
+            return
+        yield first, first is com
+        i = first.end()
 
 
 def strip_comments(text):
     """`text` with every comment blanked to spaces (newlines kept, so line
     numbers still hold); string and char literals are kept as they are."""
     out, i = [], 0
-    while True:
-        lit, com = LITERAL.search(text, i), COMMENT.search(text, i)
-        first = min((m for m in (lit, com) if m), key=lambda m: m.start(), default=None)
-        if first is None:
-            return "".join(out) + text[i:]
-        out.append(text[i:first.start()])
-        out.append(first.group() if first is lit else re.sub(r"[^\n]", " ", first.group()))
-        i = first.end()
+    for m, is_comment in tokens(text):
+        out.append(text[i:m.start()])
+        out.append(re.sub(r"[^\n]", " ", m.group()) if is_comment else m.group())
+        i = m.end()
+    return "".join(out) + text[i:]
 
 
 TOP_OBJECT = re.compile(r'(?:(?:private\[\w+\]|final|case)\s+)*object\s+(\w+)')
@@ -177,10 +195,10 @@ def is_code_path(name):
     return os.path.isdir(seg) or os.path.isfile(seg + ".scala")
 
 
-keys, envs, lines, stacked = reads(root)
+keys, envs, lines, stacked, narrating = reads(root)
 read_names = set()
 for s in ("main", "test"):
-    k, e, _, _ = reads(os.path.join(repo, "src", s))
+    k, e, _, _, _ = reads(os.path.join(repo, "src", s))
     read_names |= k | e
 with open(os.path.join(repo, "README.md"), encoding="utf-8") as fh:
     docs = [fh.read()]
@@ -198,4 +216,5 @@ print(json.dumps({
     "stale": stale,
     "test_only": only, "n_test_only": len(only),
     "stacked_docs": stacked,
+    "narrating_comments": narrating,
 }))
