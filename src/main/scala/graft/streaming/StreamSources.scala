@@ -105,18 +105,6 @@ object StreamSources {
         Seq(bootstrapServers), topics, securityOptions, maxOffsetsPerTrigger))
       .load()
 
-  /** Event-time tumbling-window aggregation with a watermark — the
-    * streaming form of the batch `tumbling_window` query (§2.7
-    * substrate; the reference itself needs no windows). */
-  def windowedCounts(events: DataFrame, watermark: String = "10 minutes",
-      window_ : String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"), col("total_value"))
-
   /** STREAMING OHLC BARS — the live twin of
     * [[graft.operators.Relational.eventsOhlcHourly]]: one watermarked
     * event-time tumbling window per (hour, type), open/close resolved

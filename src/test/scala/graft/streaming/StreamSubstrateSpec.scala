@@ -21,31 +21,6 @@ class StreamSubstrateSpec extends AnyFunSuite {
   import TestSpark.spark
   import spark.implicits._
 
-  test("watermarked tumbling window aggregates event time (append mode)") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, String, Double)]
-    val agg = StreamSources.windowedCounts(
-      input.toDF().toDF("ts", "event_type", "value"),
-      watermark = "5 minutes", window_ = "1 hour")
-    val q = agg.writeStream.outputMode("append")
-      .format("memory").queryName("win_out").start()
-
-    def ts(s: String) = Timestamp.valueOf(s)
-    input.addData(
-      (ts("2024-01-01 10:05:00"), "click", 1.0),
-      (ts("2024-01-01 10:45:00"), "click", 2.0),
-      (ts("2024-01-01 10:50:00"), "view", 3.0))
-    q.processAllAvailable()
-    // advance event time past the watermark so the 10:00 window closes
-    input.addData((ts("2024-01-01 12:30:00"), "click", 1.0))
-    q.processAllAvailable()
-    val rows = spark.sql("select * from win_out").collect()
-    q.stop()
-    val clicks = rows.find(r => r.getAs[String]("event_type") == "click")
-    assert(clicks.isDefined && clicks.get.getAs[Long]("n") == 2)
-    assert(clicks.get.getAs[Double]("total_value") == 3.0)
-  }
-
   test("watermarked SESSION windows merge by gap and close past the watermark") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Timestamp, Long)]
