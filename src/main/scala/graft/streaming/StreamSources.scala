@@ -105,34 +105,6 @@ object StreamSources {
         Seq(bootstrapServers), topics, securityOptions, maxOffsetsPerTrigger))
       .load()
 
-  /** STREAMING OHLC BARS — the live twin of
-    * [[graft.operators.Relational.eventsOhlcHourly]]: one watermarked
-    * event-time tumbling window per (hour, type), open/close resolved
-    * by the SAME lexicographic struct min/max over (µs, event_id,
-    * cents) the batch query uses, so a finalized bar is bit-identical
-    * to the batch bar. Structured Streaming's stateful HashAggregate
-    * carries the struct extremes exactly like max(): a few longs per
-    * open bar, evicted by the watermark.
-    *
-    * Input frame needs (ts timestamp, event_type, event_id, value). */
-  def ohlcStream(events: DataFrame, watermark: String = "10 minutes",
-      window_ : String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .withColumn("us", unix_micros(col("ts")))
-      .withColumn("cents", expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
-      .groupBy(window(col("ts"), window_), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        min(struct(col("us"), col("event_id"), col("cents")))
-          .getField("cents").as("open_cents"),
-        max(col("cents")).as("high_cents"),
-        min(col("cents")).as("low_cents"),
-        max(struct(col("us"), col("event_id"), col("cents")))
-          .getField("cents").as("close_cents"))
-      .select(col("window.start").as("bar_start"), col("event_type"),
-        col("n"), col("open_cents"), col("high_cents"), col("low_cents"),
-        col("close_cents"))
-
   /** Windowed PSI drift gate — the streaming twin of
     * [[graft.operators.Relational.eventsDriftPsi]]: each event-time
     * tumbling window's `value` histogram is compared against a STATIC

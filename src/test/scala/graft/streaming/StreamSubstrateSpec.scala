@@ -341,46 +341,6 @@ class StreamSubstrateSpec extends AnyFunSuite {
     assert(rows("shift")._3 > 10 * math.max(1L, math.abs(rows("stable")._3)))
   }
 
-  test("streaming OHLC bars equal the batch bars once windows finalize") {
-    implicit val sqlCtx = spark.sqlContext
-    val sfDir = graft.TestSpark.sfDir
-    // replay the real events through a MemoryStream in 3 ts-ordered
-    // chunks + a far-future terminator to close every window
-    val ev = graft.Tables.events(spark, sfDir)
-      .select(col("ts"), col("event_type"), col("event_id"), col("value"))
-      .collect()
-      .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3)))
-      .sortBy(_._1.getTime)
-    val input = MemoryStream[(Timestamp, String, Long, Double)]
-    val q = StreamSources.ohlcStream(
-        input.toDF().toDF("ts", "event_type", "event_id", "value"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("ohlc_out").start()
-    ev.grouped(math.max(1, ev.length / 3 + 1)).foreach { chunk =>
-      input.addData(chunk.toIndexedSeq: _*)
-      q.processAllAvailable()
-    }
-    input.addData((new Timestamp(ev.last._1.getTime + 86400000L), "zz", -1L, 0.0))
-    q.processAllAvailable()
-    val got = spark.sql("select * from ohlc_out").collect()
-      .filter(_.getString(1) != "zz")
-      .map { r =>
-        (r.getTimestamp(0).getTime / 3600000L, r.getString(1)) ->
-          ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)))
-      }.toMap
-    q.stop()
-    val batch = graft.operators.Relational.eventsOhlcHourly(spark, sfDir)
-      .collect().map { r =>
-        // batch hr is epoch-µs DIV 3600000000 = the same hour index
-        (r.getAs[Long]("hr"), r.getAs[String]("event_type")) ->
-          ((r.getAs[Long]("n"), r.getAs[Long]("open_cents"),
-            r.getAs[Long]("high_cents"), r.getAs[Long]("low_cents"),
-            r.getAs[Long]("close_cents")))
-      }.toMap
-    assert(got == batch,
-      s"finalized streaming bars must equal the batch bars (${got.size} vs ${batch.size})")
-  }
-
   test("mapGroupsWithState dedups keys across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, String)]
