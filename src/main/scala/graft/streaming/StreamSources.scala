@@ -105,70 +105,6 @@ object StreamSources {
         Seq(bootstrapServers), topics, securityOptions, maxOffsetsPerTrigger))
       .load()
 
-  /** Windowed PSI drift gate — the streaming twin of
-    * [[graft.operators.Relational.eventsDriftPsi]]: each event-time
-    * tumbling window's `value` histogram is compared against a STATIC
-    * calibration histogram (`baseline`: sparse `(event_type, bin,
-    * c_base)` rows from a batch calibration run, the CCNet-constants
-    * pattern again), emitting `psi_micro` per (window, event_type) as
-    * the window finalizes. Fires the same integer-exact math as the
-    * batch gate: Laplace-smoothed shares, portable log2, no libm.
-    *
-    * Shape: ONE stateful aggregation (state = open windows × types ×
-    * `bins` conditional counters — bounded, evicted by the watermark);
-    * the per-bin histogram is built with `bins` conditional sums so no
-    * chained streaming aggregation is needed, and the PSI fold runs in
-    * the post-aggregation projection over the dense bin arrays
-    * (stream-static left join on event_type only). `vmin`/`vmax` are
-    * calibration constants, broadcast by construction. */
-  def windowedPsi(events: DataFrame, baseline: DataFrame,
-      vmin: Double, vmax: Double,
-      watermark: String = "10 minutes", window_ : String = "1 hour",
-      bins: Int = 10): DataFrame = {
-    // dense per-type base-count array from the sparse calibration rows
-    val base = baseline.groupBy(col("event_type"))
-      .agg(map_from_entries(collect_list(
-        struct(col("bin"), col("c_base")))).as("m"))
-      .select(col("event_type"),
-        expr(s"transform(sequence(0L, ${bins - 1}L), b -> " +
-          "coalesce(element_at(m, b), 0L))").as("base_arr"))
-    val binned = events.withWatermark("ts", watermark)
-      .select(col("ts"), col("event_type"),
-        least(greatest(floor(((col("value") - vmin) * bins) /
-          (vmax - vmin)).cast("long"), lit(0L)), lit(bins - 1L)).as("bin"))
-    val hist = binned
-      .groupBy(window(col("ts"), window_), col("event_type"))
-      .agg(array((0 until bins).map(b =>
-        sum(when(col("bin") === b, 1L).otherwise(0L))): _*).as("curr_arr"))
-    // the same smoothed-integer PSI as the batch gate, folded over the
-    // dense arrays in fixed bin order (s.x is inlined thrice by the
-    // portable log2 — the struct field stands in for a named column)
-    val fold =
-      "aggregate(" +
-        "transform(zip_with(curr_arr, base_arr, (c, b) -> struct(c, b)), s -> " +
-        s"named_struct('pm', (s.c + 1L) * 1000000L DIV (n_curr + $bins), " +
-        s"'qm', (s.b + 1L) * 1000000L DIV (n_base + $bins), " +
-        s"'x', greatest((s.c + 1L) * (n_base + $bins) * ${1L << 20}L DIV " +
-        s"((s.b + 1L) * (n_curr + $bins)), 1L))), " +
-        "0L, (acc, s) -> acc + (s.pm - s.qm) * " +
-        s"((${plogStruct}) - 20000000L) DIV 1000000L)"
-    hist.join(base, Seq("event_type"), "left")
-      .withColumn("n_curr",
-        expr("aggregate(curr_arr, 0L, (acc, c) -> acc + c)"))
-      .withColumn("n_base",
-        expr("aggregate(coalesce(base_arr, array_repeat(0L, " + bins + ")), " +
-          "0L, (acc, b) -> acc + b)"))
-      .withColumn("base_arr",
-        coalesce(col("base_arr"), expr(s"array_repeat(0L, $bins)")))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n_curr"), col("n_base"), expr(fold).as("psi_micro"))
-  }
-
-  /** [[graft.operators.TextAnalysis.plog2MicroSql]] over the fold
-    * struct's `s.x` (a field reference is as inlinable as a column). */
-  private def plogStruct: String =
-    graft.operators.TextAnalysis.plog2MicroSql("s.x")
-
   /** Windowed Count-Min heavy-hitter sketch — the streaming twin of
     * [[graft.operators.Sketches.cmsHeavyHitters]]: per event-time
     * tumbling window, the d×w counter matrix built as a plain

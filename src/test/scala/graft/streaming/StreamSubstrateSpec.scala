@@ -287,60 +287,6 @@ class StreamSubstrateSpec extends AnyFunSuite {
     assert(estCold >= 1L)
   }
 
-  test("windowed PSI: stream gate equals an independent integer recount") {
-    implicit val sqlCtx = spark.sqlContext
-    // independent reimplementation of the portable integer PSI
-    def plog2Micro(x: Long): Long = {
-      val e = 63 - java.lang.Long.numberOfLeadingZeros(x)
-      e * 1000000L + ((x - (1L << e)) * 1000000L) / (1L << e)
-    }
-    def psiOf(curr: Seq[Long], base: Seq[Long]): Long = {
-      val nC = curr.sum; val nB = base.sum
-      curr.zip(base).map { case (c, b) =>
-        val pm = (c + 1) * 1000000L / (nC + 10)
-        val qm = (b + 1) * 1000000L / (nB + 10)
-        val x = math.max(
-          (c + 1) * (nB + 10) * 1048576L / ((b + 1) * (nC + 10)), 1L)
-        (pm - qm) * (plog2Micro(x) - 20000000L) / 1000000L
-      }.sum
-    }
-
-    // calibration: "shift" type historically lived in bins 0-1,
-    // "stable" spread over bins 0-4 (vmin=0, vmax=100 → bin = value/10)
-    val baseline = Seq(
-      ("shift", 0L, 20L), ("shift", 1L, 20L),
-      ("stable", 0L, 8L), ("stable", 1L, 8L), ("stable", 2L, 8L),
-      ("stable", 3L, 8L), ("stable", 4L, 8L))
-      .toDF("event_type", "bin", "c_base")
-    val input = MemoryStream[(Timestamp, String, Double)]
-    val psi = StreamSources.windowedPsi(
-      input.toDF().toDF("ts", "event_type", "value"), baseline,
-      vmin = 0.0, vmax = 100.0, watermark = "5 minutes", window_ = "1 hour")
-    val q = psi.writeStream.outputMode("append")
-      .format("memory").queryName("psi_out").start()
-    def ts(s: String) = Timestamp.valueOf(s)
-    // window 10:00-11:00: "shift" now lands in bins 8-9, "stable" stays
-    val shifted = (0 until 20).map(i => (ts("2024-01-01 10:05:00"), "shift", 85.0 + (i % 2) * 10))
-    val stable = (0 until 20).map(i => (ts("2024-01-01 10:06:00"), "stable", (i % 5) * 10.0 + 5))
-    input.addData(shifted ++ stable: _*)
-    q.processAllAvailable()
-    input.addData((ts("2024-01-01 12:30:00"), "late", 1.0)) // close the window
-    q.processAllAvailable()
-    val rows = spark.sql("select * from psi_out").collect()
-      .map(r => r.getAs[String]("event_type") ->
-        (r.getAs[Long]("n_curr"), r.getAs[Long]("n_base"), r.getAs[Long]("psi_micro"))).toMap
-    q.stop()
-
-    val shiftCurr = Seq(0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 10L, 10L)
-    val shiftBase = Seq(20L, 20L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L)
-    val stableCurr = Seq(4L, 4L, 4L, 4L, 4L, 0L, 0L, 0L, 0L, 0L)
-    val stableBase = Seq(8L, 8L, 8L, 8L, 8L, 0L, 0L, 0L, 0L, 0L)
-    assert(rows("shift") == ((20L, 40L, psiOf(shiftCurr, shiftBase))))
-    assert(rows("stable") == ((20L, 40L, psiOf(stableCurr, stableBase))))
-    // and the gate actually separates: shifted type far above stable
-    assert(rows("shift")._3 > 10 * math.max(1L, math.abs(rows("stable")._3)))
-  }
-
   test("mapGroupsWithState dedups keys across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, String)]
