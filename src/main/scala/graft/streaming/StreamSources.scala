@@ -105,29 +105,6 @@ object StreamSources {
         Seq(bootstrapServers), topics, securityOptions, maxOffsetsPerTrigger))
       .load()
 
-  /** Windowed Count-Min heavy-hitter sketch — the streaming twin of
-    * [[graft.operators.Sketches.cmsHeavyHitters]]: per event-time
-    * tumbling window, the d×w counter matrix built as a plain
-    * watermarked streaming aggregation. State is BOUNDED at d·w
-    * counters per open window no matter how many distinct keys stream
-    * through — the top-talkers monitor that cannot OOM on a key
-    * explosion (a per-key streaming count would); the watermark
-    * finalizes and evicts each window's matrix. Cells use the portable
-    * md5-48 salt, so stream and batch sketches are identical on
-    * identical input. Output rows ARE the sketch: estimate any key
-    * downstream as `min` over its d cells. */
-  def windowedCms(events: DataFrame, keyCol: String = "key",
-      watermark: String = "10 minutes", window_ : String = "1 hour",
-      depth: Int = 4, width: Int = 1024): DataFrame =
-    events.withWatermark("ts", watermark)
-      .select(col("ts"), col(keyCol).cast("string").as("k"),
-        explode(array((0 until depth).map(lit): _*)).as("d"))
-      .withColumn("c", pmod(graft.functions.PortableHash.md5Hash48(
-        concat(col("d").cast("string"), lit(":"), col("k"))), lit(width.toLong)))
-      .groupBy(window(col("ts"), window_), col("d"), col("c"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("d"), col("c"), col("n"))
-
   /** Event-time SESSION windows with a watermark — the streaming twin
     * of the batch `sub_sessionize` query (gap-based windows are the one
     * window family `window()` can't express; Spark's `session_window`

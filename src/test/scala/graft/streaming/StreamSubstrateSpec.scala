@@ -251,42 +251,6 @@ class StreamSubstrateSpec extends AnyFunSuite {
     assert(rows.contains(("b", 1, 5L, 1.0))) // not full → exact
   }
 
-  test("windowed CMS: stream sketch equals batch arithmetic, state bounded by d*w") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, String)]
-    val cms = StreamSources.windowedCms(
-      input.toDF().toDF("ts", "key"),
-      watermark = "5 minutes", window_ = "1 hour", depth = 4, width = 64)
-    val q = cms.writeStream.outputMode("append")
-      .format("memory").queryName("cms_out").start()
-
-    def ts(s: String) = Timestamp.valueOf(s)
-    // one hot key (5 hits) + cold keys inside the 10:00 window
-    val keys = Seq.fill(5)("hot") ++ (1 to 7).map(i => s"cold$i")
-    input.addData(keys.map(k => (ts("2024-01-01 10:07:00"), k)): _*)
-    q.processAllAvailable()
-    input.addData((ts("2024-01-01 12:30:00"), "later")) // close the window
-    q.processAllAvailable()
-    val rows = spark.sql("select * from cms_out").collect()
-      .map(r => ((r.getAs[Int]("d"), r.getAs[Long]("c")), r.getAs[Long]("n"))).toMap
-    q.stop()
-
-    // the finalized matrix is bounded by d*w whatever streamed through
-    assert(rows.nonEmpty && rows.size <= 4 * 64)
-    // estimate(hot) via the same portable cells, computed in batch
-    def cells(k: String): Seq[(Int, Long)] = {
-      val df = (0 until 4).toDF("d").select(col("d"),
-        pmod(graft.functions.PortableHash.md5Hash48(
-          concat(col("d").cast("string"), lit(":"), lit(k))), lit(64L)).as("c"))
-      df.collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-    }
-    val estHot = cells("hot").map(dc => rows.getOrElse(dc, 0L)).min
-    assert(estHot >= 5L, s"CMS must never undercount the hot key: $estHot")
-    assert(estHot <= 12L, "estimate cannot exceed the window's row count")
-    val estCold = cells("cold1").map(dc => rows.getOrElse(dc, 0L)).min
-    assert(estCold >= 1L)
-  }
-
   test("mapGroupsWithState dedups keys across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, String)]
