@@ -105,21 +105,6 @@ object StreamSources {
         Seq(bootstrapServers), topics, securityOptions, maxOffsetsPerTrigger))
       .load()
 
-  /** Event-time SESSION windows with a watermark — the streaming twin
-    * of the batch `sub_sessionize` query (gap-based windows are the one
-    * window family `window()` can't express; Spark's `session_window`
-    * merges rows whose gaps stay under the timeout). State per open
-    * session is bounded by the watermark: sessions older than the
-    * delay finalize and evict. */
-  def sessionWindows(events: DataFrame, gap: String = "30 minutes",
-      watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"), col("user_id"), col("n_events"))
-
   /** Watermarked STREAM-STREAM interval join — the streaming twin of
     * the batch range join ([[graft.operators.Temporal.rangeJoinBinned]]
     * / RangeJoinRule): every `right` row of the same user within

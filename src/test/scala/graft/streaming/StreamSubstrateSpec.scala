@@ -21,32 +21,6 @@ class StreamSubstrateSpec extends AnyFunSuite {
   import TestSpark.spark
   import spark.implicits._
 
-  test("watermarked SESSION windows merge by gap and close past the watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, Long)]
-    val agg = StreamSources.sessionWindows(
-      input.toDF().toDF("ts", "user_id"), gap = "30 minutes", watermark = "5 minutes")
-    val q = agg.writeStream.outputMode("append")
-      .format("memory").queryName("sess_out").start()
-
-    def ts(s: String) = Timestamp.valueOf(s)
-    input.addData(
-      (ts("2024-01-01 10:00:00"), 1L), // session A…
-      (ts("2024-01-01 10:20:00"), 1L), // …merges (gap 20m < 30m)
-      (ts("2024-01-01 11:30:00"), 1L), // new session (gap 70m)
-      (ts("2024-01-01 10:00:00"), 2L))
-    q.processAllAvailable()
-    input.addData((ts("2024-01-01 14:00:00"), 99L)) // advance watermark
-    q.processAllAvailable()
-    val rows = spark.sql("select * from sess_out").collect()
-    q.stop()
-    val u1 = rows.filter(_.getAs[Long]("user_id") == 1L)
-      .map(r => (r.getAs[Timestamp]("session_start").toString,
-        r.getAs[Long]("n_events"))).sortBy(_._1)
-    assert(u1.toSeq == Seq(("2024-01-01 10:00:00.0", 2L), ("2024-01-01 11:30:00.0", 1L)))
-    assert(rows.count(_.getAs[Long]("user_id") == 2L) == 1)
-  }
-
   test("stream-stream interval join matches the batch inequality join") {
     implicit val sqlCtx = spark.sqlContext
     def ts(s: String) = Timestamp.valueOf(s)
