@@ -105,27 +105,6 @@ object StreamSources {
         Seq(bootstrapServers), topics, securityOptions, maxOffsetsPerTrigger))
       .load()
 
-  /** Watermarked STREAM-STREAM interval join — the streaming twin of
-    * the batch range join ([[graft.operators.Temporal.rangeJoinBinned]]
-    * / RangeJoinRule): every `right` row of the same user within
-    * `[left.ts - lookback, left.ts]` of a `left` row, both sides
-    * unbounded streams. The time-bound condition is what makes the
-    * state BOUNDED: each side buffers only rows younger than
-    * watermark + lookback, and Spark evicts the rest — without the
-    * bound a stream-stream join must retain one side forever. Output
-    * rows appear once both watermarks pass the match window (append
-    * mode). Column contract: `left` carries (ts, user_id, …), `right`
-    * carries (r_ts, r_user_id, …) — disjoint names, callers pre-rename. */
-  def intervalJoinStreams(left: DataFrame, right: DataFrame,
-      lookback: String = "10 minutes",
-      watermark: String = "5 minutes"): DataFrame = {
-    val l = left.withWatermark("ts", watermark)
-    val r = right.withWatermark("r_ts", watermark)
-    l.join(r, col("user_id") === col("r_user_id") &&
-      col("r_ts") >= col("ts") - expr(s"INTERVAL $lookback") &&
-      col("r_ts") <= col("ts"))
-  }
-
   /** Cross-batch keyed dedup via mapGroupsWithState: first occurrence of
     * each key passes, replays are dropped — the stateful form of the F6
     * dedup gate for streams without a queryable catalog. State is one

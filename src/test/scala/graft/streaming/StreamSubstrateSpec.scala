@@ -21,53 +21,6 @@ class StreamSubstrateSpec extends AnyFunSuite {
   import TestSpark.spark
   import spark.implicits._
 
-  test("stream-stream interval join matches the batch inequality join") {
-    implicit val sqlCtx = spark.sqlContext
-    def ts(s: String) = Timestamp.valueOf(s)
-    val errIn = MemoryStream[(Timestamp, Long, Double)]
-    val clkIn = MemoryStream[(Timestamp, Long, Double)]
-    val joined = StreamSources.intervalJoinStreams(
-      errIn.toDF().toDF("ts", "user_id", "err_value"),
-      clkIn.toDF().toDF("r_ts", "r_user_id", "click_value"),
-      lookback = "10 minutes", watermark = "5 minutes")
-    val q = joined.writeStream.outputMode("append")
-      .format("memory").queryName("ssj_out").start()
-
-    val errs = Seq(
-      (ts("2024-01-01 10:10:00"), 1L, 1.0),
-      (ts("2024-01-01 10:10:00"), 2L, 3.0),
-      (ts("2024-01-01 10:30:00"), 1L, 2.0))
-    val clks = Seq(
-      (ts("2024-01-01 10:01:00"), 1L, 10.0), // within 10m of u1 err 10:10
-      (ts("2024-01-01 10:05:00"), 2L, 40.0), // within 10m of u2 err 10:10
-      (ts("2024-01-01 09:30:00"), 1L, 30.0), // too old for both
-      (ts("2024-01-01 10:25:00"), 1L, 20.0), // within 10m of u1 err 10:30
-      (ts("2024-01-01 10:12:00"), 2L, 50.0)) // AFTER the u2 error: out
-    // roughly-ordered delivery split across micro-batches (the u2 error
-    // arrives a batch after its matching click — cross-batch buffering),
-    // then disjoint users advance both watermarks to flush
-    errIn.addData(errs.take(1)); clkIn.addData(clks.take(3))
-    q.processAllAvailable()
-    errIn.addData(errs.drop(1)); clkIn.addData(clks.drop(3))
-    q.processAllAvailable()
-    errIn.addData((ts("2024-01-01 12:00:00"), 98L, 0.0))
-    clkIn.addData((ts("2024-01-01 12:00:00"), 99L, 0.0))
-    q.processAllAvailable()
-    val streamed = spark.sql("select user_id, err_value, click_value from ssj_out")
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSet
-    q.stop()
-    // batch twin: plain inequality join over the same rows
-    val be = errs.toDF("ts", "user_id", "err_value")
-    val bc = clks.toDF("r_ts", "r_user_id", "click_value")
-    val batch = be.join(bc, col("user_id") === col("r_user_id") &&
-        col("r_ts") >= col("ts") - expr("INTERVAL 10 minutes") &&
-        col("r_ts") <= col("ts"))
-      .select("user_id", "err_value", "click_value")
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSet
-    assert(streamed == batch, s"stream=$streamed batch=$batch")
-    assert(batch == Set((1L, 1.0, 10.0), (1L, 2.0, 20.0), (2L, 3.0, 40.0)))
-  }
-
   test("dropDuplicatesWithinWatermark: in-window replays drop, state evicts past the watermark") {
     implicit val sqlCtx = spark.sqlContext
     def ts(s: String) = Timestamp.valueOf(s)
