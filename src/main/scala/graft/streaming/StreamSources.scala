@@ -105,126 +105,6 @@ object StreamSources {
         Seq(bootstrapServers), topics, securityOptions, maxOffsetsPerTrigger))
       .load()
 
-  /** Cross-batch keyed dedup via mapGroupsWithState: first occurrence of
-    * each key passes, replays are dropped — the stateful form of the F6
-    * dedup gate for streams without a queryable catalog. State is one
-    * boolean per key; a production deployment bounds it with
-    * `GroupStateTimeout.ProcessingTimeTimeout` + `setTimeoutDuration`
-    * (a TTL keeps the keyed store from growing unboundedly at 100 TB —
-    * omitted here because a pending timeout keeps test micro-batches
-    * scheduling forever under `processAllAvailable`). */
-  def statefulDedup[T](
-      keyed: Dataset[(String, T)])(implicit te: org.apache.spark.sql.Encoder[T],
-      oe: org.apache.spark.sql.Encoder[Option[T]]): Dataset[Option[T]] = {
-    implicit val boolEnc: org.apache.spark.sql.Encoder[Boolean] =
-      org.apache.spark.sql.Encoders.scalaBoolean
-    keyed.groupByKey(_._1)(org.apache.spark.sql.Encoders.STRING)
-      .mapGroupsWithState[Boolean, Option[T]](GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[(String, T)], state: GroupState[Boolean]) =>
-          if (state.exists) None // replay → dropped
-          else {
-            state.update(true)
-            rows.buffered.headOption.map(_._2)
-          }
-      }
-  }
-
-  /** The TTL'd form of [[statefulDedup]]'s state update, for a
-    * `mapGroupsWithState` under `GroupStateTimeout.ProcessingTimeTimeout`:
-    * keyed store size is bounded by (arrival rate × TTL) instead of
-    * growing with every key ever seen. Specs drive it directly through
-    * Spark's public `TestGroupState` (a live query with pending
-    * timeouts never quiesces under `processAllAvailable`). Semantics: first occurrence passes and arms the TTL;
-    * replays inside the TTL drop; when the key times out its state is
-    * evicted, so a LATER replay is re-admitted — the bounded-memory
-    * trade-off, backstopped by the F6/F7 catalog dedup which is not
-    * time-bounded. */
-  def dedupTtlUpdate[T](
-      rows: Iterator[(String, T)],
-      state: GroupState[Boolean],
-      ttlMs: Long): Option[T] = {
-    if (state.hasTimedOut) { state.remove(); None }
-    else if (state.exists) None
-    else {
-      state.update(true)
-      state.setTimeoutDuration(ttlMs)
-      rows.buffered.headOption.map(_._2)
-    }
-  }
-
-  /** EVENT-TIME-bounded streaming dedup via the built-in
-    * `dropDuplicatesWithinWatermark` — the third point on the repo's
-    * dedup-state spectrum: [[statefulDedup]] (unbounded state, exact),
-    * [[dedupTtlUpdate]] (processing-time TTL, bounded by arrival
-    * rate × TTL), and this (EVENT-time bound, bounded by event-time
-    * skew × rate — the right bound when replays cluster around the
-    * original event, which is what Kafka redelivery and job retries
-    * produce: a retry carries the ORIGINAL event timestamp, so however
-    * late it ARRIVES it lands inside the original's watermark window
-    * and is dropped, where a processing-time TTL would have expired).
-    * State for a key is evicted once the watermark passes its event
-    * time + delay; a duplicate with an event time older than the
-    * watermark is dropped BY THE WATERMARK itself on arrival, so
-    * within one run the output is exactly-once for same-event-time
-    * replays — the residual risk is only a replay carrying a NEWER
-    * event time than the original (not a replay, a new event, by
-    * event-time semantics). Backstopped by the F6/F7 catalog dedup
-    * like the TTL variant.
-    *
-    * `eventTimeCol` must be a TimestampType column; `keys` must NOT
-    * include it (the operator matches on keys, the watermark bounds
-    * the state). */
-  def dedupWithinWatermark(df: DataFrame, eventTimeCol: String,
-      delay: String, keys: Seq[String]): DataFrame =
-    df.withWatermark(eventTimeCol, delay)
-      .dropDuplicatesWithinWatermark(keys)
-
-  /** First-occurrence dedup on the Spark 4 `transformWithState` API —
-    * the production twin of [[dedupTtlUpdate]]: the TTL is DECLARED
-    * (`TTLConfig`) instead of hand-armed timers, and the operator runs
-    * on the RocksDB state store (`stateStore.providerClass` must point
-    * at RocksDBStateStoreProvider — transformWithState requires it),
-    * which is also what bounds state at 100 TB: the keyed store spills
-    * off-heap and TTL'd entries vacuum out without a timer per key.
-    *
-    * `ttl = None` runs in `TimeMode.None` (state bounded only by the
-    * checkpoint). With a TTL the operator runs in ProcessingTime mode,
-    * where Spark schedules a follow-up micro-batch after EVERY batch to
-    * advance eviction — correct for the always-on daemon, but a test
-    * (or any drain-and-stop run) never idles: `processAllAvailable`
-    * and even `Trigger.AvailableNow` loop forever (observed: 440+
-    * batches over two input rows). */
-  class FirstSeenProcessor(ttl: Option[java.time.Duration])
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, (String, String), String] {
-    @transient private var seen: org.apache.spark.sql.streaming.ValueState[Boolean] = _
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      val ttlConf = ttl.map(org.apache.spark.sql.streaming.TTLConfig(_))
-        .getOrElse(org.apache.spark.sql.streaming.TTLConfig.NONE)
-      seen = getHandle.getValueState[Boolean]("seen",
-        org.apache.spark.sql.Encoders.scalaBoolean, ttlConf)
-    }
-    override def handleInputRows(key: String, rows: Iterator[(String, String)],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[String] = {
-      if (seen.exists()) Iterator.empty // replay inside the TTL: dropped
-      else {
-        seen.update(true)
-        rows.take(1).map(_._2) // first occurrence passes
-      }
-    }
-  }
-
-  def statefulDedupTws(keyed: Dataset[(String, String)],
-      ttl: Option[java.time.Duration] = None): Dataset[String] = {
-    implicit val se: org.apache.spark.sql.Encoder[String] =
-      org.apache.spark.sql.Encoders.STRING
-    val timeMode =
-      if (ttl.isDefined) org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
-      else org.apache.spark.sql.streaming.TimeMode.None()
-    keyed.groupByKey(_._1)(org.apache.spark.sql.Encoders.STRING)
-      .transformWithState(new FirstSeenProcessor(ttl), timeMode, OutputMode.Append())
-  }
-
   /** The state-update for [[streamingKmv]], visible so specs drive it
     * through `TestGroupState`: fold the batch's hashes into the key's
     * ≤k minima and emit the refreshed (k_used, kth_min, estimate).

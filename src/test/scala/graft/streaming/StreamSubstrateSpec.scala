@@ -21,116 +21,6 @@ class StreamSubstrateSpec extends AnyFunSuite {
   import TestSpark.spark
   import spark.implicits._
 
-  test("dropDuplicatesWithinWatermark: in-window replays drop, state evicts past the watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    def ts(s: String) = Timestamp.valueOf(s)
-    val input = MemoryStream[(Timestamp, String, String)]
-    val out = StreamSources.dedupWithinWatermark(
-      input.toDF().toDF("ts", "job_id", "payload"),
-      eventTimeCol = "ts", delay = "10 minutes", keys = Seq("job_id"))
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("wm_dedup_out").start()
-
-    // batch 1: original + same-batch replay + a second key
-    input.addData(
-      (ts("2024-01-01 10:00:00"), "job-1", "original"),
-      (ts("2024-01-01 10:00:00"), "job-1", "same-batch replay"),
-      (ts("2024-01-01 10:01:00"), "job-2", "other key"))
-    q.processAllAvailable()
-    // batch 2: cross-batch replay while job-1 is still inside the window
-    input.addData((ts("2024-01-01 10:02:00"), "job-1", "cross-batch replay"))
-    q.processAllAvailable()
-    // batch 3: advance the watermark far past 10:00 + delay -> evicts state
-    input.addData((ts("2024-01-01 11:00:00"), "job-3", "advance watermark"))
-    q.processAllAvailable()
-    val stateRows = q.lastProgress.stateOperators.head.numRowsTotal
-    // batch 4: a "replay" carrying an event time BEYOND the watermark is
-    // admitted again (state was evicted; by event-time semantics this is
-    // a new event — the documented bounded-state trade)
-    input.addData((ts("2024-01-01 11:05:00"), "job-1", "post-eviction"))
-    q.processAllAvailable()
-    val rows = spark.sql("select job_id, payload from wm_dedup_out").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
-    q.stop()
-    assert(rows == Set(
-      ("job-1", "original"), ("job-2", "other key"),
-      ("job-3", "advance watermark"), ("job-1", "post-eviction")),
-      s"got $rows")
-    // bounded store: job-1/job-2 evicted once the watermark passed them
-    assert(stateRows <= 2, s"state not evicted: $stateRows rows retained")
-  }
-
-  test("TTL'd dedup state: first passes + arms TTL, replay drops, timeout evicts") {
-    import org.apache.spark.sql.streaming.TestGroupState
-    // first occurrence: passes, state armed with the TTL
-    val fresh = TestGroupState.create[Boolean](
-      optionalState = org.apache.spark.api.java.Optional.empty[Boolean](), timeoutConf = org.apache.spark.sql.streaming
-        .GroupStateTimeout.ProcessingTimeTimeout,
-      batchProcessingTimeMs = 1000L, eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](), hasTimedOut = false)
-    val out = StreamSources.dedupTtlUpdate(
-      Iterator(("job-1", "payload")), fresh, ttlMs = 60000L)
-    assert(out.contains("payload"))
-    assert(fresh.get && fresh.getTimeoutTimestampMs.isPresent)
-    assert(fresh.getTimeoutTimestampMs.get() == 61000L) // now + ttl
-
-    // replay inside the TTL: dropped
-    val seen = TestGroupState.create[Boolean](
-      optionalState = org.apache.spark.api.java.Optional.of(true), timeoutConf = org.apache.spark.sql.streaming
-        .GroupStateTimeout.ProcessingTimeTimeout,
-      batchProcessingTimeMs = 2000L, eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](), hasTimedOut = false)
-    assert(StreamSources.dedupTtlUpdate(
-      Iterator(("job-1", "replay")), seen, 60000L).isEmpty)
-
-    // TTL expiry: state evicted (bounded store), nothing emitted
-    val expired = TestGroupState.create[Boolean](
-      optionalState = org.apache.spark.api.java.Optional.of(true), timeoutConf = org.apache.spark.sql.streaming
-        .GroupStateTimeout.ProcessingTimeTimeout,
-      batchProcessingTimeMs = 100000L, eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](), hasTimedOut = true)
-    assert(StreamSources.dedupTtlUpdate(
-      Iterator.empty[(String, String)], expired, 60000L).isEmpty)
-    assert(expired.isRemoved)
-  }
-
-  test("transformWithState dedup: replay drops ACROSS query restarts (RocksDB)") {
-    // TimeMode.None so drain-and-stop runs terminate (see the operator
-    // scaladoc: with a TTL, ProcessingTime mode schedules a follow-up
-    // batch after every batch and never idles). Two AvailableNow runs
-    // over one checkpoint prove the stronger property — the RocksDB
-    // keyed state SURVIVES a query restart.
-    implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ckpt = java.nio.file.Files.createTempDirectory("tws_ckpt").toString
-    try {
-      val input = MemoryStream[(String, String)]
-      val out = StreamSources.statefulDedupTws(input.toDS())
-      // foreachBatch, not the memory sink: only fault-tolerant sinks
-      // may resume from a checkpoint, and restart-survival is the point
-      val got = new ConcurrentLinkedQueue[String]()
-      def runOnce(): Set[String] = {
-        got.clear()
-        val q = out.writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[String], _: Long) =>
-            batch.collect().foreach(got.add)
-          }.start()
-        assert(q.awaitTermination(120000), "AvailableNow run must terminate")
-        scala.jdk.CollectionConverters.CollectionHasAsScala(got).asScala.toSet
-      }
-      input.addData(("job-1", "payload-1"), ("job-2", "payload-2"))
-      assert(runOnce() == Set("payload-1", "payload-2"))
-      input.addData(("job-1", "replay"), ("job-3", "payload-3"))
-      assert(runOnce() == Set("payload-3")) // replay dropped
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   test("streaming KMV: cross-batch fold == single-pass batch sketch") {
     import org.apache.spark.sql.streaming.TestGroupState
     val batch1 = Seq(900L, 100L, 500L, 100L)
@@ -176,23 +66,6 @@ class StreamSubstrateSpec extends AnyFunSuite {
     val aFinal = rows.filter(_._1 == "a").maxBy(r => -r._3) // smallest kth = latest
     assert(aFinal == (("a", 2, 20L, graft.plans.KmvBuffer.estimate(2, Array(10L, 20L)))))
     assert(rows.contains(("b", 1, 5L, 1.0))) // not full → exact
-  }
-
-  test("mapGroupsWithState dedups keys across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(String, String)]
-    val deduped = StreamSources.statefulDedup(input.toDS())
-    val q = deduped.filter(_.isDefined).map(_.get)
-      .writeStream.outputMode(OutputMode.Update)
-      .format("memory").queryName("dedup_out").start()
-
-    input.addData(("job-1", "a"), ("job-2", "b"))
-    q.processAllAvailable()
-    input.addData(("job-1", "a-replay"), ("job-3", "c")) // job-1 replayed
-    q.processAllAvailable()
-    val got = spark.sql("select * from dedup_out").collect().map(_.getString(0)).sorted
-    q.stop()
-    assert(got.toSeq == Seq("a", "b", "c")) // replay dropped
   }
 
   test("throughput: 300 wrdn messages end-to-end well above 1 msg/s") {
