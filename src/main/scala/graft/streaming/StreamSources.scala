@@ -1,10 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Streaming source constructors and stateful substrate.
+/** The Kafka source of the streaming ingestor.
   *
   * [[fromKafka]] is the production wiring of S1
   * (ref: build_consumer, src/scicat_kafka.py:54-71): bootstrap +
@@ -104,39 +102,4 @@ object StreamSources {
       .options(kafkaSourceOptions(
         Seq(bootstrapServers), topics, securityOptions, maxOffsetsPerTrigger))
       .load()
-
-  /** The state-update for [[streamingKmv]], visible so specs drive it
-    * through `TestGroupState`: fold the batch's hashes into the key's
-    * ≤k minima and emit the refreshed (k_used, kth_min, estimate).
-    * State is the ascending minima array — O(k) longs per key, the
-    * same bound the batch aggregate puts on its shuffle — and folding
-    * through [[graft.plans.KmvBuffer]] makes stream and batch sketches
-    * identical on identical input (spec-pinned). */
-  def kmvUpdate(key: String, k: Int, hashes: Iterator[Long],
-      state: GroupState[Array[Long]]): (String, Int, Long, Double) = {
-    val buf = new graft.plans.KmvBuffer(k)
-    if (state.exists) state.get.foreach(buf.add)
-    hashes.foreach(buf.add)
-    val minima = buf.toArray
-    state.update(minima)
-    (key, minima.length, if (minima.isEmpty) 0L else minima.last,
-      graft.plans.KmvBuffer.estimate(k, minima))
-  }
-
-  /** Cross-batch distinct-count sketch per key: the STREAMING twin of
-    * the batch `kmv_sketch` aggregate ([[graft.plans.KmvSketch]]) —
-    * e.g. "distinct users per event type so far" refreshed every
-    * micro-batch in update mode, without keeping the distinct set
-    * itself in the state store. Input: (key, portable-hash) pairs. */
-  def streamingKmv(keyed: Dataset[(String, Long)], k: Int = 64): Dataset[(String, Int, Long, Double)] = {
-    implicit val stateEnc: org.apache.spark.sql.Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    implicit val outEnc: org.apache.spark.sql.Encoder[(String, Int, Long, Double)] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(String, Int, Long, Double)]()
-    keyed.groupByKey(_._1)(org.apache.spark.sql.Encoders.STRING)
-      .mapGroupsWithState[Array[Long], (String, Int, Long, Double)](GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[(String, Long)], state: GroupState[Array[Long]]) =>
-          kmvUpdate(key, k, rows.map(_._2), state)
-      }
-  }
 }
