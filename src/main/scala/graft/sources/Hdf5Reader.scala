@@ -71,14 +71,9 @@ object Hdf5Reader {
     *  - `not_hdf5:` magic-byte probe failed — any extension is
     *    attempted (the reference opens any path via h5py), garbage is
     *    rejected after an 8-byte read;
-    *  - `parse:` real HDF5 signature but undecodable content. */
+    *  - `parse:` real HDF5 signature but undecodable content.
+    * Right holds the tree in the engine's JSON tree encoding. */
   def readClassified(path: String): Either[String, String] =
-    readTreeClassified(path).map(toJson)
-
-  /** Same failure classification as [[readClassified]] but yields the
-    * parsed tree — the [[Hdf5DataSource]] scan path, which needs nodes,
-    * not their JSON encoding. */
-  def readTreeClassified(path: String): Either[String, NexusGroup] =
     try {
       if (path == null) return Left("io: null path")
       val p = Paths.get(path)
@@ -91,7 +86,7 @@ object Hdf5Reader {
       val n = try in.read(head) finally in.close()
       if (n < 8 || !java.util.Arrays.equals(head, Magic))
         return Left("not_hdf5: missing HDF5 signature")
-      Right(read(path))
+      Right(toJson(read(path)))
     } catch {
       case e: Hdf5Error => Left(s"parse: ${e.msg}")
       case e: java.io.IOException => Left(s"io: ${e.getMessage}")

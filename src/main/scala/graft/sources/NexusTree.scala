@@ -10,12 +10,11 @@ import graft.schema.ConfigValue._
   *
   * The pure-JVM [[Hdf5Reader]] decodes HDF5 files into these nodes; it
   * is the ingest stream's default `fileReader`, which renders each tree
-  * in the engine's JSON tree encoding, and the `graft-hdf5` DSv2 source
-  * ([[Hdf5DataSource]]) scans the nodes directly. [[NexusTree.fromJson]]
-  * parses that encoding back once per file for the typed extraction;
-  * fixtures and the streaming tests write it by hand. The extraction semantics — wildcard path
-  * expansion, scalar squeeze, unit attributes — are tested against the
-  * reference's fixture goldens.
+  * in the engine's JSON tree encoding. [[NexusTree.fromJson]] parses
+  * that encoding back once per file for the typed extraction; fixtures
+  * and the streaming tests write it by hand. The extraction semantics —
+  * wildcard path expansion, scalar squeeze, unit attributes — are
+  * tested against the reference's fixture goldens.
   */
 object NexusTree {
 
