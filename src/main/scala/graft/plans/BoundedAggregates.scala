@@ -147,15 +147,6 @@ final class KmvBuffer(val k: Int) {
   }
 }
 
-object KmvBuffer {
-  /** KMV estimator over the 48-bit portable-hash space: exact when the
-    * sketch is not full (it then holds EVERY distinct hash), else
-    * (k-1)·2^48 / kth-minimum. */
-  def estimate(k: Int, minima: Array[Long]): Double =
-    if (minima.length < k) minima.length.toDouble
-    else (k - 1) * math.pow(2, 48) / minima.last
-}
-
 case class KmvSketch(
     child: Expression,
     k: Int,

@@ -50,10 +50,6 @@ object Hdf5Reader {
     new Parser(buf).rootGroup()
   }
 
-  /** Read + render in the engine's JSON tree encoding — the checked-in
-    * converter path: `fileReader = p => Some(Hdf5Reader.readJson(p))`. */
-  def readJson(path: String): String = toJson(read(path))
-
   /** HDF5 format signature (File Format Spec §II.A.1). The parser only
     * handles superblocks at offset 0 (what h5py writes), so the probe
     * checks offset 0 too. */

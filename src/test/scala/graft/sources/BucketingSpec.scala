@@ -16,13 +16,14 @@ class BucketingSpec extends AnyFunSuite {
   test("bucketed self-join has no Exchange; plain parquet twin does") {
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    Bucketing.writeBucketed(docs, "docs_bucketed", "doc_id", nBuckets = 8)
+    docs.write.bucketBy(8, "doc_id").sortBy("doc_id")
+      .mode("overwrite").saveAsTable("docs_bucketed")
     // the test tables are broadcast-sized; disable broadcast so the
     // join key's distribution requirement is visible in the plan
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val b = Bucketing.table(spark, "docs_bucketed")
+      val b = spark.table("docs_bucketed")
       val bucketedJoin = b.as("x").join(b.as("y"), "doc_id")
         .select(col("x.doc_id"), col("y.n_chars"))
       val bucketedPlan = bucketedJoin.queryExecution.executedPlan.toString

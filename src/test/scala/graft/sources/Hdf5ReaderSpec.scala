@@ -98,7 +98,7 @@ class Hdf5ReaderSpec extends AnyFunSuite {
   }
 
   test("readJson round-trips through the engine's JSON tree encoding") {
-    // The IngestStream path is readJson → NexusTree.fromJson; the
+    // The IngestStream path is toJson(read) → NexusTree.fromJson; the
     // round-trip must preserve every dataset the direct read sees.
     def flatten(n: NexusTree.NexusNode, p: String = ""): Vector[(String, String)] = n match {
       case g: NexusGroup => g.children.flatMap { case (k, c) => flatten(c, s"$p/$k") }
@@ -106,7 +106,7 @@ class Hdf5ReaderSpec extends AnyFunSuite {
     }
     for (f <- Seq(anyYmir, anyCoda)) {
       val direct = flatten(Hdf5Reader.read(f))
-      val viaJson = flatten(NexusTree.fromJson(Hdf5Reader.readJson(f)))
+      val viaJson = flatten(NexusTree.fromJson(Hdf5Reader.toJson(Hdf5Reader.read(f))))
       assert(viaJson == direct, s"round-trip mismatch for $f")
     }
   }
