@@ -26,9 +26,10 @@ import graft.sources.NexusTree.{NexusDataset, NexusGroup, NexusNode}
   * compound/enum/reference types, shared messages, dense attributes.
   * Unreadable datasets become absent nodes rather than failures — the
   * engine's F11 failure tolerance applies at extraction time. A dataset
-  * whose dims claim more than its stored bytes hold fails the whole
-  * file as `parse:` before any decode, so hostile counts cost neither
-  * time nor heap.
+  * or attribute whose dims claim more than its stored bytes hold fails
+  * the whole file as `parse:` before any decode, so hostile counts cost
+  * neither time nor heap. An attribute with a null dataspace (h5py
+  * `Empty`) has no value and is left out of the dataset's attributes.
   */
 object Hdf5Reader {
 
@@ -454,12 +455,13 @@ object Hdf5Reader {
       }
     }
 
-    /** dims; None = scalar (rank 0). */
+    /** dims, empty for a scalar; None for a null dataspace (v2 type 2,
+      * h5py `Empty`), which holds no value. */
     private def parseDataspace(p: Int): Option[Vector[Long]] = {
       val version = u8(p)
-      val rank = u8(p + 1)
+      if (version == 2 && u8(p + 3) == 2) return None
       val dimsAt = if (version == 1) p + 8 else p + 4
-      if (rank == 0) None else Some((0 until rank).toVector.map(i => i64(dimsAt + i * 8)))
+      Some((0 until u8(p + 1)).toVector.map(i => i64(dimsAt + i * 8)))
     }
 
     private def decodeElement(dt: Dt, p: Int): PyValue = dt match {
@@ -523,13 +525,13 @@ object Hdf5Reader {
 
     private def readDataset(msgs: Vector[Message]): Option[NexusNode] = {
       var dt: Option[Dt] = None
-      var dims: Option[Option[Vector[Long]]] = None
+      var dims: Option[Vector[Long]] = None
       var dataAt: Option[(Int, Long)] = None // (file offset, byte length)
       val attrs = Map.newBuilder[String, String]
       msgs.foreach { m =>
         m.typ match {
           case 0x0003 => dt = Some(parseDatatype(m.body))
-          case 0x0001 => dims = Some(parseDataspace(m.body))
+          case 0x0001 => dims = parseDataspace(m.body)
           case 0x0008 =>
             val ver = u8(m.body)
             if (ver == 3 || ver == 4) {
@@ -542,7 +544,7 @@ object Hdf5Reader {
                 case _ => () // chunked etc. unsupported
               }
             }
-          case 0x000C => parseAttribute(m.body).foreach(attrs += _)
+          case 0x000C => parseAttribute(m.body, m.size).foreach(attrs += _)
           case _ => ()
         }
       }
@@ -552,11 +554,7 @@ object Hdf5Reader {
         (off, len) <- dataAt
       } yield {
         checkExtent(t, d, off, len)
-        val value = d match {
-          case None => decodeElement(t, off)
-          case Some(ds) => decodeArray(t, off, ds)
-        }
-        NexusDataset(value, attrs.result())
+        NexusDataset(decodeArray(t, off, d), attrs.result())
       }
     }
 
@@ -565,11 +563,10 @@ object Hdf5Reader {
       * [off, off + len) must lie in the file, dims × element size must
       * fit in `len`, and the nested lists above the elements (which a
       * zero-length dim leaves empty) may not outnumber the file's
-      * bytes. So a dataset decodes to at most one value per stored
-      * byte, whatever its header claims. */
-    private def checkExtent(t: Dt, dims: Option[Vector[Long]], off: Int, len: Long): Unit = {
-      def bad(why: String): Nothing = throw Hdf5Error(s"dataset @ $off: $why", corrupt = true)
-      val ds = dims.getOrElse(Vector.empty)
+      * bytes. So a dataset or attribute value decodes to at most one
+      * value per stored byte, whatever its header claims. */
+    private def checkExtent(t: Dt, ds: Vector[Long], off: Int, len: Long): Unit = {
+      def bad(why: String): Nothing = throw Hdf5Error(s"data @ $off: $why", corrupt = true)
       if (t.size <= 0) bad(s"element size ${t.size}")
       if (len < 0 || off < 0 || off.toLong + len > buf.limit()) bad(s"extent $len outside the file")
       if (ds.exists(_ < 0)) bad(s"negative dim in $ds")
@@ -594,14 +591,16 @@ object Hdf5Reader {
             v
           }
           (PyList(items), cur)
-        case _ => (PyList(Vector.empty), o)
+        case _ => (decodeElement(t, o), o + t.size) // scalar
       }
       rec(off, dims)._1
     }
 
-    /** Attribute message (v1 padded / v2 / v3) → (name, string value).
-      * Non-scalar or non-string attribute values render via pyStr. */
-    private def parseAttribute(p: Int): Option[(String, String)] = {
+    /** Attribute message (v1 padded / v2 / v3) of `size` bytes →
+      * (name, string value); None for a null dataspace. Non-scalar or
+      * non-string attribute values render via pyStr. The value must fit
+      * in the rest of the message, as a dataset's must in its extent. */
+    private def parseAttribute(p: Int, size: Int): Option[(String, String)] = {
       val version = u8(p)
       if (version < 1 || version > 3) return None
       val flags = if (version == 1) 0 else u8(p + 1)
@@ -618,11 +617,10 @@ object Hdf5Reader {
       q += pad8(dtSize)
       val dims = parseDataspace(q)
       q += pad8(dsSize)
-      val value = dims match {
-        case None => decodeElement(dt, q)
-        case Some(ds) => decodeArray(dt, q, ds)
+      dims.map { ds =>
+        checkExtent(dt, ds, q, p + size - q)
+        name -> pyStr(decodeArray(dt, q, ds))
       }
-      Some(name -> pyStr(value))
     }
   }
 }

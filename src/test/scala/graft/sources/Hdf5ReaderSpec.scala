@@ -52,6 +52,19 @@ class Hdf5ReaderSpec extends AnyFunSuite {
     b
   }
 
+  /** A one-int64-dataset file whose dataset carries `units = "AAAA"`,
+    * with `patch` applied at the offset of the attribute's name: the
+    * v1 attribute's datatype starts 8 bytes after it, its dataspace 16
+    * and its value 24. */
+  private def patchedUnits(patch: (ByteBuffer, Int) => Unit): Array[Byte] = {
+    val b = Hdf5Writer.write(Group(Vector(
+      "x" -> Data(PyList(Vector(PyInt(7L))), Map("units" -> "AAAA")))))
+    val i = b.indexOfSlice("units\u0000".getBytes("US-ASCII"))
+    assert(i >= 0 && b.lastIndexOfSlice("units\u0000".getBytes("US-ASCII")) == i)
+    patch(ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN), i)
+    b
+  }
+
   test("small-ymir: scalar datasets at the imsc schema's NXS paths") {
     assume(Hdf5Fixtures.present(ymir), s"$ymir not present")
     val root = Hdf5Reader.read(ymir)
@@ -149,15 +162,19 @@ class Hdf5ReaderSpec extends AnyFunSuite {
     assert(Hdf5Reader.readClassified(anyYmir).isRight)
 
     // dims that claim more than the stored bytes hold fail closed, fast:
-    // a zero-size element type, a dim past the 8 stored bytes, and a
-    // zero-length inner dim under a huge outer one (empty lists only)
+    // a zero-size element type, a dim past the 8 stored bytes, a
+    // zero-length inner dim under a huge outer one (empty lists only),
+    // and a `units` attribute made a zero-size string of rank 1, whose
+    // dim then reads the value bytes `AAAA` (1 094 795 585 elements)
     val one = PyList(Vector(PyInt(7L)))
     val hollow = PyList(Vector(PyList(Vector.empty)))
     val claims = Seq(
       "zero-size x 1000" -> claiming(one, 1, 0, 1000L),
       "zero-size x 400M" -> claiming(one, 1, 0, 400000000L),
       "8-byte x 1000" -> claiming(one, 1, 8, 1000L),
-      "400M x 0" -> claiming(hollow, 2, 8, 400000000L))
+      "400M x 0" -> claiming(hollow, 2, 8, 400000000L),
+      "zero-size units x 1G" -> patchedUnits { (bb, i) =>
+        bb.putInt(i + 12, 0); bb.put(i + 17, 1.toByte) })
     for ((name, bytes) <- claims) {
       val f = dir.resolve(s"claim-${name.replaceAll("\\W", "_")}.hdf")
       java.nio.file.Files.write(f, bytes)
@@ -167,6 +184,15 @@ class Hdf5ReaderSpec extends AnyFunSuite {
       assert(got.swap.exists(_.startsWith("parse:")), s"$name: $got")
       assert(ms < 1000, s"$name took $ms ms")
     }
+
+    // a null dataspace (v2, rank 0, type 2: h5py `Empty`) holds no
+    // value: the attribute is left out and the file still reads
+    val empty = dir.resolve("empty-units.hdf")
+    java.nio.file.Files.write(empty, patchedUnits { (bb, i) =>
+      bb.put(i + 16, 2.toByte); bb.put(i + 17, 0.toByte); bb.put(i + 19, 2.toByte) })
+    assert(Hdf5Reader.readClassified(empty.toString).isRight)
+    assert(Hdf5Reader.read(empty.toString) ==
+      NexusGroup(Vector("x" -> NexusDataset(PyList(Vector(PyInt(7L))), Map.empty))))
   }
 
   test("writer -> reader round trip: seeded random trees read back as written") {
