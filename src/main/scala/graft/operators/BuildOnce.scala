@@ -13,13 +13,12 @@ import org.apache.spark.sql.execution.LogicalRDD
   * SAME DataFrame instance (plan = a scan of the stored rows —
   * GraphEdgesSpec pins both properties).
   *
-  * Lifecycle fixes over the round-10 inline ConcurrentHashMaps (ADVICE.md
-  * r10 + r11):
+  * Lifecycle invariants:
   *  - the build runs OUTSIDE any map lock: `computeIfAbsent` would execute
   *    the whole Spark job while holding the bin lock, blocking concurrent
   *    same-bin lookups — here a losing racer just discards its build
   *    (`putIfAbsent` decides; both candidates are value-identical);
-  *  - DISCARDED entries release their executor block storage (r11 advice):
+  *  - DISCARDED entries release their executor block storage:
   *    a localCheckpoint pins the materialized RDD's blocks until
   *    application end, so every eviction path — `clearFamily` before each
   *    timed build repeat, `putIfAbsent` race losers, app-end cleanup,
@@ -27,9 +26,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   *    DataFrame instead of leaking one full edge-list/LSH-pair checkpoint
   *    per bench pass (a checkpoint's plan is a single [[LogicalRDD]] leaf,
   *    so releasing the plan's LogicalRDD leaves frees exactly its blocks);
-  *  - entries are keyed STRUCTURALLY (appId, family, sfDir) — the r10
-  *    string key `appId|family|sfDir` let an sfDir containing the
-  *    delimiter cross-evict another family (r11 advice);
+  *  - entries are keyed STRUCTURALLY (appId, family, sfDir), never by
+  *    a joined string such as `appId|family|sfDir`, so an sfDir holding
+  *    the delimiter cannot cross-evict another family;
   *  - entries EVICT when their application ends (one SparkListener per
   *    application), so a JVM that starts/stops many sessions — test
   *    suites, notebooks — never accumulates checkpointed DataFrames
@@ -37,9 +36,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   *  - [[clearFamily]] gives the bench a COLD-START knob: resetting a
   *    family before timing its declared build query makes that query
   *    report the real build cost instead of a memo lookup, and the
-  *    family's consumers report steady-state marginal cost (VERDICT r10
-  *    "What's wrong" #3 — the build cost was landing on whichever
-  *    consumer happened to run first).
+  *    family's consumers report steady-state marginal cost (without
+  *    the reset the build cost lands on whichever consumer happens to
+  *    run first).
   */
 object BuildOnce {
   /** Stored bytes per partition of a [[sized]] memo: AQE's own
@@ -142,9 +141,9 @@ object BuildOnce {
     * checkpoint blocks — the bench's cold-start knob for timing a
     * declared build query honestly. Exact segment match on the
     * structured key: an sfDir that happens to CONTAIN another family's
-    * name can never cross-evict it (r11 advice).
+    * name can never cross-evict it.
     *
-    * HARNESS-BOUNDARY CONTRACT (r12 advice): releasing the blocks
+    * HARNESS-BOUNDARY CONTRACT: releasing the blocks
     * behind a checkpoint-truncated plan makes any PREVIOUSLY RETURNED
     * memo instance fail with "checkpoint block not found" on
     * re-execution instead of recomputing — eager release trades the
@@ -176,13 +175,13 @@ object BuildOnce {
     out.toSet
   }
 
-  /** HARNESS-BOUNDARY block sweep (r12 verdict #3): unpersist every
+  /** HARNESS-BOUNDARY block sweep: unpersist every
     * persistent RDD in the context EXCEPT those backing live BuildOnce
     * memos. The per-invocation lazy `localCheckpoint`s on the query
     * paths (capHotKeys, winnow truth sides, iterative loop lineage
     * truncation, …) otherwise pin executor block storage until the
     * ContextCleaner happens to GC them — the measured mechanism behind
-    * the 282-query ALL-mode inflation (BENCHNOTES r12: late-alphabet
+    * the 282-query ALL-mode inflation (BENCHNOTES.md: late-alphabet
     * heavy queries ran ~1.35–2× their clean-JVM time under accumulated
     * block pressure). One sweep per completed query keeps the session
     * at steady-state block occupancy.

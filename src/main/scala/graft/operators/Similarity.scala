@@ -79,9 +79,9 @@ object Similarity {
     * consumer's candidate mass LINEAR in n (≈ n·target/2 pairs)
     * instead of quadratic. 128 keeps every gated test SF (n ≤ 2048)
     * at the audited [[Planes]] = 4 shape and widens to 8 planes at
-    * the sf1 slice (n = 20000) — the knob the r13/r14 sf1 A/B
-    * measured (planes 4→8: label purity 77.6 → 15.5 s, verified
-    * pairs 92 → 13 s-class). */
+    * the sf1 slice (n = 20000), where the sf1 A/B measured planes
+    * 4→8 at label purity 77.6 → 15.5 s and verified pairs 92 → 13
+    * s-class. */
   val LshTargetBucket = 128L
 
   /** Upper clamp for [[planesFor]] — also the fixed signature width
@@ -93,8 +93,8 @@ object Similarity {
     * not the shape). */
   val MaxPlanes = 16
 
-  /** SCALE-AWARE hyperplane count — the r14-verdict fix that clears
-    * the last two honest scaling flags AT DEFAULTS: the smallest
+  /** SCALE-AWARE hyperplane count, so per-bucket population stays
+    * bounded AT DEFAULTS as the corpus grows: the smallest
     * p ∈ [[[Planes]], [[MaxPlanes]]] with n ≤ [[LshTargetBucket]]·2^p
     * (exact integer compares — no float log2 boundary risk; the
     * DuckDB oracle replays the same CASE chain over count(*)).
@@ -135,8 +135,8 @@ object Similarity {
 
   /** [[lshSignatures]] over a caller-supplied embeddings slice — the
     * incremental path ([[indexRefresh]]) signs ONLY the day's new
-    * vectors, never the corpus. `planes` is the scale knob (r13
-    * scaling audit): bucket count is 2^planes, so same-bucket pair
+    * vectors, never the corpus. `planes` is the scale knob: bucket
+    * count is 2^planes, so same-bucket pair
     * mass is ~n²/2^planes — a deployment grows planes with log n to
     * hold per-bucket population (and therefore every LSH consumer's
     * candidate mass) constant; each +1 plane halves it. Default keeps
@@ -154,17 +154,17 @@ object Similarity {
       sigBits.reduce(_.bitwiseOR(_)).as("lsh_bucket"))
   }
 
-  /** FIXED cell count for the coarse IVF quantizer — the class-C scale
-    * fix (r13 scaling audit): the old seed policy ("every `stride`-th
-    * vector") grew the centroid set linearly with the corpus, so the
-    * broadcast assignment evaluated n × n/50 cosine folds — O(n²/50),
+  /** FIXED cell count for the coarse IVF quantizer, so assignment cost
+    * stays O(n·k): a seed policy of "every `stride`-th vector" grows
+    * the centroid set linearly with the corpus, so the broadcast
+    * assignment evaluates n × n/50 cosine folds — O(n²/50),
     * measured ~32 s/query at sf1 and flagged on every cell-family row.
     * A FIXED cell count makes assignment O(n·k) — one decade of data
     * costs one decade of work — and the probed candidate FRACTION
     * (nprobe/k) is scale-CONSTANT, so recall holds by construction
     * ([[annIvfRecall]]/[[annNprobeSweep]] measure it). k = 40 keeps
-    * the sf0.1 cell census identical to the audited r13 shape
-    * (2000/50 = 40 cells). At 100 TB: k grows only with the desired
+    * the sf0.1 cell census at the audited shape (2000/50 = 40
+    * cells). At 100 TB: k grows only with the desired
     * cell GRANULARITY (thousands — still broadcast-sized), never with
     * n; per-cell population on the pair-join side is bounded by
     * [[IvfShardTarget]] sub-sharding instead. */
@@ -241,7 +241,7 @@ object Similarity {
       trainCentroids(e, seedCentroids(e, IvfK), IvfIters).localCheckpoint()
     }
 
-  /** LSH WIDTH ALERT — the class-B scale guard (r13 audit): with a
+  /** LSH WIDTH ALERT — the guard on per-bucket population: with a
     * FIXED plane count the same-bucket pair mass grows ~n²/2^planes,
     * so an undersized width degrades every fixed-width LSH consumer
     * (the stored signature index behind [[indexRefresh]], the
@@ -256,8 +256,8 @@ object Similarity {
     * whose population exceeds `maxBucket` — i.e. whose self-join
     * contribution exceeds ~maxBucket²/2 pairs — with its exact pair
     * mass. A production monitor reds on ANY row and the fix is the
-    * measured knob: +1 plane halves per-bucket population (the r13
-    * sf1 A/B: planes 4→8 cut the purity query 77.6 → 15.5 s). The
+    * measured knob: +1 plane halves per-bucket population (the sf1
+    * A/B: planes 4→8 cut the purity query 77.6 → 15.5 s). The
     * budget deliberately bites at every test SF so the channel is
     * proven to carry rows (an alert that is only ever empty is
     * untested wiring).
@@ -433,7 +433,7 @@ object Similarity {
       admitted.select(col("vec_id"), col("label"), col("lsh_bucket")))
   }
 
-  /** IVM REFRESH of the TRAINED-IVF cell index (r14 verdict #2) — the
+  /** IVM REFRESH of the TRAINED-IVF cell index — the
     * cell-family member of the maintained-index quartet
     * ([[graft.operators.Dedup.bucketRefresh]],
     * [[graft.operators.Dedup.fpRefresh]], [[indexRefresh]]): apply one
@@ -468,8 +468,8 @@ object Similarity {
   /** Overload taking the already-refreshed signature index so a caller
     * that ALSO consumes [[indexRefresh]] (the `dailyIncrement`
     * composition) evaluates the admission cascade — the LSH candidate
-    * join + cosine gate — exactly once per run (r15 ADVICE: the
-    * default path re-ran it inside this method). */
+    * join + cosine gate — exactly once per run, not once for its own
+    * use and again inside this method. */
   def cellRefresh(spark: SparkSession, sfDir: String,
       refreshedIndex: DataFrame): DataFrame = {
     graft.plans.CosineSimilarity.register(spark)
@@ -480,8 +480,8 @@ object Similarity {
     // ([[seedCentroids]]) assumes ids dense from 0 — on the day-0
     // slice (vec_id % 10 >= 2) every spacing multiple is excluded at
     // the test SFs (spacing is a multiple of 10), which yielded an
-    // EMPTY seed set and a vacuously-matching empty index (caught
-    // r15). Taking the k corpus vectors minimizing the deterministic
+    // EMPTY seed set and a vacuously-matching empty index. Taking
+    // the k corpus vectors minimizing the deterministic
     // Knuth mix (vec_id tie-break) is id-distribution-free — the
     // right rule at 100 TB where ids are never dense — and runs as a
     // TakeOrdered (map-side partial top-k, never a global sort); the
@@ -513,7 +513,7 @@ object Similarity {
     * tested: no nested-loop join anywhere in this query). */
   def lshVerifiedPairs(spark: SparkSession, sfDir: String, threshold: Double = 0.4): DataFrame = {
     graft.plans.CosineSimilarity.register(spark)
-    // SCALE-AWARE width (r14 verdict #1): planes from the corpus count
+    // SCALE-AWARE width: planes from the corpus count
     // so candidate mass stays ~n·LshTargetBucket/2 at every SF — the
     // gated SFs keep the audited 4-plane shape bit-for-bit (n ≤ 2048),
     // sf1 widens to 8 planes (the measured 92 → 13 s-class knob).
@@ -628,7 +628,7 @@ object Similarity {
       planes: Int = 0): DataFrame = {
     graft.plans.CosineSimilarity.register(spark)
     graft.plans.BoundedAggregates.register(spark)
-    // planes = 0 (default) → scale-aware width (r14 verdict #1): the
+    // planes = 0 (default) → scale-aware width (`planesFor`): the
     // gated SFs keep the audited 4-plane shape, sf1 widens to 8 (the
     // measured 77.6 → 15.5 s knob); explicit planes > 0 pins a width.
     val p = if (planes > 0) planes else scaleAwarePlanes(spark, sfDir)
@@ -711,8 +711,8 @@ object Similarity {
     * where [[kcenterCoreset]] runs diversity-only: round r picks
     * argmax λ·rel(d) − (1−λ)·max_{s∈S} sim(d, s). Query = the
     * smallest-vec_id embedding (the kcenter seed discipline), which is
-    * also S₀, so round 1 reduces to pure relevance and every later
-    * round trades relevance against redundancy with what is already
+    * also S₀, so the first pick reduces to pure relevance and every
+    * later round trades relevance against redundancy with what is already
     * selected. All arithmetic is exact-integer: rel and max-sim in
     * cosine x4 units (floor(cos·10⁴ + 0.5)), λ in TENTHS so the score
     * is the plain long `lam·rel − (10−lam)·max_sim` — no division, no
