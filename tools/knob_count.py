@@ -21,7 +21,15 @@
     perfbench/src is a caller like any src/main use outside a member.
     Names are matched as words with comments stripped, and a use in
     another file counts only if that file also names the object (a
-    qualified call or an import);
+    qualified call or an import). The list also holds the top-level
+    `class`/`object`/`trait` names of src/main (a class and its
+    companion are one name) that nothing outside test-only code
+    reaches: every src/main use outside the definition lies inside a
+    listed member or a listed top-level definition (an `import` line
+    is not a use), no perfbench/src file names it, and it has no
+    `def main`. A `META-INF/services` registration is not a use, so a
+    definition reached only by a specs' `format(...)` short name, or
+    by nothing at all, is listed too;
   - stacked_docs: the number of scaladoc blocks under the source root
     that end on the line directly above another `/**` block, so they
     document no definition;
@@ -107,6 +115,11 @@ def strip_comments(text):
 
 
 TOP_OBJECT = re.compile(r'(?:(?:private\[\w+\]|final|case)\s+)*object\s+(\w+)')
+TOP_DEF = re.compile(
+    r'(?:(?:private(?:\[\w+\])?|final|case|sealed|abstract|implicit)\s+)*'
+    r'(?:class|object|trait)\s+([A-Za-z_]\w*)')
+IMPORT = re.compile(r'\s*import\s')
+MAIN = re.compile(r'\bdef\s+main\s*\(')
 MEMBER = re.compile(
     r'  (?:(?:private\[\w+\]|protected|final|implicit|lazy|case|sealed|abstract)\s+)*'
     r'(?:def|val|var|class|object|trait)\s+([A-Za-z_]\w*)')
@@ -131,6 +144,15 @@ def member_defs(lines):
         if j < len(lines) and lines[j].startswith(("  }", "  )")):
             j += 1
         yield obj, m.group(1), i, j
+
+
+def top_defs(lines):
+    """(name, first line, end line) of each top-level definition; the
+    span runs to the next top-level definition or the end of the file."""
+    starts = [(i, m.group(1)) for i, line in enumerate(lines)
+              for m in [TOP_DEF.match(line)] if m]
+    for (i, name), (j, _) in zip(starts, starts[1:] + [(len(lines), None)]):
+        yield name, i, j
 
 
 def code_files(*parts):
@@ -186,8 +208,47 @@ def test_only():
         more = {k for k, uses in callers.items() if k not in found and
                 None not in uses and uses <= found and (k in in_test or uses)}
         if not more:
-            return sorted(found)
+            break
         found |= more
+    return sorted(found | test_only_tops(main, bench, texts, defs, found))
+
+
+def test_only_tops(main, bench, texts, defs, members):
+    """Top-level definitions of src/main that nothing outside test-only
+    code reaches: the largest set in which every use of a name lies in
+    a listed member (`members`) or in a definition of the set."""
+    tops = {p: list(top_defs(ls)) for p, ls in main.items()}
+    spans = {}  # name → its (path, first, end) spans
+    for p, ds in tops.items():
+        for name, lo, hi in ds:
+            spans.setdefault(name, []).append((p, lo, hi))
+
+    def unit(p, line):
+        """(enclosing member, enclosing top-level name) of a use."""
+        member = next((f"{o}.{n}" for o, n, lo, hi in defs[p] if lo <= line < hi), None)
+        top = next((n for n, lo, hi in tops[p] if lo <= line < hi), None)
+        return member, top
+
+    uses, live = {}, set()
+    for name, own in spans.items():
+        word = re.compile(r'\b%s\b' % name)
+        if any(MAIN.search(line) for p, lo, hi in own for line in main[p][lo:hi]) or \
+                any(word.search(texts[p]) for p in bench):
+            live.add(name)
+            continue
+        uses[name] = set()
+        for p, ls in main.items():
+            for i, line in enumerate(ls):
+                if word.search(line) and not IMPORT.match(line) and \
+                        not any(q == p and lo <= i < hi for q, lo, hi in own):
+                    uses[name].add(unit(p, i))
+    found = set(uses)
+    while True:
+        dropped = {n for n in found if any(top not in found and member not in members
+                                           for member, top in uses[n])}
+        if not dropped:
+            return found
+        found -= dropped
 
 
 def is_code_path(name):
