@@ -229,12 +229,11 @@ def test_only_tops(main, bench, texts, defs, members):
         top = next((n for n, lo, hi in tops[p] if lo <= line < hi), None)
         return member, top
 
-    uses, live = {}, set()
+    uses = {}
     for name, own in spans.items():
         word = re.compile(r'\b%s\b' % name)
         if any(MAIN.search(line) for p, lo, hi in own for line in main[p][lo:hi]) or \
                 any(word.search(texts[p]) for p in bench):
-            live.add(name)
             continue
         uses[name] = set()
         for p, ls in main.items():
