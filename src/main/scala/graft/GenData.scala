@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** SF1 TEST-DATA GENERATOR for the scaling audit's fourth decade
-  * (VERDICT r12 "Next round" #1). The driver's own generator produced
+  * (sf1, one decade past sf0.1). The driver's own generator produced
   * /root/testdata/sf{0.001,0.01,0.1} (read-only); this main writes a
   * DISTRIBUTION-MATCHED sf1 set from the measured properties of those
   * tables, one decade up:
@@ -69,7 +69,7 @@ object GenData {
   /** The document body as a pure function of a doc id: 10–100 words.
     * Default: uniform over the 30-word vocabulary (the shipped
     * corpus's exact vocab; `dup` is reserved for the near-dup marker).
-    * Zipf mode (r13 verdict #4 — the class-A artifact separator):
+    * Zipf mode (skewed word ranks, which separate class-A artifacts):
     * Zipf(s=1)-distributed ranks via the inverse-CDF construction
     * rank = floor(999^u) for u ∈ [0, 1) — i.e. ranks 1..998 (998
     * effective words, since 999^u ∈ [1, 999)) with

@@ -226,7 +226,7 @@ object SparkEntry {
     "dedup_minhash_bbit" -> ((s: SparkSession, d: String) =>
       Dedup.minhashBbitError(s, d)),
     // round-13 additions: the capped-join ALERT channels as declared,
-    // oracle-gated queries (r12 verdict #5) — the monitoring surface a
+    // oracle-gated queries (each alert row has an oracle) — the monitoring surface a
     // 100 TB operator actually reads next to the prediction/dedup
     // tables. Caps chosen to BITE at every test SF (candidate-graph
     // max degree 36/39/311, LSH bucket max 4/3/14 at sf0.001/0.01/0.1),
@@ -417,7 +417,7 @@ object SparkEntry {
     // CUSUM level-shift monitor (third detector class, prefix-sum form)
     "events_cusum_shift" -> ((s: SparkSession, d: String) =>
       Relational.eventsCusumShift(s, d)),
-    // class-B width alert: oversized hyperplane-LSH buckets (r13
+    // class-B width alert: oversized hyperplane-LSH buckets (from the
     // scaling audit — the pair-mass census that turns an undersized
     // plane count into a queryable red row instead of a silent
     // quadratic query; budget bites at every test SF by design)
@@ -434,7 +434,7 @@ object SparkEntry {
     * can surface. Everything else either has an oracleSql entry or is a
     * bug. */
   def rowsOnly: Map[String, String] = Map.empty
-  // (sub_blake2b closed in round 10: DuckDB has no blake2b, so the
+  // (sub_blake2b has an oracle too: DuckDB has no blake2b, so the
   // oracle joins an INDEPENDENTLY-generated expected-digest fixture —
   // Python hashlib.blake2b over the same testdata, fixtures/
   // blake2b_expected.csv — keyed by (doc_id, md5(text)) so a
@@ -511,7 +511,7 @@ object SparkEntry {
     "range_overlap_agg", "sub_incremental_agg", "skew_advisor",
     "dedup_lsh_curve_advisor", "corpus_semantic_decontaminate",
     // the LSH-pairs family BUILD runs before its consumers (Bench
-    // cold-resets it per repeat — r11 advice: without it in the
+    // cold-resets it per repeat — without it in the
     // headline set the build cost landed on dedup_cluster_census):
     "text_quality_agreement", "dedup_lsh_verified_pairs",
     "dedup_cluster_census",
@@ -564,7 +564,7 @@ object SparkEntry {
     "events_level_shift", "orders_abc_classes", "text_ttr_curve",
     "embed_index_refresh", "events_seasonality_strength",
     "text_burstiness", "orders_reorder_intervals",
-    // round-11 additions (round 12: the candidate-graph BUILD runs
+    // round-11 additions (the candidate-graph BUILD runs
     // before its consumer, mirroring graph_edges_build — Bench
     // cold-resets the lp_candidates family per build repeat, so
     // graph_link_prediction reports steady-state marginal cost):
@@ -752,7 +752,7 @@ object SparkEntry {
     * side's incremental label merge. Hash equality IS the
     * refresh ≡ rebuild proof.
     *
-    * HAZARD (r16 ADVICE, noted by design): `reach` holds one row per
+    * HAZARD (accepted by design): `reach` holds one row per
     * (node, reachable node) — O(n × component size). Fine at gated
     * SFs; a fixture with a mega near-dup cluster would blow the DuckDB
     * side's memory LOUDLY rather than silently passing (the Spark star
@@ -850,7 +850,7 @@ object SparkEntry {
        |WHERE s.vec_id % 10 >= 2
        |   OR s.vec_id NOT IN (SELECT new_id FROM dup)""".stripMargin
 
-  /** Trained-IVF cell-index IVM replica (r14 verdict #2) — the FULL
+  /** Trained-IVF cell-index IVM replica (refresh ≡ rebuild) — the FULL
     * REBUILD: quantizer trained on the day-0 corpus slice (`et`),
     * assignment over corpus ∪ admitted (`ep`; admission = the SAME
     * new×corpus bucket-collision + exact-cosine gate as the signature
@@ -1369,7 +1369,7 @@ object SparkEntry {
     // capHotKeys(1024) mirrored: at zipf-sf1 the simhash band buckets
     // genuinely exceed the cap (measured band-2 max 4115 docs), so an
     // uncapped replica both diverges AND goes O(bucket²) — the exact
-    // defect class the sf1 cap gate exists to catch (r16 verdict #4).
+    // defect class the sf1 cap gate exists to catch.
     s"""WITH sims AS ($simhashOracle),
        |banded0 AS MATERIALIZED (SELECT doc_id, band,
        |    (simhash >> (band * 16)) & 65535 AS bucket
@@ -1400,7 +1400,7 @@ object SparkEntry {
        |sig AS (SELECT vec_id, emb, ${lshSigBitsSql(graft.operators.Similarity.Planes)} AS lsh_bucket FROM e)""".stripMargin
 
   /** SCALE-AWARE signature CTEs — the oracle twin of
-    * [[graft.operators.Similarity.planesFor]] (r14 verdict #1): the
+    * [[graft.operators.Similarity.planesFor]] (same plane count): the
     * full [[graft.operators.Similarity.MaxPlanes]]-bit signature is
     * computed once and masked to 2^planes buckets with planes from
     * the SAME integer CASE chain over count(*) the Spark side uses.
@@ -1916,7 +1916,7 @@ object SparkEntry {
     // (the clusterLabelsOracle pattern over the winnow doc graph),
     // split hashed on the LABEL, census + the crossing recount whose
     // replayed zero is the leakage-free proof.
-    // HAZARD (r16 ADVICE, noted by design): the recursive `reach` CTE
+    // HAZARD (accepted by design): the recursive `reach` CTE
     // is O(n × component size) rows — fine at gated SFs, but a fixture
     // with a mega near-dup cluster would blow the DuckDB side's memory
     // LOUDLY rather than silently passing (the Spark star contraction
@@ -2848,7 +2848,7 @@ object SparkEntry {
          |SELECT a.doc_id AS id1, b.doc_id AS id2
          |FROM fp a JOIN fp b ON a.fp_hash = b.fp_hash AND a.doc_id < b.doc_id
          |GROUP BY 1, 2 HAVING count(*) >= 1""".stripMargin,
-    // Alert channel (r12 verdict #5): candidate-graph hubs above the
+    // Alert channel (oracle-gated): candidate-graph hubs above the
     // wedge cap — the degree census over the same minShared=1 pair
     // list, HAVING above the declared low cap so the channel carries
     // rows at every test SF.
@@ -3026,7 +3026,7 @@ object SparkEntry {
     // admitted (admission = the new×corpus bucket-collision +
     // exact-cosine gate); hash equality proves refresh ≡ rebuild.
     "embed_index_refresh" -> embedIndexRefreshOracle,
-    // Trained-IVF cell-index IVM (r14 verdict #2): oracle = the FULL
+    // Trained-IVF cell-index IVM: oracle = the FULL
     // REBUILD — quantizer trained on the day-0 corpus slice (`et`),
     // assignment over corpus ∪ admitted (`ep`; admission = the SAME
     // new×corpus bucket-collision + exact-cosine gate as the signature
@@ -3041,8 +3041,8 @@ object SparkEntry {
     // fails the row-count gate instead of green-lighting stale hashes.
     "sub_blake2b" ->
       // fixture path resolved at Verify time from the working directory
-      // (ADVICE r10: a hardcoded /root/repo broke portability of the
-      // one oracle that reads a repo-local file)
+      // (no absolute path, so the one oracle that reads a repo-local
+      // file runs from any checkout)
       s"""SELECT d.doc_id, e.blake2b
          |FROM documents d
          |JOIN read_csv('${blake2bFixturePath}',

@@ -24,7 +24,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // sweep per-invocation lazy-checkpoint blocks between queries
-      // (quiescent point; BuildOnce memos are spared) — r12 verdict #3
+      // (quiescent point; BuildOnce memos are spared), so no query's
+      // blocks outlive it
       graft.operators.BuildOnce.releaseScoped(spark)
     }
     val json = SparkEntry.oracleSql

@@ -65,21 +65,19 @@ trait Catalog extends Serializable {
 }
 
 object Catalog {
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
   /** The GET-response projection of every catalog (J1): the document,
     * or the JSON text of its top-level `field`. None when the document
     * does not parse or lacks the field: the variable nulls out (F11). */
   def projectField(doc: String, field: String): Option[String] =
     if (field == null || field.isEmpty) Some(doc)
-    else Try(ConfigValue.fromJson(doc)).toOption.collect { case m: CMap => m }
-      .flatMap(_.get(field)).map(renderJson)
+    else Try(mapper.readTree(doc)).toOption.filter(_.isObject)
+      .flatMap(n => Option(n.get(field))).map(mapper.writeValueAsString)
 
   /** The sampleIds of an in-memory `samples/<name>/<proposalId>` entry,
     * a JSON array of strings; a malformed one holds none. */
   def sampleIds(doc: String): Seq[String] =
     Try(ConfigValue.fromJson(doc)).toOption.toSeq
       .flatMap { case CSeq(items) => items.collect { case CStr(s) => s }; case _ => Nil }
-
-  /** Render a parsed [[ConfigValue]] back to JSON text. */
-  def renderJson(c: ConfigValue): String =
-    graft.sources.NexusExtractor.toJson(graft.sources.NexusTree.toPy(c))
 }

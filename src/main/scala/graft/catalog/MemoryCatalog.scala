@@ -66,8 +66,7 @@ final class MemoryCatalog private (val id: Long) extends Catalog {
     * one mutex per instrument). */
   override def createSample(sampleName: String, proposalId: String): Unit = {
     val key = s"samples/$sampleName/$proposalId"
-    val doc = Catalog.renderJson(graft.schema.ConfigValue.CSeq(
-      Vector(graft.schema.ConfigValue.CStr(sampleName))))
+    val doc = "[" + graft.sources.NexusExtractor.jsonStr(sampleName) + "]"
     val first = store.docs.putIfAbsent(key, doc) == null
     if (!first) store.duplicateSampleCreates.incrementAndGet()
     val seq = store.sampleCreates.incrementAndGet()

@@ -246,8 +246,8 @@ object IngestorConfig {
   private val toleratedIngestion = Set(
     "offline_ingestor_executable", "max_offline_ingestors",
     "offline_ingestors_wait_time")
-  // syslog/graylog keys were tolerated-only until round 6; all logging
-  // keys are now typed on LoggingConfig and wired in IngestLogging
+  // every logging key, syslog/graylog included, is typed on
+  // LoggingConfig and wired in IngestLogging, so none is tolerated-only
   private val toleratedLogging = Set.empty[String]
   private val toleratedScicat = Set("additional_headers", "health_endpoint", "api_endpoints")
 

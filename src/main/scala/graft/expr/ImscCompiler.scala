@@ -20,8 +20,9 @@ import ValueOperators.OpSpec
   *
   * Input: a DataFrame with one row per file carrying
   * `data_file_path: string` and `nexus_json: string`: the NeXus tree
-  * in the engine's JSON tree encoding, as the ingest stream's default
-  * `fileReader` ([[graft.sources.Hdf5Reader]]) renders each HDF5 file.
+  * as text, the JSON tree encoding [[NexusTree.toJson]] writes and
+  * [[NexusTree.fromJson]] reads (the ingest stream's default
+  * `fileReader` renders each HDF5 file with it).
   *
   * Output: the same rows plus one `struct(value, unit)` column per
   * variable. Variables compile IN DEFINITION ORDER so later templates

@@ -94,7 +94,7 @@ object AudioCodec {
     val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
     Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("n_chars"))
-      // NOT repartitioned (r13 recorded A/B): the image/video blob
+      // NOT repartitioned (a recorded A/B at sf1): the image/video blob
       // sources spread their codec work by rows and won 10–20× at sf1,
       // but the same repartition here measured NO stable win — the WAV
       // encode's allocation pressure dominates and the 32-way medians

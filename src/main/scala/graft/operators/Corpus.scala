@@ -111,7 +111,7 @@ object Corpus {
       .crossJoin(broadcast(cross))
   }
 
-  /** SPLIT-BALANCE ALERT (r16 verdict item #2) — DECLARES the
+  /** SPLIT-BALANCE ALERT — DECLARES the
     * mega-cluster trade-off [[clusteredSplit]] only documented: bucket
     * proportions hold over CLUSTERS, so one giant near-dup component
     * can drag its whole token mass into a single split and pull the
@@ -188,8 +188,8 @@ object Corpus {
     val admitted = Dedup.admittedMaterialized(spark, sfDir)
     // day-1 fingerprints + stored labels are the PERSISTED day-1 state
     // — read from the build-once memo (Dedup.Day1ClusterFamily; bench
-    // charges the build to `corpus_daily_increment`), not rebuilt per
-    // query (r17 verdict #4)
+    // charges the build to `corpus_daily_increment`), never rebuilt
+    // per query
     val oldFpRaw = Dedup.day1FingerprintsMaterialized(spark, sfDir)
     val refreshedFp = oldFpRaw.unionByName(TextAnalysis
         .winnowDocFps(docs.join(admitted, Seq("doc_id"), "left_semi"), 4))
@@ -529,7 +529,7 @@ object Corpus {
   /** First-round BPE merge candidates: adjacent character-pair counts
     * weighted by word frequency — the round-1 statistic only (kept as
     * the cheap single-shot census; [[learnBpeRules]] is the real
-    * sequential learner whose round 1 agrees with this table's top-1).
+    * sequential learner whose first merge agrees with this table's top-1).
     *
     * Scale: the corpus collapses to the DISTINCT-WORD table first
     * (Heaps' law: vocab ≪ corpus), so the char-pair explode runs over
@@ -776,8 +776,8 @@ object Corpus {
       // 2, since only the 'dup' marker passes the [a-z]+ filter), b$r
       // is EMPTY and a cross join would annihilate the word table —
       // every downstream consumer went empty while Spark correctly
-      // carried the exhausted state forward (caught by the r15 zipf
-      // gate). An absent best pair must pass words through unchanged.
+      // carried the exhausted state forward (the zipf data shows it).
+      // An absent best pair must pass words through unchanged.
       ctes += s"""w${r + 1} AS MATERIALIZED (SELECT w, freq,
         |  CASE WHEN b.pair IS NULL THEN s ELSE replace(s, ' ' || b.pair || ' ',
         |  ' ' || replace(b.pair, ' ', '') || ' ') END AS s

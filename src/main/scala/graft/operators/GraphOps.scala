@@ -155,7 +155,7 @@ object GraphOps {
 
   /** The near-dup cluster labels via star contraction — same graph,
     * same (vec_id, cluster = component min) contract as
-    * [[Dedup.clusterLabels]]; since r15 the two run the SAME star
+    * [[Dedup.clusterLabels]]; the two run the SAME star
     * algorithm (the propagation variant was retired — see
     * [[Dedup.connectedComponents]]), so this declared query doubles
     * as the direct regression pin on the shared implementation. */
@@ -230,7 +230,7 @@ object GraphOps {
     * channel — the cap-and-alert discipline of every capped join here
     * (a boilerplate hub connecting 10⁵ docs contributes ~0 per AA
     * weight yet 10¹⁰ wedges — cap, don't melt). The default cap is the
-    * sf1-MEASURED production value 256 (r13 audit: uncapped at sf1 =
+    * sf1-MEASURED production value 256 (the sf1 audit: uncapped =
     * 123.9 G wedge rows, infeasible; cap 256 = 72.6 s with the 48 k
     * dropped hubs reported by the alert channel) and the oracle
     * mirrors it — at sf0.1 the cap genuinely bites (max degree 311),
@@ -621,8 +621,8 @@ object GraphOps {
       val votes = edges
         .join(labels.withColumnRenamed("doc_id", "src"), "src")
         .groupBy(col("dst"), col("lbl")).agg(count(lit(1)).as("cnt"))
-      // argmax fused into ONE aggregate (r18, guide §2.4): the old
-      // shape was groupBy(dst).max + join back + filter + groupBy.min —
+      // argmax fused into ONE aggregate (guide §2.4): the unfused
+      // shape is groupBy(dst).max + join back + filter + groupBy.min —
       // two extra exchanges and a join PER ROUND. max(struct(cnt,
       // -lbl)) picks the same winner: max count, ties broken by min
       // label (labels are doc ids ≥ 0, so -lbl orders them reversed).

@@ -109,7 +109,7 @@ object ImageCodec {
       .select(col("doc_id"), col("n_chars"))
       // the corpus projection is a few MB, so the parquet reader gives
       // ONE split — without an explicit repartition every codec pass
-      // downstream runs serially on one core (the r13 sf1 audit caught
+      // downstream runs serially on one core (the sf1 scaling audit caught
       // mm_image_ahash at e_top 1.35 for exactly this reason: CPU-bound
       // per-row work must be spread by ROWS, not by input bytes)
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))

@@ -253,7 +253,7 @@ object Substrate {
     * `sketch_kmv_distinct` row proves the estimator): exact below k=64
     * distinct hashes, (k−1)·2⁴⁸/kth-min above. This is the right
     * ANALYZE default — exact multi-column NDV planned as an Expand ×
-    * (columns+1), 8× the row traffic of the insight (VERDICT r6 #2);
+    * (columns+1), 8× the row traffic of the insight;
     * the sketch keeps O(k) state per column in the SAME single scan.
     * The exact variant survives as [[profileColumnsExact]].
     *
@@ -347,7 +347,7 @@ object Substrate {
   /** Production path: the native [[graft.plans.HilbertIndex]]
     * expression — one codegen'd call per row instead of the 16-round
     * projection chain below (measured ~5× on the layout family at
-    * sf0.1, BENCHNOTES r8). The chain is retained as
+    * sf0.1, BENCHNOTES.md). The chain is retained as
     * [[withHilbertColumns]]: it documents the per-round math the
     * DuckDB oracle replays, and HilbertIndexSpec pins the two
     * bit-identical. */
@@ -504,8 +504,8 @@ object Substrate {
       // gate exists ONLY so the plan guard can inspect the
       // un-truncated plan (a checkpoint hides the range exchange);
       // production leaves it on.
-      // In-partition rank WITHOUT the window's hash re-exchange (r18,
-      // guide §2.4): rows are already range-partitioned by `ordered`,
+      // In-partition rank WITHOUT the window's hash re-exchange
+      // (guide §2.4): rows are already range-partitioned by `ordered`,
       // but a row_number() window PARTITIONED BY _pid re-shuffles the
       // full table by _pid (hashpartitioning ≠ the range partitioning
       // Catalyst just produced) — one redundant full-data exchange per
@@ -571,7 +571,7 @@ object Substrate {
     * the locality the zone maps exploit. */
   def layoutSkipWorkload(spark: SparkSession, sfDir: String,
       blockRows: Int = 4096, nRects: Int = 12): DataFrame = {
-    // ONE scan feeds everything (r15 verdict #6): the three layouts
+    // ONE scan feeds everything: the three layouts
     // need three DIFFERENT global sort orders — those ranking passes
     // cannot share an exchange — but they CAN share the input: lineitem
     // is read once with BOTH curve keys computed (zval from layoutKeys,

@@ -272,10 +272,10 @@ object Temporal {
         sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
   }
 
-  /** CLASS-D OUTPUT ADVISOR for the interval-join family (r14 verdict
-    * #5): the range joins (`range_incident_stats`/`range_join_rule`)
+  /** CLASS-D OUTPUT ADVISOR for the interval-join family: the range
+    * joins (`range_incident_stats`/`range_join_rule`)
     * are CORRECT and bin-blocked, but their OUTPUT grows ~quadratically
-    * with event density (the r14 audit measured 101× output growth per
+    * with event density (the scaling audit measured 101× output growth per
     * 10× input) — at 100 TB that's a fact a job must be able to QUERY
     * before paying for it, exactly like [[graft.operators.Skew
     * .skewAdvisor]] for salting. Per 10-minute bin of the incident

@@ -376,14 +376,14 @@ object TextAnalysis {
     // Pearson is UNDEFINED when either score has zero variance — a
     // real corpus state, not a corner case (the zipf arm scores every
     // doc an identical heuristic x: no stopwords, distinct-ratio
-    // capped — caught r15 when ANSI turned the 0/0 into a runtime
-    // error). The POSITIVITY test runs on decimal(38,0) (HUGEINT in
+    // capped — under ANSI the 0/0 is a runtime error). The
+    // POSITIVITY test runs on decimal(38,0) (HUGEINT in
     // the oracle) so it stays exact past 2^53, where a double-rounded
-    // n·sxx − sx² could land on the wrong side of zero (r15 ADVICE);
+    // n·sxx − sx² could land on the wrong side of zero;
     // only the defined-branch value math is double.
-    // HEADROOM (r16 ADVICE): Spark caps the decimal product at
+    // HEADROOM: Spark caps the decimal product at
     // precision 38, so under ANSI the n·sxx term itself overflows —
-    // the r15 failure class — once n·sxx ≥ 1e38. With x ≤ 1e6 micro
+    // a runtime error again — once n·sxx ≥ 1e38. With x ≤ 1e6 micro
     // and y ≤ 1e3 milli, sxx ≤ n·1e12, so the bound is n ≥ ~1e13
     // DOCS (five decades past the ~10^8-doc note above, and DuckDB's
     // HUGEINT side would itself wrap at ~1.7e38 soon after). A corpus
@@ -492,7 +492,7 @@ object TextAnalysis {
     * and [[winnowDensity]]. Winnowing is a PER-DOCUMENT statistic, so
     * the whole selection runs as one codegen'd array expression on the
     * scan row — no gram explode, no doc-keyed window exchange + sort,
-    * no closing distinct exchange (r18: the window form cost every
+    * no closing distinct exchange (a window form costs every
     * winnow consumer one full-gram-stream shuffle + sort; at 100 TB the
     * gram stream is the corpus ×3). */
   private def winnowKeyed(docs: DataFrame): DataFrame = {
@@ -505,7 +505,7 @@ object TextAnalysis {
     // (or a join-produced slice) already carries >= parallelism
     // partitions and skips the exchange; when it does fire it moves the
     // raw text once — ~3x fewer bytes than the gram-stream shuffle the
-    // r17 window form paid on every input.
+    // window form pays on every input.
     val par = docs.sparkSession.sparkContext.defaultParallelism
     val spread =
       if (docs.rdd.getNumPartitions < par) docs.repartition(par) else docs
@@ -574,7 +574,7 @@ object TextAnalysis {
       w: Int = 4): DataFrame = {
     val keys = col("keys")
     // per-document statistic → pure projection over [[winnowKeyed]]:
-    // no gram explode, no window exchange, no groupBy (r18). The
+    // no gram explode, no window exchange, no groupBy. The
     // `n_windows >= 1` gate is applied as its CHEAP equivalent on the
     // raw word count BEFORE the key derivation (n_windows ≥ 1 ⇔
     // size(words) ≥ w + 2, cap-independent since w ≪ 32768) — a filter

@@ -249,7 +249,7 @@ object VideoCodec {
     val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
     Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("n_chars"))
-      // spread the CPU-bound codec work by ROWS (r13 sf1 audit; same
+      // spread the CPU-bound codec work by ROWS (as the sf1 audit showed; same
       // fix as ImageCodec.realImageBlobs — one parquet split otherwise
       // serializes every decode pass)
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * expression runs the identical rotate-reflect-accumulate loop as
   * one tight branch-free-ish Java loop called from generated code
   * (measured on `layout_skip_workload` at sf0.1: the Hilbert layout
-  * pass drops from the dominant cost to noise — see BENCHNOTES r8).
+  * pass drops from the dominant cost to noise — see BENCHNOTES.md).
   *
   * Bit-compatibility contract: [[HilbertIndex.xy2d]] replays the
   * EXACT per-round arithmetic of the column chain — quadrant digit

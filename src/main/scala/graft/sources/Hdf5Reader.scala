@@ -28,7 +28,9 @@ import graft.sources.NexusTree.{NexusDataset, NexusGroup, NexusNode}
   * engine's F11 failure tolerance applies at extraction time. A dataset
   * or attribute whose dims claim more than its stored bytes hold fails
   * the whole file as `parse:` before any decode, so hostile counts cost
-  * neither time nor heap. An attribute with a null dataspace (h5py
+  * neither time nor heap; so does any byte count that reaches past the
+  * end of the file, and a symbol-table B-tree that reaches one of its
+  * nodes twice. An attribute with a null dataspace (h5py
   * `Empty`) has no value and is left out of the dataset's attributes.
   */
 object Hdf5Reader {
@@ -69,7 +71,7 @@ object Hdf5Reader {
     *    attempted (the reference opens any path via h5py), garbage is
     *    rejected after an 8-byte read;
     *  - `parse:` real HDF5 signature but undecodable content.
-    * Right holds the tree in the engine's JSON tree encoding. */
+    * Right holds the tree as [[NexusTree.toJson]] renders it. */
   def readClassified(path: String): Either[String, String] =
     try {
       if (path == null) return Left("io: null path")
@@ -83,7 +85,7 @@ object Hdf5Reader {
       val n = try in.read(head) finally in.close()
       if (n < 8 || !java.util.Arrays.equals(head, Magic))
         return Left("not_hdf5: missing HDF5 signature")
-      Right(toJson(read(path)))
+      Right(NexusTree.toJson(read(path)))
     } catch {
       case e: Hdf5Error => Left(s"parse: ${e.msg}")
       case e: java.io.IOException => Left(s"io: ${e.getMessage}")
@@ -121,17 +123,6 @@ object Hdf5Reader {
     * src/scicat_nexus_helper.py:62-95). */
   val fileReader: String => Option[String] = fileReaderWith(Seq(3.0, 3.0))
 
-  def toJson(node: NexusNode): String = node match {
-    case NexusGroup(children) =>
-      children.map { case (k, v) => NexusExtractor.jsonStr(k) + ":" + toJson(v) }
-        .mkString("{", ",", "}")
-    case NexusDataset(v, attrs) =>
-      val attrJson = attrs.toSeq.sortBy(_._1).map { case (k, s) =>
-        NexusExtractor.jsonStr(k) + ":" + NexusExtractor.jsonStr(s)
-      }.mkString("{", ",", "}")
-      "{\"__value\":" + NexusExtractor.toJson(v) + ",\"__attrs\":" + attrJson + "}"
-  }
-
   private val Undef = -1L // 0xFFFF.. addresses mean "undefined"
 
   private final class Parser(buf: ByteBuffer) {
@@ -141,11 +132,12 @@ object Hdf5Reader {
     private def u32(p: Int): Long = buf.getInt(p) & 0xffffffffL
     private def i64(p: Int): Long = buf.getLong(p)
     private def addr(p: Int): Long = { val v = i64(p); if (v == -1L) Undef else v }
+    /** The `n` bytes at `p`. A count that reaches past the file is
+      * corrupt, and fails before anything is allocated. */
     private def bytesAt(p: Int, n: Int): Array[Byte] = {
-      val a = new Array[Byte](n)
-      var i = 0
-      while (i < n) { a(i) = buf.get(p + i); i += 1 }
-      a
+      if (n < 0 || p < 0 || p.toLong + n > buf.limit())
+        throw Hdf5Error(s"$n bytes @ $p outside the file", corrupt = true)
+      java.util.Arrays.copyOfRange(buf.array(), p, p + n)
     }
     private def uint(p: Int, n: Int): Long = {
       var v = 0L
@@ -320,18 +312,18 @@ object Hdf5Reader {
       val hp = heapAddr.toInt
       if (sig(hp) != "HEAP") throw Hdf5Error(s"bad HEAP @ $heapAddr")
       val heapData = i64(hp + 24).toInt
+      // a B-tree reaches each of its nodes once; a second visit is a
+      // cycle or a shared child, either of which would walk forever
+      val visited = scala.collection.mutable.Set.empty[Long]
       def walk(node: Long): Vector[(String, Long)] = {
+        if (!visited.add(node)) throw Hdf5Error(s"TREE node @ $node reached twice", corrupt = true)
         val p = node.toInt
         sig(p) match {
           case "TREE" =>
-            val level = u8(p + 5)
             val used = u16(p + 6)
             // keys/children alternate after 2 sibling pointers
             val base = p + 24
-            (0 until used).toVector.flatMap { i =>
-              val child = addr(base + 8 + i * 16)
-              if (level > 0) walk(child) else walk(child)
-            }
+            (0 until used).toVector.flatMap(i => walk(addr(base + 8 + i * 16)))
           case "SNOD" =>
             val nsyms = u16(p + 6)
             (0 until nsyms).toVector.map { i =>

@@ -1,20 +1,23 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+
 import graft.functions.PyLiteral._
-import graft.schema.ConfigValue
-import graft.schema.ConfigValue._
 
 /** In-memory model of a NeXus/HDF5 file: a tree of groups and datasets
   * where datasets are typed nd-arrays with attributes (notably `units`)
   * (ref: src/scicat_dataset.py:285-324, src/scicat_nexus_helper.py:13-59).
   *
-  * The pure-JVM [[Hdf5Reader]] decodes HDF5 files into these nodes; it
-  * is the ingest stream's default `fileReader`, which renders each tree
-  * in the engine's JSON tree encoding. [[NexusTree.fromJson]] parses
-  * that encoding back once per file for the typed extraction; fixtures
-  * and the streaming tests write it by hand. The extraction semantics —
-  * wildcard path expansion, scalar squeeze, unit attributes — are
-  * tested against the reference's fixture goldens.
+  * The pure-JVM [[Hdf5Reader]] decodes HDF5 files into these nodes.
+  * This object owns the tree text, the engine's JSON tree encoding that
+  * the ingest stream's `fileReader` hands on per file: [[toJson]] writes
+  * it (the default reader renders each decoded file with it) and
+  * [[fromJson]] reads it back once per file for the typed extraction;
+  * fixtures and the streaming tests write it by hand. The extraction
+  * semantics — wildcard path expansion, scalar squeeze, unit
+  * attributes — are tested against the reference's fixture goldens.
   */
 object NexusTree {
 
@@ -25,32 +28,49 @@ object NexusTree {
   final case class NexusDataset(value: PyValue, attrs: Map[String, String]) extends NexusNode
 
   /** JSON encoding: a dataset is `{"__value": ..., "__attrs": {...}}`,
-    * anything else is a group. */
-  def fromJson(text: String): NexusGroup = fromConfig(ConfigValue.fromJson(text)) match {
+    * anything else is a group. A NaN or infinite float is written as
+    * `null`, so it reads back as `PyNone`. */
+  def toJson(node: NexusNode): String = node match {
+    case NexusGroup(children) =>
+      children.map { case (k, v) => NexusExtractor.jsonStr(k) + ":" + toJson(v) }
+        .mkString("{", ",", "}")
+    case NexusDataset(v, attrs) =>
+      val attrJson = attrs.toSeq.sortBy(_._1).map { case (k, s) =>
+        NexusExtractor.jsonStr(k) + ":" + NexusExtractor.jsonStr(s)
+      }.mkString("{", ",", "}")
+      "{\"__value\":" + NexusExtractor.toJson(v) + ",\"__attrs\":" + attrJson + "}"
+  }
+
+  private val mapper = new ObjectMapper()
+
+  /** Parses [[toJson]]'s encoding; a top-level dataset becomes the only
+    * child, named "", of a root group. Non-string attributes are left
+    * out. */
+  def fromJson(text: String): NexusGroup = node(mapper.readTree(text)) match {
     case g: NexusGroup => g
     case d => NexusGroup(Vector("" -> d))
   }
 
-  def fromConfig(c: ConfigValue): NexusNode = c match {
-    case m: CMap if m.get("__value").isDefined =>
-      val attrs = m.get("__attrs") match {
-        case Some(am: CMap) => am.items.collect { case (k, CStr(v)) => k -> v }.toMap
-        case _ => Map.empty[String, String]
-      }
-      NexusDataset(toPy(m.get("__value").get), attrs)
-    case m: CMap => NexusGroup(m.items.map { case (k, v) => k -> fromConfig(v) })
-    case other => NexusDataset(toPy(other), Map.empty)
-  }
+  private def node(n: JsonNode): NexusNode =
+    if (n.isObject && n.has("__value")) {
+      val attrs = Option(n.get("__attrs")).filter(_.isObject).iterator
+        .flatMap(_.properties().asScala).collect {
+          case e if e.getValue.isTextual => e.getKey -> e.getValue.asText()
+        }.toMap
+      NexusDataset(py(n.get("__value")), attrs)
+    } else if (n.isObject)
+      NexusGroup(n.properties().asScala.iterator.map(e => e.getKey -> node(e.getValue)).toVector)
+    else NexusDataset(py(n), Map.empty)
 
-  def toPy(c: ConfigValue): PyValue = c match {
-    case CStr(s) => PyStr(s)
-    case CLong(v) => PyInt(v)
-    case CDouble(v) => PyFloat(v)
-    case CBool(b) => PyBool(b)
-    case CNull => PyNone
-    case CSeq(items) => PyList(items.map(toPy))
-    case m: CMap => PyDict(m.items.map { case (k, v) => (PyStr(k), toPy(v)) })
-  }
+  private def py(n: JsonNode): PyValue =
+    if (n.isTextual) PyStr(n.asText())
+    else if (n.isIntegralNumber) PyInt(n.asLong())
+    else if (n.isNumber) PyFloat(n.asDouble())
+    else if (n.isBoolean) PyBool(n.asBoolean())
+    else if (n.isArray) PyList(n.elements().asScala.map(py).toVector)
+    else if (n.isObject)
+      PyDict(n.properties().asScala.iterator.map(e => (PyStr(e.getKey), py(e.getValue))).toVector)
+    else PyNone
 
   /** Resolve an absolute dataset path like `/entry/sample/temperature`. */
   def resolve(root: NexusGroup, path: String): Option[NexusNode] =

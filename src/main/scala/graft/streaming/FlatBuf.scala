@@ -30,11 +30,16 @@ import java.nio.charset.StandardCharsets.UTF_8
   */
 object FlatBuf {
 
-  /** Lazy view of one table inside a buffer. */
+  /** Lazy view of one table inside a buffer. Its vtable must lie in
+    * the buffer and hold at least its two size fields, so every field
+    * lookup reads vtable bytes; a field's own data is bounds-checked
+    * when it is read. */
   final class Table(val bytes: Array[Byte], val pos: Int) {
     private val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     private val vt = pos - bb.getInt(pos)
+    require(vt >= 0 && vt <= bytes.length - 4, s"vtable @ $vt outside the buffer")
     private val vtSize = bb.getShort(vt) & 0xFFFF
+    require(vtSize >= 4 && vt + vtSize <= bytes.length, s"vtable @ $vt: bad size $vtSize")
 
     /** Absolute position of field `id`'s inline data, or 0 if absent. */
     def fieldPos(id: Int): Int = {
@@ -65,13 +70,12 @@ object FlatBuf {
     }
   }
 
-  def fileId(bytes: Array[Byte]): Option[String] =
-    if (bytes == null || bytes.length < 8) None
-    else Some(new String(bytes, 4, 4, UTF_8))
-
+  /** The root table. Its offset must clear the root offset and file
+    * identifier (bytes [0:8]) and leave room for the table's soffset. */
   def root(bytes: Array[Byte]): Table = {
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    new Table(bytes, bb.getInt(0))
+    val pos = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).getInt(0)
+    require(pos >= 8 && pos <= bytes.length - 4, s"root offset $pos outside the buffer")
+    new Table(bytes, pos)
   }
 
   // ----------------------------- writer ------------------------------

@@ -39,7 +39,7 @@ object IngestStream {
   private val wrdnUdf = udf(MessageCodec.decodeWrdn _)
   private val pl72Udf = udf(MessageCodec.decodePl72 _)
 
-  /** wrdn stream — FlatBuffers or JSON framing — with the F2 error
+  /** wrdn stream of FlatBuffers payloads with the F2 error
     * filter (ref: scicat_kafka.py:99-110 drops error_encountered;
     * undecodable payloads → None → dropped, :180-190). `carry` names
     * frame-level columns (e.g. the bus event time) to keep alongside
@@ -70,10 +70,13 @@ object IngestStream {
       fallback: Option[ImscSchema] = None,
       catalog: graft.catalog.Catalog = LocalCatalog.empty,
       options: DatasetAssembly.Options = DatasetAssembly.Options(),
-      /** S4: the default reader opens real NeXus/HDF5 files via the
-        * pure-JVM [[graft.sources.Hdf5Reader]]; Try-wrapped so corrupt
-        * or missing files null out (F11) instead of failing the batch.
-        * Tests inject JSON-tree readers here. */
+      /** S4: a file path to its tree text, [[graft.sources.NexusTree]]'s
+        * JSON tree encoding, which the extraction parses back with
+        * `NexusTree.fromJson`. The default reader opens real NeXus/HDF5
+        * files via the pure-JVM [[graft.sources.Hdf5Reader]] and renders
+        * them with `NexusTree.toJson`; every failure gives None, so
+        * corrupt or missing files null out (F11) instead of failing the
+        * batch. Tests inject readers of hand-written tree text here. */
       fileReader: String => Option[String] = graft.sources.Hdf5Reader.fileReader,
       fileLister: String => Seq[FileIngest.FileStats] =
         p => Seq(FileIngest.stat(p)),

@@ -7,17 +7,12 @@ import java.nio.charset.StandardCharsets.UTF_8
   * The reference consumes FlatBuffer-encoded messages whose schema id
   * sits at payload bytes [4:8] — `"wrdn"` = writing finished, `"pl72"` =
   * run start (ref: src/scicat_kafka.py:89-96,198-205, deserialised via
-  * the public streaming-data-types package). [[MessageCodec]] decodes
-  * BOTH wire forms through one entry point:
-  *
-  *  - real FlatBuffers buffers, read field-by-field with the hand-rolled
-  *    [[FlatBuf]] vtable reader against the public schemas
-  *    (FinishedWriting.fbs / RunStart.fbs from ess-dmsc
-  *    streaming-data-types) — this is what an actual reference-produced
-  *    Kafka stream carries;
-  *  - the JSON test-harness framing (4 zero bytes + schema id + JSON
-  *    body), distinguishable because a valid FlatBuffers root offset is
-  *    never 0.
+  * the public streaming-data-types package). That is the one wire form
+  * [[MessageCodec]] reads and writes: FlatBuffers buffers, read
+  * field-by-field with the hand-rolled [[FlatBuf]] vtable reader against
+  * the public schemas (FinishedWriting.fbs / RunStart.fbs from ess-dmsc
+  * streaming-data-types). A payload that is not a valid buffer of the
+  * requested type decodes to None.
   */
 object Messages {
 
@@ -43,36 +38,10 @@ object Messages {
 
 object MessageCodec {
   import Messages._
-  import graft.sources.NexusExtractor.jsonStr
-
-  /** 4 reserved bytes + 4-byte schema id + JSON body. */
-  def frame(schemaId: String, body: String): Array[Byte] = {
-    require(schemaId.length == 4)
-    Array[Byte](0, 0, 0, 0) ++ schemaId.getBytes(UTF_8) ++ body.getBytes(UTF_8)
-  }
 
   def schemaId(payload: Array[Byte]): Option[String] =
     if (payload == null || payload.length < 8) None
     else Some(new String(payload, 4, 4, UTF_8))
-
-  def encodeWrdn(m: WritingFinished): Array[Byte] = frame(WrdnId,
-    s"""{"service_id":${jsonStr(m.service_id)},"job_id":${jsonStr(m.job_id)},""" +
-      s""""error_encountered":${m.error_encountered},"file_name":${jsonStr(m.file_name)},""" +
-      s""""metadata":${jsonStr(m.metadata)},"message":${jsonStr(m.message)}}""")
-
-  def encodePl72(m: RunStartInfo): Array[Byte] = frame(Pl72Id,
-    s"""{"job_id":${jsonStr(m.job_id)},"filename":${jsonStr(m.filename)},""" +
-      s""""instrument_name":${jsonStr(m.instrument_name)}}""")
-
-  def body(payload: Array[Byte]): String =
-    if (payload == null || payload.length <= 8) "{}"
-    else new String(payload, 8, payload.length - 8, UTF_8)
-
-  /** JSON framing marks itself with a zeroed [0:4]; a FlatBuffers root
-    * offset there is always ≥ 8. */
-  def isJsonFramed(payload: Array[Byte]): Boolean =
-    payload.length >= 4 &&
-      payload(0) == 0 && payload(1) == 0 && payload(2) == 0 && payload(3) == 0
 
   // --- FlatBuffers encode (field ids per the public .fbs schemas) -----
 
@@ -99,32 +68,25 @@ object MessageCodec {
       FStr(m.filename)))
   }
 
-  // --- decode: one entry point per type, both framings ----------------
-
-  private def parseJson(body: String): Option[com.fasterxml.jackson.databind.JsonNode] =
-    scala.util.Try(new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)).toOption
-
-  private def jStr(n: com.fasterxml.jackson.databind.JsonNode, f: String): String = {
-    val v = n.get(f); if (v == null || v.isNull) "" else v.asText()
-  }
+  // --- decode: one entry point per type ------------------------------
 
   /** Parse a bare wrdn JSON body (the form [[graft.streaming.Sinks
     * .dumpMessages]] writes and the reference's offline ingestor reads
     * back as done_writing_message_file). */
   def wrdnFromJsonBody(bodyText: String): Option[WritingFinished] =
-    parseJson(bodyText).filter(_.isObject).map { n =>
-      WritingFinished(jStr(n, "service_id"), jStr(n, "job_id"),
-        { val v = n.get("error_encountered"); v != null && v.asBoolean() },
-        jStr(n, "file_name"), jStr(n, "metadata"), jStr(n, "message"))
-    }
+    scala.util.Try(new com.fasterxml.jackson.databind.ObjectMapper().readTree(bodyText))
+      .toOption.filter(_.isObject).map { n =>
+        def str(f: String) = Option(n.get(f)).filterNot(_.isNull).map(_.asText()).getOrElse("")
+        WritingFinished(str("service_id"), str("job_id"),
+          Option(n.get("error_encountered")).exists(_.asBoolean()),
+          str("file_name"), str("metadata"), str("message"))
+      }
 
-  /** Decode a wrdn payload of either wire form; None on wrong type or
-    * corrupt bytes (the caller treats None as "skip", matching the
-    * reference's deserialise-failure path, scicat_kafka.py:180-190). */
+  /** Decode a wrdn payload; None on wrong type or corrupt bytes (the
+    * caller treats None as "skip", matching the reference's
+    * deserialise-failure path, scicat_kafka.py:180-190). */
   def decodeWrdn(payload: Array[Byte]): Option[WritingFinished] =
     schemaId(payload) match {
-      case Some(WrdnId) if isJsonFramed(payload) =>
-        wrdnFromJsonBody(body(payload))
       case Some(WrdnId) => scala.util.Try {
         val t = FlatBuf.root(payload)
         WritingFinished(
@@ -138,16 +100,10 @@ object MessageCodec {
       case _ => None
     }
 
-  /** Decode a pl72 payload of either wire form (fields the reference
-    * reads: job_id, filename, instrument_name —
-    * scicat_sample_ingestor.py:186-188,211). */
+  /** Decode a pl72 payload (fields the reference reads: job_id,
+    * filename, instrument_name — scicat_sample_ingestor.py:186-188,211). */
   def decodePl72(payload: Array[Byte]): Option[RunStartInfo] =
     schemaId(payload) match {
-      case Some(Pl72Id) if isJsonFramed(payload) =>
-        parseJson(body(payload)).map { n =>
-          RunStartInfo(jStr(n, "job_id"), jStr(n, "filename"),
-            jStr(n, "instrument_name"))
-        }
       case Some(Pl72Id) => scala.util.Try {
         val t = FlatBuf.root(payload)
         RunStartInfo(

@@ -5,7 +5,7 @@ object DumpHdf5 {
   def main(args: Array[String]): Unit = {
     args.foreach { p =>
       println(s"=== $p")
-      try println(Hdf5Reader.toJson(Hdf5Reader.read(p)))
+      try println(NexusTree.toJson(Hdf5Reader.read(p)))
       catch { case e: Throwable => println(s"FAILED: $e") }
     }
   }

@@ -52,17 +52,50 @@ class Hdf5ReaderSpec extends AnyFunSuite {
     b
   }
 
-  /** A one-int64-dataset file whose dataset carries `units = "AAAA"`,
-    * with `patch` applied at the offset of the attribute's name: the
-    * v1 attribute's datatype starts 8 bytes after it, its dataspace 16
-    * and its value 24. */
-  private def patchedUnits(patch: (ByteBuffer, Int) => Unit): Array[Byte] = {
-    val b = Hdf5Writer.write(Group(Vector(
-      "x" -> Data(PyList(Vector(PyInt(7L))), Map("units" -> "AAAA")))))
-    val i = b.indexOfSlice("units\u0000".getBytes("US-ASCII"))
-    assert(i >= 0 && b.lastIndexOfSlice("units\u0000".getBytes("US-ASCII")) == i)
+  /** The file written from `tree`, with `patch` applied at the offset
+    * of the only occurrence of `marker` in it. */
+  private def patched(tree: Group, marker: String)(patch: (ByteBuffer, Int) => Unit): Array[Byte] = {
+    val b = Hdf5Writer.write(tree)
+    val m = marker.getBytes("US-ASCII")
+    val i = b.indexOfSlice(m)
+    assert(i >= 0 && b.lastIndexOfSlice(m) == i, s"$marker not unique")
     patch(ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN), i)
     b
+  }
+
+  /** A one-int64-dataset file whose dataset carries `units = "AAAA"`,
+    * patched at the offset of the attribute's name: the v1 attribute's
+    * datatype starts 8 bytes after it, its dataspace 16 and its value 24. */
+  private def patchedUnits(patch: (ByteBuffer, Int) => Unit): Array[Byte] =
+    patched(Group(Vector("x" -> Data(PyList(Vector(PyInt(7L))), Map("units" -> "AAAA")))),
+      "units\u0000")(patch)
+
+  /** Seeded random trees: ranks 0-3 with zero-length dims,
+    * int64/float64/fixed/vlen strings, compact and contiguous layouts,
+    * `units` on half the datasets, groups nested up to three deep. */
+  private def randomTrees(n: Int): Vector[Group] = {
+    val rnd = new scala.util.Random(20261019L)
+    def text(): String =
+      Seq("", "Søren", "a \"q\" C:\\d\n", rnd.alphanumeric.take(rnd.nextInt(20)).mkString)(rnd.nextInt(4))
+    def scalar(kind: Int): PyValue = kind match {
+      case 0 => PyInt(rnd.nextLong())
+      case 1 => PyFloat(rnd.nextGaussian() * math.pow(10, rnd.nextInt(40) - 20))
+      case _ => PyStr(text())
+    }
+    def array(dims: List[Int], kind: Int): PyValue = dims match {
+      case Nil => scalar(kind)
+      case n :: rest => PyList(Vector.fill(n)(array(rest, kind)))
+    }
+    def data(): Data = {
+      val kind = rnd.nextInt(4) // int64, float64, fixed string, vlen string
+      val dims = List.fill(rnd.nextInt(4))(rnd.nextInt(4))
+      val attrs = if (rnd.nextBoolean()) Map("units" -> text()) else Map.empty[String, String]
+      Data(array(dims, kind), attrs, vlen = kind == 3, compact = rnd.nextBoolean())
+    }
+    def group(depth: Int): Group = Group(Vector.tabulate(rnd.nextInt(5)) { i =>
+      s"n$i" -> (if (depth < 2 && rnd.nextInt(3) == 0) group(depth + 1) else data())
+    })
+    Vector.fill(n)(group(0))
   }
 
   test("small-ymir: scalar datasets at the imsc schema's NXS paths") {
@@ -110,18 +143,20 @@ class Hdf5ReaderSpec extends AnyFunSuite {
     assert(users.size == 6)
   }
 
-  test("readJson round-trips through the engine's JSON tree encoding") {
-    // The IngestStream path is toJson(read) → NexusTree.fromJson; the
-    // round-trip must preserve every dataset the direct read sees.
-    def flatten(n: NexusTree.NexusNode, p: String = ""): Vector[(String, String)] = n match {
-      case g: NexusGroup => g.children.flatMap { case (k, c) => flatten(c, s"$p/$k") }
-      case NexusDataset(v, _) => Vector(p -> pyStr(v))
-    }
-    for (f <- Seq(anyYmir, anyCoda)) {
-      val direct = flatten(Hdf5Reader.read(f))
-      val viaJson = flatten(NexusTree.fromJson(Hdf5Reader.toJson(Hdf5Reader.read(f))))
-      assert(viaJson == direct, s"round-trip mismatch for $f")
-    }
+  test("tree text round-trips whole nodes: fromJson(toJson(t)) == t") {
+    // The IngestStream path is NexusTree.toJson(read) → NexusTree.fromJson:
+    // whole nodes come back, values, attributes and child order alike
+    val trees = Seq(anyYmir, anyCoda).map(Hdf5Reader.read) ++
+      randomTrees(200).map(Hdf5Writer.toNexusRoot)
+    for ((t, i) <- trees.zipWithIndex)
+      assert(NexusTree.fromJson(NexusTree.toJson(t)) == t, s"tree $i: $t")
+    // a non-finite float is written as null and reads back as PyNone
+    def floats(xs: Double*) = NexusGroup(Vector("x" -> NexusDataset(
+      PyList(xs.toVector.map(PyFloat(_))), Map("units" -> "K"))))
+    val back = NexusTree.fromJson(NexusTree.toJson(
+      floats(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, 1.5)))
+    assert(back == NexusGroup(Vector("x" -> NexusDataset(
+      PyList(Vector(PyNone, PyNone, PyNone, PyFloat(1.5))), Map("units" -> "K")))))
   }
 
   test("F11: corrupt, truncated, missing, or non-HDF5 files yield None") {
@@ -174,15 +209,27 @@ class Hdf5ReaderSpec extends AnyFunSuite {
       "8-byte x 1000" -> claiming(one, 1, 8, 1000L),
       "400M x 0" -> claiming(hollow, 2, 8, 400000000L),
       "zero-size units x 1G" -> patchedUnits { (bb, i) =>
-        bb.putInt(i + 12, 0); bb.put(i + 17, 1.toByte) })
+        bb.putInt(i + 12, 0); bb.put(i + 17, 1.toByte) },
+      // a vlen string whose global-heap object 1 (header at GCOL + 16,
+      // size field 8 bytes in) claims 0x7FFFFFF0 bytes
+      "GCOL object x 2G" -> patched(Group(Vector("s" -> Data(PyStr("hello"), vlen = true))),
+        "GCOL") { (bb, i) => bb.putLong(i + 24, 0x7FFFFFF0L) },
+      // the root group's B-tree node naming itself as its child 0 (the
+      // first child pointer follows 24 bytes of header and one key)
+      "TREE child = itself" -> patched(Group(Vector("x" -> Data(PyInt(7L)))), "TREE") {
+        (bb, i) => bb.putLong(i + 32, i.toLong) })
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    def allocated() = threads.getThreadAllocatedBytes(Thread.currentThread().getId)
     for ((name, bytes) <- claims) {
       val f = dir.resolve(s"claim-${name.replaceAll("\\W", "_")}.hdf")
       java.nio.file.Files.write(f, bytes)
-      val t0 = System.nanoTime()
+      val (t0, a0) = (System.nanoTime(), allocated())
       val got = Hdf5Reader.readClassified(f.toString)
-      val ms = (System.nanoTime() - t0) / 1000000
+      val (ms, mb) = ((System.nanoTime() - t0) / 1000000, (allocated() - a0) >> 20)
       assert(got.swap.exists(_.startsWith("parse:")), s"$name: $got")
       assert(ms < 1000, s"$name took $ms ms")
+      assert(mb < 64, s"$name allocated $mb MB")
     }
 
     // a null dataspace (v2, rank 0, type 2: h5py `Empty`) holds no
@@ -196,33 +243,10 @@ class Hdf5ReaderSpec extends AnyFunSuite {
   }
 
   test("writer -> reader round trip: seeded random trees read back as written") {
-    // ranks 0-3 with zero-length dims, int64/float64/fixed/vlen strings,
-    // compact and contiguous layouts: every file the writer produces
-    // passes the reader's extent check and decodes to its input
-    val rnd = new scala.util.Random(20261019L)
-    def text(): String =
-      Seq("", "Søren", "a \"q\" C:\\d\n", rnd.alphanumeric.take(rnd.nextInt(20)).mkString)(rnd.nextInt(4))
-    def scalar(kind: Int): PyValue = kind match {
-      case 0 => PyInt(rnd.nextLong())
-      case 1 => PyFloat(rnd.nextGaussian() * math.pow(10, rnd.nextInt(40) - 20))
-      case _ => PyStr(text())
-    }
-    def array(dims: List[Int], kind: Int): PyValue = dims match {
-      case Nil => scalar(kind)
-      case n :: rest => PyList(Vector.fill(n)(array(rest, kind)))
-    }
-    def data(): Data = {
-      val kind = rnd.nextInt(4) // int64, float64, fixed string, vlen string
-      val dims = List.fill(rnd.nextInt(4))(rnd.nextInt(4))
-      val attrs = if (rnd.nextBoolean()) Map("units" -> text()) else Map.empty[String, String]
-      Data(array(dims, kind), attrs, vlen = kind == 3, compact = rnd.nextBoolean())
-    }
-    def group(depth: Int): Group = Group(Vector.tabulate(rnd.nextInt(5)) { i =>
-      s"n$i" -> (if (depth < 2 && rnd.nextInt(3) == 0) group(depth + 1) else data())
-    })
+    // every file the writer produces passes the reader's extent check
+    // and decodes to its input
     val dir = java.nio.file.Files.createTempDirectory("graft_hdf5rt")
-    for (i <- 0 until 200) {
-      val tree = group(0)
+    for ((tree, i) <- randomTrees(200).zipWithIndex) {
       val f = dir.resolve(s"t$i.hdf")
       java.nio.file.Files.write(f, Hdf5Writer.write(tree))
       assert(Hdf5Reader.read(f.toString) == Hdf5Writer.toNexusRoot(tree), s"tree $i: $tree")

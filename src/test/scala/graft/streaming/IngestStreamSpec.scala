@@ -70,7 +70,7 @@ class IngestStreamSpec extends AnyFunSuite {
   import TestSpark.spark
   import spark.implicits._
 
-  private def wrdn(file: String, error: Boolean = false) = MessageCodec.encodeWrdn(
+  private def wrdn(file: String, error: Boolean = false) = MessageCodec.encodeWrdnFb(
     WritingFinished("svc", s"job-$file", error, file, "{}", "done"))
 
   private def cfg = IngestStream.Config(
@@ -82,7 +82,7 @@ class IngestStreamSpec extends AnyFunSuite {
     val msgs = Seq(
       wrdn("/data/a/f1.nxs"),
       wrdn("/data/a/f2.nxs", error = true), // dropped by F2
-      MessageCodec.encodePl72(RunStartInfo("j", "/data/a/f1.nxs", "ymir")), // dropped by F1
+      MessageCodec.encodePl72Fb(RunStartInfo("j", "/data/a/f1.nxs", "ymir")), // dropped by F1
       "garbage".getBytes("UTF-8")) // dropped by F1
       .toDF("value")
     val got = IngestStream.wrdnStream(msgs).collect()

@@ -118,7 +118,9 @@ class OfflineIngestorSpec extends AnyFunSuite {
 
   test("message file round-trip: K3 dump body parses back to the wrdn record") {
     val m = Messages.WritingFinished("svc", "j9", false, ymir, """{"k":1}""", "done")
-    val body = new String(MessageCodec.encodeWrdn(m).drop(8), "UTF-8")
+    val json = graft.sources.NexusExtractor.jsonStr _
+    val body = s"""{"service_id":"svc","job_id":"j9","error_encountered":false,""" +
+      s""""file_name":${json(ymir)},"metadata":${json(m.metadata)},"message":"done"}"""
     assert(MessageCodec.wrdnFromJsonBody(body).contains(m))
     assert(MessageCodec.wrdnFromJsonBody("not json").isEmpty)
     assert(MessageCodec.wrdnFromJsonBody("[1,2]").isEmpty)

@@ -30,7 +30,7 @@ class StreamSubstrateSpec extends AnyFunSuite {
       input.toDF(), cfg, (batch, _) => batch.collect().foreach(results.add))
 
     val t0 = System.nanoTime()
-    val msgs = (1 to 300).map(i => MessageCodec.encodeWrdn(
+    val msgs = (1 to 300).map(i => MessageCodec.encodeWrdnFb(
       WritingFinished("svc", s"job-$i", error_encountered = false,
         s"/data/a/run$i.nxs", "{}", "done")))
     msgs.grouped(100).foreach(batch => input.addData(batch))
@@ -60,7 +60,7 @@ class CheckpointRecoverySpec extends AnyFunSuite {
     def sink(batch: org.apache.spark.sql.DataFrame, id: Long): Unit =
       batch.select("runNumber").collect().foreach(r => results.add(r.getString(0)))
 
-    def wrdn(i: Int) = MessageCodec.encodeWrdn(WritingFinished(
+    def wrdn(i: Int) = MessageCodec.encodeWrdnFb(WritingFinished(
       "svc", s"j$i", error_encountered = false, s"/data/a/r$i.nxs", "{}", "ok"))
 
     val q1 = IngestStream.ingestQuery(input.toDF(), cfg, sink, Some(ckpt))
