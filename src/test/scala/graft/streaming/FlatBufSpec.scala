@@ -58,7 +58,7 @@ class FlatBufSpec extends AnyFunSuite {
     // a root table at 8 whose soffset 0 names a zero-size vtable
     val hollow = Array[Byte](8, 0, 0, 0) ++ "wrdn".getBytes(UTF_8) ++ Array[Byte](0, 0, 0, 0)
     assert(MessageCodec.decodeWrdn(hollow).isEmpty)
-    // root offset 0: the retired JSON framing (4 zero bytes, id, body)
+    // root offset 0: a JSON body behind 4 zero bytes and the schema id
     assert(MessageCodec.decodeWrdn(jsonFramed("wrdn", """{"file_name":"/f"}""")).isEmpty)
     assert(MessageCodec.decodePl72(jsonFramed("pl72", """{"filename":"/f"}""")).isEmpty)
   }
