@@ -4,7 +4,7 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
 
 import graft.functions.PyLiteral._
-import graft.sources.NexusTree.{NexusDataset, NexusGroup, NexusNode}
+import graft.sources.NexusTree.{Needed, NexusDataset, NexusGroup, NexusNode}
 
 /** Minimal pure-JVM HDF5 reader — enough of the public HDF5 File Format
   * Specification to open the reference's real NeXus fixtures
@@ -24,13 +24,23 @@ import graft.sources.NexusTree.{NexusDataset, NexusGroup, NexusNode}
   *
   * Out of scope (not present in the fixtures): chunked/filtered data,
   * compound/enum/reference types, shared messages, dense attributes.
+  *
+  * The walk is pruned by a [[NexusTree.Needed]] path trie: it reads
+  * each group's link table by name and follows only the links on a
+  * needed path, and a link where a needed path ends is read whole. So
+  * the datasets no path reaches are never decoded, and their damage
+  * never fails the file — as with the reference's lazy h5py reads.
+  * [[read]] without a trie reads the whole file by the same walk.
+  *
   * Unreadable datasets become absent nodes rather than failures — the
   * engine's F11 failure tolerance applies at extraction time. A dataset
   * or attribute whose dims claim more than its stored bytes hold fails
   * the whole file as `parse:` before any decode, so hostile counts cost
   * neither time nor heap; so does any byte count that reaches past the
-  * end of the file, and a symbol-table B-tree that reaches one of its
-  * nodes twice. An attribute with a null dataspace (h5py
+  * end of the file, a symbol-table B-tree that reaches one of its nodes
+  * twice, an object header whose continuation blocks reach one block
+  * twice, and a fractal heap with a zero table width or block size or an
+  * object past its table. An attribute with a null dataspace (h5py
   * `Empty`) has no value and is left out of the dataset's attributes.
   */
 object Hdf5Reader {
@@ -39,7 +49,11 @@ object Hdf5Reader {
     * it stores), so the whole file fails rather than only that node. */
   final case class Hdf5Error(msg: String, corrupt: Boolean = false) extends Exception(msg)
 
-  def read(path: String): NexusGroup = {
+  /** The whole tree of the file at `path`. */
+  def read(path: String): NexusGroup = read(path, Needed.All)
+
+  /** The tree of the file at `path`, holding the nodes `needed` reaches. */
+  def read(path: String, needed: Needed): NexusGroup = {
     val p = Paths.get(path)
     // All internal addresses flow through Int offsets into one mapped
     // array; refuse anything close to 2 GiB instead of mis-parsing.
@@ -50,7 +64,7 @@ object Hdf5Reader {
       throw Hdf5Error(s"file too large for in-memory reader: $size bytes")
     val bytes = Files.readAllBytes(p)
     val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    new Parser(buf).rootGroup()
+    new Parser(buf).rootGroup(needed)
   }
 
   /** HDF5 format signature (File Format Spec §II.A.1). The parser only
@@ -70,9 +84,11 @@ object Hdf5Reader {
     *  - `not_hdf5:` magic-byte probe failed — any extension is
     *    attempted (the reference opens any path via h5py), garbage is
     *    rejected after an 8-byte read;
-    *  - `parse:` real HDF5 signature but undecodable content.
-    * Right holds the tree as [[NexusTree.toJson]] renders it. */
-  def readClassified(path: String): Either[String, String] =
+    *  - `parse:` real HDF5 signature but undecodable content, in the
+    *    datasets `needed` reaches or in the links on the way to them.
+    * Right holds the tree `needed` reaches as [[NexusTree.toJson]]
+    * renders it. */
+  def readClassified(path: String, needed: Needed = Needed.All): Either[String, String] =
     try {
       if (path == null) return Left("io: null path")
       val p = Paths.get(path)
@@ -85,7 +101,7 @@ object Hdf5Reader {
       val n = try in.read(head) finally in.close()
       if (n < 8 || !java.util.Arrays.equals(head, Magic))
         return Left("not_hdf5: missing HDF5 signature")
-      Right(NexusTree.toJson(read(path)))
+      Right(NexusTree.toJson(read(path, needed)))
     } catch {
       case e: Hdf5Error => Left(s"parse: ${e.msg}")
       case e: java.io.IOException => Left(s"io: ${e.getMessage}")
@@ -98,16 +114,21 @@ object Hdf5Reader {
     * that is merely too big must not read as corrupt). S10: transient
     * IO failures retry first, each delay clamped to [1, 120] s (ref:
     * open_h5file, src/scicat_nexus_helper.py:62-95) — a file may still
-    * be mid-write when its wrdn message arrives. */
+    * be mid-write when its wrdn message arrives. Each file's text holds
+    * only what `needed` reaches: the ingest stream passes the paths its
+    * schemas and sample attachment read (S4/S5), so a dataset no schema
+    * reads is neither decoded nor rendered, and its damage yields values
+    * rather than `parse:` (F11). */
   def fileReaderWith(
       retryDelaysSeconds: Seq[Double],
+      needed: Needed = Needed.All,
       sleeper: Long => Unit = Thread.sleep): String => Option[String] = { p =>
-    var attempt = readClassified(p)
+    var attempt = readClassified(p, needed)
     val delays = retryDelaysSeconds.iterator
     while (attempt.fold(_.startsWith("io:"), (_: String) => false) && delays.hasNext) {
       val d = math.min(math.max(delays.next(), 1.0), 120.0)
       sleeper((d * 1000).toLong)
-      attempt = readClassified(p)
+      attempt = readClassified(p, needed)
     }
     attempt match {
       case Right(json) => Some(json)
@@ -154,7 +175,7 @@ object Hdf5Reader {
 
     // --- superblock + classic root ------------------------------------
 
-    def rootGroup(): NexusGroup = {
+    def rootGroup(needed: Needed): NexusGroup = {
       val magic = bytesAt(0, 8)
       val expect = Array[Byte](0x89.toByte, 'H', 'D', 'F', '\r', '\n', 0x1a, '\n')
       if (!magic.sameElements(expect)) throw Hdf5Error("not an HDF5 file")
@@ -163,7 +184,7 @@ object Hdf5Reader {
       if (u8(13) != 8 || u8(14) != 8) throw Hdf5Error("only 8-byte offsets/lengths supported")
       // root symbol table entry at offset 24+32 = 56: name off(8), header addr(8)
       val rootHeader = addr(56 + 8)
-      readGroupAt(rootHeader, Set.empty) match {
+      readNodeAt(rootHeader, Set.empty, needed).getOrElse(NexusGroup(Vector.empty)) match {
         case g: NexusGroup => g
         case d => NexusGroup(Vector("" -> d))
       }
@@ -218,6 +239,9 @@ object Hdf5Reader {
       val msgHeader = if (tracked) 6 else 4
       val out = Vector.newBuilder[Message]
       var blocks = List((q, chunk0.toInt))
+      // a header reaches each continuation block once; a second visit
+      // would read the same messages forever
+      val visited = scala.collection.mutable.Set.empty[Int]
       while (blocks.nonEmpty) {
         val (start, len) = blocks.head
         blocks = blocks.tail
@@ -231,6 +255,7 @@ object Hdf5Reader {
             // continuation block: OCHK signature + messages + checksum
             val cAddr = addr(body).toInt
             val cLen = i64(body + 8).toInt
+            if (!visited.add(cAddr)) throw Hdf5Error(s"OCHK @ $cAddr reached twice", corrupt = true)
             if (sig(cAddr) != "OCHK") throw Hdf5Error(s"bad OCHK @ $cAddr")
             blocks = (cAddr + 4, cLen - 8) :: blocks
           } else if (typ != 0) out += Message(typ, body, size)
@@ -242,18 +267,17 @@ object Hdf5Reader {
 
     // --- group assembly -----------------------------------------------
 
-    private def readNodeAt(headerAddr: Long, seen: Set[Long]): Option[NexusNode] = {
+    private def readNodeAt(headerAddr: Long, seen: Set[Long], needed: Needed): Option[NexusNode] = {
       if (headerAddr == Undef || seen.contains(headerAddr)) return None
       val msgs = readMessages(headerAddr)
       val isGroup = msgs.exists(m => m.typ == 0x0011 || m.typ == 0x0002 || m.typ == 0x0006)
-      if (isGroup) Some(readGroupMsgs(msgs, seen + headerAddr))
+      if (isGroup) Some(readGroupMsgs(msgs, seen + headerAddr, needed))
       else readDataset(msgs)
     }
 
-    private def readGroupAt(headerAddr: Long, seen: Set[Long]): NexusNode =
-      readNodeAt(headerAddr, seen).getOrElse(NexusGroup(Vector.empty))
-
-    private def readGroupMsgs(msgs: Vector[Message], seen: Set[Long]): NexusGroup = {
+    /** The group's children that `needed` reaches, by name; no other
+      * link's object header is read. */
+    private def readGroupMsgs(msgs: Vector[Message], seen: Set[Long], needed: Needed): NexusGroup = {
       val links = Vector.newBuilder[(String, Long)]
       msgs.foreach { m =>
         m.typ match {
@@ -270,19 +294,23 @@ object Hdf5Reader {
             if (fheapAddr != Undef && nameBtree != Undef)
               // F11 degrade: an unsupported dense-link layout (e.g. a
               // multi-level v2 btree) drops this group's links rather
-              // than aborting the file
-              links ++= scala.util.Try(denseLinks(fheapAddr, nameBtree))
-                .getOrElse(Vector.empty)
+              // than aborting the file; a corrupt one fails it
+              links ++= (try denseLinks(fheapAddr, nameBtree) catch {
+                case e: Hdf5Error if e.corrupt => throw e
+                case scala.util.control.NonFatal(_) => Vector.empty
+              })
           case _ => ()
         }
       }
       val children = links.result().sortBy(_._1).flatMap { case (name, hdr) =>
         // F11 degrade: a child whose header uses unsupported features
         // becomes an absent node; its siblings still resolve
-        try readNodeAt(hdr, seen).map(name -> _)
-        catch {
-          case e: Hdf5Error if e.corrupt => throw e
-          case scala.util.control.NonFatal(_) => None
+        needed.child(name).flatMap { sub =>
+          try readNodeAt(hdr, seen, sub).map(name -> _)
+          catch {
+            case e: Hdf5Error if e.corrupt => throw e
+            case scala.util.control.NonFatal(_) => None
+          }
         }
       }
       NexusGroup(children)
@@ -367,6 +395,9 @@ object Hdf5Reader {
       q += 2 // starting # of rows
       val rootAddr = addr(q); q += 8
       val curRows = u16(q)
+      // a zero width or block size never advances the doubling table
+      if (tableWidth == 0 || startBlockSize <= 0)
+        throw Hdf5Error(s"FRHP @ $p0: table width $tableWidth, block size $startBlockSize", corrupt = true)
       FractalHeap(idLen, flags, tableWidth, startBlockSize, maxDirectSize,
         maxHeapBits, rootAddr, curRows)
     }
@@ -383,6 +414,8 @@ object Hdf5Reader {
       while (off >= rowStart + fh.tableWidth * fh.rowSize(row)) {
         rowStart += fh.tableWidth * fh.rowSize(row)
         row += 1
+        if (row >= fh.curRows)
+          throw Hdf5Error(s"heap offset $off past the ${fh.curRows} rows of FRHP", corrupt = true)
       }
       val col = ((off - rowStart) / fh.rowSize(row)).toInt
       val blockOffset = rowStart + col * fh.rowSize(row)

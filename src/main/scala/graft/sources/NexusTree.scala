@@ -72,6 +72,48 @@ object NexusTree {
       PyDict(n.properties().asScala.iterator.map(e => (PyStr(e.getKey), py(e.getValue))).toVector)
     else PyNone
 
+  /** A set of paths as a trie over their segments: the part of a file
+    * that [[resolve]], [[extractPaths]] and the reads on them can reach,
+    * so a reader may skip every other link. A child is needed when a
+    * segment equals its name (the literal lookup) or holds `*` and
+    * [[wildcard]] matches it; it is needed `whole` when some path ends
+    * at it, and otherwise only for the segments below. */
+  final class Needed private (
+      val whole: Boolean,
+      private val branches: Vector[(String, String => Boolean, Needed)]) extends Serializable {
+
+    /** What is needed below the child `name`; None when nothing is. */
+    def child(name: String): Option[Needed] =
+      if (whole) Some(this)
+      else branches.collect { case (seg, matches, sub) if seg == name || matches(name) => sub } match {
+        case Vector() => None
+        case Vector(one) => Some(one)
+        case many => Some(new Needed(many.exists(_.whole), many.flatMap(_.branches)))
+      }
+  }
+
+  object Needed {
+    /** Every path: the whole file. */
+    val All: Needed = new Needed(true, Vector.empty)
+
+    /** The paths the extraction reads for `paths`, in both segment forms
+      * it splits them into: [[resolve]]'s non-empty segments, and for a
+      * path holding `*` the `string[]` wildcard expansion's
+      * `split("/").drop(1)`. A path with no segments reads nothing below
+      * the root. */
+    def apply(paths: Iterable[String]): Needed = build(paths.toVector.flatMap { p =>
+      val segs = p.split("/")
+      Vector(segs.filter(_.nonEmpty).toList) ++
+        Option.when(p.contains("*"))(segs.drop(1).toList)
+    }.filter(_.nonEmpty))
+
+    private def build(paths: Vector[List[String]]): Needed =
+      if (paths.exists(_.isEmpty)) All
+      else new Needed(false, paths.groupBy(_.head).toVector.sortBy(_._1).map { case (seg, ps) =>
+        (seg, if (seg.contains("*")) wildcard(seg) else (_: String) => false, build(ps.map(_.tail)))
+      })
+  }
+
   /** Resolve an absolute dataset path like `/entry/sample/temperature`. */
   def resolve(root: NexusGroup, path: String): Option[NexusNode] =
     path.split("/").filter(_.nonEmpty).foldLeft(Option[NexusNode](root)) {
@@ -79,21 +121,28 @@ object NexusTree {
       case _ => None
     }
 
+  /** The child names a wildcard segment (one containing `*`) matches:
+    * by SUBSTRING REGEX SEARCH (python `re.search`), bare `*` all of
+    * them, and a segment that is no valid regex none but through bare
+    * `*` (ref: extract_paths_from_h5_file, scicat_dataset.py:430-458).
+    * [[extractPaths]] and [[Needed]] both match with it. */
+  def wildcard(segment: String): String => Boolean =
+    if (segment == "*") _ => true
+    else try {
+      val re = java.util.regex.Pattern.compile(segment)
+      name => re.matcher(name).find()
+    } catch { case _: Exception => _ => false }
+
   /** Wildcard path expansion with the reference's matching rule: a
-    * segment containing `*` matches child names by SUBSTRING REGEX
-    * SEARCH (python `re.search`), bare `*` matches all
-    * (ref: extract_paths_from_h5_file, scicat_dataset.py:430-458).
+    * segment containing `*` matches child names by [[wildcard]].
     * Returns matched paths relative to `root`, in tree order.
     */
   def extractPaths(root: NexusGroup, segments: List[String]): Vector[String] = segments match {
     case Nil => Vector.empty
     case master :: rest =>
       if (master.contains("*")) {
-        val re = try Some(java.util.regex.Pattern.compile(master))
-          catch { case _: Exception => None }
-        val matched = root.children.collect {
-          case (name, node) if master == "*" || re.exists(_.matcher(name).find()) => (name, node)
-        }
+        val matches = wildcard(master)
+        val matched = root.children.filter { case (name, _) => matches(name) }
         matched.flatMap {
           case (name, g: NexusGroup) if rest.nonEmpty =>
             extractPaths(g, rest).map(sub => s"$name/$sub")

@@ -8,6 +8,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.config.{IngestLogging, IngestorConfig}
 import graft.schema.{ImscSchema, SchemaValidator}
+import graft.sources.{Hdf5Reader, NexusTree}
 
 /** The online-ingestor daemon (ref: src/scicat_online_ingestor.py main):
   * config file + CLI → schemas directory → Kafka wrdn stream → per-batch
@@ -41,7 +42,9 @@ object OnlineIngestor {
 
   /** Map the validated file config onto the streaming pipeline config.
     * The catalog defaults to the configured HTTP client; tests inject
-    * an in-memory one. */
+    * an in-memory one. The default file reader reads only the NXS paths
+    * of the schemas and the fallback and the P19 sample paths: the
+    * datasets no schema reads are never decoded (S4/S5). */
   def buildStreamConfig(
       cfg: IngestorConfig.Config,
       catalog: Option[graft.catalog.Catalog] = None,
@@ -55,19 +58,23 @@ object OnlineIngestor {
     val (hash, hashAlgorithm) = (fh.computeFileHash, fh.fileHashAlgorithm)
     // an unknown algorithm fails here, at daemon start, not in every task
     if (hash && hashAlgorithm != "blake2b") FileIngest.digest(hashAlgorithm)
+    val sample = IngestStream.SampleAttachment()
+    val needed = NexusTree.Needed((schemas ++ fallback).flatMap(_.variables.collect {
+      case (_, v: ImscSchema.NxsVar) => v.path
+    }) ++ Seq(sample.sampleNamePath, sample.proposalIdPath))
     IngestStream.Config(
       schemas = schemas,
       fallback = fallback,
       catalog = catalog.getOrElse(cfg.scicat.toCatalog),
       options = cfg.toAssemblyOptions,
-      fileReader = fileReader.getOrElse(
-        graft.sources.Hdf5Reader.fileReaderWith(retries)),
+      fileReader = fileReader.getOrElse(Hdf5Reader.fileReaderWith(retries, needed)),
       fileLister = p => Seq(FileIngest.stat(p, hash, hashAlgorithm)),
       dedupByPid = cfg.ingestion.checkIfDatasetExistsByPid,
       dedupMetadataKey =
         if (cfg.ingestion.checkIfDatasetExistsByMetadata)
           Some(cfg.ingestion.checkIfDatasetExistsByMetadataKey)
-        else None)
+        else None,
+      sampleAttachment = sample)
   }
 
   /** Wire and start the streaming query against a live Kafka cluster.

@@ -4,8 +4,11 @@ import java.nio.{ByteBuffer, ByteOrder}
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.expr.CastCompiler
+import graft.functions.DslCasts
 import graft.functions.PyLiteral._
-import graft.sources.NexusTree.{NexusDataset, NexusGroup}
+import graft.schema.ImscSchema.NxsVar
+import graft.sources.NexusTree.{Needed, NexusDataset, NexusGroup, NexusNode}
 import perfbench.Hdf5Writer
 import perfbench.Hdf5Writer.{Data, Group}
 
@@ -35,11 +38,13 @@ class Hdf5ReaderSpec extends AnyFunSuite {
   private def str(root: NexusGroup, path: String): String =
     NexusTree.readString(root, path).getOrElse(fail(s"missing $path"))
 
-  /** A one-dataset int64 file holding `value`, patched so its datatype
-    * claims `elemSize`-byte elements and its first dim claims `firstDim`;
-    * the stored data stays what the writer wrote. */
-  private def claiming(value: PyValue, rank: Int, elemSize: Int, firstDim: Long): Array[Byte] = {
-    val b = Hdf5Writer.write(Group(Vector("x" -> Data(value))))
+  /** A file whose int64 dataset `x` holds `value`, patched so its
+    * datatype claims `elemSize`-byte elements and its first dim claims
+    * `firstDim`; the stored data stays what the writer wrote. `others`
+    * are written beside `x` and may hold no other int64 dataset. */
+  private def claiming(value: PyValue, rank: Int, elemSize: Int, firstDim: Long,
+      others: Vector[(String, Data)] = Vector.empty): Array[Byte] = {
+    val b = Hdf5Writer.write(Group(("x" -> Data(value)) +: others))
     def at(pattern: Int*): Int = {
       val p = pattern.map(_.toByte)
       val i = b.indexOfSlice(p)
@@ -69,6 +74,58 @@ class Hdf5ReaderSpec extends AnyFunSuite {
   private def patchedUnits(patch: (ByteBuffer, Int) => Unit): Array[Byte] =
     patched(Group(Vector("x" -> Data(PyList(Vector(PyInt(7L))), Map("units" -> "AAAA")))),
       "units\u0000")(patch)
+
+  private def le(n: Int)(f: ByteBuffer => Unit): Array[Byte] = {
+    val b = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
+    f(b)
+    b.array()
+  }
+
+  /** A version-2 object header (`OHDR`, 1-byte chunk size) or, with
+    * `sig` `OCHK`, a continuation block, holding `msgs` (type, body)
+    * and a zero checksum, padded to 8 bytes. */
+  private def v2Block(sig: String, msgs: Seq[(Int, Array[Byte])]): Array[Byte] = {
+    val body = msgs.flatMap { case (t, b) => le(4)(_.put(t.toByte).putShort(b.length.toShort)) ++ b }
+    val head = if (sig == "OHDR") Array[Byte](2, 0, body.length.toByte) else Array.emptyByteArray
+    val out = sig.getBytes("US-ASCII") ++ head ++ body ++ new Array[Byte](4)
+    java.util.Arrays.copyOf(out, (out.length + 7) / 8 * 8)
+  }
+
+  /** A `Hdf5Writer` file whose root's only link, `x`, is patched to name
+    * the hand-built object header `blocks(at)` appended at `at`. */
+  private def withV2Child(blocks: Long => Array[Byte]): Array[Byte] = {
+    var at = 0L
+    val b = patched(Group(Vector("x" -> Data(PyInt(7L)))), "SNOD") { (bb, i) =>
+      at = (bb.capacity() + 7) / 8 * 8
+      bb.putLong(i + 16, at) // SNOD entry 0: name offset, then header address
+    }
+    java.util.Arrays.copyOf(b, at.toInt) ++ blocks(at)
+  }
+
+  /** A dense-link group: a v2 header whose link-info message names a
+    * fractal heap (`FRHP`, one row in its table) and a one-record name
+    * index (`BTHD` over a `BTLF` leaf) whose only heap id points at
+    * heap offset `offset`. */
+  private def denseGroup(tableWidth: Int, blockSize: Long, offset: Long): Array[Byte] =
+    withV2Child { at =>
+      val (frhp, bthd, btlf) = (at + 40, at + 200, at + 240)
+      val header = v2Block("OHDR", Seq(0x02 -> le(18)(_.putShort(0.toShort).putLong(frhp).putLong(bthd))))
+      assert(header.length == 40)
+      header ++ le(160) { bb =>
+        bb.put("FRHP".getBytes("US-ASCII"))
+        bb.putShort(5, 7.toShort) // heap id length
+        bb.putShort(110, tableWidth.toShort).putLong(112, blockSize).putLong(120, 65536L)
+        bb.putShort(128, 32.toShort) // max heap size bits: 4-byte offsets
+        bb.putShort(130, 1.toShort).putLong(132, -1L).putShort(140, 1.toShort) // 1 row
+      } ++ le(40) { bb =>
+        bb.put("BTHD".getBytes("US-ASCII"))
+        bb.putShort(10, 11.toShort).putShort(12, 0.toShort) // record size, depth
+        bb.putLong(16, btlf).putShort(24, 1.toShort)
+      } ++ le(32) { bb =>
+        bb.put("BTLF".getBytes("US-ASCII"))
+        bb.put(10, 0.toByte).putInt(11, offset.toInt).putShort(15, 8.toShort) // managed id
+      }
+    }
 
   /** Seeded random trees: ranks 0-3 with zero-length dims,
     * int64/float64/fixed/vlen strings, compact and contiguous layouts,
@@ -217,7 +274,19 @@ class Hdf5ReaderSpec extends AnyFunSuite {
       // the root group's B-tree node naming itself as its child 0 (the
       // first child pointer follows 24 bytes of header and one key)
       "TREE child = itself" -> patched(Group(Vector("x" -> Data(PyInt(7L)))), "TREE") {
-        (bb, i) => bb.putLong(i + 32, i.toLong) })
+        (bb, i) => bb.putLong(i + 32, i.toLong) },
+      // a v2 object header whose continuation block continues into itself
+      "OCHK continues into itself" -> withV2Child { at =>
+        val cont = le(16)(_.putLong(at + 32).putLong(28L))
+        val header = v2Block("OHDR", Seq(0x10 -> cont))
+        assert(header.length == 32)
+        header ++ v2Block("OCHK", Seq(0x10 -> cont))
+      },
+      // dense links over a fractal heap whose doubling table cannot
+      // advance, or whose object lies past its one row
+      "FRHP table width 0" -> denseGroup(0, 512L, 16L),
+      "FRHP block size 0" -> denseGroup(4, 0L, 16L),
+      "FRHP object past its rows" -> denseGroup(4, 512L, 1L << 30))
     val threads = java.lang.management.ManagementFactory.getThreadMXBean
       .asInstanceOf[com.sun.management.ThreadMXBean]
     def allocated() = threads.getThreadAllocatedBytes(Thread.currentThread().getId)
@@ -251,6 +320,67 @@ class Hdf5ReaderSpec extends AnyFunSuite {
       java.nio.file.Files.write(f, Hdf5Writer.write(tree))
       assert(Hdf5Reader.read(f.toString) == Hdf5Writer.toNexusRoot(tree), s"tree $i: $tree")
     }
+  }
+
+  test("a pruned read extracts what the whole read does, for every NXS variable") {
+    // seeded random path sets over the random trees: literal dataset
+    // and group paths, missing paths, bare `*`, regex wildcards (one no
+    // valid regex) and paths without a leading slash; each is extracted
+    // as every value type from the text of the whole and the pruned read
+    val rnd = new scala.util.Random(20261020L)
+    val dir = java.nio.file.Files.createTempDirectory("graft_hdf5pr")
+    def paths(n: NexusNode, prefix: Vector[String]): Vector[Vector[String]] = n match {
+      case NexusGroup(cs) => cs.flatMap { case (k, c) => (prefix :+ k) +: paths(c, prefix :+ k) }
+      case _ => Vector.empty
+    }
+    def wild(seg: String): String =
+      Seq("*", ".*", s"$seg*", "n[13]*$", "*n", s"^${seg.take(1)}.*")(rnd.nextInt(6))
+    def pathSet(root: NexusGroup): Vector[String] = {
+      val known = paths(root, Vector.empty)
+      Vector.fill(1 + rnd.nextInt(5)) {
+        val segs = if (known.isEmpty) Vector("n0") else known(rnd.nextInt(known.size))
+        val shaped = rnd.nextInt(4) match {
+          case 0 => segs :+ "missing"
+          case 1 | 2 => val i = rnd.nextInt(segs.size); segs.updated(i, wild(segs(i)))
+          case _ => segs
+        }
+        (if (rnd.nextInt(5) == 0) "" else "/") + shaped.mkString("/")
+      }
+    }
+    var pruned = 0
+    for ((tree, i) <- randomTrees(200).zipWithIndex) {
+      val f = dir.resolve(s"t$i.hdf").toString
+      java.nio.file.Files.write(java.nio.file.Paths.get(f), Hdf5Writer.write(tree))
+      val wholeText = Hdf5Reader.readClassified(f).toOption.get
+      val whole = NexusTree.fromJson(wholeText)
+      val ps = pathSet(whole)
+      val partText = Hdf5Reader.readClassified(f, Needed(ps)).toOption.get
+      val part = NexusTree.fromJson(partText)
+      if (partText.length < wholeText.length) pruned += 1
+      for (p <- ps; vt <- DslCasts.all) {
+        val v = NxsVar(p, vt, "u")
+        val t = CastCompiler.sparkType(vt)
+        assert(NexusExtractor.extract(v, t, part) == NexusExtractor.extract(v, t, whole),
+          s"tree $i, $p as ${vt.name}, paths $ps")
+      }
+      for (p <- ps) assert(NexusTree.readString(part, p) == NexusTree.readString(whole, p))
+    }
+    // and the property is not vacuous: many reads did leave nodes out
+    assert(pruned >= 40, s"only $pruned of 200 reads were pruned")
+  }
+
+  test("a dataset no needed path reaches is never decoded") {
+    // `x` claims 1000 int64 elements over 8 stored bytes: the whole read
+    // fails closed, the read of `/good` never decodes `x`
+    val f = java.nio.file.Files.createTempFile("graft_hdf5un", ".hdf")
+    java.nio.file.Files.write(f, claiming(PyList(Vector(PyInt(7L))), 1, 8, 1000L,
+      others = Vector("good" -> Data(PyStr("kept")))))
+    assert(Hdf5Reader.readClassified(f.toString).swap.exists(_.startsWith("parse:")))
+    val text = Hdf5Reader.fileReaderWith(Seq.empty, Needed(Seq("/good")))(f.toString)
+    assert(text.map(NexusTree.fromJson).contains(
+      NexusGroup(Vector("good" -> NexusDataset(PyStr("kept"), Map.empty)))))
+    // a needed path through the damage still fails the file
+    assert(Hdf5Reader.readClassified(f.toString, Needed(Seq("/x"))).swap.exists(_.startsWith("parse:")))
   }
 
   test("any extension is attempted: magic bytes decide, not the file name") {

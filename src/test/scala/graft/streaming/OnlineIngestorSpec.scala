@@ -67,6 +67,39 @@ class OnlineIngestorSpec extends AnyFunSuite {
     assert(noDedup.dedupMetadataKey.isEmpty)
   }
 
+  test("the built reader's text holds the schemas' NXS paths and the P19 sample paths only") {
+    import graft.functions.PyLiteral._
+    import graft.sources.NexusTree
+    import perfbench.Hdf5Writer
+    import perfbench.Hdf5Writer.{Data, Group}
+    def text(s: String) = Data(PyList(Vector(PyStr(s))))
+    val stand = Group(Vector("entry" -> Group(Vector(
+      "doc_id" -> text("7"),
+      "title" -> Data(PyStr("pruned run"), vlen = true),
+      "temperature" -> Data(PyList(Vector(PyFloat(42.0))), Map("units" -> "K")),
+      "experiment_identifier" -> text("100001"),
+      "sample" -> Group(Vector("name" -> text("a sample"), "mass" -> text("1 g"))),
+      "detector" -> Data(PyList(Vector.tabulate(64)(i => PyInt(i.toLong))))))))
+    val f = Files.createTempFile("graft_pruned", ".nxs")
+    Files.write(f, Hdf5Writer.write(stand))
+    val dir = schemasDir
+    val fallback = dir.resolve("fallback.yml")
+    Files.writeString(fallback, IngestDemo.schemaYaml.replace("id: ingest-demo", "id: fb")
+      .replace("/entry/title", "/entry/sample/*"))
+    val sc = OnlineIngestor.buildStreamConfig(IngestorConfig.load(
+      s"""ingestion:
+         |  schemas_directory: "$dir"
+         |  fallback_schema_file_path: "$fallback"
+         |""".stripMargin))
+    val root = NexusTree.fromJson(sc.fileReader(f.toString).getOrElse(fail("no text")))
+    val whole = Hdf5Writer.toNexusRoot(stand)
+    val kept = Seq("/entry/doc_id", "/entry/title", "/entry/temperature",
+      "/entry/sample/name", "/entry/sample/mass", "/entry/experiment_identifier")
+    for (p <- kept) assert(NexusTree.resolve(root, p) == NexusTree.resolve(whole, p), p)
+    assert(NexusTree.resolve(root, "/entry/detector").isEmpty)
+    assert(NexusTree.resolve(whole, "/entry/detector").nonEmpty)
+  }
+
   test("compute_file_hash sets origDataBlock chk under file_hash_algorithm; off leaves it null") {
     val spark = graft.TestSpark.spark
     import spark.implicits._
