@@ -2,6 +2,7 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.core.{JsonFactoryBuilder, StreamReadFeature}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 import graft.functions.PyLiteral._
@@ -18,6 +19,12 @@ import graft.functions.PyLiteral._
   * fixtures and the streaming tests write it by hand. The extraction
   * semantics — wildcard path expansion, scalar squeeze, unit
   * attributes — are tested against the reference's fixture goldens.
+  *
+  * It also owns path semantics: [[resolve]], [[extractPaths]] and the
+  * [[Needed]] trie of the paths an extraction reads, which the reader
+  * prunes its walk by. Both lookups and the trie match a wildcard
+  * segment with [[wildcard]], so what the reader keeps is what the
+  * extraction can reach.
   */
 object NexusTree {
 
@@ -41,7 +48,12 @@ object NexusTree {
       "{\"__value\":" + NexusExtractor.toJson(v) + ",\"__attrs\":" + attrJson + "}"
   }
 
-  private val mapper = new ObjectMapper()
+  /** Floats parse with Jackson's fast parser: the same correctly
+    * rounded doubles as `Double.parseDouble`, without its big-integer
+    * fallback on long literals (a file's float logs are most of its
+    * tree text). */
+  private val mapper = new ObjectMapper(
+    new JsonFactoryBuilder().enable(StreamReadFeature.USE_FAST_DOUBLE_PARSER).build())
 
   /** Parses [[toJson]]'s encoding; a top-level dataset becomes the only
     * child, named "", of a root group. Non-string attributes are left

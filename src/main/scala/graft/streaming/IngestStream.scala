@@ -76,7 +76,11 @@ object IngestStream {
         * files via the pure-JVM [[graft.sources.Hdf5Reader]] and renders
         * them with `NexusTree.toJson`; every failure gives None, so
         * corrupt or missing files null out (F11) instead of failing the
-        * batch. Tests inject readers of hand-written tree text here. */
+        * batch. The reader `OnlineIngestor.buildStreamConfig` builds
+        * reads only the schemas' NXS paths and the P19 sample paths
+        * (S4/S5): damage in a dataset no schema reads leaves the file's
+        * values intact. Tests inject readers of hand-written tree text
+        * here. */
       fileReader: String => Option[String] = graft.sources.Hdf5Reader.fileReader,
       fileLister: String => Seq[FileIngest.FileStats] =
         p => Seq(FileIngest.stat(p)),

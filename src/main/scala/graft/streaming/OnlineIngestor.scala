@@ -43,8 +43,10 @@ object OnlineIngestor {
   /** Map the validated file config onto the streaming pipeline config.
     * The catalog defaults to the configured HTTP client; tests inject
     * an in-memory one. The default file reader reads only the NXS paths
-    * of the schemas and the fallback and the P19 sample paths: the
-    * datasets no schema reads are never decoded (S4/S5). */
+    * of the schemas and the fallback and the P19 sample paths of the
+    * config's [[IngestStream.SampleAttachment]]: the datasets no schema
+    * reads are never decoded (S4/S5). A copy of the config with other
+    * sample paths needs a reader built for them. */
   def buildStreamConfig(
       cfg: IngestorConfig.Config,
       catalog: Option[graft.catalog.Catalog] = None,
