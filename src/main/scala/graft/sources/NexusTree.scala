@@ -91,7 +91,7 @@ object NexusTree {
     * [[wildcard]] matches it; it is needed `whole` when some path ends
     * at it, and otherwise only for the segments below. */
   final class Needed private (
-      val whole: Boolean,
+      private val whole: Boolean,
       private val branches: Vector[(String, String => Boolean, Needed)]) extends Serializable {
 
     /** What is needed below the child `name`; None when nothing is. */
@@ -138,7 +138,7 @@ object NexusTree {
     * them, and a segment that is no valid regex none but through bare
     * `*` (ref: extract_paths_from_h5_file, scicat_dataset.py:430-458).
     * [[extractPaths]] and [[Needed]] both match with it. */
-  def wildcard(segment: String): String => Boolean =
+  private def wildcard(segment: String): String => Boolean =
     if (segment == "*") _ => true
     else try {
       val re = java.util.regex.Pattern.compile(segment)
